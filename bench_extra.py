@@ -20,19 +20,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-HEADLINE = [
-    "pdf_text_roundtrip",
-    "pdf_table_cells",
-    "pricing_summary",
-    "revenue_topn",
-    "sessionize",
-    "doctop_cumsum",
-    "dedup_exact",
-    "minhash_dedup",
-    "simhash",
-    "cosine_topk",
-    "quality",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def main() -> None:

@@ -55,6 +55,3 @@ def cid_to_unicode(ordering: str | None, cid: int) -> str | None:
         return None
     return table.get(cid)
 
-
-def has_table(ordering: str | None) -> bool:
-    return bool(ordering) and _load(ordering or "") is not None

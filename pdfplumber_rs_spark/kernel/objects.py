@@ -373,7 +373,3 @@ class Kw:
     def __repr__(self) -> str:  # pragma: no cover
         return f"Kw({self.name!r})"
 
-
-def resolve_refs_shallow(obj, getter):
-    """Resolve a Ref via getter(ref) -> object; pass through others."""
-    return getter(obj) if isinstance(obj, Ref) else obj

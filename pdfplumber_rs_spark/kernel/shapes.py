@@ -37,26 +37,6 @@ def _subpaths(segments: list) -> list[list]:
     return subs
 
 
-def _vertices(subpath: list) -> list[tuple]:
-    verts = []
-    for seg in subpath:
-        if seg[0] == "m" or seg[0] == "l":
-            verts.append(seg[1])
-        elif seg[0] == "c":
-            return []  # curves: not a simple polygon
-    return verts
-
-
-def _is_closed(subpath: list, verts: list) -> bool:
-    if any(seg[0] == "h" for seg in subpath):
-        return True
-    if len(verts) >= 2:
-        fx, fy = verts[0]
-        lx, ly = verts[-1]
-        return abs(fx - lx) < AXIS_TOL and abs(fy - ly) < AXIS_TOL
-    return False
-
-
 def _try_rect(verts: list, page_height: float):
     if len(verts) != 4:
         return None

@@ -304,13 +304,6 @@ def table_rows(cells: list[tuple]) -> list[list[tuple | None]]:
     return rows
 
 
-def _char_in_bbox(ch: dict, bbox: tuple) -> bool:
-    v_mid = (ch["top"] + ch["bottom"]) / 2.0
-    h_mid = (ch["x0"] + ch["x1"]) / 2.0
-    x0, top, x1, bottom = bbox
-    return h_mid >= x0 and h_mid < x1 and v_mid >= top and v_mid < bottom
-
-
 def _cells_bbox(cells) -> tuple:
     present = [c for c in cells if c is not None]
     return (

@@ -20,10 +20,19 @@ Scale design:
   batch memory stays flat regardless of document size.
 - Errors never fail a task: broken PDFs become rows with error set and
   zero pages (lenient like tokenizer.rs:60-161).
+
+Kernel contract: every mapInArrow in the engine goes through
+`row_kernel`, the one piece of code that converts Arrow record batches
+to Python rows and back. What a kernel does is a plain per-row
+function: it takes the input row's columns as keyword arguments and
+yields output dicts (zero, one, or many per input row), and it owns its
+failure policy — an error row, null columns, no rows, or no try at all.
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
 import time
 from collections.abc import Iterator
 
@@ -42,7 +51,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .config import ExtractOptions, TableSettings, TextOptions, WordOptions
+from .config import ExtractOptions, TableSettings, TextOptions
 
 # -- output schema --------------------------------------------------------------
 
@@ -207,23 +216,35 @@ def _empty_row(url: str, warnings: list, error: str | None, t0: float,
     return row
 
 
-def _page_rows(url: str, data: bytes, options: ExtractOptions | None,
-               text_options: TextOptions | None,
-               table_settings: TableSettings | None,
-               page_start: int | None = None,
-               page_end: int | None = None,
+def _page_rows(url: str, html: bytes | None, blob_path: str | None = None,
+               page_start: int | None = None, page_end: int | None = None,
+               *, options: ExtractOptions | None = None,
+               text_options: TextOptions | None = None,
+               table_settings: TableSettings | None = None,
                include: tuple | None = None) -> list[dict]:
-    """Extract one document → list of per-page dicts (page_schema(include)
-    shape). `include` prunes object sections: excluded sections are not
-    computed (tables) and not serialized (everything else)."""
+    """Per-row extraction function: one document → list of per-page dicts
+    (page_schema(include) shape). A giant-document range row carries
+    html=None and the blob_path its bytes were spilled to. `include`
+    prunes object sections: excluded sections are not computed (tables)
+    and not serialized (everything else). Failures become error rows;
+    pages extracted before a failing page are kept."""
     from .kernel.document import Document
     from .kernel.layout import extract_text_from_words
 
     inc = SECTIONS if include is None else tuple(include)
     want = set(inc)
+    if html is None and blob_path is not None:
+        # giant-doc range row: bytes live in the blob store (written
+        # once by the spill kernel), fetched here
+        try:
+            with open(blob_path, "rb") as f:
+                html = f.read()
+        except OSError as exc:
+            return [_empty_row(url, [], f"blob fetch failed: {exc}",
+                               time.time(), inc)]
     t0 = time.time()
     try:
-        doc = Document(data, options)
+        doc = Document(html, options)
     except Exception as e:  # noqa: BLE001 — lenient: bad PDF → error row
         return [_empty_row(url, [], f"open failed: {e}", t0, inc)]
     rows = []
@@ -349,56 +370,50 @@ def _shape_row(kind: str, o: dict) -> dict:
     }
 
 
-def make_extract_kernel(options: ExtractOptions | None = None,
-                        text_options: TextOptions | None = None,
-                        table_settings: TableSettings | None = None,
-                        ranged: bool = False,
-                        include: tuple | None = None):
-    """Build the mapInArrow kernel fn. When ranged=True the input carries
-    page_start/page_end columns (giant-PDF split path). `include` prunes
-    object sections at the kernel (manual projection pushdown)."""
-    arrow_schema = _arrow_schema_for(page_schema(include))
-    flush_rows = 512 if include == () else 64
+def row_kernel(fn, schema: StructType, flush_rows: int = 512):
+    """The Arrow boundary of every mapInArrow kernel: returns the
+    Iterator[RecordBatch] → Iterator[RecordBatch] function mapInArrow
+    takes. Each input batch is converted to Python once; each input row
+    becomes one `fn(**row)` call (column names as keywords) that yields
+    output dicts; output rows are Arrow-encoded `schema` batches of at
+    most `flush_rows` rows, flushed again at the end of every input
+    batch. Failure policy is fn's: whatever it raises fails the task."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            d = batch.to_pydict()
-            urls = d["url"]
-            htmls = d["html"]
-            paths = d.get("blob_path", [None] * len(urls))
-            starts = d.get("page_start", [None] * len(urls))
-            ends = d.get("page_end", [None] * len(urls))
-            out: list[dict] = []
-            for url, html, path, s, e in zip(urls, htmls, paths, starts, ends):
-                if html is None and path is not None:
-                    # giant-doc range row: bytes live in the blob store
-                    # (written once by the spill kernel), fetched here
-                    try:
-                        with open(path, "rb") as f:
-                            html = f.read()
-                    except OSError as exc:
-                        out.append(_empty_row(
-                            url, [], f"blob fetch failed: {exc}",
-                            time.time(), include))
-                        continue
-                out.extend(
-                    _page_rows(
-                        url, html, options, text_options, table_settings,
-                        s if ranged else None, e if ranged else None,
-                        include=include,
-                    )
-                )
-                # keep batches bounded: the flush threshold trades per-
-                # batch Arrow framing overhead against memory — object-
-                # array rows (~40 KB/page) flush every 64 pages; pruned
-                # text-only rows (~100 B/page) can batch 8x larger
-                if len(out) >= flush_rows:
-                    yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-                    out = []
-            if out:
-                yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+            cols = batch.to_pydict()
+            rows = (out for vals in zip(*cols.values())
+                    for out in fn(**dict(zip(cols, vals))))
+            while chunk := list(itertools.islice(rows, flush_rows)):
+                yield pa.RecordBatch.from_pylist(chunk, schema=arrow_schema)
 
     return kernel
+
+
+def make_extract_kernel(options: ExtractOptions | None = None,
+                        text_options: TextOptions | None = None,
+                        table_settings: TableSettings | None = None,
+                        include: tuple | None = None):
+    """Build the extraction mapInArrow kernel over (url, html[, blob_path]
+    [, page_start, page_end]) rows. `include` prunes object sections at
+    the kernel (manual projection pushdown). The flush size trades per-
+    batch Arrow framing overhead against memory: object-array rows
+    (~40 KB/page) flush every 64 pages; pruned text-only rows
+    (~100 B/page) can batch 8x larger."""
+    fn = functools.partial(_page_rows, options=options,
+                           text_options=text_options,
+                           table_settings=table_settings, include=include)
+    return row_kernel(fn, page_schema(include), 512 if include == () else 64)
+
+
+def _map_documents(df: DataFrame, fn, schema: StructType, **kw) -> DataFrame:
+    """mapInArrow over df's (url, html) columns: one `fn(url, html, **kw)`
+    call per document, its dicts encoded as `schema` rows."""
+    kernel = row_kernel(functools.partial(fn, **kw), schema)
+    return df.select("url", "html").mapInArrow(kernel, schema)
 
 
 # -- skew handling ------------------------------------------------------------------
@@ -428,49 +443,32 @@ def default_spill_dir() -> str:
     return d
 
 
-def _make_spill_kernel(spill_dir: str):
-    """One pass over giant docs: write bytes ONCE to the blob store and
-    count pages (xref + page-tree walk, no content interpretation).
-    Downstream range rows then carry only the path — a 5000-page PDF
-    split into 100 ranges ships its bytes through ZERO shuffles instead
-    of 100 copies (round-1 judge finding)."""
+def _spill_rows(url: str, html: bytes, *, spill_dir: str):
+    """Per-row spill function for one giant doc: write its bytes ONCE to
+    the blob store and count pages (xref + page-tree walk, no content
+    interpretation). Downstream range rows then carry only the path — a
+    5000-page PDF split into 100 ranges ships its bytes through ZERO
+    shuffles instead of 100 copies (round-1 judge finding)."""
+    import hashlib
+    import os
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import hashlib
-        import os
+    from .kernel.docparser import PdfDocument
 
-        from .kernel.docparser import PdfDocument
-
-        schema = _arrow_schema_for(SPILL_SCHEMA)
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                # content-addressed blob name: same url with different
-                # bytes (another scale factor / a re-crawl) must NOT hit
-                # a stale spill file
-                name = hashlib.sha1(html).hexdigest() + ".pdf"
-                path = os.path.join(spill_dir, name)
-                # idempotent: deterministic name, atomic rename
-                if not os.path.exists(path):
-                    tmp = path + f".tmp{os.getpid()}"
-                    with open(tmp, "wb") as f:
-                        f.write(html)
-                    os.replace(tmp, path)
-                try:
-                    n = len(PdfDocument(html, []).pages())
-                except Exception:  # noqa: BLE001
-                    n = 1
-                out.append({"url": url, "blob_path": path, "n_pages": n})
-            yield pa.RecordBatch.from_pylist(out, schema=schema)
-
-    return kernel
-
-
-def _arrow_schema_for(schema: StructType) -> pa.Schema:
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(schema)
+    # content-addressed blob name: same url with different bytes (another
+    # scale factor / a re-crawl) must NOT hit a stale spill file
+    name = hashlib.sha1(html).hexdigest() + ".pdf"
+    path = os.path.join(spill_dir, name)
+    # idempotent: deterministic name, atomic rename
+    if not os.path.exists(path):
+        tmp = path + f".tmp{os.getpid()}"
+        with open(tmp, "wb") as f:
+            f.write(html)
+        os.replace(tmp, path)
+    try:
+        n = len(PdfDocument(html, []).pages())
+    except Exception:  # noqa: BLE001
+        n = 1
+    yield {"url": url, "blob_path": path, "n_pages": n}
 
 
 def split_giant_documents(df: DataFrame, max_bytes: int = 8 << 20,
@@ -492,9 +490,9 @@ def split_giant_documents(df: DataFrame, max_bytes: int = 8 << 20,
                 F.lit(None).cast("int").alias("page_end"))
     )
     big = df.filter(F.length("html") > max_bytes).select("url", "html")
-    spilled = big.mapInArrow(
-        _make_spill_kernel(spill_dir or default_spill_dir()), SPILL_SCHEMA
-    )
+    spill = functools.partial(_spill_rows,
+                              spill_dir=spill_dir or default_spill_dir())
+    spilled = big.mapInArrow(row_kernel(spill, SPILL_SCHEMA), SPILL_SCHEMA)
     big_ranged = (
         spilled.select(
             "url", "blob_path",
@@ -516,18 +514,18 @@ def split_giant_documents(df: DataFrame, max_bytes: int = 8 << 20,
     return small.unionByName(big_ranged)
 
 
-def kernel_parallelism(df: DataFrame, factor: int = 2) -> int:
+def kernel_parallelism(df: DataFrame) -> int:
     """Partition count for CPU-bound kernel stages. AQE sizes post-
     shuffle partitions by SHUFFLE BYTES, so a small-by-bytes corpus
     (5000 urls ≈ 10 MB) coalesces to ONE task and the parse kernel —
     1000× more expensive per byte than a shuffle — runs serially.
     Always pass an explicit count (AQE leaves user-specified
-    repartition(n, …) alone); `factor`× overdecomposition keeps stragglers
-    from dominating when document cost varies. factor=2 (round 6):
-    measured better than 4 on the uniform flagship corpus (7.42 s vs
-    7.92 s at sf1.0 — fewer tasks, less per-task Arrow framing) while
-    still giving the scheduler a 2× tail cushion."""
-    return df.sparkSession.sparkContext.defaultParallelism * factor
+    repartition(n, …) alone); 2× overdecomposition keeps stragglers
+    from dominating when document cost varies. 2× (round 6) measured
+    better than 4× on the uniform flagship corpus (7.42 s vs 7.92 s at
+    sf1.0 — fewer tasks, less per-task Arrow framing) while still giving
+    the scheduler a 2× tail cushion."""
+    return df.sparkSession.sparkContext.defaultParallelism * 2
 
 
 def salt(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -569,15 +567,13 @@ def extract_pages(df: DataFrame, options: ExtractOptions | None = None,
         cols = split_giant_documents(cols, max_bytes=max_bytes,
                                      pages_per_split=pages_per_split,
                                      spill_dir=spill_dir)
-        ranged = True
     else:
         cols = cols.select("url", "html",
                            F.lit(None).cast("int").alias("page_start"),
                            F.lit(None).cast("int").alias("page_end"))
-        ranged = True
     cols = salt(cols, num_partitions)
     kernel = make_extract_kernel(options, text_options, table_settings,
-                                 ranged=ranged, include=include)
+                                 include=include)
     return cols.mapInArrow(kernel, page_schema(include))
 
 
@@ -783,54 +779,50 @@ DOC_META_SCHEMA = StructType(
 )
 
 
+def _meta_rows(url: str, html: bytes, *,
+               options: ExtractOptions | None = None):
+    """D1-D3 for one document; a failure becomes an error row."""
+    from .kernel.document import Document
+
+    row = {
+        "url": url, "title": None, "author": None,
+        "subject": None, "creator": None, "producer": None,
+        "creation_date": None, "mod_date": None, "n_pages": 0,
+        "bookmarks": [], "form_fields": [], "error": None,
+    }
+    try:
+        doc = Document(html, options)
+        meta = doc.metadata()
+        row.update(
+            {
+                "title": meta.get("Title"),
+                "author": meta.get("Author"),
+                "subject": meta.get("Subject"),
+                "creator": meta.get("Creator"),
+                "producer": meta.get("Producer"),
+                "creation_date": meta.get("CreationDate"),
+                "mod_date": meta.get("ModDate"),
+                "n_pages": doc.page_count,
+                "bookmarks": doc.bookmarks(),
+                "form_fields": doc.form_fields(),
+            }
+        )
+        if doc.page_count == 0:
+            row["error"] = "no pages: " + (
+                doc.warnings[0] if doc.warnings else "empty document"
+            )
+    except Exception as e:  # noqa: BLE001 — lenient
+        row["error"] = f"open failed: {e}"
+    yield row
+
+
 def document_meta(df: DataFrame,
                   options: ExtractOptions | None = None) -> DataFrame:
     """Document-level extractors as one light mapInArrow pass: /Info
     metadata (D1), flattened bookmarks (D2), AcroForm fields (D3).
     Does NOT interpret content streams — structure-only, so it is far
     cheaper than extract_pages (pdf.rs:306-354)."""
-    arrow_schema = _arrow_schema_for(DOC_META_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .kernel.document import Document
-
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                row = {
-                    "url": url, "title": None, "author": None,
-                    "subject": None, "creator": None, "producer": None,
-                    "creation_date": None, "mod_date": None, "n_pages": 0,
-                    "bookmarks": [], "form_fields": [], "error": None,
-                }
-                try:
-                    doc = Document(html, options)
-                    meta = doc.metadata()
-                    row.update(
-                        {
-                            "title": meta.get("Title"),
-                            "author": meta.get("Author"),
-                            "subject": meta.get("Subject"),
-                            "creator": meta.get("Creator"),
-                            "producer": meta.get("Producer"),
-                            "creation_date": meta.get("CreationDate"),
-                            "mod_date": meta.get("ModDate"),
-                            "n_pages": doc.page_count,
-                            "bookmarks": doc.bookmarks(),
-                            "form_fields": doc.form_fields(),
-                        }
-                    )
-                    if doc.page_count == 0:
-                        row["error"] = "no pages: " + (
-                            doc.warnings[0] if doc.warnings else "empty document"
-                        )
-                except Exception as e:  # noqa: BLE001 — lenient
-                    row["error"] = f"open failed: {e}"
-                out.append(row)
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-    return df.select("url", "html").mapInArrow(kernel, DOC_META_SCHEMA)
+    return _map_documents(df, _meta_rows, DOC_META_SCHEMA, options=options)
 
 
 def assemble_text_from_words(words: DataFrame,
@@ -997,28 +989,24 @@ HTML_SCHEMA = StructType(
 )
 
 
+def _html_rows(url: str, html: bytes, *,
+               options: ExtractOptions | None = None):
+    """One rendered document; a failure leaves html_text null."""
+    from .kernel.document import Document
+    from .kernel.html import document_to_html
+
+    try:
+        rendered = document_to_html(Document(html, options))
+    except Exception:  # noqa: BLE001 — lenient
+        rendered = None
+    yield {"url": url, "html_text": rendered}
+
+
 def render_html(df: DataFrame,
                 options: ExtractOptions | None = None) -> DataFrame:
     """D9 semantic HTML per document (html.rs:74-119): headings by
     font-size ratio, strong/em from fontname, bullet lists, tables."""
-    arrow_schema = _arrow_schema_for(HTML_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .kernel.document import Document
-        from .kernel.html import document_to_html
-
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                try:
-                    rendered = document_to_html(Document(html, options))
-                except Exception:  # noqa: BLE001 — lenient
-                    rendered = None
-                out.append({"url": url, "html_text": rendered})
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-    return df.select("url", "html").mapInArrow(kernel, HTML_SCHEMA)
+    return _map_documents(df, _html_rows, HTML_SCHEMA, options=options)
 
 
 MARKDOWN_SCHEMA = StructType(
@@ -1030,6 +1018,17 @@ MARKDOWN_SCHEMA = StructType(
 )
 
 
+def _markdown_rows(url: str, html: bytes):
+    """One Markdown document; a failure leaves both columns null."""
+    from .kernel.markdown import markdown_json
+
+    try:
+        md, meta = markdown_json(html)
+    except Exception:  # noqa: BLE001 — lenient
+        md, meta = None, None
+    yield {"url": url, "markdown": md, "meta_json": meta}
+
+
 def render_markdown(df: DataFrame,
                     options: ExtractOptions | None = None) -> DataFrame:
     """US-099 PDF→Markdown per document (anytomd fixtures): headings by
@@ -1038,23 +1037,7 @@ def render_markdown(df: DataFrame,
     {image_count, image_filenames, page_count, title, warning_count}.
     Arrow-batched kernel, one pass per document — pages of one doc run
     inside the batch, documents parallelize across partitions."""
-    arrow_schema = _arrow_schema_for(MARKDOWN_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .kernel.markdown import markdown_json
-
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                try:
-                    md, meta = markdown_json(html)
-                except Exception:  # noqa: BLE001 — lenient
-                    md, meta = None, None
-                out.append({"url": url, "markdown": md, "meta_json": meta})
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-    return df.select("url", "html").mapInArrow(kernel, MARKDOWN_SCHEMA)
+    return _map_documents(df, _markdown_rows, MARKDOWN_SCHEMA)
 
 
 SVG_SCHEMA = StructType(
@@ -1066,30 +1049,26 @@ SVG_SCHEMA = StructType(
 )
 
 
+def _svg_rows(url: str, html: bytes, *,
+              options: ExtractOptions | None = None):
+    """One SVG row per page; a failure ends the document's rows."""
+    from .kernel.document import Document
+    from .kernel.svg import page_to_svg
+
+    try:
+        doc = Document(html, options)
+        for i in range(doc.page_count):
+            yield {"url": url, "page_number": i + 1,
+                   "svg": page_to_svg(doc.page(i))}
+    except Exception:  # noqa: BLE001 — lenient
+        return
+
+
 def render_svg(df: DataFrame,
                options: ExtractOptions | None = None) -> DataFrame:
     """D10 SVG rendering (svg.rs): one deterministic SVG document per
     page — shapes as rect/line/path, words as positioned text."""
-    arrow_schema = _arrow_schema_for(SVG_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .kernel.document import Document
-        from .kernel.svg import page_to_svg
-
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                try:
-                    doc = Document(html, options)
-                    for i in range(doc.page_count):
-                        out.append({"url": url, "page_number": i + 1,
-                                    "svg": page_to_svg(doc.page(i))})
-                except Exception:  # noqa: BLE001 — lenient
-                    continue
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-    return df.select("url", "html").mapInArrow(kernel, SVG_SCHEMA)
+    return _map_documents(df, _svg_rows, SVG_SCHEMA, options=options)
 
 
 STRUCT_SCHEMA = StructType(
@@ -1105,29 +1084,25 @@ STRUCT_SCHEMA = StructType(
 )
 
 
+def _structure_rows(url: str, html: bytes, *,
+                    options: ExtractOptions | None = None):
+    """Flattened structure-tree rows; a failure ends the document's rows."""
+    from .kernel.docextras import structure_tree
+    from .kernel.document import Document
+
+    try:
+        for r in structure_tree(Document(html, options).doc):
+            yield {"url": url, **r}
+    except Exception:  # noqa: BLE001 — lenient
+        return
+
+
 def structure_table(df: DataFrame,
                     options: ExtractOptions | None = None) -> DataFrame:
     """D5: flattened /StructTreeRoot rows in depth-first order
     (struct_tree.rs; recursion encoded as elem_id/parent_id/level
     because Spark has no recursive types). Structure-only pass."""
-    arrow_schema = _arrow_schema_for(STRUCT_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .kernel.docextras import structure_tree
-        from .kernel.document import Document
-
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                try:
-                    for r in structure_tree(Document(html, options).doc):
-                        out.append({"url": url, **r})
-                except Exception:  # noqa: BLE001 — lenient
-                    continue
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-    return df.select("url", "html").mapInArrow(kernel, STRUCT_SCHEMA)
+    return _map_documents(df, _structure_rows, STRUCT_SCHEMA, options=options)
 
 
 def semantic_text(pages: DataFrame, structure: DataFrame) -> DataFrame:
@@ -1182,34 +1157,31 @@ TABLE_DEBUG_SCHEMA = StructType(
 )
 
 
+def _table_debug_rows(url: str, html: bytes, *,
+                      settings: TableSettings | None = None,
+                      options: ExtractOptions | None = None):
+    """One counter row per page; a failure ends the document's rows."""
+    from .kernel.document import Document
+    from .kernel.tables import table_debug
+
+    try:
+        doc = Document(html, options)
+        for i in range(doc.page_count):
+            page = doc.page(i)
+            dbg = table_debug(page.edges(), page.extract_words(), settings)
+            yield {"url": url, "page_number": i + 1, **dbg}
+    except Exception:  # noqa: BLE001 — lenient
+        return
+
+
 def table_debug_table(df: DataFrame,
                       settings: TableSettings | None = None,
                       options: ExtractOptions | None = None) -> DataFrame:
     """T15 table debug pipeline (table.rs:1546-1640): one row per page
     with per-stage counters (raw→selected→merged edges, intersections,
     cells, tables) — the lineage surface for tuning table settings."""
-    arrow_schema = _arrow_schema_for(TABLE_DEBUG_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .kernel.document import Document
-        from .kernel.tables import table_debug
-
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                try:
-                    doc = Document(html, options)
-                    for i in range(doc.page_count):
-                        page = doc.page(i)
-                        dbg = table_debug(page.edges(),
-                                          page.extract_words(), settings)
-                        out.append({"url": url, "page_number": i + 1, **dbg})
-                except Exception:  # noqa: BLE001 — lenient
-                    continue
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-    return df.select("url", "html").mapInArrow(kernel, TABLE_DEBUG_SCHEMA)
+    return _map_documents(df, _table_debug_rows, TABLE_DEBUG_SCHEMA,
+                          settings=settings, options=options)
 
 
 SIGNATURE_SCHEMA = StructType(
@@ -1226,30 +1198,27 @@ SIGNATURE_SCHEMA = StructType(
 )
 
 
+def _signature_rows(url: str, html: bytes, *,
+                    options: ExtractOptions | None = None):
+    """One row per /Sig field; a failure ends the document's rows."""
+    from .kernel.docextras import signatures
+    from .kernel.document import Document
+
+    try:
+        for s in signatures(Document(html, options).doc):
+            yield {"url": url, **s}
+    except Exception:  # noqa: BLE001 — lenient
+        return
+
+
 def signatures_table(df: DataFrame,
                      options: ExtractOptions | None = None) -> DataFrame:
     """D6 digital signature fields (signature.rs:1-94, pdf.rs:791):
     structure-only pass over the AcroForm — one row per /Sig field with
     its /V dictionary resolved in the SAME recursive walk (no index
     re-pairing)."""
-    arrow_schema = _arrow_schema_for(SIGNATURE_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .kernel.docextras import signatures
-        from .kernel.document import Document
-
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                try:
-                    for s in signatures(Document(html, options).doc):
-                        out.append({"url": url, **s})
-                except Exception:  # noqa: BLE001 — lenient
-                    continue
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-    return df.select("url", "html").mapInArrow(kernel, SIGNATURE_SCHEMA)
+    return _map_documents(df, _signature_rows, SIGNATURE_SCHEMA,
+                          options=options)
 
 
 VALIDATION_SCHEMA = StructType(
@@ -1262,29 +1231,26 @@ VALIDATION_SCHEMA = StructType(
 )
 
 
+def _validation_rows(url: str, html: bytes, *,
+                     options: ExtractOptions | None = None):
+    """One row per finding; a failure becomes an open-failed row."""
+    from .kernel.document import Document
+
+    try:
+        for v in Document(html, options).validate():
+            yield {"url": url, **v}
+    except Exception as e:  # noqa: BLE001 — lenient
+        yield {"url": url, "code": "open-failed", "severity": "error",
+               "message": str(e)}
+
+
 def validation_table(df: DataFrame,
                      options: ExtractOptions | None = None) -> DataFrame:
     """D7 spec-violation diagnostics (validation.rs, pdf.rs:776): one
     row per finding; a clean document yields no rows. Structure-only,
     never raises (lenient)."""
-    arrow_schema = _arrow_schema_for(VALIDATION_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .kernel.document import Document
-
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                try:
-                    for v in Document(html, options).validate():
-                        out.append({"url": url, **v})
-                except Exception as e:  # noqa: BLE001 — lenient
-                    out.append({"url": url, "code": "open-failed",
-                                "severity": "error", "message": str(e)})
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-    return df.select("url", "html").mapInArrow(kernel, VALIDATION_SCHEMA)
+    return _map_documents(df, _validation_rows, VALIDATION_SCHEMA,
+                          options=options)
 
 
 def bookmarks_table(meta: DataFrame) -> DataFrame:
@@ -1314,40 +1280,35 @@ SEARCH_SCHEMA = StructType(
 )
 
 
+def _search_rows(url: str, html: bytes, *, pattern: str, regex: bool,
+                 case: bool, options: ExtractOptions | None = None):
+    """One row per match; a failure ends the document's rows."""
+    from .kernel.docextras import search_chars
+    from .kernel.document import Document
+
+    try:
+        doc = Document(html, options)
+        for i in range(doc.page_count):
+            page = doc.page(i)
+            for m in search_chars(page.chars, pattern, regex, case):
+                yield {
+                    "url": url, "page_number": i + 1,
+                    "match_text": m["text"],
+                    "start": m["start"], "end": m["end"],
+                    "x0": m["x0"], "top": m["top"],
+                    "x1": m["x1"], "bottom": m["bottom"],
+                }
+    except Exception:  # noqa: BLE001 — lenient
+        return
+
+
 def search_pages(df: DataFrame, pattern: str, regex: bool = True,
                  case: bool = True,
                  options: ExtractOptions | None = None) -> DataFrame:
     """P6 regex search as a pipeline op: (url, html) → one row per match
     with the union bbox of the matched chars (search.rs:59-145)."""
-    arrow_schema = _arrow_schema_for(SEARCH_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .kernel.docextras import search_chars
-        from .kernel.document import Document
-
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                try:
-                    doc = Document(html, options)
-                    for i in range(doc.page_count):
-                        page = doc.page(i)
-                        for m in search_chars(page.chars, pattern, regex, case):
-                            out.append(
-                                {
-                                    "url": url, "page_number": i + 1,
-                                    "match_text": m["text"],
-                                    "start": m["start"], "end": m["end"],
-                                    "x0": m["x0"], "top": m["top"],
-                                    "x1": m["x1"], "bottom": m["bottom"],
-                                }
-                            )
-                except Exception:  # noqa: BLE001 — lenient
-                    continue
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-    return df.select("url", "html").mapInArrow(kernel, SEARCH_SCHEMA)
+    return _map_documents(df, _search_rows, SEARCH_SCHEMA, pattern=pattern,
+                          regex=regex, case=case, options=options)
 
 
 HTML_MAIN_SCHEMA = StructType(
@@ -1360,34 +1321,28 @@ HTML_MAIN_SCHEMA = StructType(
 )
 
 
+def _main_content_rows(url: str, html: bytes | None, *, min_words: int,
+                       max_link_density: float):
+    from .kernel.htmlstrip import extract_main_content
+
+    r = extract_main_content(html or b"", min_words, max_link_density)
+    yield {
+        "url": url,
+        "main_text": r["text"],
+        "n_blocks_kept": r["n_blocks_kept"],
+        "n_blocks_total": r["n_blocks_total"],
+    }
+
+
 def html_main_content(df: DataFrame, min_words: int = 5,
                       max_link_density: float = 0.33) -> DataFrame:
     """HTML boilerplate strip (north rule): jusText-lite DOM block
     heuristics over an Arrow-batched kernel — (url, html) → main text +
     strip diagnostics. Per-row map, no shuffle; malformed markup yields
     an empty row, never a task failure."""
-    arrow_schema = _arrow_schema_for(HTML_MAIN_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .kernel.htmlstrip import extract_main_content
-
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                r = extract_main_content(html or b"", min_words,
-                                         max_link_density)
-                out.append(
-                    {
-                        "url": url,
-                        "main_text": r["text"],
-                        "n_blocks_kept": r["n_blocks_kept"],
-                        "n_blocks_total": r["n_blocks_total"],
-                    }
-                )
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-    return df.select("url", "html").mapInArrow(kernel, HTML_MAIN_SCHEMA)
+    return _map_documents(df, _main_content_rows, HTML_MAIN_SCHEMA,
+                          min_words=min_words,
+                          max_link_density=max_link_density)
 
 
 HTML_MARKDOWN_SCHEMA = StructType(
@@ -1399,6 +1354,13 @@ HTML_MARKDOWN_SCHEMA = StructType(
 )
 
 
+def _html_markdown_rows(url: str, html: bytes | None):
+    from .kernel.htmlstrip import html_to_markdown
+
+    r = html_to_markdown(html or b"")
+    yield {"url": url, "markdown": r["markdown"], "n_blocks": r["n_blocks"]}
+
+
 def html_markdown(df: DataFrame) -> DataFrame:
     """HTML → Markdown rendering (the extraction pipeline's publishing
     format: headings, lists, links, emphasis, blockquotes, fenced pre,
@@ -1406,21 +1368,7 @@ def html_markdown(df: DataFrame) -> DataFrame:
     extract_main_content scores). Arrow-batched per-row map over
     (url, html) — no shuffle; malformed markup renders what parsed,
     never a task failure."""
-    arrow_schema = _arrow_schema_for(HTML_MARKDOWN_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .kernel.htmlstrip import html_to_markdown
-
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                r = html_to_markdown(html or b"")
-                out.append({"url": url, "markdown": r["markdown"],
-                            "n_blocks": r["n_blocks"]})
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-    return df.select("url", "html").mapInArrow(kernel, HTML_MARKDOWN_SCHEMA)
+    return _map_documents(df, _html_markdown_rows, HTML_MARKDOWN_SCHEMA)
 
 
 HTML_LINKS_SCHEMA = StructType(
@@ -1431,24 +1379,18 @@ HTML_LINKS_SCHEMA = StructType(
 )
 
 
+def _link_rows(url: str, html: bytes | None):
+    from .kernel.htmlstrip import extract_main_content
+
+    for href in extract_main_content(html or b"")["links"]:
+        yield {"url": url, "href": href}
+
+
 def html_links(df: DataFrame) -> DataFrame:
     """Outgoing links per page: (url, href) exploded rows from every
     <a href> (including chrome subtrees — the link graph wants them
     all). Per-row map + in-kernel explode, no shuffle."""
-    arrow_schema = _arrow_schema_for(HTML_LINKS_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .kernel.htmlstrip import extract_main_content
-
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                for href in extract_main_content(html or b"")["links"]:
-                    out.append({"url": url, "href": href})
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-    return df.select("url", "html").mapInArrow(kernel, HTML_LINKS_SCHEMA)
+    return _map_documents(df, _link_rows, HTML_LINKS_SCHEMA)
 
 
 HTML_ANCHORS_SCHEMA = StructType(
@@ -1460,26 +1402,19 @@ HTML_ANCHORS_SCHEMA = StructType(
 )
 
 
+def _anchor_rows(url: str, html: bytes | None):
+    from .kernel.htmlstrip import extract_main_content
+
+    for href, anchor in extract_main_content(html or b"")["anchors"]:
+        yield {"url": url, "href": href, "anchor": anchor}
+
+
 def html_anchors(df: DataFrame) -> DataFrame:
     """Outgoing links WITH their anchor text: (url, href, anchor)
     exploded rows from every <a href>…</a> (chrome subtrees included —
     anchor-text aggregation wants nav/footer links too). Same per-row
     map + in-kernel explode as html_links, no shuffle."""
-    arrow_schema = _arrow_schema_for(HTML_ANCHORS_SCHEMA)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .kernel.htmlstrip import extract_main_content
-
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for url, html in zip(d["url"], d["html"]):
-                for href, anchor in (
-                        extract_main_content(html or b"")["anchors"]):
-                    out.append({"url": url, "href": href, "anchor": anchor})
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-    return df.select("url", "html").mapInArrow(kernel, HTML_ANCHORS_SCHEMA)
+    return _map_documents(df, _anchor_rows, HTML_ANCHORS_SCHEMA)
 
 
 def lineage(pages: DataFrame) -> DataFrame:

@@ -7,13 +7,17 @@ content-stream builder (sources/pdfgen.py), one source line per
 rendered line. The render→extract roundtrip has a closed-form SQL
 description (sanitize → per-line space-collapse/trim → drop blank
 lines → join '\n'), which is what the DuckDB oracle checks.
+
+Each generator is a per-row function for `pipeline.row_kernel`: input
+columns in as keywords, one output row dict out.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import datetime
+import functools
+import html as _html
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -23,6 +27,23 @@ from pyspark.sql.types import (
     StructField,
     StructType,
     TimestampType,
+)
+
+from ..pipeline import kernel_parallelism, row_kernel
+from .pdfgen import (
+    build_cff_font,
+    build_pdf,
+    build_truetype_font,
+    cid_text_page_content,
+    cjk_text_page_content,
+    encrypt_pdf,
+    escape_pdf_text,
+    inline_image_content,
+    lattice_table_content,
+    pdf_from_text,
+    sanitize_for_pdf,
+    stream_table_content,
+    text_page_content,
 )
 
 CORPUS_SCHEMA = StructType(
@@ -35,66 +56,44 @@ CORPUS_SCHEMA = StructType(
         StructField("lang", StringType()),
     ]
 )
+TABLE_CORPUS_SCHEMA = StructType(
+    [
+        StructField("l_orderkey", LongType(), False),
+        StructField("url", StringType(), False),
+        StructField("html", BinaryType()),
+    ]
+)
+CHROME_CORPUS_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType(), False),
+        StructField("url", StringType(), False),
+        StructField("html", BinaryType()),
+    ]
+)
+MEDIA_CORPUS_SCHEMA = StructType(
+    [
+        StructField("media_id", LongType(), False),
+        StructField("mime", StringType()),
+        StructField("data", BinaryType()),
+    ]
+)
 
 
-def _gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    import datetime
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .pdfgen import inline_image_content, pdf_from_text
-
-    schema = to_arrow_schema(CORPUS_SCHEMA)
-    epoch = datetime.datetime(2024, 1, 1)
-    img = inline_image_content(300.0, 50.0, 40.0, 30.0)  # bbox 300,712..340,742
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id, text, lang in zip(d["doc_id"], d["text"], d["lang"]):
-            doc_id = int(doc_id)
-            # deterministic Link + Text annotations per document
-            # (D4 surface; verified by the pdf_hyperlinks oracle)
-            annots = (
-                f"<< /Type /Annot /Subtype /Link /Rect [72 700 272 715] "
-                f"/A << /S /URI /URI (https://ref.example/{doc_id}) >> >> "
-                f"<< /Type /Annot /Subtype /Text /Rect [40 600 60 620] "
-                f"/Contents (note {doc_id}) /T ({lang}) >>"
-            )
-            out.append(
-                {
-                    "doc_id": doc_id,
-                    "url": f"https://corpus.example/{doc_id:08d}.pdf",
-                    "warc_ts": epoch + datetime.timedelta(seconds=137 * doc_id),
-                    # deterministic document-level surface so each extractor
-                    # has a closed-form oracle: /Info (D1), one bookmark per
-                    # page (D2), a Tx widget field (D3), marked-content MCIDs
-                    # per line (D5), and an inline image on page 1 (S9)
-                    "html": pdf_from_text(
-                        text or "", annots=annots, mcid=True, page1_extra=img,
-                        info={
-                            "Title": f"Document {doc_id}",
-                            "Author": lang,
-                            "Producer": "spark-pdfplumber",
-                            "CreationDate": "D:20240101000000Z",
-                        },
-                        bookmarks_per_page="Section {p}",
-                        form_fields=[
-                            {"name": f"field_{doc_id}", "value": lang, "page": 0}
-                        ],
-                    ),
-                    "text": text,
-                    "lang": lang,
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
-
-
-def _spread(docs: DataFrame) -> DataFrame:
+def _spread(df: DataFrame, key: str) -> DataFrame:
     """Explicit repartition before a CPU-bound synthesis kernel — the
     parquet read is one small split, and AQE would otherwise run the
     whole mapInArrow on one task (see pipeline.kernel_parallelism)."""
-    n = docs.sparkSession.sparkContext.defaultParallelism * 2
-    return docs.repartition(n, "doc_id")
+    return df.repartition(kernel_parallelism(df), key)
+
+
+def _generate(df: DataFrame, key: str, fn,
+              schema: StructType = CHROME_CORPUS_SCHEMA) -> DataFrame:
+    """Spread df by `key`, then run the per-row generator `fn` over it."""
+    return _spread(df, key).mapInArrow(row_kernel(fn, schema), schema)
+
+
+def _documents(spark, sf_dir: str, *cols: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/documents.parquet").select(*cols)
 
 
 def _corpus_cache_version() -> int:
@@ -152,7 +151,6 @@ def cached_builder(fn):
     `fn(spark, sf_dir, **kw)` per (builder name, sf, kwargs, generator
     version). Kwargs become part of the cache name, so parameterized
     corpora (max_orderkey=...) cache independently."""
-    import functools
 
     @functools.wraps(fn)
     def wrapper(spark, sf_dir: str, **kw) -> DataFrame:
@@ -165,6 +163,46 @@ def cached_builder(fn):
     return wrapper
 
 
+_EPOCH = datetime.datetime(2024, 1, 1)
+_IMAGE = inline_image_content(300.0, 50.0, 40.0, 30.0)  # bbox 300,712..340,742
+
+
+def _corpus_row(doc_id, text, lang):
+    doc_id = int(doc_id)
+    # deterministic Link + Text annotations per document
+    # (D4 surface; verified by the pdf_hyperlinks oracle)
+    annots = (
+        f"<< /Type /Annot /Subtype /Link /Rect [72 700 272 715] "
+        f"/A << /S /URI /URI (https://ref.example/{doc_id}) >> >> "
+        f"<< /Type /Annot /Subtype /Text /Rect [40 600 60 620] "
+        f"/Contents (note {doc_id}) /T ({lang}) >>"
+    )
+    yield {
+        "doc_id": doc_id,
+        "url": f"https://corpus.example/{doc_id:08d}.pdf",
+        "warc_ts": _EPOCH + datetime.timedelta(seconds=137 * doc_id),
+        # deterministic document-level surface so each extractor
+        # has a closed-form oracle: /Info (D1), one bookmark per
+        # page (D2), a Tx widget field (D3), marked-content MCIDs
+        # per line (D5), and an inline image on page 1 (S9)
+        "html": pdf_from_text(
+            text or "", annots=annots, mcid=True, page1_extra=_IMAGE,
+            info={
+                "Title": f"Document {doc_id}",
+                "Author": lang,
+                "Producer": "spark-pdfplumber",
+                "CreationDate": "D:20240101000000Z",
+            },
+            bookmarks_per_page="Section {p}",
+            form_fields=[
+                {"name": f"field_{doc_id}", "value": lang, "page": 0}
+            ],
+        ),
+        "text": text,
+        "lang": lang,
+    }
+
+
 @cached_builder
 def corpus_table(spark, sf_dir: str, limit: int | None = None) -> DataFrame:
     """documents.parquet → (doc_id, url, warc_ts, html=pdf bytes, text,
@@ -172,65 +210,15 @@ def corpus_table(spark, sf_dir: str, limit: int | None = None) -> DataFrame:
     rendered corpus is parquet-cached per (sf, generator-version) so
     repeated queries read stored PDF bytes — the shape a production
     job has, where the binary column lives in an Iceberg table."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang"
-    )
+    docs = _documents(spark, sf_dir, "doc_id", "text", "lang")
     if limit is not None:
         docs = docs.limit(limit)
-    return _spread(docs).mapInArrow(_gen_kernel, CORPUS_SCHEMA)
+    return _generate(docs, "doc_id", _corpus_row, CORPUS_SCHEMA)
 
 
-TABLE_CORPUS_SCHEMA = StructType(
-    [
-        StructField("l_orderkey", LongType(), False),
-        StructField("url", StringType(), False),
-        StructField("html", BinaryType()),
-    ]
-)
-
-
-def _table_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """(l_orderkey, rows:list[list[str]]) → one lattice-table PDF per
-    order; header row + one row per lineitem."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .pdfgen import build_pdf, lattice_table_content
-
-    schema = to_arrow_schema(TABLE_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for okey, rows in zip(d["l_orderkey"], d["rows"]):
-            cells = [["line", "qty", "flag"]] + [list(r) for r in rows]
-            content = lattice_table_content(
-                len(cells), 3, cell_w=120.0, cell_h=20.0,
-                label="__CELL__",
-            )
-            # replace placeholder labels row-major with actual cell text
-            parts = content.split(b"(__CELL__)")
-            buf = [parts[0]]
-            flat = [c for row in cells for c in row]
-            for txt, rest in zip(flat, parts[1:]):
-                from .pdfgen import escape_pdf_text
-
-                buf.append(b"(" + escape_pdf_text(txt).encode("latin-1", "replace") + b")")
-                buf.append(rest)
-            out.append(
-                {
-                    "l_orderkey": int(okey),
-                    "url": f"https://tables.example/{okey:08d}.pdf",
-                    "html": build_pdf([b"".join(buf)]),
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
-
-
-def _render_labeled_table(cells: list[list[str]], **kw) -> bytes:
-    """lattice_table_content with per-cell labels via placeholder swap."""
-    from .pdfgen import escape_pdf_text, lattice_table_content
-
-    content = lattice_table_content(len(cells), len(cells[0]),
-                                    label="__CELL__", **kw)
+def _fill_labels(content: bytes, cells: list[list[str]]) -> bytes:
+    """Replace the (__CELL__) placeholder labels of a table content
+    stream row-major with the actual cell text."""
     parts = content.split(b"(__CELL__)")
     buf = [parts[0]]
     flat = [c for row in cells for c in row]
@@ -240,175 +228,133 @@ def _render_labeled_table(cells: list[list[str]], **kw) -> bytes:
     return b"".join(buf)
 
 
-def _two_table_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _render_labeled_table(cells: list[list[str]], **kw) -> bytes:
+    """lattice_table_content with per-cell labels via placeholder swap."""
+    return _fill_labels(lattice_table_content(len(cells), len(cells[0]),
+                                              label="__CELL__", **kw), cells)
+
+
+def _table_row(l_orderkey, rows):
+    """(l_orderkey, rows:list[list[str]]) → one lattice-table PDF per
+    order; header row + one row per lineitem."""
+    cells = [["line", "qty", "flag"]] + [list(r) for r in rows]
+    yield {
+        "l_orderkey": int(l_orderkey),
+        "url": f"https://tables.example/{l_orderkey:08d}.pdf",
+        "html": build_pdf([_render_labeled_table(cells, cell_w=120.0,
+                                                 cell_h=20.0)]),
+    }
+
+
+def _two_table_row(l_orderkey, rows):
     """Main lattice table (header + lineitem rows) plus a smaller 2x2
     summary table with one deliberately EMPTY cell — exercises T14
     largest-table selection and T13 accuracy metrics."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .pdfgen import build_pdf
-
-    schema = to_arrow_schema(TABLE_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for okey, rows in zip(d["l_orderkey"], d["rows"]):
-            main = [["line", "qty", "flag"]] + [list(r) for r in rows]
-            summary = [["total", str(len(rows))], ["sum", ""]]
-            content = b"\n".join(
-                [
-                    _render_labeled_table(main, cell_w=120.0, cell_h=20.0),
-                    _render_labeled_table(summary, top_y=200.0,
-                                          cell_w=80.0, cell_h=20.0),
-                ]
-            )
-            out.append(
-                {
-                    "l_orderkey": int(okey),
-                    "url": f"https://twotables.example/{okey:08d}.pdf",
-                    "html": build_pdf([content]),
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    main = [["line", "qty", "flag"]] + [list(r) for r in rows]
+    summary = [["total", str(len(rows))], ["sum", ""]]
+    content = b"\n".join(
+        [
+            _render_labeled_table(main, cell_w=120.0, cell_h=20.0),
+            _render_labeled_table(summary, top_y=200.0,
+                                  cell_w=80.0, cell_h=20.0),
+        ]
+    )
+    yield {
+        "l_orderkey": int(l_orderkey),
+        "url": f"https://twotables.example/{l_orderkey:08d}.pdf",
+        "html": build_pdf([content]),
+    }
 
 
-def _stream_table_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _stream_table_row(l_orderkey, rows):
     """(l_orderkey, rows) → one BORDERLESS text-aligned table PDF per
     order (T8 stream-strategy surface): header + data rows at fixed
     column pitch, no vector graphics at all."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .pdfgen import build_pdf, escape_pdf_text, stream_table_content
-
-    schema = to_arrow_schema(TABLE_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for okey, rows in zip(d["l_orderkey"], d["rows"]):
-            cells = [["line", "qty", "flag"]] + [list(r) for r in rows]
-            content = stream_table_content(len(cells), 3, col_pitch=100.0,
-                                           row_pitch=16.0, label="__CELL__")
-            parts = content.split(b"(__CELL__)")
-            buf = [parts[0]]
-            flat = [c for row in cells for c in row]
-            for txt, rest in zip(flat, parts[1:]):
-                buf.append(b"(" + escape_pdf_text(txt).encode("latin-1", "replace") + b")")
-                buf.append(rest)
-            out.append(
-                {
-                    "l_orderkey": int(okey),
-                    "url": f"https://streamtables.example/{okey:08d}.pdf",
-                    "html": build_pdf([b"".join(buf)]),
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    cells = [["line", "qty", "flag"]] + [list(r) for r in rows]
+    content = stream_table_content(len(cells), 3, col_pitch=100.0,
+                                   row_pitch=16.0, label="__CELL__")
+    yield {
+        "l_orderkey": int(l_orderkey),
+        "url": f"https://streamtables.example/{l_orderkey:08d}.pdf",
+        "html": build_pdf([_fill_labels(content, cells)]),
+    }
 
 
 @cached_builder
 def stream_table_corpus(spark, sf_dir: str, max_orderkey: int = 100) -> DataFrame:
-    grouped = _lineitem_rows(spark, sf_dir, max_orderkey)
-    n = spark.sparkContext.defaultParallelism * 2
-    return grouped.repartition(n, "l_orderkey").mapInArrow(
-        _stream_table_gen_kernel, TABLE_CORPUS_SCHEMA)
+    return _generate(_lineitem_rows(spark, sf_dir, max_orderkey),
+                     "l_orderkey", _stream_table_row, TABLE_CORPUS_SCHEMA)
 
 
-def _merged_table_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _merged_table_row(l_orderkey, rows):
     """(l_orderkey, rows) → lattice table whose TOP ROW is a merged cell
     spanning all 3 columns (no internal vertical rules) carrying
     'order N', above the usual header + data rows (T12 surface)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .pdfgen import build_pdf, escape_pdf_text
-
-    schema = to_arrow_schema(TABLE_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for okey, rows in zip(d["l_orderkey"], d["rows"]):
-            cells = [["line", "qty", "flag"]] + [list(r) for r in rows]
-            n_rows = len(cells) + 1  # + merged banner row
-            x0, cw, ch, top_y = 72.0, 120.0, 20.0, 720.0
-            x1 = x0 + 3 * cw
-            y_bot = top_y - n_rows * ch
-            parts = [b"0.5 w"]
-            for r in range(n_rows + 1):
-                y = top_y - r * ch
-                parts.append(f"{x0:g} {y:g} m {x1:g} {y:g} l S".encode())
-            for x in (x0, x1):  # outer verticals: full height
-                parts.append(f"{x:g} {y_bot:g} m {x:g} {top_y:g} l S".encode())
-            for c in (1, 2):   # inner verticals: below the banner row
-                x = x0 + c * cw
-                parts.append(
-                    f"{x:g} {y_bot:g} m {x:g} {top_y - ch:g} l S".encode())
+    cells = [["line", "qty", "flag"]] + [list(r) for r in rows]
+    n_rows = len(cells) + 1  # + merged banner row
+    x0, cw, ch, top_y = 72.0, 120.0, 20.0, 720.0
+    x1 = x0 + 3 * cw
+    y_bot = top_y - n_rows * ch
+    parts = [b"0.5 w"]
+    for r in range(n_rows + 1):
+        y = top_y - r * ch
+        parts.append(f"{x0:g} {y:g} m {x1:g} {y:g} l S".encode())
+    for x in (x0, x1):  # outer verticals: full height
+        parts.append(f"{x:g} {y_bot:g} m {x:g} {top_y:g} l S".encode())
+    for c in (1, 2):   # inner verticals: below the banner row
+        x = x0 + c * cw
+        parts.append(
+            f"{x:g} {y_bot:g} m {x:g} {top_y - ch:g} l S".encode())
+    parts.append(
+        f"BT /F1 8 Tf {x0 + 4:g} {top_y - 12:g} Td "
+        f"(order {int(l_orderkey)}) Tj ET".encode())
+    for r, row in enumerate(cells):
+        ty = top_y - (r + 1) * ch - 12
+        for c, txt in enumerate(row):
+            tx = x0 + c * cw + 4
             parts.append(
-                f"BT /F1 8 Tf {x0 + 4:g} {top_y - 12:g} Td "
-                f"(order {int(okey)}) Tj ET".encode())
-            for r, row in enumerate(cells):
-                ty = top_y - (r + 1) * ch - 12
-                for c, txt in enumerate(row):
-                    tx = x0 + c * cw + 4
-                    parts.append(
-                        f"BT /F1 8 Tf {tx:g} {ty:g} Td "
-                        f"({escape_pdf_text(txt)}) Tj ET".encode())
-            out.append(
-                {
-                    "l_orderkey": int(okey),
-                    "url": f"https://mergedtables.example/{okey:08d}.pdf",
-                    "html": build_pdf([b"\n".join(parts)]),
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+                f"BT /F1 8 Tf {tx:g} {ty:g} Td "
+                f"({escape_pdf_text(txt)}) Tj ET".encode())
+    yield {
+        "l_orderkey": int(l_orderkey),
+        "url": f"https://mergedtables.example/{l_orderkey:08d}.pdf",
+        "html": build_pdf([b"\n".join(parts)]),
+    }
 
 
 @cached_builder
 def merged_table_corpus(spark, sf_dir: str, max_orderkey: int = 100) -> DataFrame:
-    grouped = _lineitem_rows(spark, sf_dir, max_orderkey)
-    n = spark.sparkContext.defaultParallelism * 2
-    return grouped.repartition(n, "l_orderkey").mapInArrow(
-        _merged_table_gen_kernel, TABLE_CORPUS_SCHEMA)
+    return _generate(_lineitem_rows(spark, sf_dir, max_orderkey),
+                     "l_orderkey", _merged_table_row, TABLE_CORPUS_SCHEMA)
 
 
-def _sig_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _sig_row(doc_id, text, lang):
     """Docs carrying a /Sig form field with a deterministic signature
     dictionary (D6 surface): signer/date/reason derived from doc_id."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .pdfgen import pdf_from_text
-
-    schema = to_arrow_schema(CHROME_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id, text, lang in zip(d["doc_id"], d["text"], d["lang"]):
-            doc_id = int(doc_id)
-            sig_v = (
-                f"<< /Type /Sig /Name (Signer {doc_id}) "
-                f"/M (D:2024{doc_id % 12 + 1:02d}01000000Z) "
-                f"/Reason ({lang}) /Location (Cell {doc_id % 7}) "
-                f"/ByteRange [0 1 2 3] >>"
-            )
-            out.append(
-                {
-                    "doc_id": doc_id,
-                    "url": f"https://signed.example/{doc_id:08d}.pdf",
-                    "html": pdf_from_text(
-                        (text or "").split("\n")[0],
-                        form_fields=[
-                            {"name": f"sig_{doc_id}", "ftype": "Sig",
-                             "raw_value": sig_v, "page": 0},
-                        ],
-                    ),
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    doc_id = int(doc_id)
+    sig_v = (
+        f"<< /Type /Sig /Name (Signer {doc_id}) "
+        f"/M (D:2024{doc_id % 12 + 1:02d}01000000Z) "
+        f"/Reason ({lang}) /Location (Cell {doc_id % 7}) "
+        f"/ByteRange [0 1 2 3] >>"
+    )
+    yield {
+        "doc_id": doc_id,
+        "url": f"https://signed.example/{doc_id:08d}.pdf",
+        "html": pdf_from_text(
+            (text or "").split("\n")[0],
+            form_fields=[
+                {"name": f"sig_{doc_id}", "ftype": "Sig",
+                 "raw_value": sig_v, "page": 0},
+            ],
+        ),
+    }
 
 
 @cached_builder
 def sig_corpus_table(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang"
-    )
-    return _spread(docs).mapInArrow(_sig_gen_kernel, CHROME_CORPUS_SCHEMA)
+    return _generate(_documents(spark, sf_dir, "doc_id", "text", "lang"),
+                     "doc_id", _sig_row)
 
 
 def _lineitem_rows(spark, sf_dir: str, max_orderkey: int):
@@ -424,6 +370,9 @@ def _lineitem_rows(spark, sf_dir: str, max_orderkey: int):
             ).alias("cells"),
         )
     )
+    # l_linenumber is not unique per order in this synthetic data — sort
+    # rows by (linenumber, quantity, returnflag) to match the oracle's
+    # row_number ordering deterministically.
     return (
         li.groupBy("l_orderkey")
         .agg(
@@ -442,243 +391,132 @@ def _lineitem_rows(spark, sf_dir: str, max_orderkey: int):
 
 @cached_builder
 def two_table_corpus(spark, sf_dir: str, max_orderkey: int = 100) -> DataFrame:
-    grouped = _lineitem_rows(spark, sf_dir, max_orderkey)
-    n = spark.sparkContext.defaultParallelism * 2
-    return grouped.repartition(n, "l_orderkey").mapInArrow(
-        _two_table_gen_kernel, TABLE_CORPUS_SCHEMA)
+    return _generate(_lineitem_rows(spark, sf_dir, max_orderkey),
+                     "l_orderkey", _two_table_row, TABLE_CORPUS_SCHEMA)
 
 
 @cached_builder
 def lineitem_table_corpus(spark, sf_dir: str, max_orderkey: int = 100) -> DataFrame:
     """One lattice-table PDF per order (header + lineitems sorted by
     linenumber; cells: linenumber, int(quantity), returnflag)."""
-    li = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .filter(F.col("l_orderkey") <= max_orderkey)
-        .select(
-            "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag",
-            F.array(
-                F.col("l_linenumber").cast("string"),
-                F.col("l_quantity").cast("int").cast("string"),
-                F.col("l_returnflag"),
-            ).alias("cells"),
-        )
-    )
-    # l_linenumber is not unique per order in this synthetic data — sort
-    # rows by (linenumber, quantity, returnflag) to match the oracle's
-    # row_number ordering deterministically.
-    grouped = (
-        li.groupBy("l_orderkey")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct("l_linenumber", "l_quantity", "l_returnflag",
-                                 "cells")
-                    )
-                ),
-                lambda s: s["cells"],
-            ).alias("rows")
-        )
-    )
-    n = spark.sparkContext.defaultParallelism * 2
-    return grouped.repartition(n, "l_orderkey").mapInArrow(
-        _table_gen_kernel, TABLE_CORPUS_SCHEMA)
+    return _generate(_lineitem_rows(spark, sf_dir, max_orderkey),
+                     "l_orderkey", _table_row, TABLE_CORPUS_SCHEMA)
 
 
-CHROME_CORPUS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("url", StringType(), False),
-        StructField("html", BinaryType()),
-    ]
-)
-
-
-def _chrome_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _chrome_row(doc_id, text):
     """Multi-page docs with page chrome: every source line becomes its
     own page carrying a repeating header ('Corpus Report Page N', digits
     vary) and footer ('N / total'); the whole text repeats 3x. Exercises
     D8 header/footer detection — the masked signatures match across
     pages, the body lines differ."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .pdfgen import build_pdf, sanitize_for_pdf, text_page_content
-
-    schema = to_arrow_schema(CHROME_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id, text in zip(d["doc_id"], d["text"]):
-            doc_id = int(doc_id)
-            lines = sanitize_for_pdf(text or "").split("\n") * 3
-            pages = []
-            for p, line in enumerate(lines):
-                content = b"\n".join(
-                    [
-                        text_page_content(
-                            [f"Corpus Report Page {p + 1}"], size=9.0, y=770.0
-                        ),
-                        text_page_content([line], y=600.0),
-                        text_page_content(
-                            [f"{p + 1} / {len(lines)}"], size=8.0, y=20.0
-                        ),
-                    ]
-                )
-                pages.append(content)
-            out.append(
-                {
-                    "doc_id": doc_id,
-                    "url": f"https://chrome.example/{doc_id:08d}.pdf",
-                    "html": build_pdf(pages),
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    doc_id = int(doc_id)
+    lines = sanitize_for_pdf(text or "").split("\n") * 3
+    pages = []
+    for p, line in enumerate(lines):
+        content = b"\n".join(
+            [
+                text_page_content(
+                    [f"Corpus Report Page {p + 1}"], size=9.0, y=770.0
+                ),
+                text_page_content([line], y=600.0),
+                text_page_content(
+                    [f"{p + 1} / {len(lines)}"], size=8.0, y=20.0
+                ),
+            ]
+        )
+        pages.append(content)
+    yield {
+        "doc_id": doc_id,
+        "url": f"https://chrome.example/{doc_id:08d}.pdf",
+        "html": build_pdf(pages),
+    }
 
 
 @cached_builder
 def chrome_corpus_table(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return _spread(docs).mapInArrow(_chrome_gen_kernel, CHROME_CORPUS_SCHEMA)
+    return _generate(_documents(spark, sf_dir, "doc_id", "text"), "doc_id",
+                     _chrome_row)
 
 
-def _html_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _html_row(doc_id, text):
     """Docs with a Helvetica-Bold 18pt 'Doc N Title' heading above the
     10pt body text — exercises the D9 heading/strong rules."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .pdfgen import build_pdf, sanitize_for_pdf, text_page_content
-
-    schema = to_arrow_schema(CHROME_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id, text in zip(d["doc_id"], d["text"]):
-            doc_id = int(doc_id)
-            body_lines = sanitize_for_pdf(text or "").split("\n")
-            content = b"\n".join(
-                [
-                    text_page_content([f"Doc {doc_id} Title"], font="F3",
-                                      size=18.0, y=750.0),
-                    text_page_content(body_lines, y=700.0),
-                ]
-            )
-            out.append(
-                {
-                    "doc_id": doc_id,
-                    "url": f"https://html.example/{doc_id:08d}.pdf",
-                    "html": build_pdf(
-                        [content],
-                        fonts={"F1": "Helvetica", "F2": "Courier",
-                               "F3": "Helvetica-Bold"},
-                    ),
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    doc_id = int(doc_id)
+    body_lines = sanitize_for_pdf(text or "").split("\n")
+    content = b"\n".join(
+        [
+            text_page_content([f"Doc {doc_id} Title"], font="F3",
+                              size=18.0, y=750.0),
+            text_page_content(body_lines, y=700.0),
+        ]
+    )
+    yield {
+        "doc_id": doc_id,
+        "url": f"https://html.example/{doc_id:08d}.pdf",
+        "html": build_pdf(
+            [content],
+            fonts={"F1": "Helvetica", "F2": "Courier",
+                   "F3": "Helvetica-Bold"},
+        ),
+    }
 
 
 @cached_builder
 def html_corpus_table(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return _spread(docs).mapInArrow(_html_gen_kernel, CHROME_CORPUS_SCHEMA)
+    return _generate(_documents(spark, sf_dir, "doc_id", "text"), "doc_id",
+                     _html_row)
 
 
-def _layout_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _layout_row(doc_id, text):
     """Two-column docs: first half of the tokens rendered 4-per-line in
     a left column (x=72), second half in a right column (x=350, same
     y range). Naive top-sorted reading order interleaves the columns;
     layout mode (W7-W11) must emit left column then right."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .pdfgen import build_pdf, sanitize_for_pdf, text_page_content
-
-    schema = to_arrow_schema(CHROME_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id, text in zip(d["doc_id"], d["text"]):
-            doc_id = int(doc_id)
-            clean = sanitize_for_pdf(text or "").replace("\n", " ")
-            toks = [t for t in clean.split(" ") if t]
-            half = (len(toks) + 1) // 2
-            cols = []
-            for x, part in ((72.0, toks[:half]), (350.0, toks[half:])):
-                lines = [
-                    " ".join(part[i : i + 4]) for i in range(0, len(part), 4)
-                ]
-                if lines:
-                    cols.append(text_page_content(lines, x=x, y=700.0))
-            out.append(
-                {
-                    "doc_id": doc_id,
-                    "url": f"https://layout.example/{doc_id:08d}.pdf",
-                    "html": build_pdf([b"\n".join(cols) if cols else b""]),
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    doc_id = int(doc_id)
+    clean = sanitize_for_pdf(text or "").replace("\n", " ")
+    toks = [t for t in clean.split(" ") if t]
+    half = (len(toks) + 1) // 2
+    cols = []
+    for x, part in ((72.0, toks[:half]), (350.0, toks[half:])):
+        lines = [
+            " ".join(part[i : i + 4]) for i in range(0, len(part), 4)
+        ]
+        if lines:
+            cols.append(text_page_content(lines, x=x, y=700.0))
+    yield {
+        "doc_id": doc_id,
+        "url": f"https://layout.example/{doc_id:08d}.pdf",
+        "html": build_pdf([b"\n".join(cols) if cols else b""]),
+    }
 
 
 @cached_builder
 def layout_corpus_table(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return _spread(docs).mapInArrow(_layout_gen_kernel, CHROME_CORPUS_SCHEMA)
+    return _generate(_documents(spark, sf_dir, "doc_id", "text"), "doc_id",
+                     _layout_row)
 
 
-def _giant_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _giant_row(doc_id, text):
     """Many-page docs for the skew path (S6): ONE source line per page,
     so a 40-line document becomes a 40-page PDF — split into page
     ranges by split_giant_documents under a low max_bytes threshold."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .pdfgen import pdf_from_text
-
-    schema = to_arrow_schema(CHROME_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id, text in zip(d["doc_id"], d["text"]):
-            doc_id = int(doc_id)
-            out.append(
-                {
-                    "doc_id": doc_id,
-                    "url": f"https://giant.example/{doc_id:08d}.pdf",
-                    "html": pdf_from_text(text or "", lines_per_page=1),
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    doc_id = int(doc_id)
+    yield {
+        "doc_id": doc_id,
+        "url": f"https://giant.example/{doc_id:08d}.pdf",
+        "html": pdf_from_text(text or "", lines_per_page=1),
+    }
 
 
 @cached_builder
 def giant_corpus_table(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return _spread(docs).mapInArrow(_giant_gen_kernel, CHROME_CORPUS_SCHEMA)
+    return _generate(_documents(spark, sf_dir, "doc_id", "text"), "doc_id",
+                     _giant_row)
 
 
-def _embedded_font_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Docs whose text uses an EMBEDDED font with no /Widths array:
-    even doc_ids get a TrueType (/FontFile2, hmtx advances
-    500+(code%7)*50), odd ones a CFF Type1C (/FontFile3, charstring
-    widths 400+(code%5)*100). Char bboxes are wrong unless the engine
-    parses the embedded metrics (the round-1 #1 real-corpus risk)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .pdfgen import (
-        build_cff_font,
-        build_pdf,
-        build_truetype_font,
-        sanitize_for_pdf,
-        text_page_content,
-    )
-
-    schema = to_arrow_schema(CHROME_CORPUS_SCHEMA)
+@functools.cache
+def _embedded_font_specs() -> tuple[dict, dict]:
+    """(TrueType, CFF) font specs, each program built once per worker."""
     ttf = build_truetype_font([500 + (c % 7) * 50 for c in range(256)],
                               units_per_em=1000)
     cff = build_cff_font([400.0 + (c % 5) * 100 for c in range(256)])
@@ -687,182 +525,128 @@ def _embedded_font_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.
     cff_spec = {"base": "EmbCFF", "subtype": "Type1",
                 "program": cff, "program_key": "FontFile3",
                 "file_subtype": "Type1C"}
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id, text in zip(d["doc_id"], d["text"]):
-            doc_id = int(doc_id)
-            line = sanitize_for_pdf(text or "").split("\n")[0]
-            spec = tt_spec if doc_id % 2 == 0 else cff_spec
-            out.append(
-                {
-                    "doc_id": doc_id,
-                    "url": f"https://embfont.example/{doc_id:08d}.pdf",
-                    "html": build_pdf(
-                        [text_page_content([line], font="FE", size=10.0)],
-                        fonts={"FE": spec},
-                    ),
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    return tt_spec, cff_spec
+
+
+def _embedded_font_row(doc_id, text):
+    """Docs whose text uses an EMBEDDED font with no /Widths array:
+    even doc_ids get a TrueType (/FontFile2, hmtx advances
+    500+(code%7)*50), odd ones a CFF Type1C (/FontFile3, charstring
+    widths 400+(code%5)*100). Char bboxes are wrong unless the engine
+    parses the embedded metrics (the round-1 #1 real-corpus risk)."""
+    doc_id = int(doc_id)
+    line = sanitize_for_pdf(text or "").split("\n")[0]
+    spec = _embedded_font_specs()[doc_id % 2]
+    yield {
+        "doc_id": doc_id,
+        "url": f"https://embfont.example/{doc_id:08d}.pdf",
+        "html": build_pdf(
+            [text_page_content([line], font="FE", size=10.0)],
+            fonts={"FE": spec},
+        ),
+    }
 
 
 @cached_builder
 def embedded_font_corpus_table(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return _spread(docs).mapInArrow(_embedded_font_gen_kernel,
-                                    CHROME_CORPUS_SCHEMA)
+    return _generate(_documents(spark, sf_dir, "doc_id", "text"), "doc_id",
+                     _embedded_font_row)
 
 
-def _svg_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _svg_row(doc_id):
     """One-page docs with a stroked rect (position keyed to doc_id) and
     a single word — the D10 SVG-render surface."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .pdfgen import build_pdf, text_page_content
-
-    schema = to_arrow_schema(CHROME_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id in d["doc_id"]:
-            doc_id = int(doc_id)
-            rx = 100 + doc_id % 50
-            content = (f"1 w {rx} 600 80 40 re S\n".encode()
-                       + text_page_content([f"Doc{doc_id}"]))
-            out.append(
-                {
-                    "doc_id": doc_id,
-                    "url": f"https://svg.example/{doc_id:08d}.pdf",
-                    "html": build_pdf([content]),
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    doc_id = int(doc_id)
+    rx = 100 + doc_id % 50
+    content = (f"1 w {rx} 600 80 40 re S\n".encode()
+               + text_page_content([f"Doc{doc_id}"]))
+    yield {
+        "doc_id": doc_id,
+        "url": f"https://svg.example/{doc_id:08d}.pdf",
+        "html": build_pdf([content]),
+    }
 
 
 @cached_builder
 def svg_corpus_table(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return _spread(docs).mapInArrow(_svg_gen_kernel, CHROME_CORPUS_SCHEMA)
+    return _generate(_documents(spark, sf_dir, "doc_id"), "doc_id", _svg_row)
 
 
-def _cjk_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _cjk_row(doc_id):
     """CJK docs through a Type0 font with the predefined UniGB-UCS2-H
     CMap (C3 surface): code bytes are UCS-2, shown as 2-byte hex
     strings; char content is a deterministic function of doc_id."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .pdfgen import build_pdf, cjk_text_page_content
-
-    schema = to_arrow_schema(CHROME_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id in d["doc_id"]:
-            doc_id = int(doc_id)
-            line1 = "".join(chr(0x4E00 + (doc_id * 31 + k * 7) % 20000)
-                            for k in range(6))
-            line2 = "".join(chr(0x4E00 + (doc_id * 13 + k * 11) % 20000)
-                            for k in range(4))
-            out.append(
-                {
-                    "doc_id": doc_id,
-                    "url": f"https://cjk.example/{doc_id:08d}.pdf",
-                    "html": build_pdf(
-                        [cjk_text_page_content([line1, line2])],
-                        fonts={"FC": {"base": "CJKGB",
-                                      "cid_encoding": "UniGB-UCS2-H"}},
-                    ),
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    doc_id = int(doc_id)
+    line1 = "".join(chr(0x4E00 + (doc_id * 31 + k * 7) % 20000)
+                    for k in range(6))
+    line2 = "".join(chr(0x4E00 + (doc_id * 13 + k * 11) % 20000)
+                    for k in range(4))
+    yield {
+        "doc_id": doc_id,
+        "url": f"https://cjk.example/{doc_id:08d}.pdf",
+        "html": build_pdf(
+            [cjk_text_page_content([line1, line2])],
+            fonts={"FC": {"base": "CJKGB",
+                          "cid_encoding": "UniGB-UCS2-H"}},
+        ),
+    }
 
 
 @cached_builder
 def cjk_corpus_table(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return _spread(docs).mapInArrow(_cjk_gen_kernel, CHROME_CORPUS_SCHEMA)
+    return _generate(_documents(spark, sf_dir, "doc_id"), "doc_id", _cjk_row)
 
 
-def _cid_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _cid_row(doc_id):
     """CID-keyed docs: Type0 Identity-H, CIDSystemInfo Adobe-Japan1, NO
     /ToUnicode — text resolves ONLY through the Adobe CID->UCS2 tables
     (cid_font.rs + adobe_japan1 data; pdfjs/noembed-identity parity).
     Line 1 uses the hiragana block (CID 842+k = U+3041+k), line 2 the
     A..Z run (CID 34+k = U+0041+k) — both linear, so the DuckDB oracle
     is closed-form chr() arithmetic."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .pdfgen import build_pdf, cid_text_page_content
-
-    schema = to_arrow_schema(CHROME_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id in d["doc_id"]:
-            doc_id = int(doc_id)
-            cids1 = [843 + (doc_id * 7 + k * 3) % 80 for k in range(6)]
-            cids2 = [34 + (doc_id * 5 + k * 11) % 26 for k in range(4)]
-            out.append(
-                {
-                    "doc_id": doc_id,
-                    "url": f"https://cid.example/{doc_id:08d}.pdf",
-                    "html": build_pdf(
-                        [cid_text_page_content([cids1, cids2])],
-                        fonts={"FJ": {"base": "CIDJP",
-                                      "cid_encoding": "Identity-H",
-                                      "ordering": "Japan1",
-                                      "cid_subtype": "CIDFontType0"}},
-                    ),
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    doc_id = int(doc_id)
+    cids1 = [843 + (doc_id * 7 + k * 3) % 80 for k in range(6)]
+    cids2 = [34 + (doc_id * 5 + k * 11) % 26 for k in range(4)]
+    yield {
+        "doc_id": doc_id,
+        "url": f"https://cid.example/{doc_id:08d}.pdf",
+        "html": build_pdf(
+            [cid_text_page_content([cids1, cids2])],
+            fonts={"FJ": {"base": "CIDJP",
+                          "cid_encoding": "Identity-H",
+                          "ordering": "Japan1",
+                          "cid_subtype": "CIDFontType0"}},
+        ),
+    }
 
 
 @cached_builder
 def cid_corpus_table(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return _spread(docs).mapInArrow(_cid_gen_kernel, CHROME_CORPUS_SCHEMA)
+    return _generate(_documents(spark, sf_dir, "doc_id"), "doc_id", _cid_row)
 
 
-def _colored_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _colored_row(doc_id, text):
     """Docs whose text carries deterministic fill (rg) and stroke (RG)
     colors plus a `cm` translation, so chars expose stroking_color /
     non_stroking_color / ctm columns (text.rs:23-36 surface)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .pdfgen import build_pdf, sanitize_for_pdf, text_page_content
-
-    schema = to_arrow_schema(CHROME_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id, text in zip(d["doc_id"], d["text"]):
-            doc_id = int(doc_id)
-            line = sanitize_for_pdf(text or "").split("\n")[0] or "x"
-            fill = (doc_id % 5 * 0.25, doc_id % 3 * 0.5, doc_id % 2 * 1.0)
-            stroke = (doc_id % 4 * 0.25, 0.5, 0.0)
-            tx, ty = float(doc_id % 7), float(doc_id % 5)
-            body = text_page_content([line], fill_rgb=fill, stroke_rgb=stroke)
-            content = f"q 1 0 0 1 {tx:g} {ty:g} cm\n".encode() + body + b"\nQ"
-            out.append(
-                {
-                    "doc_id": doc_id,
-                    "url": f"https://colored.example/{doc_id:08d}.pdf",
-                    "html": build_pdf([content]),
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    doc_id = int(doc_id)
+    line = sanitize_for_pdf(text or "").split("\n")[0] or "x"
+    fill = (doc_id % 5 * 0.25, doc_id % 3 * 0.5, doc_id % 2 * 1.0)
+    stroke = (doc_id % 4 * 0.25, 0.5, 0.0)
+    tx, ty = float(doc_id % 7), float(doc_id % 5)
+    body = text_page_content([line], fill_rgb=fill, stroke_rgb=stroke)
+    content = f"q 1 0 0 1 {tx:g} {ty:g} cm\n".encode() + body + b"\nQ"
+    yield {
+        "doc_id": doc_id,
+        "url": f"https://colored.example/{doc_id:08d}.pdf",
+        "html": build_pdf([content]),
+    }
 
 
 @cached_builder
 def colored_corpus_table(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return _spread(docs).mapInArrow(_colored_gen_kernel, CHROME_CORPUS_SCHEMA)
+    return _generate(_documents(spark, sf_dir, "doc_id", "text"), "doc_id",
+                     _colored_row)
 
 
 @cached_builder
@@ -871,20 +655,15 @@ def corrupted_corpus_table(spark, sf_dir: str) -> DataFrame:
     repair.rs): startxref points nowhere and the xref table + trailer
     are cut off — extraction must fall back to scanning the object
     stream and still produce identical text."""
-    base = corpus_table(spark, sf_dir)
 
-    def damage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for row in (dict(zip(d, vals)) for vals in zip(*d.values())):
-                pdf = row["html"]
-                i = pdf.rfind(b"\nxref\n")  # the table, not 'startxref'
-                row["html"] = (pdf[:i] if i > 0 else pdf) + b"\nstartxref\n999999\n%%EOF\n"
-                out.append(row)
-            yield pa.RecordBatch.from_pylist(out, schema=batch.schema)
+    def damage(**row):
+        pdf = row["html"]
+        i = pdf.rfind(b"\nxref\n")  # the table, not 'startxref'
+        row["html"] = (pdf[:i] if i > 0 else pdf) + b"\nstartxref\n999999\n%%EOF\n"
+        yield row
 
-    return base.mapInArrow(damage, CORPUS_SCHEMA)
+    return corpus_table(spark, sf_dir).mapInArrow(
+        row_kernel(damage, CORPUS_SCHEMA), CORPUS_SCHEMA)
 
 
 @cached_builder
@@ -892,160 +671,115 @@ def encrypted_corpus_table(spark, sf_dir: str,
                            password: str = "s3cret") -> DataFrame:
     """corpus_table re-emitted with RC4-128 standard-handler encryption
     (S3 surface): user password `password`, distinct owner password."""
-    base = corpus_table(spark, sf_dir)
 
-    def lock(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .pdfgen import encrypt_pdf
+    def lock(**row):
+        row["html"] = encrypt_pdf(row["html"], password, "owner-" + password)
+        yield row
 
-        for batch in batches:
-            d = batch.to_pydict()
-            out = []
-            for row in (dict(zip(d, vals)) for vals in zip(*d.values())):
-                row["html"] = encrypt_pdf(row["html"], password, "owner-" + password)
-                out.append(row)
-            yield pa.RecordBatch.from_pylist(out, schema=batch.schema)
-
-    return base.mapInArrow(lock, CORPUS_SCHEMA)
+    return corpus_table(spark, sf_dir).mapInArrow(
+        row_kernel(lock, CORPUS_SCHEMA), CORPUS_SCHEMA)
 
 
-MEDIA_CORPUS_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("mime", StringType()),
-        StructField("data", BinaryType()),
-    ]
-)
-
-
-def _media_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _media_row(doc_id):
     """Deterministic binary media rows — every format REALLY decodable
     now: real PNG (doc_id%3==0, valid zlib IDAT), real baseline JPEG
     (==1, flat even gray so the lossy roundtrip is exact), real GIF89a
     (==2, lossless LZW over a closed-form pattern); dimensions derived
     from the id — the multimodal header-parse AND pixel-decode
     surface."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     from ..functions.gif import make_gif_gray
     from ..functions.multimodal import make_jpeg_flat, make_png
 
-    schema = to_arrow_schema(MEDIA_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id in d["doc_id"]:
-            doc_id = int(doc_id)
-            w, h = doc_id % 31 + 1, doc_id % 17 + 1
-            kind = doc_id % 3
-            if kind == 0:
-                mime, data = "image/png", make_png(w, h, seed=doc_id)
-            elif kind == 1:
-                mime, data = "image/jpeg", make_jpeg_flat(
-                    w, h, (doc_id * 2) % 256)
-            else:
-                px = bytes(((doc_id + i) * 37) % 256 for i in range(w * h))
-                mime, data = "image/gif", make_gif_gray(w, h, px)
-            out.append({"media_id": doc_id, "mime": mime, "data": data})
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    doc_id = int(doc_id)
+    w, h = doc_id % 31 + 1, doc_id % 17 + 1
+    kind = doc_id % 3
+    if kind == 0:
+        mime, data = "image/png", make_png(w, h, seed=doc_id)
+    elif kind == 1:
+        mime, data = "image/jpeg", make_jpeg_flat(
+            w, h, (doc_id * 2) % 256)
+    else:
+        px = bytes(((doc_id + i) * 37) % 256 for i in range(w * h))
+        mime, data = "image/gif", make_gif_gray(w, h, px)
+    yield {"media_id": doc_id, "mime": mime, "data": data}
 
 
 @cached_builder
 def media_corpus_table(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return _spread(docs).mapInArrow(_media_gen_kernel, MEDIA_CORPUS_SCHEMA)
+    return _generate(_documents(spark, sf_dir, "doc_id"), "doc_id",
+                     _media_row, MEDIA_CORPUS_SCHEMA)
 
 
-def _av_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _av_row(doc_id):
     """Deterministic audio/video rows: valid WAV containers (even ids;
     rate/channels/samples from the id) and minimal MP4 moov/mvhd (odd
     ids; timescale/duration from the id)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     from ..functions.multimodal import make_mp4_header, make_wav
 
-    schema = to_arrow_schema(MEDIA_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id in d["doc_id"]:
-            doc_id = int(doc_id)
-            if doc_id % 2 == 0:
-                rate = 8000 + (doc_id % 4) * 4000
-                ch = 1 + (doc_id % 4) // 2
-                n = (doc_id % 50 + 1) * 400
-                mime, data = "audio/wav", make_wav(rate, ch, n)
-            else:
-                ts = 1000 * (1 + doc_id % 3)
-                dur = (doc_id % 9000) + 1000
-                mime, data = "video/mp4", make_mp4_header(ts, dur)
-            out.append({"media_id": doc_id, "mime": mime, "data": data})
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    doc_id = int(doc_id)
+    if doc_id % 2 == 0:
+        rate = 8000 + (doc_id % 4) * 4000
+        ch = 1 + (doc_id % 4) // 2
+        n = (doc_id % 50 + 1) * 400
+        mime, data = "audio/wav", make_wav(rate, ch, n)
+    else:
+        ts = 1000 * (1 + doc_id % 3)
+        dur = (doc_id % 9000) + 1000
+        mime, data = "video/mp4", make_mp4_header(ts, dur)
+    yield {"media_id": doc_id, "mime": mime, "data": data}
 
 
 @cached_builder
 def av_corpus_table(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return _spread(docs).mapInArrow(_av_gen_kernel, MEDIA_CORPUS_SCHEMA)
+    return _generate(_documents(spark, sf_dir, "doc_id"), "doc_id",
+                     _av_row, MEDIA_CORPUS_SCHEMA)
 
 
-def _html_page_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _html_page_row(doc_id, text):
     """Deterministic web pages for the boilerplate-strip surface: nav /
     header / link-dense sidebar / short promo / footer chrome around
     two real content paragraphs built from documents.text (words 1-8
     and 9-18) plus an <h1>. The oracle reconstructs the kept blocks in
     closed form."""
-    import html as _html
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    schema = to_arrow_schema(CHROME_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id, text in zip(d["doc_id"], d["text"]):
-            doc_id = int(doc_id)
-            words = (text or "").split()
-            para1 = _html.escape(" ".join(words[:8]))
-            para2 = _html.escape(" ".join(words[8:18]))
-            d1 = (doc_id + 1) % 7
-            d2 = (doc_id * 3 + 2) % 7
-            page = (
-                "<html><head><title>t</title><script>var x=1;</script>"
-                "<style>p{color:red}</style></head><body>"
-                "<nav><a href='/'>Home</a> <a href='/a'>About</a> "
-                f"<a href='https://host{d1:02d}.example.com/p'>Partner</a> "
-                f"<a href='https://host{d2:02d}.example.com/q'>Mirror</a> "
-                "<a href='/c'>Contact</a></nav>"
-                "<header>Site chrome banner words here</header>"
-                f"<h1>Document {doc_id}</h1>"
-                f"<p>{para1}</p>"
-                "<div><a href='/x'>Link one here</a> <a href='/y'>Link two"
-                " there</a></div>"
-                "<div>Subscribe now</div>"
-                f"<p>{para2}</p>"
-                "<aside>Related links and junk</aside>"
-                "<footer>Copyright footer boilerplate text</footer>"
-                "</body></html>"
-            )
-            out.append(
-                {
-                    "doc_id": doc_id,
-                    "url": (f"https://host{doc_id % 7:02d}.example.com/"
-                            f"{doc_id:08d}.html"),
-                    "html": page.encode("utf-8"),
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    doc_id = int(doc_id)
+    words = (text or "").split()
+    para1 = _html.escape(" ".join(words[:8]))
+    para2 = _html.escape(" ".join(words[8:18]))
+    d1 = (doc_id + 1) % 7
+    d2 = (doc_id * 3 + 2) % 7
+    page = (
+        "<html><head><title>t</title><script>var x=1;</script>"
+        "<style>p{color:red}</style></head><body>"
+        "<nav><a href='/'>Home</a> <a href='/a'>About</a> "
+        f"<a href='https://host{d1:02d}.example.com/p'>Partner</a> "
+        f"<a href='https://host{d2:02d}.example.com/q'>Mirror</a> "
+        "<a href='/c'>Contact</a></nav>"
+        "<header>Site chrome banner words here</header>"
+        f"<h1>Document {doc_id}</h1>"
+        f"<p>{para1}</p>"
+        "<div><a href='/x'>Link one here</a> <a href='/y'>Link two"
+        " there</a></div>"
+        "<div>Subscribe now</div>"
+        f"<p>{para2}</p>"
+        "<aside>Related links and junk</aside>"
+        "<footer>Copyright footer boilerplate text</footer>"
+        "</body></html>"
+    )
+    yield {
+        "doc_id": doc_id,
+        "url": (f"https://host{doc_id % 7:02d}.example.com/"
+                f"{doc_id:08d}.html"),
+        "html": page.encode("utf-8"),
+    }
 
 
 @cached_builder
 def html_page_corpus_table(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text")
-    return _spread(docs).mapInArrow(_html_page_gen_kernel, CHROME_CORPUS_SCHEMA)
+    return _generate(_documents(spark, sf_dir, "doc_id", "text"), "doc_id",
+                     _html_page_row)
 
 
-def _html_head_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _html_head_row(doc_id, text, lang):
     """Head-metadata-rich pages for the html_meta surface: title, meta
     description, og:title, canonical link, html-lang, charset — with
     deterministic presence gaps (every field is sometimes absent),
@@ -1053,128 +787,89 @@ def _html_head_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Reco
     quote-style variation (double vs single quotes by parity), so the
     extractor earns its robustness. The oracle recomputes every
     expected field in closed form from documents columns."""
-    import html as _html
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    schema = to_arrow_schema(CHROME_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id, text, lang in zip(d["doc_id"], d["text"], d["lang"]):
-            doc_id = int(doc_id)
-            words = (text or "").split()
-            q = '"' if doc_id % 2 == 0 else "'"
-            head = []
-            if doc_id % 6 != 0:
-                head.append(f"<meta charset={q}utf-8{q}>")
-            title = _html.escape(f"Doc {doc_id}: " + " ".join(words[:4]))
-            head.append(f"<title>{title}</title>")
-            if doc_id % 5 != 0:
-                desc = _html.escape(" ".join(words[:12]))
-                if doc_id % 3 == 0:
-                    head.append(f"<meta content={q}{desc}{q} "
-                                f"name={q}description{q}>")
-                else:
-                    head.append(f"<meta name={q}description{q} "
-                                f"content={q}{desc}{q}>")
-            if doc_id % 2 == 0:
-                head.append(f"<meta property={q}og:title{q} "
-                            f"content={q}OG Doc {doc_id}{q}>")
-            if doc_id % 4 != 3:
-                head.append(
-                    f"<link rel={q}canonical{q} href={q}https://"
-                    f"host{doc_id % 7:02d}.example.com/{doc_id:08d}{q}>")
-            page = (f"<html lang={q}{lang}{q}><head>" + "".join(head)
-                    + "</head><body><p>body</p></body></html>")
-            out.append({
-                "doc_id": doc_id,
-                "url": (f"https://host{doc_id % 7:02d}.example.com/"
-                        f"{doc_id:08d}.html"),
-                "html": page.encode("utf-8"),
-            })
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    doc_id = int(doc_id)
+    words = (text or "").split()
+    q = '"' if doc_id % 2 == 0 else "'"
+    head = []
+    if doc_id % 6 != 0:
+        head.append(f"<meta charset={q}utf-8{q}>")
+    title = _html.escape(f"Doc {doc_id}: " + " ".join(words[:4]))
+    head.append(f"<title>{title}</title>")
+    if doc_id % 5 != 0:
+        desc = _html.escape(" ".join(words[:12]))
+        if doc_id % 3 == 0:
+            head.append(f"<meta content={q}{desc}{q} "
+                        f"name={q}description{q}>")
+        else:
+            head.append(f"<meta name={q}description{q} "
+                        f"content={q}{desc}{q}>")
+    if doc_id % 2 == 0:
+        head.append(f"<meta property={q}og:title{q} "
+                    f"content={q}OG Doc {doc_id}{q}>")
+    if doc_id % 4 != 3:
+        head.append(
+            f"<link rel={q}canonical{q} href={q}https://"
+            f"host{doc_id % 7:02d}.example.com/{doc_id:08d}{q}>")
+    page = (f"<html lang={q}{lang}{q}><head>" + "".join(head)
+            + "</head><body><p>body</p></body></html>")
+    yield {
+        "doc_id": doc_id,
+        "url": (f"https://host{doc_id % 7:02d}.example.com/"
+                f"{doc_id:08d}.html"),
+        "html": page.encode("utf-8"),
+    }
 
 
 @cached_builder
 def html_head_corpus_table(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang")
-    return _spread(docs).mapInArrow(_html_head_gen_kernel,
-                                    CHROME_CORPUS_SCHEMA)
+    return _generate(_documents(spark, sf_dir, "doc_id", "text", "lang"),
+                     "doc_id", _html_head_row)
 
 
-def expected_text_col(text):
-    """Spark Column mirror of the oracle transform: what extract_text
-    must return for a pdf_from_text document."""
-    s = F.regexp_replace(
-        F.replace(text, F.lit("\t"), F.lit(" ")),
-        r"[^\n\x{0020}-\x{007E}\x{00A1}-\x{00FF}]", "",
-    )
-    lines = F.split(s, "\n")
-    cleaned = F.transform(
-        lines, lambda l: F.trim(F.regexp_replace(l, " +", " "))
-    )
-    return F.array_join(F.filter(cleaned, lambda l: l != ""), "\n")
-
-
-def _markdown_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _markdown_row(doc_id, text):
     """Two-page docs for the PDF→Markdown sink (US-099 / anytomd
     fixtures): page 1 carries a 24pt Helvetica-Bold 'Doc N Title' (→ #)
     over the 10pt body paragraph; page 2 a 15pt 'Doc N Section' (→ ###,
     ratio 1.5 like technical-doc's 18/12) over one fixed body line —
     exercising heading levels, paragraph merging, and the '---' page
     separator, all closed-form for the SQL oracle."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .pdfgen import build_pdf, sanitize_for_pdf, text_page_content
-
-    schema = to_arrow_schema(CHROME_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id, text in zip(d["doc_id"], d["text"]):
-            doc_id = int(doc_id)
-            body_lines = sanitize_for_pdf(text or "").split("\n")
-            page1 = b"\n".join(
-                [
-                    text_page_content([f"Doc {doc_id} Title"], font="F3",
-                                      size=24.0, y=750.0),
-                    text_page_content(body_lines, y=700.0),
-                ]
-            )
-            page2 = b"\n".join(
-                [
-                    text_page_content([f"Doc {doc_id} Section"], font="F3",
-                                      size=15.0, y=750.0),
-                    text_page_content(
-                        [f"Markdown section body for doc {doc_id}."],
-                        y=700.0),
-                ]
-            )
-            out.append(
-                {
-                    "doc_id": doc_id,
-                    "url": f"https://md.example/{doc_id:08d}.pdf",
-                    "html": build_pdf(
-                        [page1, page2],
-                        fonts={"F1": "Helvetica", "F2": "Courier",
-                               "F3": "Helvetica-Bold"},
-                        info={"Title": f"Doc {doc_id} Title"},
-                    ),
-                }
-            )
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    doc_id = int(doc_id)
+    body_lines = sanitize_for_pdf(text or "").split("\n")
+    page1 = b"\n".join(
+        [
+            text_page_content([f"Doc {doc_id} Title"], font="F3",
+                              size=24.0, y=750.0),
+            text_page_content(body_lines, y=700.0),
+        ]
+    )
+    page2 = b"\n".join(
+        [
+            text_page_content([f"Doc {doc_id} Section"], font="F3",
+                              size=15.0, y=750.0),
+            text_page_content(
+                [f"Markdown section body for doc {doc_id}."],
+                y=700.0),
+        ]
+    )
+    yield {
+        "doc_id": doc_id,
+        "url": f"https://md.example/{doc_id:08d}.pdf",
+        "html": build_pdf(
+            [page1, page2],
+            fonts={"F1": "Helvetica", "F2": "Courier",
+                   "F3": "Helvetica-Bold"},
+            info={"Title": f"Doc {doc_id} Title"},
+        ),
+    }
 
 
 @cached_builder
 def markdown_corpus_table(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text")
-    return _spread(docs).mapInArrow(_markdown_gen_kernel, CHROME_CORPUS_SCHEMA)
+    return _generate(_documents(spark, sf_dir, "doc_id", "text"), "doc_id",
+                     _markdown_row)
 
 
-def _html_table_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _html_table_row(doc_id):
     """Table-rich pages for the html_tables surface. Per doc:
     T = 2 if doc_id%5==0 else 1 tables; table t has R = 2+(doc_id+t)%3
     rows x C = 2+(doc_id+t)%2 cols; cell (r, c) of table t carries the
@@ -1184,43 +879,34 @@ def _html_table_gen_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Rec
     <b> wrapping on cells where (r+c)%3==0. The oracle regenerates
     every cell with generate_series — nothing is shared with the
     parser."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    schema = to_arrow_schema(CHROME_CORPUS_SCHEMA)
-    for batch in batches:
-        d = batch.to_pydict()
-        out = []
-        for doc_id in d["doc_id"]:
-            doc_id = int(doc_id)
-            n_tables = 2 if doc_id % 5 == 0 else 1
-            parts = ["<html><body>\n<p>intro text</p>\n"]
-            for t in range(n_tables):
-                rows_n = 2 + (doc_id + t) % 3
-                cols_n = 2 + (doc_id + t) % 2
-                parts.append('<table class="data">\n')
-                for r in range(rows_n):
-                    tr = '<tr class="odd">' if r % 2 == 1 else "<tr>"
-                    parts.append(f"  {tr}\n")
-                    tag = "th" if (r == 0 and doc_id % 2 == 0) else "td"
-                    for c in range(cols_n):
-                        cell = f"t{t}r{r}c{c}d{doc_id}"
-                        if (r + c) % 3 == 0:
-                            cell = f"<b>{cell}</b>"
-                        parts.append(f"    <{tag}> {cell} </{tag}>\n")
-                    parts.append("  </tr>\n")
-                parts.append("</table>\n<p>between tables</p>\n")
-            parts.append("</body></html>")
-            out.append({
-                "doc_id": doc_id,
-                "url": (f"https://host{doc_id % 7:02d}.example.com/"
-                        f"{doc_id:08d}.html"),
-                "html": "".join(parts).encode("utf-8"),
-            })
-        yield pa.RecordBatch.from_pylist(out, schema=schema)
+    doc_id = int(doc_id)
+    n_tables = 2 if doc_id % 5 == 0 else 1
+    parts = ["<html><body>\n<p>intro text</p>\n"]
+    for t in range(n_tables):
+        rows_n = 2 + (doc_id + t) % 3
+        cols_n = 2 + (doc_id + t) % 2
+        parts.append('<table class="data">\n')
+        for r in range(rows_n):
+            tr = '<tr class="odd">' if r % 2 == 1 else "<tr>"
+            parts.append(f"  {tr}\n")
+            tag = "th" if (r == 0 and doc_id % 2 == 0) else "td"
+            for c in range(cols_n):
+                cell = f"t{t}r{r}c{c}d{doc_id}"
+                if (r + c) % 3 == 0:
+                    cell = f"<b>{cell}</b>"
+                parts.append(f"    <{tag}> {cell} </{tag}>\n")
+            parts.append("  </tr>\n")
+        parts.append("</table>\n<p>between tables</p>\n")
+    parts.append("</body></html>")
+    yield {
+        "doc_id": doc_id,
+        "url": (f"https://host{doc_id % 7:02d}.example.com/"
+                f"{doc_id:08d}.html"),
+        "html": "".join(parts).encode("utf-8"),
+    }
 
 
 @cached_builder
 def html_table_corpus_table(spark, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return _spread(docs).mapInArrow(_html_table_gen_kernel,
-                                    CHROME_CORPUS_SCHEMA)
+    return _generate(_documents(spark, sf_dir, "doc_id"), "doc_id",
+                     _html_table_row)

@@ -54,7 +54,7 @@ spark = b.getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 from pyspark.sql import functions as F
 from pdfplumber_rs_spark import pipeline as P
-from pdfplumber_rs_spark.sources.corpus import CORPUS_SCHEMA, _gen_kernel
+from pdfplumber_rs_spark.sources.corpus import CORPUS_SCHEMA, _corpus_row
 
 # realistic multi-page documents: replicate each text 10x (one
 # Common-Crawl-ish PDF of several pages) and each doc 2x
@@ -74,7 +74,7 @@ docs = (
         "lang",
     )
 )
-base = docs.mapInArrow(_gen_kernel, CORPUS_SCHEMA)
+base = docs.mapInArrow(P.row_kernel(_corpus_row, CORPUS_SCHEMA), CORPUS_SCHEMA)
 corpus = (
     base.select("url", "html")
     .repartition(cpus * 4, "url")

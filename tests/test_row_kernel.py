@@ -1,0 +1,251 @@
+"""Spark-free tests of the mapInArrow boundary: `pipeline.row_kernel`
+and the per-row functions the pipeline wrappers hand to it.
+
+The page-row pins hash the Arrow output of `make_extract_kernel` over
+deterministic pdfgen inputs (fixtures, CJK/CID pages, hostile
+documents, a ranged row and blob-pointer rows), with `kernel_ms` zeroed.
+They guard the byte identity of the extraction kernel's output.
+"""
+
+from __future__ import annotations
+
+import functools
+import hashlib
+import importlib
+import os
+
+import pyarrow as pa
+import pytest
+
+from pdfplumber_rs_spark import pipeline as P
+from pdfplumber_rs_spark.sources import pdfgen
+
+# sha256 of the page rows for (include=None, include=())
+PAGE_ROW_PINS = {
+    None: "f5e6aedac63417bd0556dfd44938b671c2993a170e26d8cacf8045285b19503b",
+    (): "5779b969bc6aedcf14b758ea85af9176e39e77094c2cd3f87e91894de37a2047",
+}
+
+
+def _cjk_pdf() -> bytes:
+    return pdfgen.build_pdf(
+        [pdfgen.cjk_text_page_content(["中文字符", "数据"])],
+        fonts={"FC": {"base": "CJKGB", "cid_encoding": "UniGB-UCS2-H"}})
+
+
+def _cid_pdf() -> bytes:
+    return pdfgen.build_pdf(
+        [pdfgen.cid_text_page_content([[843, 850, 861], [34, 35, 36]])],
+        fonts={"FJ": {"base": "CIDJP", "cid_encoding": "Identity-H",
+                      "ordering": "Japan1", "cid_subtype": "CIDFontType0"}})
+
+
+def _damaged_xref_pdf() -> bytes:
+    pdf = pdfgen.fixture_text(8)
+    return pdf[:pdf.rfind(b"\nxref\n")] + b"\nstartxref\n999999\n%%EOF\n"
+
+
+def _truncated_stream_pdf() -> bytes:
+    pdf = pdfgen.fixture_multipage(3, 10)
+    return pdf[:pdf.find(b"stream\n") + 120]
+
+
+def pin_batches(blob_dir: str) -> list[pa.RecordBatch]:
+    """The three input column sets the extraction kernel accepts:
+    (url, html, page_start, page_end), the same plus blob_path, and the
+    two-column (url, html)."""
+    docs = {
+        "text": pdfgen.fixture_text(12),
+        "multipage": pdfgen.fixture_multipage(3, 8),
+        "lattice": pdfgen.fixture_lattice(4, 3),
+        "stream": pdfgen.fixture_stream(5, 3),
+        "complex": pdfgen.fixture_complex(2),
+        "cjk": _cjk_pdf(),
+        "cid": _cid_pdf(),
+        "encrypted": pdfgen.encrypt_pdf(pdfgen.fixture_text(4), "pw", "owner"),
+        "damaged-xref": _damaged_xref_pdf(),
+        "truncated-stream": _truncated_stream_pdf(),
+        "not-a-pdf": b"<html>not a pdf</html>",
+        "empty": b"",
+    }
+    n = len(docs)
+    plain = pa.RecordBatch.from_pydict({
+        "url": [f"pin://{k}" for k in docs],
+        "html": list(docs.values()),
+        "page_start": pa.array([None] * n, pa.int32()),
+        "page_end": pa.array([None] * n, pa.int32()),
+    })
+    blob = os.path.join(blob_dir, "blob.pdf")
+    with open(blob, "wb") as f:
+        f.write(pdfgen.fixture_multipage(4, 5))
+    ranged = pa.RecordBatch.from_pydict({
+        "url": ["pin://ranged", "pin://blob-range", "pin://blob-missing",
+                "pin://no-bytes"],
+        "html": pa.array([pdfgen.fixture_multipage(5, 4), None, None, None],
+                         pa.binary()),
+        "blob_path": [None, blob, "/nonexistent/pin-blob.pdf", None],
+        "page_start": pa.array([1, 2, 0, None], pa.int32()),
+        "page_end": pa.array([3, 4, 50, None], pa.int32()),
+    })
+    two_col = pa.RecordBatch.from_pydict({
+        "url": ["pin://two-col"],
+        "html": [pdfgen.fixture_complex(1)],
+    })
+    return [plain, ranged, two_col]
+
+
+def page_rows_digest(kernel, batches) -> str:
+    rows = [r for b in kernel(iter(batches)) for r in b.to_pylist()]
+    for r in rows:
+        r["kernel_ms"] = 0.0
+    return hashlib.sha256(repr(rows).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("include", [None, ()], ids=["all", "text-only"])
+def test_page_rows_match_pins(include, tmp_path):
+    kernel = P.make_extract_kernel(include=include)
+    assert page_rows_digest(kernel, pin_batches(str(tmp_path))) \
+        == PAGE_ROW_PINS[include]
+
+
+# -- failure policy of the per-row functions ------------------------------------
+
+class _Plan:
+    """Stands in for the DataFrame a wrapper is given: hands back the
+    kernel the wrapper passes to mapInArrow instead of running Spark."""
+
+    def select(self, *cols):
+        return self
+
+    def mapInArrow(self, kernel, schema):
+        return kernel
+
+
+def _rows(kernel, urls, htmls) -> list[dict]:
+    batch = pa.RecordBatch.from_pydict(
+        {"url": urls, "html": pa.array(htmls, pa.binary())})
+    return [r for b in kernel(iter([batch])) for r in b.to_pylist()]
+
+
+NON_PDF = b"\x00not a pdf"
+
+
+def test_extract_and_meta_give_error_rows():
+    page, null_page = _rows(P.make_extract_kernel(include=()),
+                            ["g", "n"], [NON_PDF, None])
+    assert page["page_number"] == 0 and page["error"].startswith("no pages: ")
+    assert null_page["error"].startswith("open failed: ")
+    meta, null_meta = _rows(P.document_meta(_Plan()), ["g", "n"],
+                            [NON_PDF, None])
+    assert meta["n_pages"] == 0 and meta["error"].startswith("no pages: ")
+    assert null_meta["error"].startswith("open failed: ")
+    assert null_meta["title"] is None and null_meta["bookmarks"] == []
+
+
+def test_validation_reports_findings_or_an_open_failed_row():
+    rows = _rows(P.validation_table(_Plan()), ["g", "n"], [NON_PDF, None])
+    assert [r["code"] for r in rows if r["url"] == "g"] == [
+        "no-root", "repaired-xref", "no-pages"]
+    assert [(r["code"], r["severity"]) for r in rows if r["url"] == "n"] == [
+        ("open-failed", "error")]
+
+
+@pytest.mark.parametrize("wrapper, cols", [
+    (P.render_html, ("html_text",)),
+    (P.render_markdown, ("markdown", "meta_json")),
+])
+def test_renderers_give_null_columns(wrapper, cols):
+    garbage, null = _rows(wrapper(_Plan()), ["g", "n"], [NON_PDF, None])
+    assert all(null[c] is None for c in cols)
+    assert all(garbage[c] is not None for c in cols)  # lenient open, no pages
+
+
+@pytest.mark.parametrize("make", [
+    P.render_svg, P.structure_table, P.table_debug_table,
+    P.signatures_table, lambda df: P.search_pages(df, "a"),
+])
+def test_per_page_kernels_give_no_rows(make):
+    assert _rows(make(_Plan()), ["g", "n"], [NON_PDF, None]) == []
+
+
+def test_spill_counts_zero_pages_for_non_pdf(tmp_path):
+    spill = functools.partial(P._spill_rows, spill_dir=str(tmp_path))
+    kernel = P.row_kernel(spill, P.SPILL_SCHEMA)
+    (row,) = _rows(kernel, ["g"], [NON_PDF])
+    assert row["n_pages"] == 0
+    with open(row["blob_path"], "rb") as f:
+        assert f.read() == NON_PDF
+
+
+def test_html_kernels_have_no_try(monkeypatch):
+    from pdfplumber_rs_spark.kernel import htmlstrip
+
+    main = _rows(P.html_main_content(_Plan()), ["g", "n"], [NON_PDF, None])
+    assert [r["n_blocks_kept"] for r in main] == [0, 0]
+    assert _rows(P.html_links(_Plan()), ["g", "n"], [NON_PDF, None]) == []
+
+    def boom(*a, **k):
+        raise RuntimeError("boom")
+
+    monkeypatch.setattr(htmlstrip, "extract_main_content", boom)
+    with pytest.raises(RuntimeError):
+        _rows(P.html_anchors(_Plan()), ["g"], [NON_PDF])
+
+
+def _fail_on_second_call(monkeypatch, module, name):
+    orig = getattr(module, name)
+    calls = []
+
+    def patched(*a, **k):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("page 2 broke")
+        return orig(*a, **k)
+
+    monkeypatch.setattr(module, name, patched)
+
+
+@pytest.mark.parametrize("make, module, name", [
+    (P.render_svg, "svg", "page_to_svg"),
+    (P.table_debug_table, "tables", "table_debug"),
+    (lambda df: P.search_pages(df, "Page"), "docextras", "search_chars"),
+])
+def test_failing_page_keeps_earlier_pages(monkeypatch, make, module, name):
+    mod = importlib.import_module(f"pdfplumber_rs_spark.kernel.{module}")
+    _fail_on_second_call(monkeypatch, mod, name)
+    rows = _rows(make(_Plan()), ["m"], [pdfgen.fixture_multipage(3, 5)])
+    assert rows and {r["page_number"] for r in rows} == {1}
+
+
+def test_extract_marks_the_failing_page_and_goes_on(monkeypatch):
+    from pdfplumber_rs_spark.kernel.page import Page
+
+    _fail_on_second_call(monkeypatch, Page, "extract_words")
+    rows = _rows(P.make_extract_kernel(include=()), ["m"],
+                 [pdfgen.fixture_multipage(3, 5)])
+    assert [(r["page_number"], r["error"]) for r in rows] == [
+        (1, None), (2, "page 2: page 2 broke"), (3, None)]
+
+
+# -- row_kernel -------------------------------------------------------------------
+
+def test_row_kernel_flushes_at_most_flush_rows():
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    schema = StructType([StructField("k", LongType()),
+                         StructField("i", LongType())])
+
+    def explode(k, n):
+        for i in range(n):
+            yield {"k": k, "i": i}
+
+    counts = [[0, 3, 11, 2], [25], [4, 4]]
+    batches = [pa.RecordBatch.from_pydict({"k": list(range(len(c))), "n": c})
+               for c in counts]
+    out = list(P.row_kernel(explode, schema, flush_rows=5)(iter(batches)))
+    assert out and all(b.num_rows <= 5 for b in out)
+    rows = [(r["k"], r["i"]) for b in out for r in b.to_pylist()]
+    assert rows == [(k, i) for c in counts
+                    for k, n in enumerate(c) for i in range(n)]
+    # a partial batch is flushed at the end of every input batch
+    assert [b.num_rows for b in out] == [5, 5, 5, 1] + [5] * 5 + [5, 3]
