@@ -1,4 +1,4 @@
-"""Char assembly: CharRuns -> positioned Char dicts (numpy-vectorized).
+"""Char assembly: CharRuns -> one page's CharColumns (numpy-vectorized).
 
 Port of the reference bbox math
 (crates/pdfplumber-parse/src/char_extraction.rs:28-128):
@@ -8,29 +8,131 @@ y-flip top = page_height - max_y; upright iff no shear; direction from
 the dominant Trm axis.
 
 The interpreter emits COLUMNAR CharRuns (one per show op: constants on
-the run, per-glyph lists) so the numpy columns here build from
-list.extend + np.repeat over run lengths — no per-glyph object or
-per-event attribute scan exists anywhere on this path.
+the run, per-glyph lists) and a page keeps its glyphs the same way, as
+one CharColumns: numpy position columns, a text list, and per glyph its
+run, which keeps the run constants (fontname, colours, ctm, mcid, tag,
+char codes). Every page-level pass reads the columns; per-glyph dicts
+are built only on demand (`to_dicts`, behind `Page.chars`).
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from types import SimpleNamespace
+
 import numpy as np
+
+DIRECTIONS = ("ltr", "rtl", "ttb", "btt")
+_DIRECTION_CODE = {d: i for i, d in enumerate(DIRECTIONS)}
+# direction codes after a clockwise page rotation
+_ROTATED_DIRECTION = {
+    90: np.array([2, 3, 1, 0]),
+    180: np.array([1, 0, 3, 2]),
+    270: np.array([3, 2, 0, 1]),
+}
+
+
+@dataclass(eq=False, slots=True)
+class CharColumns:
+    """One page's glyphs as a struct of arrays, every column always
+    present and aligned. run/pos give each glyph's CharRun in `runs`
+    and its index in that run's codes. Filters return a new CharColumns
+    (`take`); only the page build edits columns in place."""
+
+    x0: np.ndarray  # float64, like x1/top/bottom/doctop/size
+    x1: np.ndarray
+    top: np.ndarray
+    bottom: np.ndarray
+    doctop: np.ndarray
+    size: np.ndarray
+    upright: np.ndarray  # bool
+    direction: np.ndarray  # int codes into DIRECTIONS
+    text: list
+    run: np.ndarray
+    pos: np.ndarray
+    runs: list
+
+    def __len__(self) -> int:
+        return len(self.text)
+
+    def take(self, idx) -> "CharColumns":
+        """The glyphs at `idx` (an index array or a boolean mask), in
+        that order."""
+        idx = np.asarray(idx)
+        idx = np.flatnonzero(idx) if idx.dtype == np.bool_ \
+            else idx.astype(np.intp, copy=False)
+        text = self.text
+        return CharColumns(
+            self.x0[idx], self.x1[idx], self.top[idx], self.bottom[idx],
+            self.doctop[idx], self.size[idx], self.upright[idx],
+            self.direction[idx], [text[i] for i in idx.tolist()],
+            self.run[idx], self.pos[idx], self.runs)
+
+    def text_codes(self):
+        """Each glyph's code point (int64) when every glyph text is
+        exactly one char — the common case — else None."""
+        text = self.text
+        joined = "".join(text)
+        if len(joined) != len(text) or "" in text:
+            return None
+        return np.frombuffer(joined.encode("utf-32-le", "surrogatepass"),
+                             np.uint32).astype(np.int64)
+
+    def to_dicts(self) -> list[dict]:
+        """The per-glyph dicts of the `Page.chars` API."""
+        runs = self.runs
+        ctms = [None if r.ctm is None else tuple(float(v) for v in r.ctm)
+                for r in runs]
+        return [
+            {"text": text, "x0": x0, "top": top, "x1": x1, "bottom": bottom,
+             "fontname": runs[ri].font_name, "size": size, "doctop": doctop,
+             "upright": upright, "direction": DIRECTIONS[d],
+             "stroking_color": runs[ri].stroking_color,
+             "non_stroking_color": runs[ri].non_stroking_color,
+             "ctm": ctms[ri], "char_code": int(runs[ri].codes[pos]),
+             "mcid": runs[ri].mcid, "tag": runs[ri].tag}
+            for text, x0, top, x1, bottom, size, doctop, upright, d, ri, pos
+            in zip(self.text, self.x0.tolist(), self.top.tolist(),
+                   self.x1.tolist(), self.bottom.tolist(), self.size.tolist(),
+                   self.doctop.tolist(), self.upright.tolist(),
+                   self.direction.tolist(), self.run.tolist(),
+                   self.pos.tolist())]
+
+    @classmethod
+    def from_dicts(cls, chars: list[dict]) -> "CharColumns":
+        """Columns over caller-built char dicts (one run per dict)."""
+        n = len(chars)
+
+        def col(key):
+            return np.fromiter((c[key] for c in chars), np.float64, n)
+
+        keys = ("ctm", "stroking_color", "non_stroking_color", "mcid", "tag")
+        runs = [SimpleNamespace(font_name=c.get("fontname"),
+                                codes=[c.get("char_code", 0)],
+                                **{k: c.get(k) for k in keys}) for c in chars]
+        return cls(
+            col("x0"), col("x1"), col("top"), col("bottom"), col("doctop"),
+            col("size"),
+            np.fromiter((bool(c["upright"]) for c in chars), np.bool_, n),
+            np.fromiter((_DIRECTION_CODE[c["direction"]] for c in chars),
+                        np.int64, n),
+            [c["text"] for c in chars], np.arange(n), np.zeros(n, np.int64),
+            runs)
+
+
+def as_columns(chars) -> CharColumns:
+    return chars if isinstance(chars, CharColumns) \
+        else CharColumns.from_dicts(chars)
 
 
 def chars_from_events(runs: list, page_height: float,
-                      want_cols: bool = False):
-    """runs: list[interpreter.CharRun] for one page.
-
-    want_cols=True additionally returns the positional numpy columns
-    ({x0, x1, top, bot, doctop, up}) that downstream vectorized passes
-    (dedupe prescreen, word ordering/splitting) would otherwise rebuild
-    from the dicts with np.fromiter — the arrays already exist here
-    (round 6). Caller contract: the columns are only valid while the
-    char LIST is unfiltered and positions unmutated (no rotation)."""
+                      geom=None) -> CharColumns:
+    """runs: list[interpreter.CharRun] for one page. `geom` (a
+    page.PageGeometry) with a non-zero rotation turns the boxes,
+    directions and upright flags into the rotated page's frame."""
     runs = [r for r in runs if r.codes]
     if not runs:
-        return ([], None) if want_cols else []
+        return CharColumns.from_dicts([])
     nruns = len(runs)
     lens = np.fromiter((len(r.codes) for r in runs), np.int64, nruns)
     n = int(lens.sum())
@@ -49,33 +151,27 @@ def chars_from_events(runs: list, page_height: float,
         np.array([r.ctm for r in runs], dtype=np.float64), lens, axis=0)
 
     # per-glyph columns -> flat lists (C-speed extend), one np.array each
+    text: list = []
     disp_l: list = []
     e_l: list = []
     f_l: list = []
-    any_vert = False
     for r in runs:
+        text.extend(r.unis)
         disp_l.extend(r.w0s)
         e_l.extend(r.es)
         f_l.extend(r.fs)
-        if r.vxs is not None:
-            any_vert = True
+    if None in text:
+        text = ["�" if u is None else u for u in text]
     disp = np.asarray(disp_l, dtype=np.float64)
     e2 = np.asarray(e_l, dtype=np.float64)
     f2 = np.asarray(f_l, dtype=np.float64)
-    if any_vert:
-        vx_l: list = []
-        vy_l: list = []
-        for r, ln in zip(runs, lens):
-            if r.vxs is None:
-                vx_l.extend([0.0] * int(ln))
-                vy_l.extend([0.0] * int(ln))
-            else:
-                vx_l.extend(r.vxs)
-                vy_l.extend(r.vys)
-        vx = np.asarray(vx_l, dtype=np.float64)
-        vy = np.asarray(vy_l, dtype=np.float64)
-    else:
-        vx = vy = np.zeros(n, dtype=np.float64)
+    vx = np.zeros(n, dtype=np.float64)
+    vy = np.zeros(n, dtype=np.float64)
+    starts = np.cumsum(lens) - lens
+    for r, s in zip(runs, starts.tolist()):
+        if r.vxs is not None:
+            vx[s:s + len(r.vxs)] = r.vxs
+            vy[s:s + len(r.vys)] = r.vys
 
     # fm = [tfs*th, 0, 0, tfs, 0, rise]; trm1 = fm x Tm
     A1 = tfs * th
@@ -103,17 +199,16 @@ def chars_from_events(runs: list, page_height: float,
     ox = -vx / 1000.0
     oy = -vy / 1000.0
 
-    # corners in glyph space: (ox,oy+dn) (ox+w,oy+dn) (ox+w,oy+an) (ox,oy+an)
-    cx = np.stack([ox, ox + w, ox + w, ox], axis=1)  # (n,4)
-    cy = np.stack([oy + dn, oy + dn, oy + an, oy + an], axis=1)
-    px = a[:, None] * cx + c[:, None] * cy + e[:, None]
-    py = b[:, None] * cx + d[:, None] * cy + f[:, None]
-
-    min_x = px.min(axis=1)
-    max_x = px.max(axis=1)
-    min_y = py.min(axis=1)
-    max_y = py.max(axis=1)
-
+    # corners in glyph space: (ox,oy+dn) (ox+w,oy+dn) (ox+w,oy+an) (ox,oy+an),
+    # one column per corner; min/max fold them left to right
+    gx = (ox, ox + w, ox + w, ox)
+    gy = (oy + dn, oy + dn, oy + an, oy + an)
+    px = [a * u + c * v + e for u, v in zip(gx, gy)]
+    py = [b * u + d * v + f for u, v in zip(gx, gy)]
+    x0 = np.minimum(np.minimum(np.minimum(px[0], px[1]), px[2]), px[3])
+    x1 = np.maximum(np.maximum(np.maximum(px[0], px[1]), px[2]), px[3])
+    min_y = np.minimum(np.minimum(np.minimum(py[0], py[1]), py[2]), py[3])
+    max_y = np.maximum(np.maximum(np.maximum(py[0], py[1]), py[2]), py[3])
     top = page_height - max_y
     bottom = page_height - min_y
 
@@ -129,76 +224,26 @@ def chars_from_events(runs: list, page_height: float,
     # direction from dominant Trm axis (char_extraction.rs:94-104)
     horiz = np.abs(a) >= np.abs(b)
     direction = np.where(horiz, np.where(a >= 0, 0, 1), np.where(b > 0, 3, 2))
-    # 0=ltr 1=rtl 2=ttb 3=btt
-    dir_names = ("ltr", "rtl", "ttb", "btt")
 
     # size = device-space bbox height for horizontal-mode fonts, width for
     # vertical-mode fonts (pdfminer LTChar semantics — the golden oracle);
     # equals Tfs on unrotated, unscaled text.
     is_vert = (vx != 0.0) | (vy != 0.0)
-    size = np.where(is_vert, max_x - min_x, max_y - min_y)
+    rot = geom.rotation if geom is not None else 0
+    if rot:
+        # the unrotated boxes go back to native y-up space and through
+        # the page rotation; direction turns with the page, and size
+        # tracks the rotated box
+        x0, top, x1, bottom = geom.normalize_bboxes(
+            x0, page_height - bottom, x1, page_height - top)
+        direction = _ROTATED_DIRECTION[rot][direction]
+        if rot in (90, 270):
+            upright = ~upright
+        size = np.where(is_vert, x1 - x0, bottom - top)
+    else:
+        size = np.where(is_vert, x1 - x0, max_y - min_y)
 
-    # bulk-convert to Python scalars once (tolist); run constants
-    # (fontname, colors, ctm tuple, mcid/tag) are reused per run
-    min_x_l = min_x.tolist()
-    max_x_l = max_x.tolist()
-    top_l = top.tolist()
-    bottom_l = bottom.tolist()
-    size_l = size.tolist()
-    upright_l = upright.tolist()
-    vert_l = is_vert.tolist()
-    dir_l = [dir_names[di] for di in direction.tolist()]
-    ctm_cache: dict[int, tuple] = {}
-
-    out: list[dict] = []
-    out_append = out.append
-    i = 0
-    for r in runs:
-        raw_ctm = r.ctm
-        ctm = ctm_cache.get(id(raw_ctm))
-        if ctm is None:
-            ctm = tuple(float(v) for v in raw_ctm)
-            ctm_cache[id(raw_ctm)] = ctm
-        fname = r.font_name
-        mcid = r.mcid
-        tag = r.tag
-        sc = r.stroking_color
-        nsc = r.non_stroking_color
-        j = i + len(r.codes)
-        # zip over per-run list slices: one tuple unpack per glyph
-        # instead of 7 list-index operations (hot loop, round 6)
-        for code, uni, x0v, topv, x1v, botv, szv, vtv, upv, dirv in zip(
-                r.codes, r.unis, min_x_l[i:j], top_l[i:j], max_x_l[i:j],
-                bottom_l[i:j], size_l[i:j], vert_l[i:j], upright_l[i:j],
-                dir_l[i:j]):
-            if uni is None:
-                uni = "�"
-            out_append(
-                {
-                    "text": uni,
-                    "x0": x0v,
-                    "top": topv,
-                    "x1": x1v,
-                    "bottom": botv,
-                    "fontname": fname,
-                    "size": szv,
-                    "_wmode": 1 if vtv else 0,
-                    "doctop": topv,
-                    "upright": upv,
-                    "direction": dirv,
-                    "stroking_color": sc,
-                    "non_stroking_color": nsc,
-                    "ctm": ctm,
-                    "char_code": int(code),
-                    "mcid": mcid,
-                    "tag": tag,
-                }
-            )
-        i = j
-    if want_cols:
-        cols = {
-            "x0": min_x, "x1": max_x, "top": top, "bot": bottom,
-            "doctop": top.copy(), "up": upright,
-        }
-        return out, cols
-    return out
+    return CharColumns(
+        x0, x1, top, bottom, top.copy(), size, upright, direction, text,
+        np.repeat(np.arange(nruns), lens),
+        np.arange(n) - np.repeat(starts, lens), runs)

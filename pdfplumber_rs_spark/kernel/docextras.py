@@ -11,7 +11,9 @@ regex over full text, match → union bbox of constituent chars).
 from __future__ import annotations
 
 import re
+from itertools import accumulate
 
+from .chars import as_columns
 from .objects import Name, Ref, Stream
 
 _KNOWN_SUBTYPES = {
@@ -341,21 +343,19 @@ def structure_tree(doc) -> list[dict]:
     return out
 
 
-def search_chars(chars: list[dict], pattern: str, regex: bool = True,
+def search_chars(chars, pattern: str, regex: bool = True,
                  case: bool = True) -> list[dict]:
     """Concat char texts → regex/literal match over the page text →
     [{text, start, end, x0, top, x1, bottom}] with the union bbox of
-    the constituent chars (search.rs:59-145)."""
-    if not chars:
+    the constituent chars (search.rs:59-145). `chars` is a page's
+    CharColumns (or a list of char dicts)."""
+    cols = as_columns(chars)
+    if not len(cols):
         return []
     # char i covers text offsets [starts[i], starts[i+1])
-    texts = [c["text"] or "" for c in chars]
+    texts = [t or "" for t in cols.text]
     full = "".join(texts)
-    starts: list[int] = []
-    pos = 0
-    for t in texts:
-        starts.append(pos)
-        pos += len(t)
+    starts = list(accumulate(map(len, texts), initial=0))
     flags = 0 if case else re.IGNORECASE
     pat = pattern if regex else re.escape(pattern)
     out: list[dict] = []
@@ -365,22 +365,23 @@ def search_chars(chars: list[dict], pattern: str, regex: bool = True,
         return []
     import bisect
 
+    x0, top = cols.x0.tolist(), cols.top.tolist()
+    x1, bottom = cols.x1.tolist(), cols.bottom.tolist()
     for m in compiled.finditer(full):
         s, e = m.start(), m.end()
         if e <= s:
             continue
         first = bisect.bisect_right(starts, s) - 1
-        last = bisect.bisect_right(starts, e - 1) - 1
-        span = chars[first : last + 1]
+        end = bisect.bisect_right(starts, e - 1)  # one past the last char
         out.append(
             {
                 "text": m.group(0),
                 "start": s,
                 "end": e,
-                "x0": min(c["x0"] for c in span),
-                "top": min(c["top"] for c in span),
-                "x1": max(c["x1"] for c in span),
-                "bottom": max(c["bottom"] for c in span),
+                "x0": min(x0[first:end]),
+                "top": min(top[first:end]),
+                "x1": max(x1[first:end]),
+                "bottom": max(bottom[first:end]),
             }
         )
     return out

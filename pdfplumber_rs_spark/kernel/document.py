@@ -103,13 +103,8 @@ class Document:
         page._extras_thunk = _extras
         doctop_offset = sum(self.page_heights[:index])
         if doctop_offset:
-            for ch in page.chars:
-                ch["doctop"] += doctop_offset
-            if page._char_cols is not None:
-                # keep the positional columns aligned (same IEEE add)
-                page._char_cols["doctop"] = (
-                    page._char_cols["doctop"] + doctop_offset
-                )
+            cols = page.char_columns
+            cols.doctop = cols.doctop + doctop_offset
         return page
 
     def pages(self):

@@ -20,18 +20,32 @@ from __future__ import annotations
 from collections import Counter
 
 from .layout import cluster_words_into_lines
+from .words import words_and_members
 
 
 def _escape(s: str) -> str:
     return s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
 
-def _dominant(chars: list[dict]) -> tuple[str, float]:
+def font_words(page) -> list[dict]:
+    """The page's default-option words, each with the (fontname, size)
+    of its chars, in reading order, under "fonts"."""
+    cols = page.char_columns
+    words, members, bounds = words_and_members(cols)
+    fonts = [(cols.runs[r].font_name, s)
+             for r, s in zip(cols.run[members].tolist(),
+                             cols.size[members].tolist())]
+    for w, a, b in zip(words, bounds, bounds[1:]):
+        w["fonts"] = fonts[a:b]
+    return words
+
+
+def _dominant(fonts: list[tuple]) -> tuple[str, float]:
     """(fontname, size) shared by the most chars; ties -> lexicographic
     fontname, then smaller size."""
-    if not chars:
+    if not fonts:
         return "", 0.0
-    counts = Counter((c["fontname"] or "", round(float(c["size"]), 4)) for c in chars)
+    counts = Counter((f or "", round(float(s), 4)) for f, s in fonts)
     best = max(counts.items(), key=lambda kv: (kv[1], kv[0][0]), default=None)
     # deterministic tie-break: highest count, then lexicographic key
     top_n = best[1]
@@ -53,7 +67,7 @@ def _inside(w: dict, bbox: tuple) -> bool:
 def page_to_html(page, y_tolerance: float = 3.0) -> str:
     """Render one page to semantic HTML (block-level string, no <html>
     wrapper — matches the reference's per-page fragment)."""
-    words = page.extract_words()
+    words = font_words(page)
     tables = page.find_tables()
     tboxes = [
         (t["bbox"]["x0"], t["bbox"]["top"], t["bbox"]["x1"], t["bbox"]["bottom"])
@@ -69,8 +83,7 @@ def page_to_html(page, y_tolerance: float = 3.0) -> str:
     sizes: list[float] = []
     line_meta = []
     for ln in lines:
-        chars = [c for w in ln["words"] for c in w.get("chars", [])]
-        fontname, size = _dominant(chars)
+        fontname, size = _dominant([f for w in ln["words"] for f in w["fonts"]])
         sizes.append(size)
         line_meta.append((ln, fontname, size))
     body_size = 0.0

@@ -33,7 +33,7 @@ import hashlib
 import json
 from collections import Counter
 
-from .html import _dominant, _inside, _line_text
+from .html import _dominant, _inside, _line_text, font_words
 from .layout import cluster_words_into_lines
 
 _FILTER_EXT = {
@@ -79,7 +79,7 @@ def _heading_level(ratio: float) -> int:
 
 def page_to_markdown(page, y_tolerance: float = 3.0) -> str:
     """Render one page to Markdown (no trailing newline)."""
-    words = page.extract_words()
+    words = font_words(page)
     tables = page.find_tables()
     tboxes = [
         (t["bbox"]["x0"], t["bbox"]["top"], t["bbox"]["x1"], t["bbox"]["bottom"])
@@ -91,8 +91,7 @@ def page_to_markdown(page, y_tolerance: float = 3.0) -> str:
     line_meta = []
     sizes: list[float] = []
     for ln in lines:
-        chars = [c for w in ln["words"] for c in w.get("chars", [])]
-        fontname, size = _dominant(chars)
+        fontname, size = _dominant([f for w in ln["words"] for f in w["fonts"]])
         text = _line_text(ln)
         if not text.strip():
             continue

@@ -3,12 +3,19 @@
 Mirrors crates/pdfplumber/src/pdf.rs:491-672 (page build) and
 crates/pdfplumber-parse/src/page_geometry.rs (rotation pipeline:
 MediaBox offset -> clockwise rotation -> y-flip).
+
+A Page keeps its glyphs as one CharColumns (`Page.char_columns`, always
+present), which words, text, tables, search and the spatial filters
+read. `Page.chars`, the per-glyph dicts, is built from it on first
+access and cached; the text path never builds it.
 """
 
 from __future__ import annotations
 
+import numpy as np
+
 from ..config import ExtractOptions, TableSettings, TextOptions, WordOptions
-from .chars import chars_from_events
+from .chars import CharColumns, chars_from_events
 from .layout import extract_text_from_words
 from .shapes import derive_edges, extract_shapes
 from .tables import find_tables
@@ -51,12 +58,12 @@ class PageGeometry:
         x1, y1 = self.normalize_point(max_x, max_y)
         return (min(x0, x1), min(y0, y1), max(x0, x1), max(y0, y1))
 
-
-_ROT_DIR = {
-    90: {"ltr": "ttb", "rtl": "btt", "ttb": "rtl", "btt": "ltr"},
-    180: {"ltr": "rtl", "rtl": "ltr", "ttb": "btt", "btt": "ttb"},
-    270: {"ltr": "btt", "rtl": "ttb", "ttb": "ltr", "btt": "rtl"},
-}
+    def normalize_bboxes(self, min_x, min_y, max_x, max_y) -> tuple:
+        """normalize_bbox over numpy columns (same min/max tie rules)."""
+        x0, y0 = self.normalize_point(min_x, min_y)
+        x1, y1 = self.normalize_point(max_x, max_y)
+        return (np.where(x1 < x0, x1, x0), np.where(y1 < y0, y1, y0),
+                np.where(x1 > x0, x1, x0), np.where(y1 > y0, y1, y0))
 
 
 def _rotate_bbox(obj: dict, page_height: float, geom: PageGeometry) -> None:
@@ -80,14 +87,15 @@ class Page:
     """One extracted page: chars/lines/rects/curves/edges + derived APIs."""
 
     def __init__(self, page_number: int, width: float, height: float,
-                 rotation: int, chars: list[dict], lines: list[dict],
+                 rotation: int, char_columns: CharColumns, lines: list[dict],
                  rects: list[dict], curves: list[dict], images: list[dict],
                  warnings: list[str]) -> None:
         self.page_number = page_number  # 1-based like pdfplumber
         self.width = width
         self.height = height
         self.rotation = rotation
-        self.chars = chars
+        self.char_columns = char_columns
+        self._chars: list[dict] | None = None
         self.lines = lines
         self.rects = rects
         self.curves = curves
@@ -95,16 +103,26 @@ class Page:
         self.warnings = warnings
         self._annotations: list[dict] | None = []
         self._hyperlinks: list[dict] | None = []
-        self._extras_thunk = None  # () -> (annotations, hyperlinks), lazy
-        # positional numpy columns aligned with self.chars (or None);
-        # set by build_page, consumed by extract_words — derived data,
-        # never required (crop/filter paths leave it None)
-        self._char_cols = None
+        # () -> (annotations, hyperlinks); dropped once it has run, so a
+        # kept page does not pin the parsed document
+        self._extras_thunk = None
+
+    @property
+    def chars(self) -> list[dict]:
+        """Per-glyph dicts, built from the columns on first access: a
+        snapshot, so editing them changes no words, text or tables."""
+        if self._chars is None:
+            self._chars = self.char_columns.to_dicts()
+        return self._chars
+
+    def _load_extras(self) -> None:
+        self._annotations, self._hyperlinks = self._extras_thunk()
+        self._extras_thunk = None
 
     @property
     def annotations(self) -> list[dict]:
         if self._annotations is None:
-            self._annotations, self._hyperlinks = self._extras_thunk()
+            self._load_extras()
         return self._annotations
 
     @annotations.setter
@@ -114,7 +132,7 @@ class Page:
     @property
     def hyperlinks(self) -> list[dict]:
         if self._hyperlinks is None:
-            self._annotations, self._hyperlinks = self._extras_thunk()
+            self._load_extras()
         return self._hyperlinks
 
     @hyperlinks.setter
@@ -125,14 +143,14 @@ class Page:
         return derive_edges(self.lines, self.rects, self.curves)
 
     def extract_words(self, options: WordOptions | None = None) -> list[dict]:
-        return extract_words(self.chars, options, cols=self._char_cols)
+        return extract_words(self.char_columns, options)
 
     def search(self, pattern: str, regex: bool = True, case: bool = True) -> list[dict]:
         """P6: regex/literal search over the page's char stream
         (search.rs:59-145)."""
         from .docextras import search_chars
 
-        return search_chars(self.chars, pattern, regex, case)
+        return search_chars(self.char_columns, pattern, regex, case)
 
     def extract_text(self, options: TextOptions | None = None,
                      word_options: WordOptions | None = None) -> str:
@@ -143,15 +161,14 @@ class Page:
                     word_options: WordOptions | None = None) -> list[dict]:
         # cell text uses the default word options (oracle semantics —
         # rotation is already baked into the char coordinates)
-        from ..config import TableSettings as _TS
-
         wopt = word_options or WordOptions()
         # words feed ONLY the stream strategy (words_to_edges_v/h);
         # lattice/explicit never read them — skip the second word
         # extraction (it was ~40% of text-page kernel time)
-        st = settings or _TS()
+        st = settings or TableSettings()
         words = self.extract_words(word_options) if st.strategy == "stream" else []
-        return find_tables(self.edges(), words, self.chars, settings, wopt)
+        return find_tables(self.edges(), words, self.char_columns, settings,
+                           wopt)
 
     def extract_tables(self, settings: TableSettings | None = None) -> list[list[list[str | None]]]:
         """Rows-of-cell-text form, matching golden JSON shape
@@ -163,67 +180,73 @@ class Page:
 
     # -- spatial filters (P4: cropped_page.rs:251-334) ----------------------
 
-    def _filter_objs(self, objs: list[dict], bbox: tuple, mode: str,
-                     rebase: bool) -> list[dict]:
-        x0, top, x1, bottom = bbox
-        out = []
-        for o in objs:
-            if mode == "center":
-                cx = (o["x0"] + o["x1"]) / 2.0
-                cy = (o["top"] + o["bottom"]) / 2.0
-                keep = x0 <= cx <= x1 and top <= cy <= bottom
-            elif mode == "within":
-                keep = (
-                    o["x0"] >= x0 and o["x1"] <= x1
-                    and o["top"] >= top and o["bottom"] <= bottom
-                )
-            else:  # outside: no overlap
-                keep = (
-                    o["x1"] < x0 or o["x0"] > x1
-                    or o["bottom"] < top or o["top"] > bottom
-                )
-            if keep:
-                if rebase and mode != "outside":
-                    o = dict(o)
-                    o["x0"] -= x0
-                    o["x1"] -= x0
-                    o["top"] -= top
-                    o["bottom"] -= top
-                    if "doctop" in o:
-                        o["doctop"] = o["top"]
-                out.append(o)
-        return out
+    def _filtered(self, bbox: tuple, mode: str, width: float,
+                  height: float) -> "Page":
+        return Page(
+            self.page_number, width, height, self.rotation,
+            _filter_chars(self.char_columns, bbox, mode),
+            _filter_objs(self.lines, bbox, mode),
+            _filter_objs(self.rects, bbox, mode),
+            _filter_objs(self.curves, bbox, mode),
+            self.images, self.warnings,
+        )
 
     def crop(self, bbox: tuple) -> "Page":
         """Center-in-bbox filter with coordinates re-based to crop origin."""
-        return Page(
-            self.page_number, bbox[2] - bbox[0], bbox[3] - bbox[1], self.rotation,
-            self._filter_objs(self.chars, bbox, "center", True),
-            self._filter_objs(self.lines, bbox, "center", True),
-            self._filter_objs(self.rects, bbox, "center", True),
-            self._filter_objs(self.curves, bbox, "center", True),
-            self.images, self.warnings,
-        )
+        return self._filtered(bbox, "center", bbox[2] - bbox[0],
+                              bbox[3] - bbox[1])
 
     def within_bbox(self, bbox: tuple) -> "Page":
-        return Page(
-            self.page_number, bbox[2] - bbox[0], bbox[3] - bbox[1], self.rotation,
-            self._filter_objs(self.chars, bbox, "within", True),
-            self._filter_objs(self.lines, bbox, "within", True),
-            self._filter_objs(self.rects, bbox, "within", True),
-            self._filter_objs(self.curves, bbox, "within", True),
-            self.images, self.warnings,
-        )
+        return self._filtered(bbox, "within", bbox[2] - bbox[0],
+                              bbox[3] - bbox[1])
 
     def outside_bbox(self, bbox: tuple) -> "Page":
-        return Page(
-            self.page_number, self.width, self.height, self.rotation,
-            self._filter_objs(self.chars, bbox, "outside", False),
-            self._filter_objs(self.lines, bbox, "outside", False),
-            self._filter_objs(self.rects, bbox, "outside", False),
-            self._filter_objs(self.curves, bbox, "outside", False),
-            self.images, self.warnings,
-        )
+        return self._filtered(bbox, "outside", self.width, self.height)
+
+
+def _keep_mask(x0, top, x1, bottom, bbox: tuple, mode: str):
+    """Which boxes a spatial filter keeps, over coordinate arrays."""
+    bx0, btop, bx1, bbottom = bbox
+    if mode == "center":
+        cx = (x0 + x1) / 2.0
+        cy = (top + bottom) / 2.0
+        return (bx0 <= cx) & (cx <= bx1) & (btop <= cy) & (cy <= bbottom)
+    if mode == "within":
+        return (x0 >= bx0) & (x1 <= bx1) & (top >= btop) & (bottom <= bbottom)
+    # outside: no overlap
+    return (x1 < bx0) | (x0 > bx1) | (bottom < btop) | (top > bbottom)
+
+
+def _filter_objs(objs: list[dict], bbox: tuple, mode: str) -> list[dict]:
+    """Kept objects; crop/within re-base copies to the bbox origin."""
+    keep = _keep_mask(*(np.array([o[k] for o in objs], np.float64)
+                        for k in ("x0", "top", "x1", "bottom")), bbox, mode)
+    out = [o for o, k in zip(objs, keep.tolist()) if k]
+    if mode == "outside":
+        return out
+    out = [dict(o) for o in out]
+    for o in out:
+        o["x0"] -= bbox[0]
+        o["x1"] -= bbox[0]
+        o["top"] -= bbox[1]
+        o["bottom"] -= bbox[1]
+        if "doctop" in o:
+            o["doctop"] = o["top"]
+    return out
+
+
+def _filter_chars(cols: CharColumns, bbox: tuple, mode: str) -> CharColumns:
+    """_filter_objs over the char columns: one mask, one take; a re-based
+    glyph's doctop is its re-based top."""
+    out = cols.take(_keep_mask(cols.x0, cols.top, cols.x1, cols.bottom,
+                               bbox, mode))
+    if mode != "outside":
+        out.x0 = out.x0 - bbox[0]
+        out.x1 = out.x1 - bbox[0]
+        out.top = out.top - bbox[1]
+        out.bottom = out.bottom - bbox[1]
+        out.doctop = out.top.copy()
+    return out
 
 
 def build_page(page_number: int, geom: PageGeometry, raw_page_height: float,
@@ -232,36 +255,13 @@ def build_page(page_number: int, geom: PageGeometry, raw_page_height: float,
     """CharRuns/paths -> Page with normalized coordinates."""
     needs_rotation = geom.rotation != 0
 
-    chars, char_cols = chars_from_events(char_events, raw_page_height,
-                                         want_cols=True)
-    if needs_rotation:
-        char_cols = None  # positions mutate below; columns go stale
-        rot = geom.rotation
-        for ch in chars:
-            _rotate_bbox(ch, raw_page_height, geom)
-            ch["doctop"] = ch["top"]
-            ch["direction"] = _ROT_DIR[rot].get(ch["direction"], ch["direction"])
-            if rot in (90, 270):
-                ch["upright"] = not ch["upright"]
-            # size tracks the device-space bbox (rotation included)
-            ch["size"] = (
-                ch["x1"] - ch["x0"] if ch["_wmode"] else ch["bottom"] - ch["top"]
-            )
-    for ch in chars:
-        del ch["_wmode"]
-
-    chars = apply_bidi_directions(chars, 3.0)  # mutates direction only
+    chars = chars_from_events(char_events, raw_page_height, geom)
+    apply_bidi_directions(chars, 3.0)  # direction only
     if options.unicode_norm is not None:
-        chars = normalize_chars(chars, options.unicode_norm)  # text only
+        normalize_chars(chars, options.unicode_norm)  # text only
     if options.dedupe is not None:
-        n_before = len(chars)
         chars = dedupe_chars(chars, options.dedupe.tolerance,
-                             options.dedupe.extra_attrs, cols=char_cols)
-        if len(chars) != n_before:
-            # dedupe dropped chars: the positional columns no longer
-            # align with the list (dedupe only ever removes, so equal
-            # length ⇔ nothing removed)
-            char_cols = None
+                             options.dedupe.extra_attrs)
 
     all_lines: list[dict] = []
     all_rects: list[dict] = []
@@ -323,9 +323,7 @@ def build_page(page_number: int, geom: PageGeometry, raw_page_height: float,
             _rotate_bbox(img, raw_page_height, geom)
         images.append(img)
 
-    page = Page(
+    return Page(
         page_number, geom.display_width, geom.display_height, geom.rotation,
         chars, all_lines, all_rects, all_curves, images, warnings,
     )
-    page._char_cols = char_cols
-    return page

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from xml.sax.saxutils import escape
 
+from .html import font_words
+
 
 def _g(v: float) -> str:
     """%g with 4-decimal rounding — stable across runs/platforms."""
@@ -47,10 +49,8 @@ def page_to_svg(page, scale: float = 1.0) -> str:
                 f'  <path d="{d}" style="fill:none;stroke:#000;'
                 f'stroke-width:{_g(cv.get("linewidth", 1.0))}"/>'
             )
-    for word in page.extract_words():
-        chars = word.get("chars") or []
-        fontname = chars[0]["fontname"] if chars else ""
-        size = chars[0]["size"] if chars else 10.0
+    for word in font_words(page):
+        fontname, size = word["fonts"][0]
         # baseline ≈ bbox bottom (descent included in the box)
         parts.append(
             f'  <text x="{_g(word["x0"])}" y="{_g(word["bottom"])}" '

@@ -18,6 +18,7 @@ import math
 from itertools import groupby
 
 from ..config import TableSettings, WordOptions
+from .chars import CharColumns, as_columns
 from .words import extract_words
 
 
@@ -314,7 +315,7 @@ def _cells_bbox(cells) -> tuple:
     )
 
 
-def _extract_cell_text(cell_chars: list[dict], options: WordOptions) -> str:
+def _extract_cell_text(cell_chars: CharColumns, options: WordOptions) -> str:
     """Default extract_text over the cell's chars (oracle semantics):
     sequential doctop line breaking, same as page-level text."""
     from .layout import words_to_text_grouped
@@ -325,12 +326,14 @@ def _extract_cell_text(cell_chars: list[dict], options: WordOptions) -> str:
     return words_to_text_grouped(words, options.y_tolerance)
 
 
-def extract_table(cells: list[tuple], chars: list[dict],
+def extract_table(cells: list[tuple], chars,
                   options: WordOptions | None = None) -> dict:
     """Build {bbox, cells, rows} with text per cell: None for missing grid
-    positions, '' for empty cells, extracted text otherwise."""
+    positions, '' for empty cells, extracted text otherwise. `chars` is
+    the page's CharColumns (or a list of char dicts)."""
     if options is None:
         options = WordOptions()
+    chars = as_columns(chars)
     rows = table_rows(cells)
     bbox = _cells_bbox(cells)
     # vectorized char->cell assignment: mid-point arrays once per table,
@@ -338,42 +341,31 @@ def extract_table(cells: list[tuple], chars: list[dict],
     # was the kernel's hottest table loop — O(page_chars x rows) calls)
     import numpy as np
 
-    if chars:
-        v_mid = np.fromiter(
-            ((ch["top"] + ch["bottom"]) for ch in chars), float, len(chars)
-        ) * 0.5
-        h_mid = np.fromiter(
-            ((ch["x0"] + ch["x1"]) for ch in chars), float, len(chars)
-        ) * 0.5
+    v_mid = (chars.top + chars.bottom) * 0.5
+    h_mid = (chars.x0 + chars.x1) * 0.5
     out_rows: list[list[dict | None]] = []
     cell_objs: list[dict] = []
     for row in rows:
-        row_bbox = _cells_bbox(row)
-        if chars:
-            rx0, rtop, rx1, rbot = row_bbox
-            ridx = np.nonzero(
-                (v_mid >= rtop) & (v_mid < rbot)
-                & (h_mid >= rx0) & (h_mid < rx1)
-            )[0]
-            row_chars = [chars[i] for i in ridx]
-            row_h = h_mid[ridx]
-            row_v = v_mid[ridx]
-        else:
-            row_chars = []
+        rx0, rtop, rx1, rbot = _cells_bbox(row)
+        ridx = np.nonzero(
+            (v_mid >= rtop) & (v_mid < rbot)
+            & (h_mid >= rx0) & (h_mid < rx1)
+        )[0]
+        row_h = h_mid[ridx]
+        row_v = v_mid[ridx]
         out_row: list[dict | None] = []
         for cell in row:
             if cell is None:
                 out_row.append(None)
                 continue
-            if row_chars:
-                cidx = np.nonzero(
+            text = ""
+            if ridx.size:
+                cidx = ridx[
                     (row_h >= cell[0]) & (row_h < cell[2])
                     & (row_v >= cell[1]) & (row_v < cell[3])
-                )[0]
-                cell_chars = [row_chars[i] for i in cidx]
-            else:
-                cell_chars = []
-            text = _extract_cell_text(cell_chars, options) if cell_chars else ""
+                ]
+                if cidx.size:
+                    text = _extract_cell_text(chars.take(cidx), options)
             obj = {"x0": cell[0], "top": cell[1], "x1": cell[2],
                    "bottom": cell[3], "text": text}
             out_row.append(obj)
@@ -475,10 +467,11 @@ def table_debug(edges: list[dict], words: list[dict],
 
 # -- orchestration ----------------------------------------------------------------
 
-def find_tables(edges: list[dict], words: list[dict], chars: list[dict],
+def find_tables(edges: list[dict], words: list[dict], chars,
                 settings: TableSettings | None = None,
                 word_options: WordOptions | None = None) -> list[dict]:
-    """Full pipeline → list of tables with text-filled rows."""
+    """Full pipeline → list of tables with text-filled rows. `chars` is
+    the page's CharColumns (or a list of char dicts)."""
     if settings is None:
         settings = TableSettings()
 

@@ -14,6 +14,10 @@ from __future__ import annotations
 
 import unicodedata
 
+import numpy as np
+
+from .chars import CharColumns
+
 _LIGATURES = {
     "ﬀ": "ff",
     "ﬁ": "fi",
@@ -40,45 +44,56 @@ def expand_ligatures(text: str) -> str:
     return "".join(_LIGATURES.get(ch, ch) for ch in text)
 
 
-def normalize_chars(chars: list[dict], form: str | None) -> list[dict]:
+def normalize_chars(cols: CharColumns, form: str | None) -> CharColumns:
+    """Unicode-normalise every glyph text in place (each distinct text
+    once)."""
     if form is None:
-        return chars
+        return cols
     f = form.upper()
-    for c in chars:
-        c["text"] = unicodedata.normalize(f, c["text"])
-    return chars
+    changed = {t: u for t in set(cols.text)
+               if (u := unicodedata.normalize(f, t)) != t}
+    if changed:
+        cols.text = [changed.get(t, t) for t in cols.text]
+    return cols
 
 
-def _dedupe_collision_flags(chars, t, extra_attrs, default_attrs,
-                            cols=None):
+def _column_keys(cols: CharColumns, extra_attrs: tuple):
+    """Per-glyph dedupe base keys: equal ints iff the (text, *attrs)
+    tuples are equal. The default attrs pack text/fontname/size ids into
+    one int; anything else (other attrs, non-finite sizes, whose NaNs
+    never compare equal) keys by the dict-path tuples."""
+    if extra_attrs != ("fontname", "size") or not np.isfinite(cols.size).all():
+        return [(c["text"],) + tuple(c.get(a) for a in extra_attrs)
+                for c in cols.to_dicts()]
+    tid = cols.text_codes()
+    if tid is None:
+        tid = _dense_ids(cols.text)
+    fid = _dense_ids([r.font_name for r in cols.runs])[cols.run]
+    sizes, sid = np.unique(cols.size, return_inverse=True)
+    return (tid * len(cols.runs) + fid) * len(sizes) + sid
+
+
+def _dense_ids(keys) -> np.ndarray:
+    """Ids 0..k-1, equal iff the keys are equal."""
+    if isinstance(keys, np.ndarray):
+        return np.unique(keys, return_inverse=True)[1]
+    seen: dict = {}
+    return np.fromiter((seen.setdefault(k, len(seen)) for k in keys),
+                       np.int64, len(keys))
+
+
+def _collision_flags(gids, x0, top, t):
     """Vectorized prescreen: True where a char COULD be within tolerance
     of another char with the same base key (same or 3×3-adjacent grid
     cell). Chars not flagged can never be dropped — and can never drop
-    anyone — so the exact sequential pass below only needs to visit
-    flagged chars. Returns None when the coordinates don't fit the
-    packed-int layout (fallback to the full pass)."""
-    import numpy as np
-
-    n = len(chars)
-    gids = np.empty(n, dtype=np.int64)
-    seen: dict = {}
-    for i, ch in enumerate(chars):
-        if default_attrs:
-            base = (ch["text"], ch["fontname"], ch["size"])
-        else:
-            base = (ch["text"],) + tuple(ch.get(a) for a in extra_attrs)
-        gid = seen.get(base)
-        if gid is None:
-            gid = len(seen)
-            seen[base] = gid
-        gids[i] = gid
-    if len(seen) >= 1 << 20:
+    anyone — so the exact sequential pass only needs to visit flagged
+    chars. Returns None when the coordinates don't fit the packed-int
+    layout (fallback to the full pass)."""
+    n = len(gids)
+    if gids.max() >= 1 << 20:
         return None
-    if cols is not None and len(cols["x0"]) == n:
-        x0, top = cols["x0"], cols["top"]
-    else:
-        x0 = np.fromiter((c["x0"] for c in chars), np.float64, n)
-        top = np.fromiter((c["top"] for c in chars), np.float64, n)
+    x0 = np.asarray(x0, np.float64)
+    top = np.asarray(top, np.float64)
     if not (np.isfinite(x0).all() and np.isfinite(top).all()):
         return None
     bx = np.floor(x0 / t)
@@ -89,66 +104,76 @@ def _dedupe_collision_flags(chars, t, extra_attrs, default_attrs,
         return None
     key = (gids << 42) | (bx.astype(np.int64) + 1 << 21) | (
         by.astype(np.int64) + 1)
-    a = np.sort(key)
-    # own-cell duplicates
-    left = np.searchsorted(a, key, "left")
-    right = np.searchsorted(a, key, "right")
-    flag = (right - left) > 1
-    # 8 neighbor cells
-    sx, sy = 1 << 21, 1
-    for off in (-sx - sy, -sx, -sx + sy, -sy, sy, sx - sy, sx, sx + sy):
-        tgt = key + off
-        pos = np.searchsorted(a, tgt)
-        hit = (pos < n) & (a[np.minimum(pos, n - 1)] == tgt)
-        flag |= hit
-    return flag
+    # probe in sorted order (the needles are sorted too, so every
+    # searchsorted walks the array once), one key range per neighbour
+    # column: cells (bx+dx, by-1 .. by+1) are consecutive keys
+    order = np.argsort(key)
+    a = key[order]
+    sx = 1 << 21
+    # own column: some key in [k-1, k+1] other than this char itself
+    flag = (np.searchsorted(a, a + 1, "right")
+            - np.searchsorted(a, a - 1, "left")) > 1
+    for dx in (-sx, sx):
+        pos = np.searchsorted(a, a + dx - 1)
+        flag |= (pos < n) & (a[np.minimum(pos, n - 1)] <= a + dx + 1)
+    out = np.empty(n, np.bool_)
+    out[order] = flag
+    return out
 
 
-def dedupe_chars(chars: list[dict], tolerance: float = 1.0,
-                 extra_attrs: tuple[str, ...] = ("fontname", "size"),
-                 cols: dict | None = None) -> list[dict]:
+def dedupe_chars(chars, tolerance: float = 1.0,
+                 extra_attrs: tuple[str, ...] = ("fontname", "size")):
     """Drop a char if an earlier kept char has identical text, matching
-    extra attrs, and |dx0| <= tol and |dtop| <= tol (dedupe.rs:50-88)."""
-    # spatial hash on (text, attrs, x0//tol, top//tol): a match within
-    # tolerance always lives in one of the 3×3 neighbor buckets, so this
-    # is O(n) with semantics identical to the full scan
+    extra attrs, and |dx0| <= tol and |dtop| <= tol (dedupe.rs:50-88).
+    Takes and returns a CharColumns, or a list of char dicts."""
+    if isinstance(chars, CharColumns):
+        ids = _dense_ids(_column_keys(chars, extra_attrs))
+        x0, top = chars.x0, chars.top
+    else:
+        ids = _dense_ids([(c["text"],) + tuple(c.get(a) for a in extra_attrs)
+                          for c in chars])
+        x0 = [c["x0"] for c in chars]
+        top = [c["top"] for c in chars]
+    # spatial hash on (key, x0//tol, top//tol): a match within tolerance
+    # always lives in one of the 3×3 neighbor buckets, so this is O(n)
+    # with semantics identical to the full scan
     t = tolerance if tolerance > 0 else 1e-9
-    default_attrs_pre = extra_attrs == ("fontname", "size")
-    if len(chars) >= 64:
+    flags = None
+    if len(ids) >= 64:
         # vectorized prescreen: in the common no-duplicate case the
         # 9-probe dict walk below never runs at all
         try:
-            flags = _dedupe_collision_flags(chars, t, extra_attrs,
-                                            default_attrs_pre, cols=cols)
+            flags = _collision_flags(ids, x0, top, t)
         except (TypeError, ValueError):  # odd coord types: full pass
             flags = None
-        if flags is not None:
-            if not flags.any():
-                return list(chars)
-            return _dedupe_pass(chars, tolerance, t, extra_attrs, flags)
-    return _dedupe_pass(chars, tolerance, t, extra_attrs, None)
+        if flags is not None and not flags.any():
+            return chars if isinstance(chars, CharColumns) else list(chars)
+    keep = _dedupe_pass(ids.tolist(), x0, top, tolerance, t, flags)
+    if isinstance(chars, CharColumns):
+        return chars.take(keep)
+    return [chars[i] for i in keep]
 
 
-def _dedupe_pass(chars, tolerance, t, extra_attrs, flags):
-    kept: list[dict] = []
-    # two-level hash: base key (text+attrs) once per char, then single
-    # INT cell keys (bx*2^32+by) for the 3x3 probe — int dict lookups
-    # beat per-probe tuple allocation (this loop runs once per char)
-    default_attrs = extra_attrs == ("fontname", "size")
-    buckets: dict[tuple, dict[int, list]] = {}
+def _dedupe_pass(keys, x0, top, tolerance, t, flags) -> list[int]:
+    """Sequential first-wins pass; returns the kept indices. With
+    `flags`, only flagged chars are visited (the rest are kept)."""
+    x0 = x0.tolist() if isinstance(x0, np.ndarray) else x0
+    top = top.tolist() if isinstance(top, np.ndarray) else top
+    flagged = None if flags is None else flags.tolist()
+    kept: list[int] = []
+    # two-level hash: base key once per char, then single INT cell keys
+    # (bx*2^32+by) for the 3x3 probe — int dict lookups beat per-probe
+    # tuple allocation
+    buckets: dict = {}
     shift = 1 << 32
-    for i, ch in enumerate(chars):
-        if flags is not None and not flags[i]:
+    for i, base in enumerate(keys):
+        if flagged is not None and not flagged[i]:
             # prescreen proved nothing is within tolerance of this char
-            kept.append(ch)
+            kept.append(i)
             continue
-        if default_attrs:
-            base = (ch["text"], ch["fontname"], ch["size"])
-        else:
-            base = (ch["text"],) + tuple(ch.get(a) for a in extra_attrs)
-        x0 = ch["x0"]
-        top = ch["top"]
-        cell = int(x0 // t) * shift + int(top // t)
+        cx = x0[i]
+        ctop = top[i]
+        cell = int(cx // t) * shift + int(ctop // t)
         grid = buckets.get(base)
         dup = False
         if grid is not None:
@@ -156,21 +181,21 @@ def _dedupe_pass(chars, tolerance, t, extra_attrs, flags):
                           cell - 1, cell, cell + 1,
                           cell + shift - 1, cell + shift, cell + shift + 1):
                 for kx, ktop in grid.get(dcell, ()):
-                    if abs(kx - x0) <= tolerance and abs(ktop - top) <= tolerance:
+                    if abs(kx - cx) <= tolerance and abs(ktop - ctop) <= tolerance:
                         dup = True
                         break
                 if dup:
                     break
         if not dup:
-            kept.append(ch)
+            kept.append(i)
             if grid is None:
                 grid = {}
                 buckets[base] = grid
             lst = grid.get(cell)
             if lst is None:
-                grid[cell] = [(x0, top)]
+                grid[cell] = [(cx, ctop)]
             else:
-                lst.append((x0, top))
+                lst.append((cx, ctop))
     return kept
 
 
@@ -208,20 +233,22 @@ def is_arabic_diacritic_text(text: str) -> bool:
     return bool(text) and all(is_arabic_diacritic(c) for c in text)
 
 
-def apply_bidi_directions(chars: list[dict], y_tolerance: float = 3.0) -> list[dict]:
-    if not chars:
-        return chars
-    if _RTL_RE.search("".join(ch["text"] for ch in chars)) is None:
-        return chars
+def apply_bidi_directions(cols: CharColumns,
+                          y_tolerance: float = 3.0) -> CharColumns:
+    """Mark strong-RTL glyphs (and Arabic diacritics on a line with
+    them) rtl, in place; vertical and non-upright glyphs are left."""
+    text = cols.text
+    if not text or _RTL_RE.search("".join(text)) is None:
+        return cols
 
     # group into lines by vertical center (bidi.rs:159-191)
-    order = sorted(range(len(chars)),
-                   key=lambda i: (chars[i]["top"] + chars[i]["bottom"]) / 2.0)
+    centers = ((cols.top + cols.bottom) / 2.0).tolist()
+    order = sorted(range(len(text)), key=centers.__getitem__)
     groups: list[list[int]] = []
     cur: list[int] = [order[0]]
-    cur_center = (chars[order[0]]["top"] + chars[order[0]]["bottom"]) / 2.0
+    cur_center = centers[order[0]]
     for idx in order[1:]:
-        center = (chars[idx]["top"] + chars[idx]["bottom"]) / 2.0
+        center = centers[idx]
         if abs(center - cur_center) <= y_tolerance:
             cur.append(idx)
         else:
@@ -230,21 +257,18 @@ def apply_bidi_directions(chars: list[dict], y_tolerance: float = 3.0) -> list[d
             cur_center = center
     groups.append(cur)
 
+    x0 = cols.x0.tolist()
+    upright = cols.upright.tolist()
+    direction = cols.direction
     for group in groups:
-        group.sort(key=lambda i: chars[i]["x0"])
+        group.sort(key=x0.__getitem__)
         # simplified UAX#9: strong-RTL chars and diacritics between them → rtl
-        strong = [
-            any(_is_strong_rtl(c) for c in chars[i]["text"]) for i in group
-        ]
+        strong = [any(_is_strong_rtl(c) for c in text[i]) for i in group]
         if not any(strong):
             continue
         for gpos, i in enumerate(group):
-            ch = chars[i]
-            if not ch["upright"] or ch["direction"] in ("ttb", "btt"):
+            if not upright[i] or direction[i] >= 2:  # ttb/btt
                 continue
-            if strong[gpos] or (
-                is_arabic_diacritic_text(ch["text"])
-                and any(strong)
-            ):
-                ch["direction"] = "rtl"
-    return chars
+            if strong[gpos] or is_arabic_diacritic_text(text[i]):
+                direction[i] = 1  # rtl
+    return cols

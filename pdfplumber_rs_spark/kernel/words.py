@@ -3,7 +3,7 @@ oracle; the Rust reference's cluster-sort in words.rs:71-392 is an
 approximation of the same behavior, validated at ≥95% — we match the
 oracle exactly):
 
-- chars are pre-ordered by `iter_sort_chars` unless use_text_flow:
+- chars are pre-ordered (pdfplumber's iter_sort_chars) unless use_text_flow:
   upright chars cluster by doctop (stable chained clustering with
   y_tolerance) then sort within line by x0; non-upright chars cluster
   by x0 and sort within column by doctop (stable → stream order for
@@ -12,15 +12,18 @@ oracle exactly):
   bbox grown by x_tolerance along the reading axis and y_tolerance
   across it (tolerances swap for non-upright text).
 - blank chars split words unless keep_blank_chars; ligatures expand.
+
+Words are read off a page's CharColumns and carry no `chars` member
+(pdfplumber's return_chars=False); `words_and_members` gives the chars.
 """
 
 from __future__ import annotations
 
+import numpy as np
+
 from ..config import WordOptions
-from .textnorm import expand_ligatures
-
-_VERTICAL = ("ttb", "btt")
-
+from .chars import DIRECTIONS, CharColumns, as_columns
+from .textnorm import _LIG_RE, expand_ligatures
 
 def cluster_objects(objs: list, keyf, tolerance: float) -> list[list]:
     """pdfplumber's clustering: chain the UNIQUE key values (sorted,
@@ -52,67 +55,40 @@ def cluster_value_ids(values: list, tolerance: float) -> dict:
     return cluster_of
 
 
-def iter_sort_chars(chars: list[dict], x_tol: float, y_tol: float,
-                    horizontal_ltr: bool = True,
-                    vertical_ttb: bool = True) -> list[dict]:
+def _sequential_order(cols: CharColumns, y_tol: float,
+                      horizontal_ltr: bool = True,
+                      vertical_ttb: bool = True) -> list[int]:
+    """pdfplumber's iter_sort_chars over glyph indices."""
     import itertools
 
-    out: list[dict] = []
+    up = cols.upright.tolist()
+    doctop = cols.doctop.tolist()
+    x0 = cols.x0.tolist()
+    out: list[int] = []
     # upright grouping is by CONSECUTIVE RUNS in stream order (derived
     # byte-exact vs goldens with interleaved mirrored text, issue-90):
     # each run is line-clustered and sorted independently and stays at
     # its stream position
-    for _k, run in itertools.groupby(chars, key=lambda c: bool(c["upright"])):
-        upright_cluster = list(run)
-        upright = bool(upright_cluster[0]["upright"])
-        cluster_key = (lambda c: c["doctop"]) if upright else (lambda c: c["x0"])
-        for line in cluster_objects(upright_cluster, cluster_key, y_tol):
-            sort_key = (lambda c: c["x0"]) if upright else (lambda c: c["doctop"])
-            ordered = sorted(line, key=sort_key)
+    for upright, run in itertools.groupby(range(len(up)), key=up.__getitem__):
+        key, sec = (doctop, x0) if upright else (x0, doctop)
+        for line in cluster_objects(list(run), key.__getitem__, y_tol):
+            ordered = sorted(line, key=sec.__getitem__)
             if (upright and not horizontal_ltr) or (not upright and not vertical_ttb):
-                ordered = list(reversed(ordered))
+                ordered.reverse()
             out.extend(ordered)
     return out
 
 
-def _char_cols(chars: list[dict]):
-    """Extract the numeric/flag columns the vectorized ordering and
-    splitting passes need, ONE scan over the dicts (they were re-scanned
-    per pass before — np.fromiter over dict lookups was ~25% of
-    extract_words on dense pages)."""
-    import numpy as np
-
-    n = len(chars)
-    return {
-        "x0": np.fromiter((c["x0"] for c in chars), np.float64, n),
-        "x1": np.fromiter((c["x1"] for c in chars), np.float64, n),
-        "top": np.fromiter((c["top"] for c in chars), np.float64, n),
-        "bot": np.fromiter((c["bottom"] for c in chars), np.float64, n),
-        "doctop": np.fromiter((c["doctop"] for c in chars), np.float64, n),
-        "up": np.fromiter((bool(c["upright"]) for c in chars), np.bool_, n),
-        "blank": np.fromiter(
-            ((not c["text"]) or c["text"].isspace() for c in chars),
-            np.bool_, n),
-    }
-
-
-def _order_perm(chars: list[dict], y_tol: float, cols: dict | None = None):
-    """Vectorized twin of iter_sort_chars for the default direction
+def _order_perm(cols: CharColumns, y_tol: float):
+    """Vectorized twin of _sequential_order for the default direction
     flags: returns the ordering PERMUTATION as a numpy index array.
     Semantics identical — consecutive upright runs (stream order), each
     run clustered by pdfplumber's unique-value chaining on the primary
     key (doctop upright / x0 vertical, y_tolerance both ways), clusters
     in ascending-key order, stable sort by the secondary key within a
     line — expressed as one stable lexsort over (run, cluster, key2)."""
-    import numpy as np
-
-    n = len(chars)
-    if cols is not None:
-        up, doctop, x0 = cols["up"], cols["doctop"], cols["x0"]
-    else:
-        up = np.fromiter((bool(c["upright"]) for c in chars), np.bool_, n)
-        doctop = np.fromiter((c["doctop"] for c in chars), np.float64, n)
-        x0 = np.fromiter((c["x0"] for c in chars), np.float64, n)
+    up, doctop, x0 = cols.upright, cols.doctop, cols.x0
+    n = len(up)
     run_change = np.empty(n, np.bool_)
     run_change[0] = True
     run_change[1:] = up[1:] != up[:-1]
@@ -136,59 +112,32 @@ def _order_perm(chars: list[dict], y_tol: float, cols: dict | None = None):
     return np.lexsort((sec, clust, run_id))  # stable → stream-order ties
 
 
-def char_begins_new_word(current: list[dict], next_char: dict,
-                         x_tol: float, y_tol: float,
-                         bbox: list | None = None) -> bool:
-    """pdfplumber's rule: compare against the PREVIOUS CHAR (not the
-    word's running bbox — a wide glyph like 'M' overlapping the next
-    char must not mask a real gap after the following comma). Split iff
-    the next char starts before the previous char's start, beyond its
-    end + intraline tolerance, or off its cross-axis line."""
-    prev = current[-1]
-    upright = bool(prev["upright"])
-    if upright:
-        return (
-            next_char["x0"] < prev["x0"]
-            or next_char["x0"] > prev["x1"] + x_tol
-            or next_char["top"] > prev["top"] + y_tol
-            or next_char["top"] < prev["top"] - y_tol
-        )
-    # non-upright: reading axis is y (ttb), cross axis is x0
-    return (
-        next_char["top"] < prev["top"]
-        or next_char["top"] > prev["bottom"] + y_tol
-        or next_char["x0"] > prev["x0"] + x_tol
-        or next_char["x0"] < prev["x0"] - x_tol
-    )
+# str.isspace by code point; no whitespace lies above U+3000
+_SPACE = np.array([chr(c).isspace() for c in range(0x3001)])
 
 
-def _extract_words_vectorized(ordered: list[dict],
-                              options: WordOptions,
-                              cols: dict | None = None) -> list[dict]:
+def _blank(cols: CharColumns):
+    """Per-glyph flag: empty or whitespace-only text."""
+    codes = cols.text_codes()
+    if codes is not None:
+        return _SPACE[np.minimum(codes, 0x3000)] & (codes <= 0x3000)
+    blanks = {t for t in set(cols.text) if not t or t.isspace()}
+    return np.fromiter(map(blanks.__contains__, cols.text), np.bool_,
+                       len(cols))
+
+
+def _split_vectorized(cols: CharColumns, order, options: WordOptions):
     """Vectorized twin of the sequential splitter for the common
     (keep_blank_chars=False) case: the per-char begins-new-word
     predicate only looks at the IMMEDIATE predecessor, so the split
     mask, word boundaries, and per-word bboxes all vectorize (shifted
     comparisons + minimum/maximum.reduceat). Semantics identical: a
-    blank drops and forces the next char to start a word. `cols`, when
-    provided by the ordering pass, carries the already-permuted numpy
-    columns so the dicts are not re-scanned."""
-    import numpy as np
-
-    n = len(ordered)
-    if cols is not None:
-        x0, x1, top, bot = cols["x0"], cols["x1"], cols["top"], cols["bot"]
-        doctop, up, blank = cols["doctop"], cols["up"], cols["blank"]
-    else:
-        x0 = np.fromiter((c["x0"] for c in ordered), np.float64, n)
-        x1 = np.fromiter((c["x1"] for c in ordered), np.float64, n)
-        top = np.fromiter((c["top"] for c in ordered), np.float64, n)
-        bot = np.fromiter((c["bottom"] for c in ordered), np.float64, n)
-        doctop = np.fromiter((c["doctop"] for c in ordered), np.float64, n)
-        up = np.fromiter((bool(c["upright"]) for c in ordered), np.bool_, n)
-        blank = np.fromiter(
-            ((not c["text"]) or c["text"].isspace() for c in ordered),
-            np.bool_, n)
+    blank drops and forces the next char to start a word."""
+    order = np.asarray(order)
+    blank = _blank(cols)[order]
+    x0, x1 = cols.x0[order], cols.x1[order]
+    top, bot = cols.top[order], cols.bottom[order]
+    up = cols.upright[order]
     xt, yt = options.x_tolerance, options.y_tolerance
     px0, px1, ptop, pbot, pup = x0[:-1], x1[:-1], top[:-1], bot[:-1], up[:-1]
     cx0, ctop = x0[1:], top[1:]
@@ -196,146 +145,129 @@ def _extract_words_vectorized(ordered: list[dict],
                | (ctop > ptop + yt) | (ctop < ptop - yt))
     split_v = ((ctop < ptop) | (ctop > pbot + yt)
                | (cx0 > px0 + xt) | (cx0 < px0 - xt))
-    begins = np.empty(n, np.bool_)
+    begins = np.empty(len(order), np.bool_)
     begins[0] = True
     begins[1:] = blank[:-1] | np.where(pup, split_h, split_v)
     nb = np.nonzero(~blank)[0]
     if nb.size == 0:
-        return []
+        return [], [], [0]
     starts_mask = begins[nb]
     starts_mask[0] = True
     seg_starts = np.nonzero(starts_mask)[0]  # offsets into nb
-    wx0 = np.minimum.reduceat(x0[nb], seg_starts)
-    wtop = np.minimum.reduceat(top[nb], seg_starts)
-    wx1 = np.maximum.reduceat(x1[nb], seg_starts)
-    wbot = np.maximum.reduceat(bot[nb], seg_starts)
-    wdoc = np.minimum.reduceat(doctop[nb], seg_starts)
-    nb_l = nb.tolist()
-    seg_l = seg_starts.tolist() + [nb.size]
+    wx0 = np.minimum.reduceat(x0[nb], seg_starts).tolist()
+    wtop = np.minimum.reduceat(top[nb], seg_starts).tolist()
+    wx1 = np.maximum.reduceat(x1[nb], seg_starts).tolist()
+    wbot = np.maximum.reduceat(bot[nb], seg_starts).tolist()
+    wdoc = np.minimum.reduceat(cols.doctop[order][nb], seg_starts).tolist()
+    members = order[nb]
+    first = members[seg_starts]
+    wdir = list(map(DIRECTIONS.__getitem__, cols.direction[first].tolist()))
+    wup = cols.upright[first].tolist()
+    members = members.tolist()
+    text = cols.text
+    ntext = [text[i] for i in members]
+    bounds = seg_starts.tolist() + [len(members)]
+    wtext = ["".join(ntext[a:b]) for a, b in zip(bounds, bounds[1:])]
+    if options.expand_ligatures and _LIG_RE.search("".join(ntext)):
+        wtext = [expand_ligatures(t) for t in wtext]
+    words = [
+        {"text": t, "x0": a, "top": b, "x1": c, "bottom": d, "doctop": e,
+         "direction": f, "upright": g}
+        for t, a, b, c, d, e, f, g in zip(wtext, wx0, wtop, wx1, wbot, wdoc,
+                                          wdir, wup)
+    ]
+    return words, members, bounds
+
+
+def _split_sequential(cols: CharColumns, order, options: WordOptions):
+    """pdfplumber's splitter, one glyph at a time: a char starts a new
+    word when it starts before the PREVIOUS CHAR (not the word's running
+    bbox — a wide glyph like 'M' overlapping the next char must not mask
+    a real gap after the following comma), beyond its end + intraline
+    tolerance, or off its cross-axis line. Blanks split words unless
+    keep_blank_chars."""
+    x0, x1 = cols.x0.tolist(), cols.x1.tolist()
+    top, bottom = cols.top.tolist(), cols.bottom.tolist()
+    doctop, up = cols.doctop.tolist(), cols.upright.tolist()
+    text = cols.text
+    x_tol, y_tol = options.x_tolerance, options.y_tolerance
+    keep_blank = options.keep_blank_chars
     do_lig = options.expand_ligatures
     words: list[dict] = []
-    for k in range(len(seg_l) - 1):
-        members = [ordered[nb_l[j]] for j in range(seg_l[k], seg_l[k + 1])]
-        text = "".join(c["text"] for c in members)
+    members: list[int] = []
+    bounds = [0]
+    current: list[int] = []
+    bbox: list = [0.0, 0.0, 0.0, 0.0]
+
+    def close() -> None:
+        wtext = "".join(text[i] for i in current)
         if do_lig:
-            text = expand_ligatures(text)
-        first = members[0]
-        words.append(
-            {
-                "text": text,
-                "x0": float(wx0[k]),
-                "top": float(wtop[k]),
-                "x1": float(wx1[k]),
-                "bottom": float(wbot[k]),
-                "doctop": float(wdoc[k]),
-                "direction": first["direction"],
-                "upright": first["upright"],
-                "chars": members,
-            }
-        )
-    return words
+            wtext = expand_ligatures(wtext)
+        first = current[0]
+        words.append({
+            "text": wtext, "x0": bbox[0], "top": bbox[1], "x1": bbox[2],
+            "bottom": bbox[3], "doctop": min(doctop[i] for i in current),
+            "direction": DIRECTIONS[cols.direction[first]],
+            "upright": up[first],
+        })
+        members.extend(current)
+        bounds.append(len(members))
+
+    for i in np.asarray(order).tolist():
+        t = text[i]
+        if (not t or t.isspace()) and not keep_blank:
+            if current:
+                close()
+                current = []
+            continue
+        if current:
+            p = current[-1]
+            if up[p]:
+                new = (x0[i] < x0[p] or x0[i] > x1[p] + x_tol
+                       or top[i] > top[p] + y_tol or top[i] < top[p] - y_tol)
+            else:  # non-upright: reading axis is y (ttb), cross axis is x0
+                new = (top[i] < top[p] or top[i] > bottom[p] + y_tol
+                       or x0[i] > x0[p] + x_tol or x0[i] < x0[p] - x_tol)
+            if not new:
+                bbox[0] = min(bbox[0], x0[i])
+                bbox[1] = min(bbox[1], top[i])
+                bbox[2] = max(bbox[2], x1[i])
+                bbox[3] = max(bbox[3], bottom[i])
+                current.append(i)
+                continue
+            close()
+        current = [i]
+        bbox[:] = x0[i], top[i], x1[i], bottom[i]
+    if current:
+        close()
+    return words, members, bounds
 
 
-def extract_words(chars: list[dict], options: WordOptions | None = None,
-                  cols: dict | None = None) -> list[dict]:
+def words_and_members(cols: CharColumns,
+                      options: WordOptions | None = None):
+    """(words, members, bounds): word k's chars are
+    members[bounds[k]:bounds[k + 1]], indices into `cols`."""
     if options is None:
         options = WordOptions()
-    if not chars:
-        return []
+    n = len(cols)
+    if n == 0:
+        return [], [], [0]
     if options.use_text_flow:
-        ordered = list(chars)
-        cols = None
-    elif options.text_direction in ("rtl", "btt") or len(chars) < 64:
+        order = range(n)
+    elif options.text_direction in ("rtl", "btt") or n < 64:
         # reversal flags / tiny pages: the sequential reference path
-        ordered = iter_sort_chars(
-            chars, options.x_tolerance, options.y_tolerance,
+        order = _sequential_order(
+            cols, options.y_tolerance,
             horizontal_ltr=options.text_direction != "rtl",
             vertical_ttb=options.text_direction != "btt",
         )
-        cols = None
     else:
-        import numpy as np
-
-        if cols is not None and len(cols["x0"]) == len(chars):
-            # page-provided positional columns (built once by
-            # chars_from_events); only the text-dependent blank flag
-            # is derived here
-            raw_cols = dict(cols)
-            raw_cols["blank"] = np.fromiter(
-                ((not c["text"]) or c["text"].isspace() for c in chars),
-                np.bool_, len(chars))
-        else:
-            raw_cols = _char_cols(chars)
-        perm = _order_perm(chars, options.y_tolerance, raw_cols)
-        ordered = [chars[i] for i in perm.tolist()]
-        cols = None
-        if not options.keep_blank_chars:
-            # permute the already-extracted columns instead of re-
-            # scanning the reordered dicts (numpy fancy index ≪ fromiter)
-            cols = {k: v[perm] for k, v in raw_cols.items()}
-    if not options.keep_blank_chars and len(ordered) >= 64:
-        return _extract_words_vectorized(ordered, options, cols)
-    words: list[dict] = []
-    current: list[dict] = []
-    bbox: list = [0.0, 0.0, 0.0, 0.0]
-
-    def grow(c: dict) -> None:
-        bbox[0] = min(bbox[0], c["x0"])
-        bbox[1] = min(bbox[1], c["top"])
-        bbox[2] = max(bbox[2], c["x1"])
-        bbox[3] = max(bbox[3], c["bottom"])
-
-    def reset(c: dict) -> None:
-        bbox[0], bbox[1], bbox[2], bbox[3] = (
-            c["x0"], c["top"], c["x1"], c["bottom"]
-        )
-
-    for ch in ordered:
-        text = ch["text"]
-        is_blank = not text or text.isspace()
-        if is_blank and not options.keep_blank_chars:
-            if current:
-                words.append(
-                    _make_word(current, options.expand_ligatures, bbox))
-                current = []
-        elif current and char_begins_new_word(
-            current, ch, options.x_tolerance, options.y_tolerance, bbox
-        ):
-            words.append(_make_word(current, options.expand_ligatures, bbox))
-            current = [ch]
-            reset(ch)
-        else:
-            if not current:
-                reset(ch)
-            else:
-                grow(ch)
-            current.append(ch)
-    if current:
-        words.append(_make_word(current, options.expand_ligatures, bbox))
-    return words
+        order = _order_perm(cols, options.y_tolerance)
+    if not options.keep_blank_chars and n >= 64:
+        return _split_vectorized(cols, order, options)
+    return _split_sequential(cols, order, options)
 
 
-def _make_word(chars: list[dict], do_ligatures: bool,
-               bbox: list | None = None) -> dict:
-    text = "".join(c["text"] for c in chars)
-    if do_ligatures:
-        text = expand_ligatures(text)
-    if bbox is None:  # standalone callers without a tracked bbox
-        bbox = (
-            min(c["x0"] for c in chars),
-            min(c["top"] for c in chars),
-            max(c["x1"] for c in chars),
-            max(c["bottom"] for c in chars),
-        )
-    first = chars[0]
-    return {
-        "text": text,
-        "x0": bbox[0],
-        "top": bbox[1],
-        "x1": bbox[2],
-        "bottom": bbox[3],
-        "doctop": min(c["doctop"] for c in chars),
-        "direction": first["direction"],
-        "upright": first["upright"],
-        "chars": chars,
-    }
+def extract_words(chars, options: WordOptions | None = None) -> list[dict]:
+    """Words of a CharColumns (or of a list of char dicts)."""
+    return words_and_members(as_columns(chars), options)[0]

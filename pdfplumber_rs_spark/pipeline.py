@@ -262,7 +262,6 @@ def _page_rows(url: str, html: bytes | None, blob_path: str | None = None,
             page = None
             words, text, tables = [], "", []
             error = f"page {i + 1}: {e}"
-        chars = page.chars if page else []
         row = {
             "url": url,
             "page_number": i + 1,
@@ -270,30 +269,14 @@ def _page_rows(url: str, html: bytes | None, blob_path: str | None = None,
             "height": page.height if page else 0.0,
             "rotation": page.rotation if page else 0,
             "text": text,
-            "n_chars": len(chars),
+            "n_chars": len(page.char_columns) if page else 0,
             "n_words": len(words),
             "n_tables": len(tables) if "tables" in want else None,
             "warnings": list(doc.warnings),
             "error": error,
         }
         if "chars" in want:
-            row["chars"] = [
-                {
-                    "text": c["text"], "x0": c["x0"], "top": c["top"],
-                    "x1": c["x1"], "bottom": c["bottom"],
-                    "fontname": c["fontname"], "size": c["size"],
-                    "doctop": c["doctop"], "upright": c["upright"],
-                    "direction": c["direction"],
-                    "char_code": int(c["char_code"]),
-                    "mcid": c["mcid"], "tag": c["tag"],
-                    "stroking_color": _color_struct(c.get("stroking_color")),
-                    "non_stroking_color": _color_struct(
-                        c.get("non_stroking_color")),
-                    "ctm": [float(v) for v in c["ctm"]]
-                    if c.get("ctm") is not None else None,
-                }
-                for c in chars
-            ]
+            row["chars"] = _char_rows(page.char_columns) if page else []
         if "words" in want:
             row["words"] = [
                 {
@@ -351,6 +334,34 @@ def _page_rows(url: str, html: bytes | None, blob_path: str | None = None,
         )
         rows.append(_empty_row(url, list(doc.warnings), err, t0, inc))
     return rows
+
+
+def _char_rows(cols) -> list[dict]:
+    """The chars section straight from a page's CharColumns: the run
+    constants (fontname, colours, ctm, mcid, tag) convert once per run,
+    not once per glyph."""
+    from .kernel.chars import DIRECTIONS
+
+    runs = [(r.font_name, r.mcid, r.tag, r.codes,
+             _color_struct(r.stroking_color),
+             _color_struct(r.non_stroking_color),
+             None if r.ctm is None else [float(v) for v in r.ctm])
+            for r in cols.runs]
+    out = []
+    for text, x0, top, x1, bottom, size, doctop, upright, d, ri, pos in zip(
+            cols.text, cols.x0.tolist(), cols.top.tolist(), cols.x1.tolist(),
+            cols.bottom.tolist(), cols.size.tolist(), cols.doctop.tolist(),
+            cols.upright.tolist(), cols.direction.tolist(),
+            cols.run.tolist(), cols.pos.tolist()):
+        fontname, mcid, tag, codes, sc, nsc, ctm = runs[ri]
+        out.append({
+            "text": text, "x0": x0, "top": top, "x1": x1, "bottom": bottom,
+            "fontname": fontname, "size": size, "doctop": doctop,
+            "upright": upright, "direction": DIRECTIONS[d],
+            "char_code": int(codes[pos]), "mcid": mcid, "tag": tag,
+            "stroking_color": sc, "non_stroking_color": nsc, "ctm": ctm,
+        })
+    return out
 
 
 def _color_struct(v) -> dict | None:
@@ -1290,7 +1301,7 @@ def _search_rows(url: str, html: bytes, *, pattern: str, regex: bool,
         doc = Document(html, options)
         for i in range(doc.page_count):
             page = doc.page(i)
-            for m in search_chars(page.chars, pattern, regex, case):
+            for m in search_chars(page.char_columns, pattern, regex, case):
                 yield {
                     "url": url, "page_number": i + 1,
                     "match_text": m["text"],

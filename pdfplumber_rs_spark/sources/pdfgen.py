@@ -47,7 +47,8 @@ def build_pdf(page_contents: list[bytes], fonts: dict[str, str] | None = None,
               info: dict[str, str] | None = None,
               bookmarks: list[tuple[str, int]] | None = None,
               form_fields: list[dict] | None = None,
-              struct_mcids: list[int] | None = None) -> bytes:
+              struct_mcids: list[int] | None = None,
+              page_rotations: list[int] | None = None) -> bytes:
     """Assemble a classic-xref PDF. `fonts` maps resource name -> BaseFont
     (standard-14). Default: F1=Helvetica, F2=Courier. `page_annots` is an
     optional per-page raw /Annots array body (inline annotation dicts).
@@ -57,7 +58,8 @@ def build_pdf(page_contents: list[bytes], fonts: dict[str, str] | None = None,
     /Widget field objects referenced from both the page /Annots and the
     catalog /AcroForm /Fields (text fields, FT=Tx). `struct_mcids` gives
     the marked-content count per page -> a /StructTreeRoot with a
-    Document root and one P element per (page, mcid)."""
+    Document root and one P element per (page, mcid). `page_rotations`
+    gives a /Rotate value per page (0 writes no /Rotate key)."""
     if fonts is None:
         fonts = {"F1": "Helvetica", "F2": "Courier"}
     bookmarks = bookmarks or []
@@ -145,6 +147,7 @@ def build_pdf(page_contents: list[bytes], fonts: dict[str, str] | None = None,
         if page_annots and i < len(page_annots) and page_annots[i]:
             annot_parts.append(page_annots[i])
         annot_parts.extend(widgets_by_page.get(i, []))
+        rot = page_rotations[i] if page_rotations else 0
         objects.append(
             _obj(
                 pnum,
@@ -152,6 +155,7 @@ def build_pdf(page_contents: list[bytes], fonts: dict[str, str] | None = None,
                     f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 {PAGE_W:g} {PAGE_H:g}] "
                     f"/Resources << /Font << {font_res} >> >> /Contents {cnum} 0 R"
                     + (f" /Annots [{' '.join(annot_parts)}]" if annot_parts else "")
+                    + (f" /Rotate {rot}" if rot else "")
                     + " >>"
                 ).encode(),
             )

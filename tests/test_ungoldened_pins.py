@@ -175,6 +175,7 @@ _PINS = [
 ]
 
 
+@pytest.mark.skipif(not REF.exists(), reason="reference corpus not present")
 @pytest.mark.parametrize(
     "rel,error,n_pages,n_chars,head", _PINS,
     ids=[Path(p[0]).stem for p in _PINS])
