@@ -1,6 +1,7 @@
 """Headline benchmark: runs the engine's flagship queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+the host-sized `pdfplumber_rs_spark.session.local_session` (set
+SPARK_GRAFT_CPUS / SPARK_GRAFT_MEM to override) and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec",
  "queries": {name: sec, ...}, "sf": ..., "docs_per_sec": ...}
 
@@ -20,7 +21,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 HEADLINE = [
     "pdf_text_roundtrip",
@@ -184,52 +184,52 @@ def micro() -> None:
         print(f"| {group} | {fx} | {ms:.2f} | {rust_s} | {py_s} |")
 
 
-def main() -> None:
-    from pyspark.sql import SparkSession
+def noop_seconds(spark, query, sf_dir: str, label: str) -> float:
+    """Seconds to build `query(spark, sf_dir)` and run it to the noop
+    sink under the job label `label`. GC fence first: old-gen garbage
+    from earlier queries made allocation-heavy plans (minhash shingle
+    explode) up to 8x slower (16.3s -> 2.1s after a forced GC)."""
+    sc = spark.sparkContext
+    sc._jvm.System.gc()
+    sc.setJobDescription(label)
+    try:
+        t0 = time.time()
+        query(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return round(time.time() - t0, 3)
+    finally:
+        sc.setJobDescription(None)
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "24g"))
-        .config("spark.ui.enabled", "false")
-        .appName("pdfplumber_rs_spark-bench")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+
+def warm_up(spark, qs: dict, names: list[str]) -> None:
+    """Untimed pass at the smallest SF: exercises the same codegen /
+    Arrow / kernel paths so the timed passes measure steady-state
+    throughput (what a long-running cluster job sees), not JVM JIT."""
+    warm_dir = "/root/testdata/sf0.001"
+    for name in names if os.path.isdir(warm_dir) else ():
+        try:
+            noop_seconds(spark, qs[name], warm_dir, f"warm-up {name}")
+        except Exception:  # noqa: BLE001 — warmup must never fail the bench
+            pass
+
+
+def main() -> None:
+    from pdfplumber_rs_spark.session import local_session
+
+    spark = local_session("pdfplumber_rs_spark-bench")
 
     import __spark_entry__ as e
 
     qs = e.queries()
     times: dict[str, float] = {}
     n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
-    # untimed warmup at the smallest SF: exercises the same codegen /
-    # Arrow / kernel paths so the timed battery measures steady-state
-    # throughput (what a long-running cluster job sees), not JVM JIT
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir):
-        for name in HEADLINE:
-            try:
-                qs[name](spark, warm_dir).write.format("noop") \
-                    .mode("overwrite").save()
-            except Exception:  # noqa: BLE001 — warmup must never fail the bench
-                pass
+    warm_up(spark, qs, HEADLINE)
     # two timed passes, per-query min: this VM shows sporadic multi-
     # second external stalls (steal spikes); min-of-2 reports the
     # engine's steady-state cost, which is what a cluster run amortizes
     for _pass in range(2):
         for name in HEADLINE:
-            fn = qs[name]
-            # GC fence: accumulated old-gen garbage from earlier queries
-            # makes allocation-heavy plans (minhash shingle explode) run
-            # up to 8x slower (measured 16.3s -> 2.1s after a forced GC).
-            # A clean heap per measurement is standard JMH-style hygiene.
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.time()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            dt = round(time.time() - t0, 3)
-            if name not in times or dt < times[name]:
-                times[name] = dt
+            dt = noop_seconds(spark, qs[name], SF_DIR, f"{name} @ {SF_DIR}")
+            times[name] = min(dt, times.get(name, dt))
     total = round(sum(times.values()), 3)
     docs_per_sec = round(n_docs / times["pdf_text_roundtrip"], 2)
     print(
@@ -242,7 +242,7 @@ def main() -> None:
                 "queries": times,
                 "sf": SF_DIR.rstrip("/").rsplit("sf", 1)[-1],
                 "docs_per_sec": docs_per_sec,
-                "cpus": CPUS,
+                "cpus": spark.sparkContext.defaultParallelism,
                 "n_docs": n_docs,
             }
         )

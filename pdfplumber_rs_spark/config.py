@@ -29,7 +29,6 @@ class TextOptions:
     y_tolerance: float = 3.0
     y_density: float = 10.0
     x_density: float = 10.0
-    expand_ligatures: bool = True
     column_mode: str = "none"  # none | auto
     min_column_gap: float = 20.0
     max_columns: int = 6
@@ -80,7 +79,5 @@ class ExtractOptions:
     max_pages: int | None = None
     max_objects_per_page: int | None = 500_000
     max_input_bytes: int | None = 256 * 1024 * 1024
-    # lenient parsing: recover from malformed tokens / unknown operators
-    lenient: bool = True
     # user/owner password (S3, pdf.rs:199-206); empty = auto-decrypt
     password: str | None = None

@@ -142,7 +142,8 @@ def open_pdf(data: bytes, options: ExtractOptions | None = None) -> Document:
 def extract_document(data: bytes, options: ExtractOptions | None = None,
                      text_options: TextOptions | None = None,
                      table_settings: TableSettings | None = None) -> dict:
-    """One-shot extraction used by the Spark kernel: everything in one pass.
+    """One-shot extraction of a whole document into plain dicts, for
+    scripts and tests (the Spark kernel runs `pipeline._page_rows`).
 
     Returns {n_pages, text, pages:[{page_number, width, height, rotation,
     chars, words, lines, rects, curves, edges, tables, text}], warnings,

@@ -99,13 +99,6 @@ class Lexer:
                 break
         self.pos = pos
 
-    def at_end(self) -> bool:
-        self.skip_ws()
-        return self.pos >= self.end
-
-    def peek(self) -> int:
-        return self.data[self.pos] if self.pos < self.end else -1
-
     def read_regular_run(self) -> bytes:
         """Read a run of regular (non-ws, non-delimiter) bytes."""
         data, end = self.data, self.end

@@ -656,21 +656,6 @@ def words_table(pages: DataFrame) -> DataFrame:
     )
 
 
-def edges_table(pages: DataFrame) -> DataFrame:
-    e = pages.select("url", "page_number", F.posexplode("edges").alias("seq", "e"))
-    return e.select("url", "page_number", "seq", "e.x0", "e.top", "e.x1",
-                    "e.bottom", "e.orientation", "e.source")
-
-
-def shapes_table(pages: DataFrame) -> DataFrame:
-    """Exploded line/rect/curve shapes with paint flags and colors."""
-    s = pages.select("url", "page_number",
-                     F.posexplode("shapes").alias("seq", "s"))
-    return s.select("url", "page_number", "seq", "s.kind", "s.x0", "s.top",
-                    "s.x1", "s.bottom", "s.linewidth", "s.stroke", "s.fill",
-                    "s.stroking_color", "s.non_stroking_color")
-
-
 def tables_table(pages: DataFrame) -> DataFrame:
     t = pages.select("url", "page_number",
                      F.posexplode("tables").alias("table_idx", "t"))

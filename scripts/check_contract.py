@@ -41,15 +41,10 @@ def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     flt = sys.argv[2] if len(sys.argv) > 2 else ""
 
-    from pyspark.sql import SparkSession
+    from pdfplumber_rs_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("pdfplumber_rs_spark-contract",
+                          **{"spark.sql.shuffle.partitions": "16"})
 
     import __spark_entry__ as e
 

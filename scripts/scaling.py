@@ -28,30 +28,24 @@ REPO = Path(__file__).resolve().parents[1]
 WORKER = r"""
 import json, sys, time
 sys.path.insert(0, sys.argv[3])
-from pyspark.sql import SparkSession
+from pdfplumber_rs_spark.session import local_session
 
 cpus = int(sys.argv[1])
 sf_dir = sys.argv[2]
-master = sys.argv[4] if len(sys.argv) > 4 else f"local[{cpus}]"
-b = (
-    SparkSession.builder.master(master)
-    .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 8)))
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.driver.memory", "24g")
-    .config("spark.ui.enabled", "false")
-)
-if master.startswith("local-cluster"):
-    # executor JVMs are separate processes: ship the repo import path
-    # and size each executor like a production worker, not the default
-    # 1g (the kernel holds Arrow batches of rendered PDF bytes).
-    # locality.wait=0: with the corpus cached across 4 executors the
-    # default 3s per-locality-level wait serializes short tasks —
+master = sys.argv[4] if len(sys.argv) > 4 else None
+conf = {"spark.sql.shuffle.partitions": str(max(cpus * 2, 8))}
+if master:
+    # local-cluster: executor JVMs are separate processes: ship the repo
+    # import path and size each executor like a production worker, not
+    # the default 1g (the kernel holds Arrow batches of rendered PDF
+    # bytes). locality.wait=0: with the corpus cached across 4 executors
+    # the default 3s per-locality-level wait serializes short tasks —
     # the job is CPU-bound, any slot is as good as a cache-local one
-    b = (b.config("spark.executorEnv.PYTHONPATH", sys.argv[3])
-         .config("spark.executor.memory", "6g")
-         .config("spark.locality.wait", "0s"))
-spark = b.getOrCreate()
-spark.sparkContext.setLogLevel("ERROR")
+    conf.update({"spark.executorEnv.PYTHONPATH": sys.argv[3],
+                 "spark.executor.memory": "6g",
+                 "spark.locality.wait": "0s"})
+spark = local_session("pdfplumber_rs_spark-scaling", cpus=cpus,
+                      master=master, **conf)
 from pyspark.sql import functions as F
 from pdfplumber_rs_spark import pipeline as P
 from pdfplumber_rs_spark.sources.corpus import CORPUS_SCHEMA, _corpus_row
@@ -98,7 +92,7 @@ dt = time.time() - t0
 sc = spark.sparkContext
 print(json.dumps({"cpus": cpus, "sec": round(dt, 2), "n_docs": n_docs,
                   "docs_per_sec": round(n_docs / dt, 2),
-                  "master": master,
+                  "master": sc.master,
                   "default_parallelism": sc.defaultParallelism}))
 """
 

@@ -28,7 +28,6 @@ def main() -> None:
     ap.add_argument("--output", required=True, help="result sink directory")
     ap.add_argument("--no-resume", action="store_true",
                     help="reprocess everything (skip the left-anti resume)")
-    ap.add_argument("--handle-skew", action="store_true", default=True)
     ap.add_argument("--include", default="",
                     help="comma list of side sections (chars,words,...); "
                          "empty = text-only (maximum kernel pruning)")
@@ -56,9 +55,7 @@ def main() -> None:
                 "--no-resume with an existing committed output would "
                 "double-ingest; use a fresh --output directory")
     include = tuple(s for s in args.include.split(",") if s)
-    metrics = jobs.run_extract_job(spark, corpus, out,
-                                   handle_skew=args.handle_skew,
-                                   include=include)
+    metrics = jobs.run_extract_job(spark, corpus, out, include=include)
     print(__import__("json").dumps(metrics))
     spark.stop()
 

@@ -8,18 +8,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from pdfplumber_rs_spark.session import local_session
 
-    s = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.driver.memory", "4g")
-        .config("spark.ui.enabled", "false")
-        .appName("pdfplumber_rs_spark-tests")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
+    yield local_session("pdfplumber_rs_spark-tests", cpus=4, mem="4g",
+                        **{"spark.sql.shuffle.partitions": "8"})
 
 
 @pytest.fixture(scope="session")

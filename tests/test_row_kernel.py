@@ -4,7 +4,8 @@ and the per-row functions the pipeline wrappers hand to it.
 The page-row pins hash the Arrow output of `make_extract_kernel` over
 deterministic pdfgen inputs (fixtures, CJK/CID pages, hostile
 documents, a ranged row and blob-pointer rows), with `kernel_ms` zeroed.
-They guard the byte identity of the extraction kernel's output.
+They guard the byte identity of the extraction kernel's output; the
+coordinate-sensitive pins guard its last-digit float arithmetic.
 """
 
 from __future__ import annotations
@@ -106,6 +107,72 @@ def test_page_rows_match_pins(include, tmp_path):
     kernel = P.make_extract_kernel(include=include)
     assert page_rows_digest(kernel, pin_batches(str(tmp_path))) \
         == PAGE_ROW_PINS[include]
+
+
+# -- coordinate-sensitive pins ----------------------------------------------------
+# The fixtures above put every glyph in the upper half of the page, where
+# `page_height - y` is exact, so arithmetic that differs only in the last
+# digit (say `bottom - top` for `max_y - min_y`) gives the same bits there.
+# These one-page documents set text in the lower half at fractional sizes,
+# offsets and spacings, and pin the unrounded `_page_rows` output.
+
+_IDENTITY_H = {"FJ": {"base": "CIDJP", "cid_encoding": "Identity-H",
+                      "ordering": "Japan1", "cid_subtype": "CIDFontType0",
+                      "w": "[34 [611.5 577.25 533]]"}}
+
+COORD_PAGES = {
+    "fractional-size": (
+        b"BT /F1 9.7 Tf 72.35 301.17 Td "
+        b"(Fractional 9.7 pt at odd offsets) Tj\n"
+        b"0 -13.37 Td (second line, non-integer leading) Tj\n"
+        b"/F1 11.3 Tf 17.13 -15.91 Td (Larger 11.3 pt, moved right) Tj ET",
+        None),
+    "cm-scale": (
+        b"q 0.7 0 0 0.7 0 0 cm BT /F1 10 Tf 103.1 400.3 Td "
+        b"(Scaled by a 0.7 cm) Tj\n0 -14.3 Td (Second scaled line) Tj ET Q",
+        None),
+    "spacing": (
+        b"BT /F1 10.5 Tf 0.37 Tc 1.13 Tw 87 Tz 2.3 Ts 72.5 200.25 Td "
+        b"(Tc Tw Tz and a rise) Tj\n0 -13.1 Td -0.21 Tc 0.4 Tw 112.5 Tz "
+        b"-1.7 Ts (second line, wider) Tj ET",
+        None),
+    "tj-kerning": (
+        b"BT /F1 9.7 Tf 72.3 190.7 Td [(Ke) -37.5 (rn) 120 (ing arr) 15.25 "
+        b"(ay)] TJ\n0 -12.9 Td [(W) 80 (A) -33.3 (V) 50 (E words) -250 "
+        b"(apart)] TJ ET",
+        None),
+    "identity-h": (
+        b"BT /FJ 11.3 Tf 72.4 298.35 Td 0.23 Tc <034B0352035D> Tj\n"
+        b"0 -13.7 Td [<0022> -50.5 <00230024>] TJ ET",
+        _IDENTITY_H),
+}
+
+COORD_PINS = {
+    "fractional-size":
+        "c0684438227efc8073449b424d1105c4aabf4bf3f0812488aa0d91f52272ebb4",
+    "cm-scale":
+        "b64acc45760ffcd14aa2a6a3d7eb7ab8c3bbec3b5a2c874564576ad5f1f78461",
+    "spacing":
+        "c2da9fe6bfa5fb069aa46d0a533c2e5a48c2a48e16e0b5bb3c8a957260b9fd6d",
+    "tj-kerning":
+        "23ee1aef65230e79e63d676c8d0eb7a23a56f95752e1be8255685ddf7039c83d",
+    "identity-h":
+        "7d22142d6ea4808d97f7f1add956e123f8dd6a460c77c2e6281ceaf3fecbaf1e",
+}
+
+
+def coord_page_digest(name: str) -> str:
+    content, fonts = COORD_PAGES[name]
+    rows = P._page_rows(f"pin://{name}", pdfgen.build_pdf([content], fonts),
+                        include=None)
+    assert [r["error"] for r in rows] == [None] and rows[0]["chars"]
+    rows[0]["kernel_ms"] = 0.0
+    return hashlib.sha256(repr(rows).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("name", list(COORD_PAGES))
+def test_coordinate_sensitive_pins(name):
+    assert coord_page_digest(name) == COORD_PINS[name]
 
 
 # -- failure policy of the per-row functions ------------------------------------
