@@ -36,7 +36,7 @@ from collections import Counter
 from .html import _dominant, _inside, _line_text, font_words
 from .layout import cluster_words_into_lines
 
-_FILTER_EXT = {
+FILTER_EXT = {
     "DCTDecode": "jpg", "JPXDecode": "jp2", "CCITTFaxDecode": "tiff",
     "JBIG2Decode": "jbig2",
 }
@@ -187,7 +187,7 @@ def document_to_markdown(doc) -> tuple[str, dict]:
             if data is None:
                 continue
             h = hashlib.sha256(data).hexdigest()[:16]
-            ext = _FILTER_EXT.get(img.get("filter") or "", "bin")
+            ext = FILTER_EXT.get(img.get("filter") or "", "bin")
             image_filenames.append(
                 f"page{page.page_number}-img{seq}-{h}.{ext}")
     markdown = "\n\n---\n\n".join(parts)

@@ -7,7 +7,8 @@ MediaBox offset -> clockwise rotation -> y-flip).
 A Page keeps its glyphs as one CharColumns (`Page.char_columns`, always
 present), which words, text, tables, search and the spatial filters
 read. `Page.chars`, the per-glyph dicts, is built from it on first
-access and cached; the text path never builds it.
+access and cached; the text path never builds it, and the extraction
+kernel's `chars` section is this list as it is.
 """
 
 from __future__ import annotations

@@ -428,53 +428,11 @@ def table_quality(table: dict) -> tuple[float, float]:
     return accuracy, whitespace
 
 
-def table_debug(edges: list[dict], words: list[dict],
-                settings: TableSettings | None = None) -> dict:
-    """T15 debug pipeline (table.rs:1546-1640): per-stage counters of
-    the same orchestration find_tables runs — raw/selected edges,
-    merged edges, intersections, cells, tables."""
-    if settings is None:
-        settings = TableSettings()
-    strategy = settings.strategy
-    if strategy == "lattice_strict":
-        sel = [e for e in edges if e["source"] == "line"]
-    elif strategy == "stream":
-        sel = words_to_edges_v(words, settings.min_words_vertical)
-        sel += words_to_edges_h(words, settings.min_words_horizontal)
-    else:
-        sel = list(edges)
-    n_selected = len(sel)
-    merged = merge_edges(
-        sel, settings.snap_x_tolerance, settings.snap_y_tolerance,
-        settings.join_x_tolerance, settings.join_y_tolerance,
-    )
-    merged = [e for e in merged if edge_length(e) >= settings.edge_min_length]
-    inter = edges_to_intersections(
-        merged, settings.intersection_x_tolerance,
-        settings.intersection_y_tolerance,
-    ) if merged else {}
-    cells = intersections_to_cells(inter) if inter else []
-    groups = cells_to_tables(cells)
-    return {
-        "n_edges_raw": len(edges),
-        "n_edges_selected": n_selected,
-        "n_edges_merged": len(merged),
-        "n_intersections": len(inter),
-        "n_cells": len(cells),
-        "n_tables": len(groups),
-    }
-
-
-# -- orchestration ----------------------------------------------------------------
-
-def find_tables(edges: list[dict], words: list[dict], chars,
-                settings: TableSettings | None = None,
-                word_options: WordOptions | None = None) -> list[dict]:
-    """Full pipeline → list of tables with text-filled rows. `chars` is
-    the page's CharColumns (or a list of char dicts)."""
-    if settings is None:
-        settings = TableSettings()
-
+def _table_stages(edges: list[dict], words: list[dict],
+                  settings: TableSettings) -> tuple:
+    """The stages find_tables and table_debug share: edge selection by
+    strategy, merge, length filter, intersections, cells and grouping.
+    Returns (selected, merged, intersections, cells, groups)."""
     strategy = settings.strategy
     if strategy == "lattice_strict":
         sel = [e for e in edges if e["source"] == "line"]
@@ -500,18 +458,46 @@ def find_tables(edges: list[dict], words: list[dict], chars,
     else:  # lattice: all derived edges
         sel = list(edges)
 
-    sel = merge_edges(
+    merged = merge_edges(
         sel, settings.snap_x_tolerance, settings.snap_y_tolerance,
         settings.join_x_tolerance, settings.join_y_tolerance,
     )
-    sel = [e for e in sel if edge_length(e) >= settings.edge_min_length]
-    if not sel:
-        return []
-    intersections = edges_to_intersections(
-        sel, settings.intersection_x_tolerance, settings.intersection_y_tolerance
-    )
-    cells = intersections_to_cells(intersections)
-    groups = cells_to_tables(cells)
+    merged = [e for e in merged if edge_length(e) >= settings.edge_min_length]
+    inter = edges_to_intersections(
+        merged, settings.intersection_x_tolerance,
+        settings.intersection_y_tolerance,
+    ) if merged else {}
+    cells = intersections_to_cells(inter) if inter else []
+    return sel, merged, inter, cells, cells_to_tables(cells)
+
+
+def table_debug(edges: list[dict], words: list[dict],
+                settings: TableSettings | None = None) -> dict:
+    """T15 debug pipeline (table.rs:1546-1640): per-stage counters of
+    the stages find_tables runs — raw/selected edges, merged edges,
+    intersections, cells, tables."""
+    sel, merged, inter, cells, groups = _table_stages(
+        edges, words, settings or TableSettings())
+    return {
+        "n_edges_raw": len(edges),
+        "n_edges_selected": len(sel),
+        "n_edges_merged": len(merged),
+        "n_intersections": len(inter),
+        "n_cells": len(cells),
+        "n_tables": len(groups),
+    }
+
+
+# -- orchestration ----------------------------------------------------------------
+
+def find_tables(edges: list[dict], words: list[dict], chars,
+                settings: TableSettings | None = None,
+                word_options: WordOptions | None = None) -> list[dict]:
+    """Full pipeline → list of tables with text-filled rows. `chars` is
+    the page's CharColumns (or a list of char dicts)."""
+    if settings is None:
+        settings = TableSettings()
+    groups = _table_stages(edges, words, settings)[-1]
 
     wopt = word_options or WordOptions()
     out: list[dict] = []

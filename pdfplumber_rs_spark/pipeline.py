@@ -276,53 +276,28 @@ def _page_rows(url: str, html: bytes | None, blob_path: str | None = None,
             "error": error,
         }
         if "chars" in want:
-            row["chars"] = _char_rows(page.char_columns) if page else []
+            row["chars"] = page.chars if page else []
         if "words" in want:
-            row["words"] = [
-                {
-                    "text": w["text"], "x0": w["x0"], "top": w["top"],
-                    "x1": w["x1"], "bottom": w["bottom"],
-                    "doctop": w["doctop"], "direction": w["direction"],
-                }
-                for w in words
-            ]
+            row["words"] = words
         if "edges" in want:
-            row["edges"] = [
-                {
-                    "x0": e["x0"], "top": e["top"], "x1": e["x1"],
-                    "bottom": e["bottom"], "orientation": e["orientation"],
-                    "source": e["source"],
-                }
-                for e in (page.edges() if page else [])
-            ]
+            row["edges"] = page.edges() if page else []
         if "shapes" in want:
-            shapes = []
-            if page is not None:
-                for o in page.lines:
-                    shapes.append(_shape_row("line", o))
-                for o in page.rects:
-                    shapes.append(_shape_row("rect", o))
-                for o in page.curves:
-                    shapes.append(_shape_row("curve", o))
-            row["shapes"] = shapes
+            row["shapes"] = [] if page is None else [
+                dict(o, kind=kind) for kind, objs in (
+                    ("line", page.lines), ("rect", page.rects),
+                    ("curve", page.curves))
+                for o in objs]
         if "tables" in want:
             row["tables"] = [
-                {
-                    "x0": t["bbox"]["x0"], "top": t["bbox"]["top"],
-                    "x1": t["bbox"]["x1"], "bottom": t["bbox"]["bottom"],
-                    "rows": [
-                        [None if c is None else c["text"] for c in row_]
-                        for row_ in t["rows"]
-                    ],
-                }
-                for t in tables
-            ]
+                dict(t["bbox"], rows=[[c and c["text"] for c in r]
+                                      for r in t["rows"]])
+                for t in tables]
         if "annotations" in want:
-            row["annotations"] = list(page.annotations) if page else []
+            row["annotations"] = page.annotations if page else []
         if "hyperlinks" in want:
-            row["hyperlinks"] = list(page.hyperlinks) if page else []
+            row["hyperlinks"] = page.hyperlinks if page else []
         if "images" in want:
-            row["images"] = list(page.images) if page else []
+            row["images"] = page.images if page else []
         row["kernel_ms"] = (time.time() - t1) * 1000.0
         rows.append(row)
     if not rows:  # zero-page document still yields one row (lineage)
@@ -336,51 +311,6 @@ def _page_rows(url: str, html: bytes | None, blob_path: str | None = None,
     return rows
 
 
-def _char_rows(cols) -> list[dict]:
-    """The chars section straight from a page's CharColumns: the run
-    constants (fontname, colours, ctm, mcid, tag) convert once per run,
-    not once per glyph."""
-    from .kernel.chars import DIRECTIONS
-
-    runs = [(r.font_name, r.mcid, r.tag, r.codes,
-             _color_struct(r.stroking_color),
-             _color_struct(r.non_stroking_color),
-             None if r.ctm is None else [float(v) for v in r.ctm])
-            for r in cols.runs]
-    out = []
-    for text, x0, top, x1, bottom, size, doctop, upright, d, ri, pos in zip(
-            cols.text, cols.x0.tolist(), cols.top.tolist(), cols.x1.tolist(),
-            cols.bottom.tolist(), cols.size.tolist(), cols.doctop.tolist(),
-            cols.upright.tolist(), cols.direction.tolist(),
-            cols.run.tolist(), cols.pos.tolist()):
-        fontname, mcid, tag, codes, sc, nsc, ctm = runs[ri]
-        out.append({
-            "text": text, "x0": x0, "top": top, "x1": x1, "bottom": bottom,
-            "fontname": fontname, "size": size, "doctop": doctop,
-            "upright": upright, "direction": DIRECTIONS[d],
-            "char_code": int(codes[pos]), "mcid": mcid, "tag": tag,
-            "stroking_color": sc, "non_stroking_color": nsc, "ctm": ctm,
-        })
-    return out
-
-
-def _color_struct(v) -> dict | None:
-    """kernel ('rgb', [r,g,b]) tuple → {model, components} row."""
-    if v is None:
-        return None
-    return {"model": v[0], "components": [float(x) for x in v[1]]}
-
-
-def _shape_row(kind: str, o: dict) -> dict:
-    return {
-        "kind": kind, "x0": o["x0"], "top": o["top"], "x1": o["x1"],
-        "bottom": o["bottom"], "linewidth": o.get("linewidth", 0.0),
-        "stroke": bool(o.get("stroke")), "fill": bool(o.get("fill")),
-        "stroking_color": _color_struct(o.get("stroking_color")),
-        "non_stroking_color": _color_struct(o.get("non_stroking_color")),
-    }
-
-
 def row_kernel(fn, schema: StructType, flush_rows: int = 512):
     """The Arrow boundary of every mapInArrow kernel: returns the
     Iterator[RecordBatch] → Iterator[RecordBatch] function mapInArrow
@@ -388,7 +318,15 @@ def row_kernel(fn, schema: StructType, flush_rows: int = 512):
     becomes one `fn(**row)` call (column names as keywords) that yields
     output dicts; output rows are Arrow-encoded `schema` batches of at
     most `flush_rows` rows, flushed again at the end of every input
-    batch. Failure policy is fn's: whatever it raises fails the task."""
+    batch. Failure policy is fn's: whatever it raises fails the task.
+
+    The schema does the projection, so fn may yield the kernel's own
+    objects as they are: struct fields are looked up by name (extra
+    keys such as a word's `upright` or a curve's `pts` are ignored,
+    missing ones become null), a tuple fills a struct by position (a
+    `('rgb', [r, g, b])` colour becomes `{model, components}`) or a
+    list column (a `ctm`), and nested lists of dicts become arrays of
+    structs."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(schema)
@@ -700,12 +638,6 @@ def images_table(pages: DataFrame) -> DataFrame:
                     "i.inline", "i.data")
 
 
-_FILTER_EXT = {
-    "DCTDecode": "jpg", "JPXDecode": "jp2", "CCITTFaxDecode": "tiff",
-    "JBIG2Decode": "jbig2",
-}
-
-
 def export_images(pages: DataFrame,
                   pattern: str = "page{page}-img{index}-{hash}.{ext}") -> DataFrame:
     """D11 image export with deterministic names (images.rs:284-330),
@@ -715,10 +647,12 @@ def export_images(pages: DataFrame,
     contract is 'deterministic content-derived name'), so identical
     bytes dedupe to identical filenames. Images without data are
     skipped (XObjects whose content was not extracted)."""
+    from .kernel.markdown import FILTER_EXT
+
     imgs = images_table(pages).filter(F.col("data").isNotNull())
     ext = F.coalesce(
         *[F.when(F.col("filter") == k, F.lit(v))
-          for k, v in _FILTER_EXT.items()],
+          for k, v in FILTER_EXT.items()],
         F.lit("bin"),
     )
     h = F.substring(F.sha2(F.col("data"), 256), 1, 16)

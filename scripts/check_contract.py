@@ -1,7 +1,9 @@
 """Mimic the driver's correctness gate: run every queries() entry on
 Spark and its oracle_sql() on DuckDB, compare row count, schema width,
 and an order-insensitive value hash (columns sorted by name, floats
-rounded to 6dp, rows sorted).
+rounded to 6dp, rows sorted). Every line prints the first 12 hex
+digits of the Spark-side hash (and of the oracle's, where there is
+one), so two trees' results compare by diffing this script's output.
 
 Usage: python scripts/check_contract.py [sf_dir] [query_filter]
 """
@@ -72,8 +74,10 @@ def main() -> None:
             n_fail += 1
             continue
         spark_s = time.time() - t0
+        sn, sh = canon(sdf)
         if name not in oracles:
-            print(f"{name}: rows-only ({len(sdf)} rows, {spark_s:.1f}s)")
+            print(f"{name}: rows-only ({sn} rows, spark_hash={sh[:12]}, "
+                  f"{spark_s:.1f}s)")
             continue
         try:
             odf = con.execute(oracles[name]).fetchdf()
@@ -81,7 +85,6 @@ def main() -> None:
             print(f"{name}: ORACLE CRASH {type(ex).__name__}: {str(ex)[:200]}")
             n_fail += 1
             continue
-        sn, sh = canon(sdf)
         on, oh = canon(odf)
         ok = sn == on and sh == oh
         status = "OK" if ok else "MISMATCH"
@@ -90,7 +93,8 @@ def main() -> None:
         else:
             n_fail += 1
         print(f"{name}: {status} spark={sn} oracle={on} "
-              f"hash={'=' if sh == oh else '≠'} ({spark_s:.1f}s)", flush=True)
+              f"spark_hash={sh[:12]} oracle_hash={oh[:12]} ({spark_s:.1f}s)",
+              flush=True)
         if not ok and len(sdf) and len(odf):
             s_cols, o_cols = sorted(sdf.columns), sorted(odf.columns)
             if s_cols != o_cols:

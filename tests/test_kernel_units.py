@@ -4,8 +4,11 @@ clustering tolerances, table pipeline stages, filters, budgets."""
 
 from __future__ import annotations
 
+import pytest
+
 from pdfplumber_rs_spark.config import (
     DedupeOptions,
+    ExplicitLines,
     ExtractOptions,
     TableSettings,
     WordOptions,
@@ -15,10 +18,12 @@ from pdfplumber_rs_spark.kernel.objects import Lexer, Name, Ref
 from pdfplumber_rs_spark.kernel.tables import (
     cells_to_tables,
     edges_to_intersections,
+    find_tables,
     intersections_to_cells,
     join_edge_group,
     merge_edges,
     snap_edges,
+    table_debug,
     table_rows,
 )
 from pdfplumber_rs_spark.kernel.words import extract_words
@@ -244,6 +249,21 @@ def test_stream_strategy_detects_borderless():
     assert tables[0]["rows"][0][0]["text"] == "Data-0-0"
     # default lattice finds nothing on a borderless page
     assert page.find_tables(TableSettings()) == []
+
+
+@pytest.mark.parametrize("strategy", [
+    "lattice", "lattice_strict", "stream", "explicit"])
+def test_table_debug_counts_the_tables_find_tables_finds(strategy):
+    pdf = (pdfgen.fixture_stream(5, 3) if strategy in ("stream", "explicit")
+           else pdfgen.fixture_lattice(3, 3))
+    page = open_pdf(pdf).page(0)
+    settings = TableSettings(strategy=strategy, explicit_lines=ExplicitLines(
+        horizontal_lines=[70, 86, 102, 118, 134, 150],
+        vertical_lines=[70, 170, 270, 370]))
+    edges, words = page.edges(), page.extract_words()
+    found = find_tables(edges, words, page.char_columns, settings)
+    assert len(found) == 1
+    assert table_debug(edges, words, settings)["n_tables"] == len(found)
 
 
 # -- filters / options ------------------------------------------------------------

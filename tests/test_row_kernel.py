@@ -95,26 +95,104 @@ def pin_batches(blob_dir: str) -> list[pa.RecordBatch]:
     return [plain, ranged, two_col]
 
 
-def page_rows_digest(kernel, batches) -> str:
+def kernel_rows(batches, include: tuple | None = None) -> list[dict]:
+    """The extraction kernel's Arrow output as Python rows, `kernel_ms`
+    zeroed."""
+    kernel = P.make_extract_kernel(include=include)
     rows = [r for b in kernel(iter(batches)) for r in b.to_pylist()]
     for r in rows:
         r["kernel_ms"] = 0.0
+    return rows
+
+
+def rows_digest(rows: list[dict]) -> str:
     return hashlib.sha256(repr(rows).encode()).hexdigest()
 
 
 @pytest.mark.parametrize("include", [None, ()], ids=["all", "text-only"])
 def test_page_rows_match_pins(include, tmp_path):
-    kernel = P.make_extract_kernel(include=include)
-    assert page_rows_digest(kernel, pin_batches(str(tmp_path))) \
-        == PAGE_ROW_PINS[include]
+    rows = kernel_rows(pin_batches(str(tmp_path)), include)
+    assert rows_digest(rows) == PAGE_ROW_PINS[include]
+
+
+# -- colour, shape, rotation and corpus-generator pins ---------------------------
+# The batches above carry no coloured glyph, no coloured shape and no
+# curve. These documents do: every colour operator family on chars
+# (rg/RG, K, `sc` before any colour space, five-component `scn`,
+# DeviceCMYK `cs` + `sc`, DeviceGray `CS` + `SC`), stroked and filled
+# coloured lines and rects, a bezier and a closed-polygon curve, the same
+# pages under /Rotate 90 and 270, and one or more documents from each
+# `sources.corpus` PDF generator the queries read: coloured (rg/RG plus
+# a `cm`), corpus (inline image, Link and Text annotations, MCIDs,
+# bookmarks, a form field), page chrome, two-column layout, embedded
+# TrueType and CFF fonts, and lattice, stream and merged-cell tables.
+
+_COLOR_PAGE = (
+    b"0.1 0.2 0.3 0.4 K 0.5 0.25 0 rg BT /F1 10.5 Tf 72 700 Td "
+    b"(CMYK stroke, RGB fill) Tj ET\n"
+    b"0.3 0.6 0.9 sc BT /F1 10.5 Tf 72 680 Td (sc, no colour space) Tj ET\n"
+    b"0.2 0.4 0.6 0.8 1 scn BT /F1 10.5 Tf 72 660 Td "
+    b"(five-component scn) Tj ET\n"
+    b"/DeviceCMYK cs 0.7 0.1 0.2 0.05 sc /DeviceGray CS 0.35 SC "
+    b"BT /F1 10.5 Tf 72 640 Td (DeviceCMYK sc, DeviceGray SC) Tj ET")
+
+_SHAPE_PAGE = (
+    b"1 0 0 RG 2.5 w 72 500 m 300 500 l S\n"
+    b"0 0.5 1 RG 0.75 w 320 420 m 320 520 l S\n"
+    b"0 0 1 rg 72 400 100 50 re f\n"
+    b"0.2 0.8 0.2 RG 0.9 0.9 0 rg 1.25 w 200 400 80 40 re B\n"
+    b"0.5 G 1.5 w 72 300 m 100 350 150 250 200 300 c S\n"
+    b"0.1 0.2 0.3 0.4 k 300 300 m 350 350 l 400 300 l h f\n"
+    b"BT /F1 9.7 Tf 80 410 Td (text over the shapes) Tj ET")
+
+OBJECT_ROW_PIN = \
+    "43e54b718e22c4784a20fe3fb63a547a5d9ed5f1b707801c66a2eaa801b6ae0c"
+
+
+def object_batches() -> list[pa.RecordBatch]:
+    from pdfplumber_rs_spark.sources import corpus
+
+    docs = {
+        "colours": pdfgen.build_pdf([_COLOR_PAGE]),
+        "shapes": pdfgen.build_pdf([_SHAPE_PAGE]),
+        "rotated": pdfgen.build_pdf([_SHAPE_PAGE, _COLOR_PAGE],
+                                    page_rotations=[90, 270]),
+    }
+    for doc_id in (1, 2, 3, 4, 6):
+        (row,) = corpus._colored_row(doc_id, f"coloured line {doc_id}")
+        docs[row["url"]] = row["html"]
+    text = "\n".join(f"corpus line {i} of the document" for i in range(52))
+    for doc_id, body in ((7, "one line\ntwo lines"), (8, text)):
+        (row,) = corpus._corpus_row(doc_id, body, "en")
+        docs[row["url"]] = row["html"]
+    words = " ".join(f"token{i}" for i in range(40))
+    gen = [(corpus._chrome_row, (3, "first body line\nsecond body line")),
+           (corpus._layout_row, (5, words)),
+           (corpus._embedded_font_row, (4, "TrueType widths")),
+           (corpus._embedded_font_row, (5, "CFF widths"))]
+    items = [["1", "17", "N"], ["2", "36", "R"], ["3", "8", "A"]]
+    gen += [(fn, (9, items)) for fn in (corpus._table_row,
+                                        corpus._stream_table_row,
+                                        corpus._merged_table_row)]
+    for fn, args in gen:
+        for row in fn(*args):
+            docs[f"{fn.__name__}:{row['url']}"] = row["html"]
+    return [pa.RecordBatch.from_pydict(
+        {"url": list(docs), "html": list(docs.values())})]
+
+
+def test_object_rows_match_pin():
+    rows = kernel_rows(object_batches())
+    assert all(r["error"] is None for r in rows)
+    assert rows_digest(rows) == OBJECT_ROW_PIN
 
 
 # -- coordinate-sensitive pins ----------------------------------------------------
-# The fixtures above put every glyph in the upper half of the page, where
+# `pin_batches` puts every glyph in the upper half of the page, where
 # `page_height - y` is exact, so arithmetic that differs only in the last
 # digit (say `bottom - top` for `max_y - min_y`) gives the same bits there.
 # These one-page documents set text in the lower half at fractional sizes,
-# offsets and spacings, and pin the unrounded `_page_rows` output.
+# offsets and spacings, and pin the kernel's unrounded Arrow rows.
 
 _IDENTITY_H = {"FJ": {"base": "CIDJP", "cid_encoding": "Identity-H",
                       "ordering": "Japan1", "cid_subtype": "CIDFontType0",
@@ -149,25 +227,25 @@ COORD_PAGES = {
 
 COORD_PINS = {
     "fractional-size":
-        "c0684438227efc8073449b424d1105c4aabf4bf3f0812488aa0d91f52272ebb4",
+        "76999c9d7e78272286f063670aaec62be3cd5fe3bf121c1ab6507743fae0b124",
     "cm-scale":
-        "b64acc45760ffcd14aa2a6a3d7eb7ab8c3bbec3b5a2c874564576ad5f1f78461",
+        "272a23537fee2dff9402f9a65376ac0ec3fdda77020332de322eb81bffaf668f",
     "spacing":
-        "c2da9fe6bfa5fb069aa46d0a533c2e5a48c2a48e16e0b5bb3c8a957260b9fd6d",
+        "80eceec7815a7bf383cec4184b70a3d69d35f9c3453e011d99dea5c438c97d32",
     "tj-kerning":
-        "23ee1aef65230e79e63d676c8d0eb7a23a56f95752e1be8255685ddf7039c83d",
+        "96085eb8a6cb366d21478e61121fadcd872e992f0118fef490d9409b50294c24",
     "identity-h":
-        "7d22142d6ea4808d97f7f1add956e123f8dd6a460c77c2e6281ceaf3fecbaf1e",
+        "6b6b9f6f57ed15bff389a51dd48e56963b95a98ad8852609b4a17aceae9d8c8a",
 }
 
 
 def coord_page_digest(name: str) -> str:
     content, fonts = COORD_PAGES[name]
-    rows = P._page_rows(f"pin://{name}", pdfgen.build_pdf([content], fonts),
-                        include=None)
+    rows = kernel_rows([pa.RecordBatch.from_pydict({
+        "url": [f"pin://{name}"],
+        "html": [pdfgen.build_pdf([content], fonts)]})])
     assert [r["error"] for r in rows] == [None] and rows[0]["chars"]
-    rows[0]["kernel_ms"] = 0.0
-    return hashlib.sha256(repr(rows).encode()).hexdigest()
+    return rows_digest(rows)
 
 
 @pytest.mark.parametrize("name", list(COORD_PAGES))
