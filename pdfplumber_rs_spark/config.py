@@ -50,8 +50,6 @@ class TableSettings:
     edge_min_length: float = 3.0
     min_words_vertical: int = 3
     min_words_horizontal: int = 1
-    text_x_tolerance: float = 3.0
-    text_y_tolerance: float = 3.0
     intersection_x_tolerance: float = 3.0
     intersection_y_tolerance: float = 3.0
     explicit_lines: ExplicitLines | None = None

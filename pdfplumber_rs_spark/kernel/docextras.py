@@ -83,11 +83,11 @@ def page_annotations(doc, page: dict, geom) -> list[dict]:
     return out
 
 
-def page_hyperlinks(doc, page: dict, geom) -> list[dict]:
-    """Link annotations with a resolvable target → [{x0, top, x1,
-    bottom, uri}]."""
+def hyperlinks(annotations: list[dict]) -> list[dict]:
+    """The Link annotations of page_annotations' list that have a
+    resolvable target → [{x0, top, x1, bottom, uri}]."""
     out: list[dict] = []
-    for a in page_annotations(doc, page, geom):
+    for a in annotations:
         if a["raw_subtype"] != "Link":
             continue
         uri = a["uri"]

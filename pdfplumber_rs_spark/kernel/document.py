@@ -93,10 +93,10 @@ class Document:
         # most callers (extract_text paths) never read these (guide §1.2
         # — don't compute things you throw away)
         def _extras(doc=self.doc, pd=pd, geom=geom):
-            from .docextras import page_annotations, page_hyperlinks
+            from .docextras import hyperlinks, page_annotations
 
-            return (page_annotations(doc, pd, geom),
-                    page_hyperlinks(doc, pd, geom))
+            annots = page_annotations(doc, pd, geom)
+            return annots, hyperlinks(annots)
 
         page._annotations = None
         page._hyperlinks = None

@@ -33,6 +33,7 @@ import hashlib
 import json
 from collections import Counter
 
+from ..config import ExtractOptions
 from .html import _dominant, _inside, _line_text, font_words
 from .layout import cluster_words_into_lines
 
@@ -203,12 +204,13 @@ def document_to_markdown(doc) -> tuple[str, dict]:
     return markdown, metadata
 
 
-def markdown_json(data: bytes) -> tuple[str, str]:
+def markdown_json(data: bytes,
+                  options: ExtractOptions | None = None) -> tuple[str, str]:
     """(markdown, metadata-json) for one PDF byte blob — the kernel
     entry the Arrow batch UDF calls. Metadata keys are sorted so the
     JSON is byte-stable for hashing oracles."""
     from .document import open_pdf
 
-    doc = open_pdf(data)
+    doc = open_pdf(data, options)
     md, meta = document_to_markdown(doc)
     return md, json.dumps(meta, sort_keys=True, separators=(",", ":"))

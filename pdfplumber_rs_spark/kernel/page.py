@@ -158,18 +158,30 @@ class Page:
         words = self.extract_words(word_options)
         return extract_text_from_words(words, options)
 
+    def _table_words(self, settings: TableSettings | None,
+                     word_options: WordOptions | None = None) -> list[dict]:
+        """The words table detection reads: words feed ONLY the stream
+        strategy (words_to_edges_v/h); lattice, lattice_strict and
+        explicit never read them, so they are not extracted (a second
+        word extraction was ~40% of text-page kernel time)."""
+        if (settings or TableSettings()).strategy != "stream":
+            return []
+        return self.extract_words(word_options)
+
     def find_tables(self, settings: TableSettings | None = None,
                     word_options: WordOptions | None = None) -> list[dict]:
         # cell text uses the default word options (oracle semantics —
         # rotation is already baked into the char coordinates)
-        wopt = word_options or WordOptions()
-        # words feed ONLY the stream strategy (words_to_edges_v/h);
-        # lattice/explicit never read them — skip the second word
-        # extraction (it was ~40% of text-page kernel time)
-        st = settings or TableSettings()
-        words = self.extract_words(word_options) if st.strategy == "stream" else []
-        return find_tables(self.edges(), words, self.char_columns, settings,
-                           wopt)
+        return find_tables(self.edges(),
+                           self._table_words(settings, word_options),
+                           self.char_columns, settings, word_options)
+
+    def table_debug(self, settings: TableSettings | None = None) -> dict:
+        """Per-stage counters of the stages find_tables runs (T15)."""
+        from .tables import table_debug
+
+        return table_debug(self.edges(), self._table_words(settings),
+                           settings)
 
     def extract_tables(self, settings: TableSettings | None = None) -> list[list[list[str | None]]]:
         """Rows-of-cell-text form, matching golden JSON shape

@@ -5,9 +5,11 @@ tables views + per-url text.
 Architecture (SURVEY.md §7): the per-document work (tokenize → interpret
 → chars → words → tables; an inherently sequential state machine per
 page) runs inside ONE vectorized `mapInArrow` kernel over Arrow record
-batches — never per-row Python. Everything cross-document or cross-page
-is native Spark: doctop is a window cumulative sum over page heights
-(crates/pdfplumber/src/pdf.rs:515,538 ≙ C5), per-url text is an ordered
+batches — never per-row Python. The kernel sees the whole document, so
+it also sets each char's and word's doctop (top + Σ heights of the
+previous pages, crates/pdfplumber/src/pdf.rs:515,538 ≙ C5); the
+exploded views are projections of its page rows. Everything
+cross-document is native Spark: per-url text is an ordered
 aggregation, lineage is a groupBy over spark_partition_id.
 
 Scale design:
@@ -477,16 +479,15 @@ def kernel_parallelism(df: DataFrame) -> int:
     return df.sparkSession.sparkContext.defaultParallelism * 2
 
 
-def salt(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Spread documents across tasks by url hash (+ page_start so the
-    ranges of one giant document land on different tasks)."""
+def salt(df: DataFrame) -> DataFrame:
+    """Spread documents across kernel_parallelism(df) tasks by url hash
+    (+ page_start so the ranges of one giant document land on different
+    tasks)."""
     cols = [F.xxhash64("url")]
     if "page_start" in df.columns:
         cols.append(F.coalesce(F.col("page_start"), F.lit(0)))
     key = F.pmod(F.hash(*cols), F.lit(1 << 20))
-    if num_partitions is None:
-        num_partitions = kernel_parallelism(df)
-    return df.repartition(num_partitions, key)
+    return df.repartition(kernel_parallelism(df), key)
 
 
 # -- public pipeline -----------------------------------------------------------------
@@ -495,7 +496,6 @@ def extract_pages(df: DataFrame, options: ExtractOptions | None = None,
                   text_options: TextOptions | None = None,
                   table_settings: TableSettings | None = None,
                   handle_skew: bool = True,
-                  num_partitions: int | None = None,
                   include: tuple | None = None,
                   max_bytes: int = 8 << 20,
                   pages_per_split: int = 50,
@@ -520,22 +520,10 @@ def extract_pages(df: DataFrame, options: ExtractOptions | None = None,
         cols = cols.select("url", "html",
                            F.lit(None).cast("int").alias("page_start"),
                            F.lit(None).cast("int").alias("page_end"))
-    cols = salt(cols, num_partitions)
+    cols = salt(cols)
     kernel = make_extract_kernel(options, text_options, table_settings,
                                  include=include)
     return cols.mapInArrow(kernel, page_schema(include))
-
-
-def with_doctop(pages: DataFrame) -> DataFrame:
-    """Add doctop_offset = Σ heights of previous pages (window cumsum —
-    the reference's pdf.rs:515 cross-page dependency, Spark-native)."""
-    w = (
-        Window.partitionBy("url")
-        .orderBy("page_number")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return pages.withColumn("doctop_offset",
-                            F.coalesce(F.sum("height").over(w), F.lit(0.0)))
 
 
 def document_text(pages: DataFrame) -> DataFrame:
@@ -565,33 +553,20 @@ def document_text(pages: DataFrame) -> DataFrame:
     )
 
 
+def _explode(df: DataFrame, section: str, *keys: str) -> DataFrame:
+    """One row per element of an object-array column: the keys, its
+    position `seq`, then the element's struct fields in schema order."""
+    return (df.select(*keys, F.posexplode(section).alias("seq", "s"))
+            .select(*keys, "seq", "s.*"))
+
+
 def chars_table(pages: DataFrame) -> DataFrame:
-    """Exploded chars with document-level doctop (window + projection)."""
-    p = with_doctop(pages)
-    c = p.select(
-        "url", "page_number", "doctop_offset",
-        F.posexplode("chars").alias("seq", "c"),
-    )
-    return c.select(
-        "url", "page_number", "seq",
-        "c.text", "c.x0", "c.top", "c.x1", "c.bottom", "c.fontname",
-        "c.size",
-        (F.col("c.top") + F.col("doctop_offset")).alias("doctop"),
-        "c.upright", "c.direction", "c.char_code", "c.mcid", "c.tag",
-        "c.stroking_color", "c.non_stroking_color", "c.ctm",
-    )
+    """Exploded chars; doctop is the kernel's, document-level already."""
+    return _explode(pages, "chars", "url", "page_number")
 
 
 def words_table(pages: DataFrame) -> DataFrame:
-    p = with_doctop(pages)
-    wdf = p.select("url", "page_number", "doctop_offset",
-                   F.posexplode("words").alias("seq", "w"))
-    return wdf.select(
-        "url", "page_number", "seq",
-        "w.text", "w.x0", "w.top", "w.x1", "w.bottom",
-        (F.col("w.top") + F.col("doctop_offset")).alias("doctop"),
-        "w.direction",
-    )
+    return _explode(pages, "words", "url", "page_number")
 
 
 def tables_table(pages: DataFrame) -> DataFrame:
@@ -615,27 +590,15 @@ def cells_table(pages: DataFrame) -> DataFrame:
 
 
 def annotations_table(pages: DataFrame) -> DataFrame:
-    a = pages.select("url", "page_number",
-                     F.posexplode("annotations").alias("seq", "a"))
-    return a.select("url", "page_number", "seq", "a.annot_type",
-                    "a.raw_subtype", "a.x0", "a.top", "a.x1", "a.bottom",
-                    "a.contents", "a.author", "a.date", "a.uri")
+    return _explode(pages, "annotations", "url", "page_number")
 
 
 def hyperlinks_table(pages: DataFrame) -> DataFrame:
-    h = pages.select("url", "page_number",
-                     F.posexplode("hyperlinks").alias("seq", "h"))
-    return h.select("url", "page_number", "seq", "h.x0", "h.top", "h.x1",
-                    "h.bottom", "h.uri")
+    return _explode(pages, "hyperlinks", "url", "page_number")
 
 
 def images_table(pages: DataFrame) -> DataFrame:
-    i = pages.select("url", "page_number",
-                     F.posexplode("images").alias("seq", "i"))
-    return i.select("url", "page_number", "seq", "i.name", "i.x0", "i.top",
-                    "i.x1", "i.bottom", "i.src_width", "i.src_height",
-                    "i.colorspace", "i.filter", "i.bits_per_component",
-                    "i.inline", "i.data")
+    return _explode(pages, "images", "url", "page_number")
 
 
 def export_images(pages: DataFrame,
@@ -948,12 +911,13 @@ MARKDOWN_SCHEMA = StructType(
 )
 
 
-def _markdown_rows(url: str, html: bytes):
+def _markdown_rows(url: str, html: bytes, *,
+                   options: ExtractOptions | None = None):
     """One Markdown document; a failure leaves both columns null."""
     from .kernel.markdown import markdown_json
 
     try:
-        md, meta = markdown_json(html)
+        md, meta = markdown_json(html, options)
     except Exception:  # noqa: BLE001 — lenient
         md, meta = None, None
     yield {"url": url, "markdown": md, "meta_json": meta}
@@ -967,7 +931,8 @@ def render_markdown(df: DataFrame,
     {image_count, image_filenames, page_count, title, warning_count}.
     Arrow-batched kernel, one pass per document — pages of one doc run
     inside the batch, documents parallelize across partitions."""
-    return _map_documents(df, _markdown_rows, MARKDOWN_SCHEMA)
+    return _map_documents(df, _markdown_rows, MARKDOWN_SCHEMA,
+                          options=options)
 
 
 SVG_SCHEMA = StructType(
@@ -1092,14 +1057,12 @@ def _table_debug_rows(url: str, html: bytes, *,
                       options: ExtractOptions | None = None):
     """One counter row per page; a failure ends the document's rows."""
     from .kernel.document import Document
-    from .kernel.tables import table_debug
 
     try:
         doc = Document(html, options)
         for i in range(doc.page_count):
-            page = doc.page(i)
-            dbg = table_debug(page.edges(), page.extract_words(), settings)
-            yield {"url": url, "page_number": i + 1, **dbg}
+            yield {"url": url, "page_number": i + 1,
+                   **doc.page(i).table_debug(settings)}
     except Exception:  # noqa: BLE001 — lenient
         return
 
@@ -1184,15 +1147,11 @@ def validation_table(df: DataFrame,
 
 
 def bookmarks_table(meta: DataFrame) -> DataFrame:
-    b = meta.select("url", F.posexplode("bookmarks").alias("seq", "b"))
-    return b.select("url", "seq", "b.title", "b.level", "b.page_number",
-                    "b.dest_top")
+    return _explode(meta, "bookmarks", "url")
 
 
 def form_fields_table(meta: DataFrame) -> DataFrame:
-    f = meta.select("url", F.posexplode("form_fields").alias("seq", "f"))
-    return f.select("url", "seq", "f.name", "f.field_type", "f.value",
-                    "f.page_number", "f.x0", "f.top", "f.x1", "f.bottom")
+    return _explode(meta, "form_fields", "url")
 
 
 SEARCH_SCHEMA = StructType(

@@ -266,6 +266,46 @@ def test_table_debug_counts_the_tables_find_tables_finds(strategy):
     assert table_debug(edges, words, settings)["n_tables"] == len(found)
 
 
+@pytest.mark.parametrize("strategy", ["lattice", "stream"])
+def test_table_debug_extracts_words_only_for_stream(monkeypatch, strategy):
+    from pdfplumber_rs_spark.kernel.page import Page
+    from pdfplumber_rs_spark.pipeline import _table_debug_rows
+
+    pdf = pdfgen.fixture_multipage(3, 4)
+    settings = TableSettings(strategy=strategy)
+    want = []
+    for i in range(3):
+        page = open_pdf(pdf).page(i)
+        want.append(table_debug(page.edges(), page.extract_words(), settings))
+    calls = []
+    extract = Page.extract_words
+    monkeypatch.setattr(Page, "extract_words",
+                        lambda self, *a: calls.append(1) or extract(self, *a))
+    rows = list(_table_debug_rows("u", pdf, settings=settings))
+    assert [{k: r[k] for k in want[0]} for r in rows] == want
+    assert len(calls) == (3 if strategy == "stream" else 0)
+
+
+def test_page_extras_walk_annots_once(monkeypatch):
+    from pdfplumber_rs_spark.kernel import docextras
+
+    pdf = pdfgen.build_pdf(
+        [pdfgen.text_page_content(["linked"])],
+        page_annots=["<< /Type /Annot /Subtype /Link /Rect [72 700 200 720]"
+                     " /A << /S /URI /URI (https://example.com/) >> >>"
+                     " << /Type /Annot /Subtype /Text /Rect [40 600 60 620]"
+                     " /Contents (note) >>"])
+    walks = []
+    walk = docextras.page_annotations
+    monkeypatch.setattr(docextras, "page_annotations",
+                        lambda *a: walks.append(1) or walk(*a))
+    page = open_pdf(pdf).page(0)
+    assert [a["raw_subtype"] for a in page.annotations] == ["Link", "Text"]
+    assert page.hyperlinks == [{"x0": 72.0, "top": 72.0, "x1": 200.0,
+                                "bottom": 92.0, "uri": "https://example.com/"}]
+    assert len(walks) == 1
+
+
 # -- filters / options ------------------------------------------------------------
 
 def test_dedupe_chars_default_tolerance():

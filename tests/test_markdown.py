@@ -71,3 +71,14 @@ def test_markdown_pipeline_roundtrip(spark, sf_dir):
         assert meta["page_count"] == 2
         assert meta["warning_count"] == 0
         assert meta["title"].endswith(" Title")
+
+
+def test_render_markdown_passes_the_password(spark):
+    from pdfplumber_rs_spark import pipeline as P
+    from pdfplumber_rs_spark.config import ExtractOptions
+    from pdfplumber_rs_spark.sources import pdfgen
+
+    enc = pdfgen.encrypt_pdf(pdfgen.pdf_from_text("locked words 7"), "s3cret")
+    df = spark.createDataFrame([("u", enc)], "url string, html binary")
+    row = P.render_markdown(df, ExtractOptions(password="s3cret")).collect()[0]
+    assert row.markdown == "locked words 7"

@@ -1,9 +1,14 @@
-"""Spark pipeline integration: extraction kernel, doctop window,
-exploded views, skew splitting, lineage, resume."""
+"""Spark pipeline integration: extraction kernel, the kernel's doctop
+through the exploded views, the views' columns, skew splitting,
+lineage, resume."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
 from pdfplumber_rs_spark import pipeline as P
 from pdfplumber_rs_spark.sources import pdfgen
@@ -52,6 +57,43 @@ def test_doctop_window(spark):
         .collect()
     )
     assert [row.off for row in r] == [0.0, 792.0, 1584.0]
+    rows = pages.collect()
+    for view, section in ((P.chars_table, "chars"), (P.words_table, "words")):
+        # the views carry the kernel's doctop as it is ...
+        got = sorted((r.page_number, r.seq, r.doctop)
+                     for r in view(pages).collect())
+        want = sorted((p.page_number, i, o.doctop)
+                      for p in rows for i, o in enumerate(p[section]))
+        assert got == want and len(got) > 0
+        # ... so no window, sort or shuffle after the salt repartition
+        plan = view(pages)._jdf.queryExecution().executedPlan().toString()
+        ops = re.findall(r"^[\s:+-]*(\w+)", plan, re.M)
+        assert "Window" not in ops and "Sort" not in ops, plan
+        exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+        assert len(exchanges) == 1 and "REPARTITION_BY_NUM" in exchanges[0]
+
+
+VIEWS = [
+    (P.chars_table, "chars", ("url", "page_number")),
+    (P.words_table, "words", ("url", "page_number")),
+    (P.annotations_table, "annotations", ("url", "page_number")),
+    (P.hyperlinks_table, "hyperlinks", ("url", "page_number")),
+    (P.images_table, "images", ("url", "page_number")),
+    (P.bookmarks_table, "bookmarks", ("url",)),
+    (P.form_fields_table, "form_fields", ("url",)),
+]
+
+
+@pytest.mark.parametrize("view,section,keys", VIEWS,
+                         ids=[v[1] for v in VIEWS])
+def test_view_columns_are_keys_seq_and_section_fields(spark, view, section,
+                                                      keys):
+    schema = P.PAGE_SCHEMA if "page_number" in keys else P.DOC_META_SCHEMA
+    out = view(spark.createDataFrame([], schema)).schema
+    want = ([(k, schema[k].dataType) for k in keys] + [("seq", IntegerType())]
+            + [(f.name, f.dataType)
+               for f in schema[section].dataType.elementType.fields])
+    assert [(f.name, f.dataType) for f in out.fields] == want
 
 
 def test_document_text_order(spark):
