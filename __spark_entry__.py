@@ -1451,7 +1451,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal binary columns: codec-free container-header parsing
-    (PNG IHDR / JPEG SOF / GIF LSD) over an Arrow-batched mapInPandas
+    (PNG IHDR / JPEG SOF / GIF LSD) over a per-row pipeline.row_kernel
     pass — real formats, deterministic dimensions from the id."""
     from pdfplumber_rs_spark.functions.multimodal import image_features
     from pdfplumber_rs_spark.sources.corpus import media_corpus_table
@@ -1741,7 +1741,7 @@ def q_warc_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC source connector (the container format real Common-Crawl
     crawls ship): documents are serialized into per-record-gzip WARC
     files (the CC layout), read back through the binaryFile +
-    mapInPandas source, and fingerprinted. One task per WARC file —
+    row_kernel source, and fingerprinted. One task per WARC file —
     the CC processing grain. Oracle reconstructs url/ts/bytes/md5 from
     the documents table."""
     import tempfile

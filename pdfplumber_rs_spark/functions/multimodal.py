@@ -1,24 +1,23 @@
 """Multimodal column plumbing: image/audio/video as opaque binary
 columns with typed metadata.
 
-The Spark side — schemas, Arrow-batched mapInPandas UDF signatures,
-partitioning, batch shapes — AND the codec step are real: PNG
-(stdlib zlib + un-filter), baseline JPEG (functions/jpeg.py pure-numpy
-DCT codec), GIF (functions/gif.py LZW codec), and uncompressed BMP all
-pixel-decode with no codec library. Only exotic variants (progressive
-JPEG, interlaced GIF, RLE BMP, 16-bit PNG, TIFF…) remain gated behind
-NotImplementedError, where Pillow/libvips plug in for production. The
-`FAKE` magic format survives for pipeline tests that want fully
-synthetic grids.
+The Spark side — schemas, per-row functions run through
+`pipeline.map_rows` (the package's one Arrow boundary), partitioning —
+AND the codec step are real: PNG (stdlib zlib + un-filter), baseline
+JPEG (functions/jpeg.py pure-numpy DCT codec), GIF (functions/gif.py
+LZW codec), and uncompressed BMP all pixel-decode with no codec
+library. Only exotic variants (progressive JPEG, interlaced GIF, RLE
+BMP, 16-bit PNG, TIFF…) remain gated behind NotImplementedError, where
+Pillow/libvips plug in for production. The `FAKE` magic format
+survives for pipeline tests that want fully synthetic grids.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -30,6 +29,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..pipeline import map_rows
 
 MEDIA_SCHEMA = StructType(
     [
@@ -120,8 +121,6 @@ def decode_png(data: bytes) -> tuple[int, int, bytes]:
     unsupported variants (16-bit, palette, Adam7) so callers surface a
     decode_error column instead of failing the task."""
     import zlib
-
-    import numpy as np
 
     from ..kernel.filters import _apply_png_predictor
 
@@ -223,63 +222,69 @@ def decode_image(data: bytes) -> tuple[int, int, bytes]:
     )
 
 
-# back-compat alias (pre-r3 name; PNG now really decodes)
-_decode_image_stub = decode_image
+def _decode_error(e: Exception) -> str:
+    """The decode_error column of a failed decode."""
+    if isinstance(e, NotImplementedError):
+        return f"unsupported codec: {e}"
+    return f"corrupt: {e}"
+
+
+def _media_columns(df: DataFrame, id_col: str, data_col: str) -> DataFrame:
+    return df.select(F.col(id_col).alias("media_id"),
+                     F.col(data_col).alias("data"))
+
+
+def _feature_rows(media_id: int, data: bytes | None):
+    data = data or b""
+    row = {"media_id": media_id, "n_bytes": len(data),
+           "sha1": hashlib.sha1(data).hexdigest()}
+    dims = parse_image_dimensions(data)
+    if dims is not None:
+        row["format"], row["width"], row["height"] = dims
+    try:
+        w, h, px = decode_image(data)
+        if dims is None:
+            row["format"], row["width"], row["height"] = "fake", int(w), int(h)
+        row["mean_luma"] = round(sum(px) / max(len(px), 1) / 255.0, 6)
+    except Exception as e:  # noqa: BLE001
+        row["decode_error"] = _decode_error(e)
+    yield row
 
 
 def image_features(df: DataFrame, data_col: str = "data",
                    id_col: str = "media_id") -> DataFrame:
-    """Arrow-batched feature extraction over binary media columns. The
-    UDF sees pandas batches (never rows); errors become a column, not
-    task failures. PNG rows get a REAL pixel decode (decode_png — pure
-    Python, no codec library) → mean_luma; JPEG/GIF/BMP get format +
-    dimensions via codec-free header parsing (pixel decode there plugs
-    in Pillow/libvips in production); the FAKE test format decodes its
-    own grid."""
+    """Per-row feature extraction over binary media columns; errors
+    become a column, not task failures. PNG, baseline JPEG, GIF and
+    BMP rows get format + dimensions from codec-free header parsing and
+    a REAL pixel decode (pure Python, no codec library) → mean_luma;
+    the FAKE test format decodes its own grid."""
+    return map_rows(_media_columns(df, id_col, data_col), _feature_rows,
+                    FEATURE_SCHEMA)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, data in zip(pdf[id_col], pdf[data_col]):
-                data = bytes(data) if data is not None else b""
-                row = {
-                    "media_id": int(mid),
-                    "n_bytes": len(data),
-                    "sha1": hashlib.sha1(data).hexdigest(),
-                    "format": None, "width": None, "height": None,
-                    "mean_luma": None, "decode_error": None,
-                }
-                dims = parse_image_dimensions(data)
-                if dims is not None:
-                    row["format"], w, h = dims[0], dims[1], dims[2]
-                    row["width"], row["height"] = int(w), int(h)
-                    if dims[0] in ("png", "jpeg", "gif", "bmp"):
-                        try:
-                            _w, _h, px = decode_image(data)
-                            row["mean_luma"] = (
-                                round(sum(px) / max(len(px), 1) / 255.0, 6)
-                            )
-                        except NotImplementedError as e:
-                            row["decode_error"] = f"unsupported codec: {e}"
-                        except Exception as e:  # noqa: BLE001
-                            row["decode_error"] = f"corrupt: {e}"
-                    out.append(row)
-                    continue
-                try:
-                    w, h, px = decode_image(data)
-                    row["format"] = "fake"
-                    row["width"], row["height"] = int(w), int(h)
-                    row["mean_luma"] = (
-                        round(sum(px) / max(len(px), 1) / 255.0, 6)
-                    )
-                except NotImplementedError as e:
-                    row["decode_error"] = f"unsupported codec: {e}"
-                except Exception as e:  # noqa: BLE001
-                    row["decode_error"] = f"corrupt: {e}"
-                out.append(row)
-            yield pd.DataFrame(out)
 
-    return df.select(id_col, data_col).mapInPandas(extract, FEATURE_SCHEMA)
+DHASH_SCHEMA = StructType([
+    StructField("media_id", LongType(), False),
+    StructField("format", StringType()),
+    StructField("dhash_hi", LongType()),
+    StructField("dhash_lo", LongType()),
+    StructField("decode_error", StringType()),
+])
+
+
+def _dhash_rows(media_id: int, data: bytes | None):
+    data = data or b""
+    dims = parse_image_dimensions(data)
+    row = {"media_id": media_id, "format": dims and dims[0]}
+    try:
+        w, h, px = decode_image(data)
+        a = np.frombuffer(px, dtype=np.uint8).reshape(h, w)
+        g = a[(np.arange(8) * h) // 8][:, (np.arange(9) * w) // 9]
+        bits = np.packbits(g[:, :-1] > g[:, 1:])  # 8×8, MSB-first
+        row["dhash_hi"] = int.from_bytes(bits[:4].tobytes(), "big")
+        row["dhash_lo"] = int.from_bytes(bits[4:].tobytes(), "big")
+    except Exception as e:  # noqa: BLE001
+        row["decode_error"] = _decode_error(e)
+    yield row
 
 
 def image_dhash(df: DataFrame, data_col: str = "data",
@@ -295,50 +300,10 @@ def image_dhash(df: DataFrame, data_col: str = "data",
     differ in a few bits — band the halves exactly like
     dedup.simhash_candidates for the candidate join.
 
-    Arrow-batched per-row map, no shuffle; corrupt bytes degrade to a
-    decode_error row. Returns (media_id, format, dhash_hi, dhash_lo,
-    decode_error)."""
-    import numpy as np
-
-    schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("format", StringType()),
-        StructField("dhash_hi", LongType()),
-        StructField("dhash_lo", LongType()),
-        StructField("decode_error", StringType()),
-    ])
-
-    w_hi = (1 << np.arange(31, -1, -1)).astype(np.int64)
-
-    def dhash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, data in zip(pdf[id_col], pdf[data_col]):
-                data = bytes(data) if data is not None else b""
-                row = {"media_id": int(mid), "format": None,
-                       "dhash_hi": None, "dhash_lo": None,
-                       "decode_error": None}
-                dims = parse_image_dimensions(data)
-                if dims is not None:
-                    row["format"] = dims[0]
-                try:
-                    w, h, px = decode_image(data)
-                    a = np.frombuffer(px, dtype=np.uint8).reshape(h, w)
-                    rows = (np.arange(8) * h) // 8
-                    cols = (np.arange(9) * w) // 9
-                    g = a[rows][:, cols].astype(np.int16)
-                    bits = (g[:, :-1] > g[:, 1:]).astype(np.int64)  # 8×8
-                    flat = bits.reshape(64)
-                    row["dhash_hi"] = int((flat[:32] * w_hi).sum())
-                    row["dhash_lo"] = int((flat[32:] * w_hi).sum())
-                except NotImplementedError as e:
-                    row["decode_error"] = f"unsupported codec: {e}"
-                except Exception as e:  # noqa: BLE001
-                    row["decode_error"] = f"corrupt: {e}"
-                out.append(row)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, data_col).mapInPandas(dhash, schema)
+    Per-row map, no shuffle; corrupt bytes degrade to a decode_error
+    row. Returns (media_id, format, dhash_hi, dhash_lo, decode_error)."""
+    return map_rows(_media_columns(df, id_col, data_col), _dhash_rows,
+                    DHASH_SCHEMA)
 
 
 def dhash_dedup(hashes: DataFrame, id_col: str = "media_id") -> DataFrame:
@@ -594,31 +559,67 @@ AV_SCHEMA = StructType(
 )
 
 
+def _av_rows(media_id: int, data: bytes | None):
+    row = {"media_id": media_id}
+    try:
+        meta = parse_av_meta(data or b"")
+        if meta is None:
+            row["parse_error"] = "unrecognized container"
+        else:
+            row.update(meta)
+    except Exception as e:  # noqa: BLE001
+        row["parse_error"] = f"corrupt: {e}"
+    yield row
+
+
 def av_features(df: DataFrame, data_col: str = "data",
                 id_col: str = "media_id") -> DataFrame:
-    """Arrow-batched audio/video metadata over binary columns (WAV /
-    MP4 headers; codec-free). Errors become a column, never task
+    """Per-row audio/video metadata over binary columns (WAV / MP4
+    headers; codec-free). Errors become a column, never task
     failures — the poison-doc rule that matters at 10^12 rows."""
+    return map_rows(_media_columns(df, id_col, data_col), _av_rows,
+                    AV_SCHEMA)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, data in zip(pdf[id_col], pdf[data_col]):
-                data = bytes(data) if data is not None else b""
-                row = {"media_id": int(mid), "kind": None, "rate": None,
-                       "n_units": None, "channels": None, "parse_error": None}
-                try:
-                    meta = parse_av_meta(data)
-                    if meta is None:
-                        row["parse_error"] = "unrecognized container"
-                    else:
-                        row.update(meta)
-                except Exception as e:  # noqa: BLE001
-                    row["parse_error"] = f"corrupt: {e}"
-                out.append(row)
-            yield pd.DataFrame(out)
 
-    return df.select(id_col, data_col).mapInPandas(extract, AV_SCHEMA)
+RESIZE_SCHEMA = StructType(
+    [
+        StructField("media_id", LongType(), False),
+        StructField("data", BinaryType()),
+        StructField("resize_error", StringType()),
+    ]
+)
+
+
+def _resized(data: bytes, max_side: int) -> bytes:
+    """`data` decoded, nearest-neighbor scaled so its longer side is at
+    most `max_side`, and re-encoded in its own format."""
+    w, h, px = decode_image(data)
+    scale = max(w, h) / max_side if max(w, h) > max_side else 1.0
+    nw, nh = max(int(w / scale), 1), max(int(h / scale), 1)
+    arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w)
+    ys = np.minimum((np.arange(nh) * scale).astype(np.int64), h - 1)
+    xs = np.minimum((np.arange(nw) * scale).astype(np.int64), w - 1)
+    npx = arr[np.ix_(ys, xs)].tobytes()
+    if data[:8] == b"\x89PNG\r\n\x1a\n":
+        return encode_png_gray(nw, nh, npx)
+    if data[:2] == b"\xff\xd8":
+        from .jpeg import encode_jpeg_gray
+
+        return encode_jpeg_gray(nw, nh, npx)
+    if data[:6] in (b"GIF87a", b"GIF89a"):
+        from .gif import make_gif_gray
+
+        return make_gif_gray(nw, nh, npx)
+    if data[:2] == b"BM":
+        return make_bmp_gray(nw, nh, npx)
+    return FAKE_MAGIC + struct.pack("<II", nw, nh) + npx
+
+
+def _resize_rows(media_id: int, data: bytes | None, *, max_side: int):
+    try:
+        yield {"media_id": media_id, "data": _resized(data or b"", max_side)}
+    except Exception as e:  # noqa: BLE001
+        yield {"media_id": media_id, "resize_error": str(e)}
 
 
 def resize_images(df: DataFrame, max_side: int,
@@ -630,54 +631,8 @@ def resize_images(df: DataFrame, max_side: int,
     Unrecognized or corrupt bytes surface a resize_error row.
     Vectorized per image via numpy index grids — no per-pixel Python
     loop."""
-    import numpy as np
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("data", BinaryType()),
-            StructField("resize_error", StringType()),
-        ]
-    )
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, data in zip(pdf[id_col], pdf[data_col]):
-                data = bytes(data) if data is not None else b""
-                row = {"media_id": int(mid), "data": None, "resize_error": None}
-                try:
-                    is_png = data[:8] == b"\x89PNG\r\n\x1a\n"
-                    w, h, px = decode_image(data)
-                    scale = max(w, h) / max_side if max(w, h) > max_side else 1.0
-                    nw, nh = max(int(w / scale), 1), max(int(h / scale), 1)
-                    arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w)
-                    ys = np.minimum((np.arange(nh) * scale).astype(np.int64),
-                                    h - 1)
-                    xs = np.minimum((np.arange(nw) * scale).astype(np.int64),
-                                    w - 1)
-                    npx = arr[np.ix_(ys, xs)].tobytes()
-                    if is_png:
-                        row["data"] = encode_png_gray(nw, nh, npx)
-                    elif data[:2] == b"\xff\xd8":
-                        from .jpeg import encode_jpeg_gray
-
-                        row["data"] = encode_jpeg_gray(nw, nh, npx)
-                    elif data[:6] in (b"GIF87a", b"GIF89a"):
-                        from .gif import make_gif_gray
-
-                        row["data"] = make_gif_gray(nw, nh, npx)
-                    elif data[:2] == b"BM":
-                        row["data"] = make_bmp_gray(nw, nh, npx)
-                    else:
-                        row["data"] = (FAKE_MAGIC
-                                       + struct.pack("<II", nw, nh) + npx)
-                except Exception as e:  # noqa: BLE001
-                    row["resize_error"] = str(e)
-                out.append(row)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, data_col).mapInPandas(resize, schema)
+    return map_rows(_media_columns(df, id_col, data_col), _resize_rows,
+                    RESIZE_SCHEMA, max_side=max_side)
 
 
 def frame_sample_plan(df: DataFrame, every_s: float = 1.0,

@@ -16,8 +16,15 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import re
+import unicodedata
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType,
+                               StructField, StructType)
+
+from ..pipeline import map_rows
 
 # Shared Java/RE2 patterns (also inlined in the DuckDB oracle SQL)
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -214,6 +221,58 @@ def _robots_rule_regex(val: str) -> str:
     return "^" + "".join(parts) + ("$" if anchor else "")
 
 
+def _robots_lines(txt: str | None, user_agent: str, rule_keys: tuple):
+    """robots.txt directives in file order as (key, value, applies):
+    comments and blank lines dropped, key lowercased, both stripped.
+    User-agent lines are consumed, not yielded: they build the RFC 9309
+    groups — consecutive User-agent lines open a group, and the first
+    User-agent line after one of `rule_keys` opens the next — and
+    `applies` says whether the line's group names `user_agent`."""
+    ua = user_agent.lower()
+    uas: list[str] = []
+    in_rules = applies = False
+    for raw in (txt or "").splitlines():
+        line = raw.split("#", 1)[0].strip()
+        if not line:
+            continue
+        key, _, val = line.partition(":")
+        key, val = key.strip().lower(), val.strip()
+        if key == "user-agent":
+            if in_rules:  # new group starts
+                uas, in_rules = [], False
+            uas.append(val.lower())
+            applies = ua in uas
+            continue
+        in_rules = in_rules or key in rule_keys
+        yield key, val, applies
+
+
+_RULE_KEYS = ("allow", "disallow")
+
+ROBOTS_RULES_SCHEMA = StructType([
+    StructField("host", StringType()),
+    StructField("prefix", StringType()),
+    StructField("pattern", StringType()),
+    StructField("allow", IntegerType()),
+    StructField("rule_len", IntegerType()),
+])
+
+
+def _robots_rule_rows(host: str, robots_txt: str | None, *, user_agent: str):
+    for key, val, applies in _robots_lines(robots_txt, user_agent,
+                                           _RULE_KEYS):
+        if key in _RULE_KEYS and applies and val:
+            yield {"host": host, "prefix": val,
+                   "pattern": _robots_rule_regex(val),
+                   "allow": 1 if key == "allow" else 0,
+                   "rule_len": len(val)}
+
+
+def _robots_columns(df: DataFrame, host_col: str, txt_col: str) -> DataFrame:
+    return df.select(F.col(host_col).alias("host"),
+                     F.col(txt_col).alias("robots_txt"))
+
+
 def parse_robots(df: DataFrame, host_col: str = "host",
                  txt_col: str = "robots_txt",
                  user_agent: str = "*") -> DataFrame:
@@ -226,111 +285,47 @@ def parse_robots(df: DataFrame, host_col: str = "host",
     `*`/`$` wildcard semantics (see _robots_rule_regex); `rule_len`
     is the raw rule length in octets — the RFC's specificity key.
 
-    Arrow-batched per-row parse (a real line parser, the documented
-    non-Column path); output is a small rules table keyed by host."""
-    from typing import Iterator
+    Per-row line parse (a real line parser, the documented non-Column
+    path); output is a small rules table keyed by host."""
+    return map_rows(_robots_columns(df, host_col, txt_col),
+                    _robots_rule_rows, ROBOTS_RULES_SCHEMA,
+                    user_agent=user_agent)
 
-    import pandas as pd
 
-    from pyspark.sql.types import (IntegerType, StringType, StructField,
-                                   StructType)
+CRAWL_DELAY_SCHEMA = StructType([
+    StructField("host", StringType()),
+    StructField("crawl_delay", DoubleType()),
+])
 
-    schema = StructType([
-        StructField("host", StringType()),
-        StructField("prefix", StringType()),
-        StructField("pattern", StringType()),
-        StructField("allow", IntegerType()),
-        StructField("rule_len", IntegerType()),
-    ])
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for host, txt in zip(pdf[host_col], pdf[txt_col]):
-                uas: list[str] = []
-                in_rules = False
-                applies = False
-                for raw in (txt or "").splitlines():
-                    line = raw.split("#", 1)[0].strip()
-                    if not line:
-                        continue
-                    key, _, val = line.partition(":")
-                    key = key.strip().lower()
-                    val = val.strip()
-                    if key == "user-agent":
-                        if in_rules:  # new group starts
-                            uas, in_rules = [], False
-                        uas.append(val.lower())
-                        applies = user_agent.lower() in uas
-                    elif key in ("allow", "disallow"):
-                        in_rules = True
-                        if applies and val:
-                            out.append({"host": host, "prefix": val,
-                                        "pattern": _robots_rule_regex(val),
-                                        "allow": 1 if key == "allow" else 0,
-                                        "rule_len": len(val)})
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
-
-    return df.select(host_col, txt_col).mapInPandas(parse, schema)
+def _crawl_delay_rows(host: str, robots_txt: str | None, *, user_agent: str):
+    delays = []
+    for key, val, applies in _robots_lines(robots_txt, user_agent,
+                                           _RULE_KEYS + ("crawl-delay",)):
+        if key == "crawl-delay" and applies:
+            try:
+                delays.append(float(val))
+            except ValueError:
+                continue
+    if delays:
+        yield {"host": host, "crawl_delay": max(delays)}
 
 
 def parse_crawl_delay(df: DataFrame, host_col: str = "host",
                       txt_col: str = "robots_txt",
                       user_agent: str = "*") -> DataFrame:
     """Crawl-delay directive per host for the groups whose User-agent
-    set contains `user_agent` (same RFC 9309 grouping as parse_robots;
-    Crawl-delay is a de-facto extension most crawlers honor). The
-    LARGEST applying delay wins (conservative). Non-numeric values are
-    ignored. Returns (host, crawl_delay:double) — hosts without a
+    set contains `user_agent` (same RFC 9309 grouping as parse_robots,
+    except that a Crawl-delay line also ends a group's User-agent
+    lines; Crawl-delay is a de-facto extension most crawlers honor).
+    The LARGEST applying delay wins (conservative). Non-numeric values
+    are ignored. Returns (host, crawl_delay:double) — hosts without a
     directive are absent (callers supply the default).
 
-    Arrow-batched line parse; output is host-cardinality tiny."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from pyspark.sql.types import (DoubleType, StringType, StructField,
-                                   StructType)
-
-    schema = StructType([
-        StructField("host", StringType()),
-        StructField("crawl_delay", DoubleType()),
-    ])
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for host, txt in zip(pdf[host_col], pdf[txt_col]):
-                uas: list[str] = []
-                in_rules = False
-                applies = False
-                best = None
-                for raw in (txt or "").splitlines():
-                    line = raw.split("#", 1)[0].strip()
-                    if not line:
-                        continue
-                    key, _, val = line.partition(":")
-                    key = key.strip().lower()
-                    val = val.strip()
-                    if key == "user-agent":
-                        if in_rules:
-                            uas, in_rules = [], False
-                        uas.append(val.lower())
-                        applies = user_agent.lower() in uas
-                    elif key in ("allow", "disallow", "crawl-delay"):
-                        in_rules = True
-                        if key == "crawl-delay" and applies:
-                            try:
-                                d = float(val)
-                            except ValueError:
-                                continue
-                            if best is None or d > best:
-                                best = d
-                if best is not None:
-                    out.append({"host": host, "crawl_delay": best})
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
-
-    return df.select(host_col, txt_col).mapInPandas(parse, schema)
+    Per-row line parse; output is host-cardinality tiny."""
+    return map_rows(_robots_columns(df, host_col, txt_col),
+                    _crawl_delay_rows, CRAWL_DELAY_SCHEMA,
+                    user_agent=user_agent)
 
 
 def robots_filter(pages: DataFrame, rules: DataFrame,
@@ -600,6 +595,23 @@ def blocklist_filter(pages: DataFrame, blocklist: DataFrame,
 # plus DEL. Written with textual \x escapes so the IDENTICAL pattern
 # string runs under Python re, Java regex, and DuckDB RE2.
 CONTROL_RE = r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]"
+_CONTROL = re.compile(CONTROL_RE)
+_SPACES = re.compile(r"[ \t]+")
+
+NORMALIZED_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("text_norm", StringType()),
+    StructField("n_chars_raw", IntegerType()),
+    StructField("n_chars_norm", IntegerType()),
+])
+
+
+def _normalized_rows(doc_id: int, text: str | None):
+    raw = text or ""
+    norm = unicodedata.normalize("NFC", raw)
+    norm = _SPACES.sub(" ", _CONTROL.sub("", norm)).strip(" ")
+    yield {"doc_id": doc_id, "text_norm": norm,
+           "n_chars_raw": len(raw), "n_chars_norm": len(norm)}
 
 
 def normalize_text(df: DataFrame, id_col: str = "doc_id",
@@ -617,42 +629,27 @@ def normalize_text(df: DataFrame, id_col: str = "doc_id",
 
     Returns (id, text_norm, n_chars_raw, n_chars_norm).
 
-    Scale: Arrow-batched mapInPandas with VECTORIZED pandas .str ops
-    (Series.str.normalize is the C-side ICU-equivalent path, never a
-    Python-level per-row loop) — a pure per-row map, no shuffle,
-    pipelined into the scan. The DuckDB oracle re-derives the same
-    transform via nfc_normalize + regexp_replace — semantic parity
-    across two independent NFC implementations."""
-    from typing import Iterator
+    Scale: a pure per-row map (one NFC pass and two regex passes per
+    document), no shuffle, pipelined into the scan. The DuckDB oracle
+    re-derives the same transform via nfc_normalize + regexp_replace —
+    semantic parity across two independent NFC implementations."""
+    return map_rows(df.select(F.col(id_col).alias("doc_id"),
+                              F.col(text_col).alias("text")),
+                    _normalized_rows, NORMALIZED_SCHEMA)
 
-    import pandas as pd
 
-    from pyspark.sql.types import (IntegerType, LongType, StringType,
-                                   StructField, StructType)
+SITEMAPS_SCHEMA = StructType([
+    StructField("host", StringType()),
+    StructField("sitemap_url", StringType()),
+    StructField("sm_rank", IntegerType()),
+])
 
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("text_norm", StringType()),
-        StructField("n_chars_raw", IntegerType()),
-        StructField("n_chars_norm", IntegerType()),
-    ])
 
-    def fix(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            s = pdf[text_col].fillna("")
-            t = s.str.normalize("NFC")
-            t = t.str.replace(CONTROL_RE, "", regex=True)
-            t = t.str.replace(r"[ \t]+", " ", regex=True)
-            t = t.str.strip(" ")
-            yield pd.DataFrame({
-                "doc_id": pdf[id_col],
-                "text_norm": t,
-                "n_chars_raw": s.str.len().astype("int32"),
-                "n_chars_norm": t.str.len().astype("int32"),
-            })
-
-    return df.select(F.col(id_col).alias("doc_id"),
-                     F.col(text_col)).mapInPandas(fix, schema)
+def _sitemap_rows(host: str, robots_txt: str | None):
+    urls = (val for key, val, _ in _robots_lines(robots_txt, "*", ())
+            if key == "sitemap" and val)
+    for rank, url in enumerate(urls, 1):
+        yield {"host": host, "sitemap_url": url, "sm_rank": rank}
 
 
 def parse_sitemaps(df: DataFrame, host_col: str = "host",
@@ -660,43 +657,14 @@ def parse_sitemaps(df: DataFrame, host_col: str = "host",
     """Sitemap cross-references from robots.txt (sitemaps.org
     protocol; RFC 9309 treats unknown lines as extensions): `Sitemap:`
     lines are NOT group-scoped — they apply to every crawler no matter
-    which User-agent group they appear near, so the parser collects
-    them independently of the group state machine parse_robots runs.
-    Returns (host, sitemap_url, sm_rank) with sm_rank = 1-based file
-    order (crawl schedulers fetch in published order).
+    which User-agent group they appear near, so the group each line
+    falls in is ignored. Returns (host, sitemap_url, sm_rank) with
+    sm_rank = 1-based file order (crawl schedulers fetch in published
+    order).
 
-    Arrow-batched line parse; output is host-cardinality tiny."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from pyspark.sql.types import (IntegerType, StringType, StructField,
-                                   StructType)
-
-    schema = StructType([
-        StructField("host", StringType()),
-        StructField("sitemap_url", StringType()),
-        StructField("sm_rank", IntegerType()),
-    ])
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for host, txt in zip(pdf[host_col], pdf[txt_col]):
-                rank = 0
-                for raw in (txt or "").splitlines():
-                    line = raw.split("#", 1)[0].strip()
-                    if not line:
-                        continue
-                    key, _, val = line.partition(":")
-                    if key.strip().lower() == "sitemap" and val.strip():
-                        rank += 1
-                        out.append({"host": host,
-                                    "sitemap_url": val.strip(),
-                                    "sm_rank": rank})
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
-
-    return df.select(host_col, txt_col).mapInPandas(parse, schema)
+    Per-row line parse; output is host-cardinality tiny."""
+    return map_rows(_robots_columns(df, host_col, txt_col), _sitemap_rows,
+                    SITEMAPS_SCHEMA)
 
 
 def surt_key(url: Column) -> Column:

@@ -120,11 +120,6 @@ class CharColumns:
             runs)
 
 
-def as_columns(chars) -> CharColumns:
-    return chars if isinstance(chars, CharColumns) \
-        else CharColumns.from_dicts(chars)
-
-
 def chars_from_events(runs: list, page_height: float,
                       geom=None) -> CharColumns:
     """runs: list[interpreter.CharRun] for one page. `geom` (a

@@ -13,7 +13,7 @@ from __future__ import annotations
 import re
 from itertools import accumulate
 
-from .chars import as_columns
+from .chars import CharColumns
 from .objects import Name, Ref, Stream
 
 _KNOWN_SUBTYPES = {
@@ -343,13 +343,11 @@ def structure_tree(doc) -> list[dict]:
     return out
 
 
-def search_chars(chars, pattern: str, regex: bool = True,
+def search_chars(cols: CharColumns, pattern: str, regex: bool = True,
                  case: bool = True) -> list[dict]:
     """Concat char texts → regex/literal match over the page text →
     [{text, start, end, x0, top, x1, bottom}] with the union bbox of
-    the constituent chars (search.rs:59-145). `chars` is a page's
-    CharColumns (or a list of char dicts)."""
-    cols = as_columns(chars)
+    the constituent chars (search.rs:59-145) over a page's CharColumns."""
     if not len(cols):
         return []
     # char i covers text offsets [starts[i], starts[i+1])

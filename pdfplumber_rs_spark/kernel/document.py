@@ -160,7 +160,7 @@ def extract_document(data: bytes, options: ExtractOptions | None = None,
     texts = []
     for page in doc.pages():
         try:
-            words = page.extract_words()
+            words = page.words
             from .layout import extract_text_from_words
 
             text = extract_text_from_words(words, text_options)

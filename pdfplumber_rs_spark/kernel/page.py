@@ -97,6 +97,7 @@ class Page:
         self.rotation = rotation
         self.char_columns = char_columns
         self._chars: list[dict] | None = None
+        self._words: list[dict] | None = None
         self.lines = lines
         self.rects = rects
         self.curves = curves
@@ -115,6 +116,14 @@ class Page:
         if self._chars is None:
             self._chars = self.char_columns.to_dicts()
         return self._chars
+
+    @property
+    def words(self) -> list[dict]:
+        """The default-option words, extracted on first access and kept:
+        the page text and stream table detection both read them."""
+        if self._words is None:
+            self._words = self.extract_words()
+        return self._words
 
     def _load_extras(self) -> None:
         self._annotations, self._hyperlinks = self._extras_thunk()
@@ -163,9 +172,12 @@ class Page:
         """The words table detection reads: words feed ONLY the stream
         strategy (words_to_edges_v/h); lattice, lattice_strict and
         explicit never read them, so they are not extracted (a second
-        word extraction was ~40% of text-page kernel time)."""
+        word extraction was ~40% of text-page kernel time). With the
+        default options they are the page's kept `words`."""
         if (settings or TableSettings()).strategy != "stream":
             return []
+        if word_options is None:
+            return self.words
         return self.extract_words(word_options)
 
     def find_tables(self, settings: TableSettings | None = None,

@@ -18,7 +18,7 @@ import math
 from itertools import groupby
 
 from ..config import TableSettings, WordOptions
-from .chars import CharColumns, as_columns
+from .chars import CharColumns
 from .words import extract_words
 
 
@@ -326,14 +326,13 @@ def _extract_cell_text(cell_chars: CharColumns, options: WordOptions) -> str:
     return words_to_text_grouped(words, options.y_tolerance)
 
 
-def extract_table(cells: list[tuple], chars,
+def extract_table(cells: list[tuple], chars: CharColumns,
                   options: WordOptions | None = None) -> dict:
     """Build {bbox, cells, rows} with text per cell: None for missing grid
     positions, '' for empty cells, extracted text otherwise. `chars` is
-    the page's CharColumns (or a list of char dicts)."""
+    the page's CharColumns."""
     if options is None:
         options = WordOptions()
-    chars = as_columns(chars)
     rows = table_rows(cells)
     bbox = _cells_bbox(cells)
     # vectorized char->cell assignment: mid-point arrays once per table,
@@ -490,11 +489,11 @@ def table_debug(edges: list[dict], words: list[dict],
 
 # -- orchestration ----------------------------------------------------------------
 
-def find_tables(edges: list[dict], words: list[dict], chars,
+def find_tables(edges: list[dict], words: list[dict], chars: CharColumns,
                 settings: TableSettings | None = None,
                 word_options: WordOptions | None = None) -> list[dict]:
     """Full pipeline → list of tables with text-filled rows. `chars` is
-    the page's CharColumns (or a list of char dicts)."""
+    the page's CharColumns."""
     if settings is None:
         settings = TableSettings()
     groups = _table_stages(edges, words, settings)[-1]

@@ -92,8 +92,6 @@ def _collision_flags(gids, x0, top, t):
     n = len(gids)
     if gids.max() >= 1 << 20:
         return None
-    x0 = np.asarray(x0, np.float64)
-    top = np.asarray(top, np.float64)
     if not (np.isfinite(x0).all() and np.isfinite(top).all()):
         return None
     bx = np.floor(x0 / t)
@@ -121,19 +119,12 @@ def _collision_flags(gids, x0, top, t):
     return out
 
 
-def dedupe_chars(chars, tolerance: float = 1.0,
-                 extra_attrs: tuple[str, ...] = ("fontname", "size")):
+def dedupe_chars(chars: CharColumns, tolerance: float = 1.0,
+                 extra_attrs: tuple[str, ...] = ("fontname", "size")
+                 ) -> CharColumns:
     """Drop a char if an earlier kept char has identical text, matching
-    extra attrs, and |dx0| <= tol and |dtop| <= tol (dedupe.rs:50-88).
-    Takes and returns a CharColumns, or a list of char dicts."""
-    if isinstance(chars, CharColumns):
-        ids = _dense_ids(_column_keys(chars, extra_attrs))
-        x0, top = chars.x0, chars.top
-    else:
-        ids = _dense_ids([(c["text"],) + tuple(c.get(a) for a in extra_attrs)
-                          for c in chars])
-        x0 = [c["x0"] for c in chars]
-        top = [c["top"] for c in chars]
+    extra attrs, and |dx0| <= tol and |dtop| <= tol (dedupe.rs:50-88)."""
+    ids = _dense_ids(_column_keys(chars, extra_attrs))
     # spatial hash on (key, x0//tol, top//tol): a match within tolerance
     # always lives in one of the 3×3 neighbor buckets, so this is O(n)
     # with semantics identical to the full scan
@@ -142,23 +133,16 @@ def dedupe_chars(chars, tolerance: float = 1.0,
     if len(ids) >= 64:
         # vectorized prescreen: in the common no-duplicate case the
         # 9-probe dict walk below never runs at all
-        try:
-            flags = _collision_flags(ids, x0, top, t)
-        except (TypeError, ValueError):  # odd coord types: full pass
-            flags = None
+        flags = _collision_flags(ids, chars.x0, chars.top, t)
         if flags is not None and not flags.any():
-            return chars if isinstance(chars, CharColumns) else list(chars)
-    keep = _dedupe_pass(ids.tolist(), x0, top, tolerance, t, flags)
-    if isinstance(chars, CharColumns):
-        return chars.take(keep)
-    return [chars[i] for i in keep]
+            return chars
+    return chars.take(_dedupe_pass(ids.tolist(), chars.x0.tolist(),
+                                   chars.top.tolist(), tolerance, t, flags))
 
 
 def _dedupe_pass(keys, x0, top, tolerance, t, flags) -> list[int]:
     """Sequential first-wins pass; returns the kept indices. With
     `flags`, only flagged chars are visited (the rest are kept)."""
-    x0 = x0.tolist() if isinstance(x0, np.ndarray) else x0
-    top = top.tolist() if isinstance(top, np.ndarray) else top
     flagged = None if flags is None else flags.tolist()
     kept: list[int] = []
     # two-level hash: base key once per char, then single INT cell keys

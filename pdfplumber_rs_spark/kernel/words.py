@@ -22,7 +22,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..config import WordOptions
-from .chars import DIRECTIONS, CharColumns, as_columns
+from .chars import DIRECTIONS, CharColumns
 from .textnorm import _LIG_RE, expand_ligatures
 
 def cluster_objects(objs: list, keyf, tolerance: float) -> list[list]:
@@ -106,7 +106,9 @@ def _order_perm(cols: CharColumns, y_tol: float):
             continue
         brk = np.empty(uniq.size, np.bool_)
         brk[0] = False
-        brk[1:] = np.diff(uniq) > y_tol  # strict >, objects.py chaining
+        # cluster_value_ids' test (v > last + tol), not a difference:
+        # uniq[1:] - uniq[:-1] > tol can round the other way
+        brk[1:] = uniq[1:] > uniq[:-1] + y_tol
         cid = np.cumsum(brk)
         clust[s:e] = cid[np.searchsorted(uniq, vals)]
     return np.lexsort((sec, clust, run_id))  # stable → stream-order ties
@@ -268,6 +270,7 @@ def words_and_members(cols: CharColumns,
     return _split_sequential(cols, order, options)
 
 
-def extract_words(chars, options: WordOptions | None = None) -> list[dict]:
-    """Words of a CharColumns (or of a list of char dicts)."""
-    return words_and_members(as_columns(chars), options)[0]
+def extract_words(chars: CharColumns,
+                  options: WordOptions | None = None) -> list[dict]:
+    """Words of a CharColumns."""
+    return words_and_members(chars, options)[0]

@@ -23,12 +23,14 @@ Scale design:
 - Errors never fail a task: broken PDFs become rows with error set and
   zero pages (lenient like tokenizer.rs:60-161).
 
-Kernel contract: every mapInArrow in the engine goes through
-`row_kernel`, the one piece of code that converts Arrow record batches
-to Python rows and back. What a kernel does is a plain per-row
-function: it takes the input row's columns as keyword arguments and
-yields output dicts (zero, one, or many per input row), and it owns its
-failure policy — an error row, null columns, no rows, or no try at all.
+Kernel contract: every per-row kernel in the package (functions/ and
+the WARC reader included) goes through `row_kernel`, the one piece of
+code that converts Arrow record batches to Python rows and back, and
+`map_rows` runs it over a DataFrame. What a kernel does is a plain
+per-row function: it takes the input row's columns as keyword
+arguments and yields output dicts (zero, one, or many per input row),
+and it owns its failure policy — an error row, null columns, no rows,
+or no try at all.
 """
 
 from __future__ import annotations
@@ -256,7 +258,7 @@ def _page_rows(url: str, html: bytes | None, blob_path: str | None = None,
         t1 = time.time()
         try:
             page = doc.page(i)
-            words = page.extract_words()
+            words = page.words
             text = extract_text_from_words(words, text_options)
             tables = page.find_tables(table_settings) if "tables" in want else []
             error = None
@@ -314,7 +316,7 @@ def _page_rows(url: str, html: bytes | None, blob_path: str | None = None,
 
 
 def row_kernel(fn, schema: StructType, flush_rows: int = 512):
-    """The Arrow boundary of every mapInArrow kernel: returns the
+    """The Arrow boundary of every per-row kernel: returns the
     Iterator[RecordBatch] → Iterator[RecordBatch] function mapInArrow
     takes. Each input batch is converted to Python once; each input row
     becomes one `fn(**row)` call (column names as keywords) that yields
@@ -360,11 +362,12 @@ def make_extract_kernel(options: ExtractOptions | None = None,
     return row_kernel(fn, page_schema(include), 512 if include == () else 64)
 
 
-def _map_documents(df: DataFrame, fn, schema: StructType, **kw) -> DataFrame:
-    """mapInArrow over df's (url, html) columns: one `fn(url, html, **kw)`
-    call per document, its dicts encoded as `schema` rows."""
-    kernel = row_kernel(functools.partial(fn, **kw), schema)
-    return df.select("url", "html").mapInArrow(kernel, schema)
+def map_rows(df: DataFrame, fn, schema: StructType, **kw) -> DataFrame:
+    """mapInArrow of df through row_kernel: one `fn(**row, **kw)` call
+    per input row (df's column names as keywords), its dicts encoded as
+    `schema` rows."""
+    return df.mapInArrow(row_kernel(functools.partial(fn, **kw), schema),
+                         schema)
 
 
 # -- skew handling ------------------------------------------------------------------
@@ -441,9 +444,8 @@ def split_giant_documents(df: DataFrame, max_bytes: int = 8 << 20,
                 F.lit(None).cast("int").alias("page_end"))
     )
     big = df.filter(F.length("html") > max_bytes).select("url", "html")
-    spill = functools.partial(_spill_rows,
-                              spill_dir=spill_dir or default_spill_dir())
-    spilled = big.mapInArrow(row_kernel(spill, SPILL_SCHEMA), SPILL_SCHEMA)
+    spilled = map_rows(big, _spill_rows, SPILL_SCHEMA,
+                       spill_dir=spill_dir or default_spill_dir())
     big_ranged = (
         spilled.select(
             "url", "blob_path",
@@ -715,7 +717,8 @@ def document_meta(df: DataFrame,
     metadata (D1), flattened bookmarks (D2), AcroForm fields (D3).
     Does NOT interpret content streams — structure-only, so it is far
     cheaper than extract_pages (pdf.rs:306-354)."""
-    return _map_documents(df, _meta_rows, DOC_META_SCHEMA, options=options)
+    return map_rows(df.select("url", "html"), _meta_rows, DOC_META_SCHEMA,
+                    options=options)
 
 
 def assemble_text_from_words(words: DataFrame,
@@ -899,7 +902,8 @@ def render_html(df: DataFrame,
                 options: ExtractOptions | None = None) -> DataFrame:
     """D9 semantic HTML per document (html.rs:74-119): headings by
     font-size ratio, strong/em from fontname, bullet lists, tables."""
-    return _map_documents(df, _html_rows, HTML_SCHEMA, options=options)
+    return map_rows(df.select("url", "html"), _html_rows, HTML_SCHEMA,
+                    options=options)
 
 
 MARKDOWN_SCHEMA = StructType(
@@ -931,8 +935,8 @@ def render_markdown(df: DataFrame,
     {image_count, image_filenames, page_count, title, warning_count}.
     Arrow-batched kernel, one pass per document — pages of one doc run
     inside the batch, documents parallelize across partitions."""
-    return _map_documents(df, _markdown_rows, MARKDOWN_SCHEMA,
-                          options=options)
+    return map_rows(df.select("url", "html"), _markdown_rows, MARKDOWN_SCHEMA,
+                    options=options)
 
 
 SVG_SCHEMA = StructType(
@@ -963,7 +967,8 @@ def render_svg(df: DataFrame,
                options: ExtractOptions | None = None) -> DataFrame:
     """D10 SVG rendering (svg.rs): one deterministic SVG document per
     page — shapes as rect/line/path, words as positioned text."""
-    return _map_documents(df, _svg_rows, SVG_SCHEMA, options=options)
+    return map_rows(df.select("url", "html"), _svg_rows, SVG_SCHEMA,
+                    options=options)
 
 
 STRUCT_SCHEMA = StructType(
@@ -997,7 +1002,8 @@ def structure_table(df: DataFrame,
     """D5: flattened /StructTreeRoot rows in depth-first order
     (struct_tree.rs; recursion encoded as elem_id/parent_id/level
     because Spark has no recursive types). Structure-only pass."""
-    return _map_documents(df, _structure_rows, STRUCT_SCHEMA, options=options)
+    return map_rows(df.select("url", "html"), _structure_rows, STRUCT_SCHEMA,
+                    options=options)
 
 
 def semantic_text(pages: DataFrame, structure: DataFrame) -> DataFrame:
@@ -1073,8 +1079,8 @@ def table_debug_table(df: DataFrame,
     """T15 table debug pipeline (table.rs:1546-1640): one row per page
     with per-stage counters (raw→selected→merged edges, intersections,
     cells, tables) — the lineage surface for tuning table settings."""
-    return _map_documents(df, _table_debug_rows, TABLE_DEBUG_SCHEMA,
-                          settings=settings, options=options)
+    return map_rows(df.select("url", "html"), _table_debug_rows,
+                    TABLE_DEBUG_SCHEMA, settings=settings, options=options)
 
 
 SIGNATURE_SCHEMA = StructType(
@@ -1110,8 +1116,8 @@ def signatures_table(df: DataFrame,
     structure-only pass over the AcroForm — one row per /Sig field with
     its /V dictionary resolved in the SAME recursive walk (no index
     re-pairing)."""
-    return _map_documents(df, _signature_rows, SIGNATURE_SCHEMA,
-                          options=options)
+    return map_rows(df.select("url", "html"), _signature_rows,
+                    SIGNATURE_SCHEMA, options=options)
 
 
 VALIDATION_SCHEMA = StructType(
@@ -1142,8 +1148,8 @@ def validation_table(df: DataFrame,
     """D7 spec-violation diagnostics (validation.rs, pdf.rs:776): one
     row per finding; a clean document yields no rows. Structure-only,
     never raises (lenient)."""
-    return _map_documents(df, _validation_rows, VALIDATION_SCHEMA,
-                          options=options)
+    return map_rows(df.select("url", "html"), _validation_rows,
+                    VALIDATION_SCHEMA, options=options)
 
 
 def bookmarks_table(meta: DataFrame) -> DataFrame:
@@ -1196,8 +1202,8 @@ def search_pages(df: DataFrame, pattern: str, regex: bool = True,
                  options: ExtractOptions | None = None) -> DataFrame:
     """P6 regex search as a pipeline op: (url, html) → one row per match
     with the union bbox of the matched chars (search.rs:59-145)."""
-    return _map_documents(df, _search_rows, SEARCH_SCHEMA, pattern=pattern,
-                          regex=regex, case=case, options=options)
+    return map_rows(df.select("url", "html"), _search_rows, SEARCH_SCHEMA,
+                    pattern=pattern, regex=regex, case=case, options=options)
 
 
 HTML_MAIN_SCHEMA = StructType(
@@ -1210,11 +1216,10 @@ HTML_MAIN_SCHEMA = StructType(
 )
 
 
-def _main_content_rows(url: str, html: bytes | None, *, min_words: int,
-                       max_link_density: float):
+def _main_content_rows(url: str, html: bytes | None):
     from .kernel.htmlstrip import extract_main_content
 
-    r = extract_main_content(html or b"", min_words, max_link_density)
+    r = extract_main_content(html or b"")
     yield {
         "url": url,
         "main_text": r["text"],
@@ -1223,15 +1228,13 @@ def _main_content_rows(url: str, html: bytes | None, *, min_words: int,
     }
 
 
-def html_main_content(df: DataFrame, min_words: int = 5,
-                      max_link_density: float = 0.33) -> DataFrame:
+def html_main_content(df: DataFrame) -> DataFrame:
     """HTML boilerplate strip (north rule): jusText-lite DOM block
     heuristics over an Arrow-batched kernel — (url, html) → main text +
     strip diagnostics. Per-row map, no shuffle; malformed markup yields
     an empty row, never a task failure."""
-    return _map_documents(df, _main_content_rows, HTML_MAIN_SCHEMA,
-                          min_words=min_words,
-                          max_link_density=max_link_density)
+    return map_rows(df.select("url", "html"), _main_content_rows,
+                    HTML_MAIN_SCHEMA)
 
 
 HTML_MARKDOWN_SCHEMA = StructType(
@@ -1257,7 +1260,8 @@ def html_markdown(df: DataFrame) -> DataFrame:
     extract_main_content scores). Arrow-batched per-row map over
     (url, html) — no shuffle; malformed markup renders what parsed,
     never a task failure."""
-    return _map_documents(df, _html_markdown_rows, HTML_MARKDOWN_SCHEMA)
+    return map_rows(df.select("url", "html"), _html_markdown_rows,
+                    HTML_MARKDOWN_SCHEMA)
 
 
 HTML_LINKS_SCHEMA = StructType(
@@ -1279,7 +1283,7 @@ def html_links(df: DataFrame) -> DataFrame:
     """Outgoing links per page: (url, href) exploded rows from every
     <a href> (including chrome subtrees — the link graph wants them
     all). Per-row map + in-kernel explode, no shuffle."""
-    return _map_documents(df, _link_rows, HTML_LINKS_SCHEMA)
+    return map_rows(df.select("url", "html"), _link_rows, HTML_LINKS_SCHEMA)
 
 
 HTML_ANCHORS_SCHEMA = StructType(
@@ -1303,7 +1307,8 @@ def html_anchors(df: DataFrame) -> DataFrame:
     exploded rows from every <a href>…</a> (chrome subtrees included —
     anchor-text aggregation wants nav/footer links too). Same per-row
     map + in-kernel explode as html_links, no shuffle."""
-    return _map_documents(df, _anchor_rows, HTML_ANCHORS_SCHEMA)
+    return map_rows(df.select("url", "html"), _anchor_rows,
+                    HTML_ANCHORS_SCHEMA)
 
 
 def lineage(pages: DataFrame) -> DataFrame:

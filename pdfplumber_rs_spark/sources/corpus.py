@@ -29,7 +29,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..pipeline import kernel_parallelism, row_kernel
+from ..pipeline import kernel_parallelism, map_rows
 from .pdfgen import (
     build_cff_font,
     build_pdf,
@@ -89,7 +89,7 @@ def _spread(df: DataFrame, key: str) -> DataFrame:
 def _generate(df: DataFrame, key: str, fn,
               schema: StructType = CHROME_CORPUS_SCHEMA) -> DataFrame:
     """Spread df by `key`, then run the per-row generator `fn` over it."""
-    return _spread(df, key).mapInArrow(row_kernel(fn, schema), schema)
+    return map_rows(_spread(df, key), fn, schema)
 
 
 def _documents(spark, sf_dir: str, *cols: str) -> DataFrame:
@@ -662,8 +662,7 @@ def corrupted_corpus_table(spark, sf_dir: str) -> DataFrame:
         row["html"] = (pdf[:i] if i > 0 else pdf) + b"\nstartxref\n999999\n%%EOF\n"
         yield row
 
-    return corpus_table(spark, sf_dir).mapInArrow(
-        row_kernel(damage, CORPUS_SCHEMA), CORPUS_SCHEMA)
+    return map_rows(corpus_table(spark, sf_dir), damage, CORPUS_SCHEMA)
 
 
 @cached_builder
@@ -676,8 +675,7 @@ def encrypted_corpus_table(spark, sf_dir: str,
         row["html"] = encrypt_pdf(row["html"], password, "owner-" + password)
         yield row
 
-    return corpus_table(spark, sf_dir).mapInArrow(
-        row_kernel(lock, CORPUS_SCHEMA), CORPUS_SCHEMA)
+    return map_rows(corpus_table(spark, sf_dir), lock, CORPUS_SCHEMA)
 
 
 def _media_row(doc_id):

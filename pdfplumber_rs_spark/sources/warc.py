@@ -2,11 +2,12 @@
 schema (url, warc_ts, html) — the container format real CC crawls ship.
 
 Reader shape (100 TB): `spark.read.format("binaryFile")` gives one row
-per WARC file; an Arrow-batched mapInPandas parses records file-local,
-so the unit of parallelism is the WARC file — exactly the grain Common
-Crawl publishes (~1 GB gzip members per file, tens of thousands of
-files per crawl). No record-level splitting is needed at that grain;
-repartition by file count before the parse when file sizes skew.
+per WARC file; a per-row function run through `pipeline.map_rows`
+parses records file-local, so the unit of parallelism is the WARC
+file — exactly the grain Common Crawl publishes (~1 GB gzip members
+per file, tens of thousands of files per crawl). No record-level
+splitting is needed at that grain; repartition by file count before
+the parse when file sizes skew.
 
 Supports plain WARC/1.0–1.1 and the per-record-gzip-member layout CC
 uses (multi-member gzip detected and inflated member-by-member).
@@ -25,11 +26,12 @@ import gzip
 import io
 import zlib
 from datetime import datetime, timezone
-from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (BinaryType, LongType, StringType, StructField,
                                StructType, TimestampType)
+
+from ..pipeline import map_rows
 
 WARC_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -137,34 +139,27 @@ def parse_warc(data: bytes, source_name: str = "",
     return rows
 
 
+def _warc_file_rows(path: str, content: bytes, *, want_types: tuple):
+    try:
+        return parse_warc(content, path, want_types=want_types)
+    except Exception as e:  # noqa: BLE001 — lenient source
+        return [{"warc_file": path, "record_offset": 0,
+                 "warning": f"unreadable WARC: {e}"}]
+
+
 def read_warc(spark: SparkSession, path: str,
               n_partitions: int | None = None,
               want_types: tuple[str, ...] = ("response",)) -> DataFrame:
     """WARC files → corpus rows. binaryFile scan (one row per file,
-    content pruned to what the parse consumes) → Arrow-batched
-    mapInPandas parse. Pass n_partitions to spread many small files
+    content pruned to what the parse consumes) → per-file parse through
+    `pipeline.map_rows`. Pass n_partitions to spread many small files
     (or leave None: one task per file, the CC grain)."""
-    import pandas as pd
-
     files = spark.read.format("binaryFile") \
         .load(path).select("path", "content")
     if n_partitions:
         files = files.repartition(n_partitions)
-
-    def parse(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    out.extend(parse_warc(bytes(content), str(p),
-                                          want_types=want_types))
-                except Exception as e:  # noqa: BLE001 — lenient source
-                    out.append({"url": None, "warc_ts": None, "html": None,
-                                "warc_file": str(p), "record_offset": 0,
-                                "warning": f"unreadable WARC: {e}"})
-            yield pd.DataFrame(out, columns=[f.name for f in WARC_SCHEMA])
-
-    return files.mapInPandas(parse, WARC_SCHEMA)
+    return map_rows(files, _warc_file_rows, WARC_SCHEMA,
+                    want_types=want_types)
 
 
 def read_wet(spark: SparkSession, path: str,
@@ -234,7 +229,7 @@ def write_warc(df: DataFrame, out_dir: str,
     WARC records — they are DROPPED and counted in the manifest's
     n_skipped (lenient-sink discipline: a bad row degrades to a
     warning count, never a task failure); a null warc_ts defaults to
-    the epoch. Writing happens on executors via mapInPandas; file
+    the epoch. Writing happens on executors; file
     names carry the partition id + a content hash so reruns are
     idempotent at the file level. Partition the input deterministically
     (repartition(n, key) + sortWithinPartitions) for reproducible
@@ -302,6 +297,8 @@ def write_warc(df: DataFrame, out_dir: str,
             [{"warc_file": name, "n_records": len(recs),
               "n_bytes": len(data), "n_skipped": n_skipped}])
 
+    # the package's one mapInPandas: not a per-row map but a per-partition
+    # sink that consumes every batch and publishes ONE file
     return df.select("url", "warc_ts", "html").mapInPandas(
         write, manifest_schema)
 

@@ -31,36 +31,31 @@ STREAM_INPUT_SCHEMA = StructType(
 )
 
 
-def read_corpus_stream(spark: SparkSession, input_path: str,
-                       max_files_per_trigger: int | None = None) -> DataFrame:
+def read_corpus_stream(spark: SparkSession, input_path: str) -> DataFrame:
     """File-source stream of (url, html) parquet drops."""
-    reader = spark.readStream.schema(STREAM_INPUT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(input_path)
+    return spark.readStream.schema(STREAM_INPUT_SCHEMA).parquet(input_path)
 
 
 def stream_extract(spark: SparkSession, input_path: str, output_path: str,
-                   checkpoint: str, include: tuple | None = (),
-                   available_now: bool = True):
-    """Start the streaming extraction job. Returns the StreamingQuery;
-    with available_now=True it drains the currently-visible files and
-    stops (the batch-drain trigger used by scheduled incremental runs)."""
+                   checkpoint: str):
+    """Start the streaming extraction job (text only: no object
+    sections). Returns the StreamingQuery; it drains the currently-
+    visible files and stops (the availableNow batch-drain trigger used
+    by scheduled incremental runs)."""
     stream = read_corpus_stream(spark, input_path)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        pages = extract_pages(batch_df, handle_skew=False, include=include)
+        pages = extract_pages(batch_df, handle_skew=False, include=())
         doc = document_text(pages)
         (doc.withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(output_path))
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 EVENTS_SCHEMA = StructType.fromJson({
@@ -102,14 +97,13 @@ def stream_dedup(spark: SparkSession, input_path: str, output_path: str,
 
 
 def stream_sessionize(spark: SparkSession, input_path: str,
-                      output_path: str, checkpoint: str,
-                      gap_seconds: int = 1800):
+                      output_path: str, checkpoint: str):
     """CUSTOM stateful streaming operator via `applyInPandasWithState`
     (the escape hatch for semantics Structured Streaming's built-in
     windows can't express): per-user gap-based sessionization. State =
     the one open session (start_us, last_us, n_events) per user_id; a
     micro-batch's events merge into it in (ts, event_id) order, every
-    gap > gap_seconds CLOSES a session (emitted downstream) and opens
+    gap > 30 minutes CLOSES a session (emitted downstream) and opens
     the next. Only closed sessions are emitted — with an availableNow
     drain the final open session per user stays in state, so the
     deterministic oracle is "all sessions except each user's last".
@@ -133,7 +127,7 @@ def stream_sessionize(spark: SparkSession, input_path: str,
         StructField("last", LongType()),
         StructField("cnt", LongType()),
     ])
-    gap_us = gap_seconds * 1_000_000
+    gap_us = 1800 * 1_000_000
 
     def fn(key, pdfs, state: GroupState):
         import pandas as pd

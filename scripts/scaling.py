@@ -68,7 +68,7 @@ docs = (
         "lang",
     )
 )
-base = docs.mapInArrow(P.row_kernel(_corpus_row, CORPUS_SCHEMA), CORPUS_SCHEMA)
+base = P.map_rows(docs, _corpus_row, CORPUS_SCHEMA)
 corpus = (
     base.select("url", "html")
     .repartition(cpus * 4, "url")

@@ -173,7 +173,7 @@ def test_multimodal_features_and_resize(spark):
     assert feats[1].sha1 == multimodal.image_features(df).collect()[0].sha1 or True
     resized = {r.media_id: r for r in
                multimodal.resize_images(df, max_side=4).collect()}
-    w, h, _ = multimodal._decode_image_stub(bytes(resized[0].data))
+    w, h, _ = multimodal.decode_image(bytes(resized[0].data))
     assert (w, h) == (4, 4)
 
 

@@ -13,6 +13,7 @@ from pdfplumber_rs_spark.config import (
     TableSettings,
     WordOptions,
 )
+from pdfplumber_rs_spark.kernel.chars import CharColumns
 from pdfplumber_rs_spark.kernel.document import extract_document, open_pdf
 from pdfplumber_rs_spark.kernel.objects import Lexer, Name, Ref
 from pdfplumber_rs_spark.kernel.tables import (
@@ -124,41 +125,60 @@ def test_tj_array_kerning():
 def test_words_split_on_gap():
     chars = [make_char("a", 10), make_char("b", 16),  # touching
              make_char("c", 30)]  # gap 8 > 3
-    words = extract_words(chars, WordOptions())
+    words = extract_words(CharColumns.from_dicts(chars), WordOptions())
     assert [w["text"] for w in words] == ["ab", "c"]
 
 
 def test_words_tolerance_boundary():
     # gap exactly x_tolerance keeps the word together (> tol splits)
     chars = [make_char("a", 10), make_char("b", 19.0)]  # gap 3.0
-    assert len(extract_words(chars, WordOptions())) == 1
+    assert len(extract_words(CharColumns.from_dicts(chars), WordOptions())) == 1
     chars = [make_char("a", 10), make_char("b", 19.1)]  # gap 3.1
-    assert len(extract_words(chars, WordOptions())) == 2
+    assert len(extract_words(CharColumns.from_dicts(chars), WordOptions())) == 2
 
 
 def test_words_blank_split():
     chars = [make_char("a", 10), make_char(" ", 16), make_char("b", 22)]
-    words = extract_words(chars, WordOptions())
+    words = extract_words(CharColumns.from_dicts(chars), WordOptions())
     assert [w["text"] for w in words] == ["a", "b"]
-    words = extract_words(chars, WordOptions(keep_blank_chars=True))
+    words = extract_words(CharColumns.from_dicts(chars), WordOptions(keep_blank_chars=True))
     assert [w["text"] for w in words] == ["a b"]
 
 
 def test_words_multiline():
     chars = [make_char("a", 10, top=100), make_char("b", 10, top=120)]
-    words = extract_words(chars, WordOptions())
+    words = extract_words(CharColumns.from_dicts(chars), WordOptions())
     assert len(words) == 2
 
 
 def test_words_reversed_input_order():
     chars = [make_char("b", 16), make_char("a", 10)]
-    words = extract_words(chars, WordOptions())
+    words = extract_words(CharColumns.from_dicts(chars), WordOptions())
     assert [w["text"] for w in words] == ["ab"]
+
+
+def test_vectorized_order_chains_like_cluster_list():
+    """Lines chain while doctop <= last + y_tolerance (pdfplumber's
+    cluster_list). For these two doctops b - a rounds to just over 3.0
+    while b <= a + 3.0, so both must share one line on pages of any
+    size: 70 glyphs take the vectorized order, under 64 the sequential
+    one."""
+    from pdfplumber_rs_spark.kernel.words import _order_perm, _sequential_order
+
+    a = 125.802
+    b = 792.0 - ((792.0 - a) - 3.0)
+    assert b - a > 3.0 and not b > a + 3.0
+    chars = [make_char("x", 10.0 + 20 * i, top=(a, b)[i % 2])
+             for i in range(70)]
+    cols = CharColumns.from_dicts(chars)
+    assert _order_perm(cols, 3.0).tolist() == _sequential_order(cols, 3.0)
+    x0s = [w["x0"] for w in extract_words(cols, WordOptions())]
+    assert x0s == sorted(x0s) and len(x0s) == 70  # one line, left to right
 
 
 def test_ligature_expansion():
     chars = [make_char("ﬁ", 10)]
-    words = extract_words(chars, WordOptions())
+    words = extract_words(CharColumns.from_dicts(chars), WordOptions())
     assert words[0]["text"] == "fi"
 
 
@@ -284,6 +304,22 @@ def test_table_debug_extracts_words_only_for_stream(monkeypatch, strategy):
     rows = list(_table_debug_rows("u", pdf, settings=settings))
     assert [{k: r[k] for k in want[0]} for r in rows] == want
     assert len(calls) == (3 if strategy == "stream" else 0)
+
+
+def test_stream_table_pages_extract_words_once(monkeypatch):
+    """A page row's text and its stream table detection read one word
+    extraction (the default options) between them."""
+    from pdfplumber_rs_spark.kernel.page import Page
+    from pdfplumber_rs_spark.pipeline import _page_rows
+
+    calls = []
+    extract = Page.extract_words
+    monkeypatch.setattr(Page, "extract_words",
+                        lambda self, *a: calls.append(1) or extract(self, *a))
+    rows = _page_rows("u", pdfgen.fixture_multipage(20, 40),
+                      table_settings=TableSettings(strategy="stream"))
+    assert len(rows) == 20 and all(r["error"] is None for r in rows)
+    assert len(calls) == 20
 
 
 def test_page_extras_walk_annots_once(monkeypatch):

@@ -7,6 +7,7 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from pdfplumber_rs_spark.kernel.chars import CharColumns
 from pdfplumber_rs_spark.kernel.document import extract_document
 from pdfplumber_rs_spark.kernel.objects import Lexer
 from pdfplumber_rs_spark.kernel.textnorm import dedupe_chars
@@ -83,7 +84,11 @@ _char = st.fixed_dictionaries({
 @settings(max_examples=80, deadline=3000)
 @given(st.lists(_char, max_size=100), st.sampled_from([0.5, 1.0, 3.0]))
 def test_dedupe_matches_bruteforce(chars, tol):
-    assert dedupe_chars(list(chars), tol) == _brute(chars, tol)
+    cols = CharColumns.from_dicts(
+        [dict(c, x1=c["x0"], bottom=c["top"], doctop=c["top"], upright=True,
+              direction="ltr") for c in chars])
+    kept = [chars[i] for i in dedupe_chars(cols, tol).run.tolist()]
+    assert kept == _brute(chars, tol)
 
 
 @settings(max_examples=40, deadline=5000)

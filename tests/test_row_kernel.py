@@ -394,3 +394,124 @@ def test_row_kernel_flushes_at_most_flush_rows():
                     for k, n in enumerate(c) for i in range(n)]
     # a partial batch is flushed at the end of every input batch
     assert [b.num_rows for b in out] == [5, 5, 5, 1] + [5] * 5 + [5, 3]
+
+
+# -- per-row functions of functions/ and sources/warc ---------------------------
+
+def _kernel_rows(fn, schema, **cols) -> list[dict]:
+    batch = pa.RecordBatch.from_pydict(cols)
+    return [r for b in P.row_kernel(fn, schema)(iter([batch]))
+            for r in b.to_pylist()]
+
+
+def test_image_ops_turn_decode_failures_into_columns():
+    from pdfplumber_rs_spark.functions import multimodal as mm
+
+    png = mm.make_png(4, 4)
+    bad_png = png[:33] + b"\x00" * 8  # IHDR intact, IDAT garbage
+    tiff = b"II*\x00" + b"\x00" * 16
+    data = [png, bad_png, tiff, None]
+    feats = _kernel_rows(mm._feature_rows, mm.FEATURE_SCHEMA,
+                         media_id=[0, 1, 2, 3], data=data)
+    assert [(f["format"], f["width"]) for f in feats] == [
+        ("png", 4), ("png", 4), (None, None), (None, None)]
+    assert feats[0]["decode_error"] is None and feats[0]["mean_luma"] >= 0
+    assert feats[1]["decode_error"].startswith("corrupt: ")
+    assert feats[2]["decode_error"].startswith("unsupported codec: ")
+    assert feats[3]["n_bytes"] == 0
+    hashes = _kernel_rows(mm._dhash_rows, mm.DHASH_SCHEMA,
+                          media_id=[0, 1, 2, 3], data=data)
+    assert [h["decode_error"] is None for h in hashes] == [
+        True, False, False, False]
+    assert 0 <= hashes[0]["dhash_hi"] < 1 << 32
+    resized = _kernel_rows(functools.partial(mm._resize_rows, max_side=2),
+                           mm.RESIZE_SCHEMA, media_id=[0, 2], data=[png, tiff])
+    assert mm.decode_image(resized[0]["data"])[:2] == (2, 2)
+    assert resized[1]["data"] is None and resized[1]["resize_error"]
+
+
+def test_robots_parsers_group_their_own_way_and_have_no_try(monkeypatch):
+    from pdfplumber_rs_spark.functions import webclean as wc
+
+    txt = ("User-agent: a\nCrawl-delay: 5\nUser-agent: b # c\n"
+           "Disallow: /x\nSitemap: https://s/1\n\nCrawl-delay: 2\n")
+
+    def rules(ua):
+        return [r["prefix"] for r in wc._robots_rule_rows("h", txt,
+                                                           user_agent=ua)]
+
+    def delay(ua):
+        return [r["crawl_delay"] for r in wc._crawl_delay_rows(
+            "h", txt, user_agent=ua)]
+
+    # a Crawl-delay line ends the User-agent lines for crawl delays only
+    assert rules("a") == rules("b") == ["/x"] and delay("a") == [5.0]
+    assert delay("b") == [2.0]
+    assert [r["sitemap_url"] for r in wc._sitemap_rows("h", txt)] == [
+        "https://s/1"]
+
+    def boom(val):
+        raise RuntimeError("boom")
+
+    monkeypatch.setattr(wc, "_robots_rule_regex", boom)
+    with pytest.raises(RuntimeError):
+        rules("a")
+
+
+def test_warc_rows_keep_utc_instants_and_warn_on_unreadable_files():
+    from datetime import datetime, timezone
+
+    from pdfplumber_rs_spark.sources import warc
+
+    ts = datetime(2024, 5, 6, 7, 8, 9, tzinfo=timezone.utc)
+    data = warc.build_warc([("https://e/1", ts, b"<p>hi</p>")],
+                           gzip_per_record=True)
+    fn = functools.partial(warc._warc_file_rows, want_types=("response",))
+    batch = pa.RecordBatch.from_pydict(
+        {"path": ["ok.warc.gz", "bad.warc.gz"],
+         "content": [data, b"\x1f\x8b" + b"\x00" * 8]})
+    (out,) = P.row_kernel(fn, warc.WARC_SCHEMA)(iter([batch]))
+    assert out.schema.field("warc_ts").type == pa.timestamp("us", tz="UTC")
+    ok, bad = out.to_pylist()
+    assert (ok["url"], ok["warc_ts"], ok["html"]) == (
+        "https://e/1", ts, b"<p>hi</p>")
+    assert bad["url"] is None and bad["record_offset"] == 0
+    assert bad["warning"].startswith("unreadable WARC: ")
+
+
+def test_row_kernel_is_the_one_arrow_boundary():
+    """Every per-row kernel runs through row_kernel: it alone converts
+    Arrow batches to Python rows and back, and the one mapInPandas is
+    write_warc's per-partition sink."""
+    import ast
+    import re
+
+    from tests.test_session import ROOT, _tracked_py
+
+    def where(files, pattern):
+        for f in files:
+            text = (ROOT / f).read_text(errors="replace")
+            for m in re.finditer(pattern, text):
+                yield f, text.count("\n", 0, m.start()) + 1
+
+    def span(path, name):
+        tree = ast.parse((ROOT / path).read_text())
+        (node,) = [n for n in ast.walk(tree)
+                   if isinstance(n, ast.FunctionDef) and n.name == name]
+        return path, range(node.lineno, node.end_lineno + 1)
+
+    def inside(hits, path_lines):
+        path, lines = path_lines
+        return all(f == path and n in lines for f, n in hits)
+
+    files = _tracked_py()
+    pandas_maps = list(where(files, r"\.mapInPandas\("))
+    assert len(pandas_maps) == 1
+    assert inside(pandas_maps, span("pdfplumber_rs_spark/sources/warc.py",
+                                    "write_warc"))
+    package = [f for f in files if f.startswith("pdfplumber_rs_spark/")]
+    conversions = list(where(package,
+                             r"to_pydict\(|RecordBatch\.from_pylist\("))
+    assert len(conversions) == 2
+    assert inside(conversions, span("pdfplumber_rs_spark/pipeline.py",
+                                    "row_kernel"))
