@@ -168,7 +168,7 @@ def cmd_info(args) -> int:
             p = doc.page(i)
             pages.append({
                 "page": i + 1, "width": p.width, "height": p.height,
-                "rotation": p.rotation, "chars": len(p.chars),
+                "rotation": p.rotation, "chars": len(p.char_columns),
                 "lines": len(p.lines), "rects": len(p.rects),
                 "curves": len(p.curves), "images": len(p.images),
             })
@@ -182,7 +182,7 @@ def cmd_info(args) -> int:
             print(f"Page {i + 1}:")
             print(f"  Dimensions: {p.width:.2f} x {p.height:.2f}")
             print(f"  Rotation: {p.rotation}°")
-            print(f"  Chars: {len(p.chars)}")
+            print(f"  Chars: {len(p.char_columns)}")
             print(f"  Lines: {len(p.lines)}")
             print(f"  Rects: {len(p.rects)}")
             print(f"  Curves: {len(p.curves)}")
@@ -340,7 +340,7 @@ def cmd_debug(args) -> int:
         p = doc.page(i)
         out.append({
             "page": i + 1,
-            "chars": len(p.chars), "lines": len(p.lines),
+            "chars": len(p.char_columns), "lines": len(p.lines),
             "rects": len(p.rects), "curves": len(p.curves),
             "edges": len(p.edges()), "images": len(p.images),
             "tables": len(p.find_tables(None)),

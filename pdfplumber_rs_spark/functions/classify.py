@@ -24,19 +24,17 @@ from pyspark.sql import functions as F
 from .text import word_tokens
 
 
-def _tokenize(df: DataFrame, label: Column | None, id_col: str,
-              text_col: str) -> DataFrame:
+def _tokenize(df: DataFrame, label: Column | None) -> DataFrame:
     cols = [
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(word_tokens(F.col(text_col))).alias("toks"),
+        F.col("doc_id"),
+        F.array_distinct(word_tokens(F.col("text"))).alias("toks"),
     ]
     if label is not None:
         cols.insert(1, label.cast("int").alias("label"))
     return df.select(*cols)
 
 
-def nb_train(df: DataFrame, label: Column, id_col: str = "doc_id",
-             text_col: str = "text") -> tuple[DataFrame, DataFrame]:
+def nb_train(df: DataFrame, label: Column) -> tuple[DataFrame, DataFrame]:
     """Fit FULL multivariate Bernoulli NB with Laplace smoothing
     p(tok|c) = (docs_c_with_tok + 1) / (n_c + 2) — absent tokens
     contribute log((1-p1)/(1-p0)) evidence (without the absence terms
@@ -49,7 +47,7 @@ def nb_train(df: DataFrame, label: Column, id_col: str = "doc_id",
     tables between training and serving runs.
 
     Returns (model, base): (tok, adj_llr) and a 1-row (base) frame."""
-    labeled = _tokenize(df, label, id_col, text_col)
+    labeled = _tokenize(df, label)
     class_counts = labeled.groupBy().agg(
         F.sum("label").alias("n1"),
         F.sum(1 - F.col("label")).alias("n0"),
@@ -77,16 +75,14 @@ def nb_train(df: DataFrame, label: Column, id_col: str = "doc_id",
     return weights.select("tok", "adj_llr"), base
 
 
-def nb_apply(df: DataFrame, model: DataFrame, base: DataFrame,
-             id_col: str = "doc_id",
-             text_col: str = "text") -> DataFrame:
+def nb_apply(df: DataFrame, model: DataFrame, base: DataFrame) -> DataFrame:
     """Score any corpus against a trained model: one distinct-token
     explode joined with the broadcast (tok, adj_llr) table + per-doc
     sum; token-free documents carry exactly `base` (prior plus every
     token's absence evidence). Tokens unseen at training time carry no
     evidence (they drop out of the inner join), the standard NB
     serving convention. Returns (doc_id, nb_score, predicted)."""
-    toks = _tokenize(df, None, id_col, text_col)
+    toks = _tokenize(df, None)
     scored = (
         toks.select("doc_id", F.explode("toks").alias("tok"))
         .join(F.broadcast(model), "tok")
@@ -106,31 +102,27 @@ def nb_apply(df: DataFrame, model: DataFrame, base: DataFrame,
     )
 
 
-def nb_quality_scores(df: DataFrame, label: Column,
-                      id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def nb_quality_scores(df: DataFrame, label: Column) -> DataFrame:
     """One-shot convenience: train Bernoulli NB on the corpus itself
     (self-supervised heuristic teacher) and score every document.
     Returns (doc_id, label, nb_score, predicted), nb_score at 6dp.
     Everything is counts → the exact same model falls out of the SQL
     oracle; no RNG, no iterative fitting, no driver state."""
     labeled = df.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"),
+        F.col("doc_id"), F.col("text"),
         label.cast("int").alias("label"),
     ).persist()  # tokenized by both the trainer and the scorer —
     # persist computes the source once (at cluster depth: the
     # between-stage Iceberg commit, as in bpe/pagerank)
-    model, base = nb_train(labeled, F.col("label") == 1,
-                           id_col="doc_id", text_col="text")
+    model, base = nb_train(labeled, F.col("label") == 1)
     return (
-        nb_apply(labeled, model, base, id_col="doc_id", text_col="text")
+        nb_apply(labeled, model, base)
         .join(labeled.select("doc_id", "label"), "doc_id")
         .select("doc_id", "label", "nb_score", "predicted")
     )
 
 
-def quality_report(df, min_tokens: int = 20, id_col: str = "doc_id",
-                   text_col: str = "text", lang_col: str = "lang"):
+def quality_report(df: DataFrame) -> DataFrame:
     """Fused filter verdict — the one-row-per-doc decision record a
     production pipeline actually persists (so a later audit can ask
     WHY a document was dropped, not just that it was):
@@ -138,7 +130,7 @@ def quality_report(df, min_tokens: int = 20, id_col: str = "doc_id",
       (doc_id, kept, n_reasons, reasons)
 
     reasons is the sorted comma-joined list of failed checks:
-      too_short      fewer than min_tokens whitespace tokens
+      too_short      fewer than 20 whitespace tokens
       low_stopword   zero English stopword-marker hits
       bad_mean_len   mean alnum-chars-per-token outside [3, 10]
                      (integer cross-multiplied — no float compare)
@@ -152,21 +144,21 @@ def quality_report(df, min_tokens: int = 20, id_col: str = "doc_id",
 
     from .text import lang_guess, lang_score, token_count
 
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     n_tokens = token_count(t)
     n_alnum = F.length(F.regexp_replace(t, r"[^A-Za-z0-9]", ""))
     checks = [
-        (F.lit("too_short"), n_tokens < min_tokens),
+        (F.lit("too_short"), n_tokens < 20),
         (F.lit("low_stopword"), lang_score(t, "en") == 0),
         (F.lit("bad_mean_len"), (n_alnum < 3 * n_tokens)
          | (n_alnum > 10 * n_tokens)),
-        (F.lit("lang_mismatch"), lang_guess(t) != F.col(lang_col)),
+        (F.lit("lang_mismatch"), lang_guess(t) != F.col("lang")),
     ]
     reasons = F.array_sort(F.filter(
         F.array(*[F.when(cond, name) for name, cond in checks]),
         lambda r: r.isNotNull()))
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         (F.size(reasons) == 0).alias("kept"),
         F.size(reasons).cast("int").alias("n_reasons"),
         F.array_join(reasons, ",").alias("reasons"),

@@ -18,30 +18,28 @@ from pyspark.sql import functions as F
 from .text import fingerprint, word_tokens
 
 
-def exact_duplicates(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """Groups of byte-identical (normalized) documents: fingerprint →
     hash aggregate. Returns (fp, keep_id, n_dups) for groups with >1."""
     return (
-        df.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
+        df.select(F.col("doc_id"), fingerprint(F.col("text")).alias("fp"))
         .groupBy("fp")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count("*").alias("n_docs"),
         )
         .filter(F.col("n_docs") > 1)
     )
 
 
-def dedup_exact(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def dedup_exact(df: DataFrame) -> DataFrame:
     """Keep the lowest-id document per fingerprint (window top-1).
     Round-6: window min instead of agg + left-semi join — the join's
     branches fingerprinted every document twice; same survivors."""
-    fp = df.withColumn("fp", fingerprint(F.col(text_col)))
-    keep = F.min(id_col).over(Window.partitionBy("fp"))
+    fp = df.withColumn("fp", fingerprint(F.col("text")))
+    keep = F.min("doc_id").over(Window.partitionBy("fp"))
     return (fp.withColumn("_keep", keep)
-            .filter(F.col(id_col) == F.col("_keep"))
+            .filter(F.col("doc_id") == F.col("_keep"))
             .drop("fp", "_keep"))
 
 
@@ -56,13 +54,10 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.round(inter / F.greatest(union, F.lit(1)), 6)
 
 
-def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text",
-                        key_col: str = "lang",
-                        window: int = 10,
+def ngram_jaccard_pairs(df: DataFrame, window: int = 10,
                         threshold: float = 0.5) -> DataFrame:
     """Near-duplicate pairs by word-set Jaccard within a bounded
-    candidate window (same key_col, id difference ≤ window).
+    candidate window (same lang, id difference ≤ window).
 
     Scale shape (round-1 judge fix): the JOIN KEY is the high-
     cardinality id bucket `floor(id/window)` — side a fans out to its
@@ -72,9 +67,9 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     single sort-merge partitions; lang equality and the id-window bound
     are post-join filters now."""
     t = df.select(
-        F.col(id_col).alias("id"),
-        F.col(key_col).alias("k"),
-        token_set(F.col(text_col)).alias("toks"),
+        F.col("doc_id").alias("id"),
+        F.col("lang").alias("k"),
+        token_set(F.col("text")).alias("toks"),
     )
     bucket = F.floor(F.col("id") / window)
     a = t.select(
@@ -104,16 +99,14 @@ def _token_hash(token: Column, seed: int) -> Column:
                   16, 10).cast("long")
 
 
-def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       num_hashes: int = 8) -> DataFrame:
+def minhash_signatures(df: DataFrame, num_hashes: int = 8) -> DataFrame:
     """MinHash signature per document: explode tokens once, then one
     hash-aggregate computing all k minima (map-side partial agg — the
     shuffle carries k longs per doc, not the token stream)."""
     n = df.sparkSession.sparkContext.defaultParallelism * 2
-    toks = df.repartition(n, id_col).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(token_set(F.col(text_col))).alias("tok"),
+    toks = df.repartition(n, "doc_id").select(
+        F.col("doc_id"),
+        F.explode(token_set(F.col("text"))).alias("tok"),
     )
     aggs = [
         F.min(_token_hash(F.col("tok"), k)).alias(f"h{k}")
@@ -122,11 +115,10 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     return toks.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_bands(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", num_hashes: int = 8,
+def minhash_bands(df: DataFrame, num_hashes: int = 8,
                   band_size: int = 2) -> DataFrame:
     """(doc_id, band, key) LSH bucket memberships."""
-    sig = minhash_signatures(df, id_col, text_col, num_hashes)
+    sig = minhash_signatures(df, num_hashes)
     n_bands = num_hashes // band_size
     return sig.select(
         "doc_id",
@@ -146,16 +138,14 @@ def minhash_bands(df: DataFrame, id_col: str = "doc_id",
     ).select("doc_id", "bk.band", "bk.key")
 
 
-def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           num_hashes: int = 8,
+def minhash_lsh_candidates(df: DataFrame, num_hashes: int = 8,
                            band_size: int = 2) -> DataFrame:
     """LSH banding: signatures → (band, band_hash) buckets → self-join on
     bucket → distinct candidate pairs. The join key is (band, values),
     so candidates shuffle by bucket — no cross join at any scale. NOTE:
     pair ENUMERATION is O(B²) inside a B-doc bucket; for dedup at scale
     use minhash_dedup (bucket representatives, O(B))."""
-    bands = minhash_bands(df, id_col, text_col, num_hashes, band_size)
+    bands = minhash_bands(df, num_hashes, band_size)
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(b, (F.col("a.band") == F.col("b.band"))
@@ -167,8 +157,7 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def minhash_verified_pairs(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", num_hashes: int = 8,
+def minhash_verified_pairs(df: DataFrame, num_hashes: int = 8,
                            band_size: int = 2,
                            threshold: float = 0.5) -> DataFrame:
     """Candidate→verify, the production two-stage near-dup shape
@@ -187,10 +176,9 @@ def minhash_verified_pairs(df: DataFrame, id_col: str = "doc_id",
     set, then a codegen array_intersect/array_union — the token
     STREAM never re-shuffles, only one token-set array per candidate
     endpoint moves."""
-    cands = minhash_lsh_candidates(df, id_col, text_col,
-                                   num_hashes, band_size)
-    t = df.select(F.col(id_col).alias("id"),
-                  token_set(F.col(text_col)).alias("toks"))
+    cands = minhash_lsh_candidates(df, num_hashes, band_size)
+    t = df.select(F.col("doc_id").alias("id"),
+                  token_set(F.col("text")).alias("toks"))
     # the threshold tests the UNROUNDED ratio (matching the SQL
     # oracle's WHERE clause); rounding is display-only — filtering the
     # 6dp value would flip membership for pairs within 5e-7 of the
@@ -210,8 +198,7 @@ def minhash_verified_pairs(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def minhash_dedup(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", num_hashes: int = 8,
+def minhash_dedup(df: DataFrame, num_hashes: int = 8,
                   band_size: int = 4) -> DataFrame:
     """Scalable near-dup removal: per LSH bucket keep the min-id
     representative; a document's keep_id = min representative over its
@@ -220,7 +207,7 @@ def minhash_dedup(df: DataFrame, id_col: str = "doc_id",
     not 5·10^11 pairs. (Single-pass union approximation, not full
     connected components — the standard web-dedup compromise.)
     Returns (doc_id, keep_id) for documents that should be dropped."""
-    bands = minhash_bands(df, id_col, text_col, num_hashes, band_size)
+    bands = minhash_bands(df, num_hashes, band_size)
     # per-bucket representative via a window MIN instead of the former
     # agg + self-join: the join's two branches were separate physical
     # subtrees, so the whole signature lineage (8 md5 per token) ran
@@ -238,8 +225,6 @@ def minhash_dedup(df: DataFrame, id_col: str = "doc_id",
 
 
 def minhash_dedup_incremental(new: DataFrame, prior_bands: DataFrame,
-                              id_col: str = "doc_id",
-                              text_col: str = "text",
                               num_hashes: int = 8,
                               band_size: int = 4) -> DataFrame:
     """Incremental near-dup removal: dedup a NEW crawl increment
@@ -260,14 +245,9 @@ def minhash_dedup_incremental(new: DataFrame, prior_bands: DataFrame,
     The prior band table is corpus-sized and is never broadcast; at
     real scale both sides bucket by (band, key) so re-ingestion joins
     exchange-free."""
-    new_bands = minhash_bands(new, id_col, text_col, num_hashes,
-                              band_size)
-    # minhash_bands always emits 'doc_id'; accept a prior band table
-    # keyed either way so a non-default id_col doesn't raise
-    # UNRESOLVED_COLUMN (ADVICE r5) — output columns stay doc_id/keep_id
-    prior_id = id_col if id_col in prior_bands.columns else "doc_id"
+    new_bands = minhash_bands(new, num_hashes, band_size)
     prior_reps = prior_bands.groupBy("band", "key").agg(
-        F.min(prior_id).alias("prior_rep"))
+        F.min("doc_id").alias("prior_rep"))
     # new-side representative via window (round-6: the former
     # agg + self-join re-ran the new increment's signature lineage
     # twice); the prior side stays an aggregate — different source
@@ -294,9 +274,8 @@ def minhash_dedup_incremental(new: DataFrame, prior_bands: DataFrame,
     )
 
 
-def quality_dedup(df: DataFrame, score: Column | str,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  num_hashes: int = 8, band_size: int = 4) -> DataFrame:
+def quality_dedup(df: DataFrame, score: Column | str, num_hashes: int = 8,
+                  band_size: int = 4) -> DataFrame:
     """minhash_dedup with a QUALITY-AWARE winner: per LSH bucket keep
     the highest-scoring document instead of the smallest id — the
     RefinedWeb/FineWeb production policy (near-dup clusters keep the
@@ -317,8 +296,8 @@ def quality_dedup(df: DataFrame, score: Column | str,
     everything downstream shuffles band rows only.
     Returns (doc_id, keep_id) for documents that should be dropped."""
     score_col = F.col(score) if isinstance(score, str) else score
-    bands = minhash_bands(df, id_col, text_col, num_hashes, band_size) \
-        .join(df.select(F.col(id_col).alias("doc_id"),
+    bands = minhash_bands(df, num_hashes, band_size) \
+        .join(df.select(F.col("doc_id"),
                         score_col.cast("double").alias("q")), "doc_id")
     # window representative instead of agg + self-join (round-6, same
     # fix as minhash_dedup: the join branches re-ran the signature
@@ -340,11 +319,9 @@ def quality_dedup(df: DataFrame, score: Column | str,
     )
 
 
-def dedup_components(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text", num_hashes: int = 8,
-                     band_size: int = 4, n_rounds: int = 3,
-                     until_stable: bool = False,
-                     max_rounds: int = 20) -> DataFrame:
+def dedup_components(df: DataFrame, num_hashes: int = 8, band_size: int = 4,
+                     n_rounds: int = 3,
+                     until_stable: bool = False) -> DataFrame:
     """Bounded label-propagation connected components over the LSH
     bucket-membership graph — the transitive closure minhash_dedup's
     single-pass union approximation skips. Label = min doc_id reachable
@@ -357,8 +334,8 @@ def dedup_components(df: DataFrame, id_col: str = "doc_id",
     convergence stop: labels are MONOTONE non-increasing, so one tiny
     scalar per round — count of docs whose label still decreased —
     hits zero exactly when the components are final (longer chains
-    cost exactly the rounds they need, short graphs stop early);
-    max_rounds bounds diameter-of-the-graph pathologies. The fixed
+    cost exactly the rounds they need, short graphs stop early); 20
+    rounds bound diameter-of-the-graph pathologies. The fixed
     n_rounds mode is kept as the oracle path (a convergence loop's
     round count is data-dependent, so its SQL twin stays closed-form).
 
@@ -374,12 +351,11 @@ def dedup_components(df: DataFrame, id_col: str = "doc_id",
     # localCheckpoint truncates the growing plan each round (persist
     # alone keeps stacking lineage; at cluster depth this is the
     # between-stage Iceberg commit, reliable-checkpoint flavored)
-    bands = minhash_bands(df, id_col, text_col, num_hashes,
-                          band_size).persist()
+    bands = minhash_bands(df, num_hashes, band_size).persist()
     labels = bands.select("doc_id").distinct().select(
         "doc_id", F.col("doc_id").alias("label")).localCheckpoint()
     rounds = 0
-    limit = max_rounds if until_stable else n_rounds
+    limit = 20 if until_stable else n_rounds
     while rounds < limit:
         rounds += 1
         bucket_min = (
@@ -406,9 +382,7 @@ def dedup_components(df: DataFrame, id_col: str = "doc_id",
     return labels.select("doc_id", F.col("label").alias("component"))
 
 
-def simhash_candidates(df: DataFrame, max_hamming: int = 3,
-                       id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def simhash_candidates(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Charikar-style near-dup candidates: band the 64-bit SimHash into
     four 16-bit chunks — any pair within Hamming distance 3 shares at
     least one identical band (pigeonhole), so banding finds ALL pairs
@@ -420,7 +394,7 @@ def simhash_candidates(df: DataFrame, max_hamming: int = 3,
     bands or re-band wider upstream).
     Scale: one shuffle on (band_id, band_value) — the same bucketed
     shape as MinHash LSH, never quadratic in the corpus."""
-    sh = simhash64(df, id_col, text_col)
+    sh = simhash64(df)
     bands = None
     for i, expr in enumerate((
         F.shiftright("simhash_hi", 16), F.col("simhash_hi").bitwiseAND(0xFFFF),
@@ -455,8 +429,7 @@ _SH_PER = 3
 _SH_GROUPS = (64 + _SH_PER - 1) // _SH_PER  # 22
 
 
-def simhash64(df: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+def simhash64(df: DataFrame) -> DataFrame:
     """Full 64-bit SimHash: per-token md5-derived bits, per-bit weighted
     vote via sum(±1), sign → bit. The ±1 vote over n tokens equals
     2*count_set - n, so only the per-bit SET counts are aggregated —
@@ -469,9 +442,9 @@ def simhash64(df: DataFrame, id_col: str = "doc_id",
     the SQL oracle; results are bit-identical to the unpacked form
     (vote > 0 ⇔ 2*count_set > n, ties → 0)."""
     n = df.sparkSession.sparkContext.defaultParallelism * 2
-    toks = df.repartition(n, id_col).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(word_tokens(F.col(text_col))).alias("tok"),
+    toks = df.repartition(n, "doc_id").select(
+        F.col("doc_id"),
+        F.explode(word_tokens(F.col("text"))).alias("tok"),
     )
     md5 = F.md5(F.col("tok"))
     toks = toks.withColumn(
@@ -533,8 +506,7 @@ def simhash64(df: DataFrame, id_col: str = "doc_id",
     return agg.select("doc_id", *outs)
 
 
-def duplicate_spans(df: DataFrame, k: int = 5, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def duplicate_spans(df: DataFrame, k: int = 5) -> DataFrame:
     """Cross-document duplicated-substring spans — the exact-substring
     training-data dedup of Lee et al. 2022 ("Deduplicating Training
     Data Makes Language Models Better", arXiv:2107.06499), which builds
@@ -561,11 +533,11 @@ def duplicate_spans(df: DataFrame, k: int = 5, id_col: str = "doc_id",
     broadcast (it scales with the corpus); the semi-join stays a
     shuffled hash join on the gram key."""
     toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+        F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
                 r"[^a-z0-9]+"),
         lambda t: t != "",
     )
-    d = df.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
+    d = df.select(F.col("doc_id"), toks.alias("toks"))
     # short docs (< k tokens) yield an empty position array, not
     # sequence(0, negative) — the descending-sequence crash class
     # ADVICE.md flagged in repetition_features/word_ngrams
@@ -605,9 +577,7 @@ def duplicate_spans(df: DataFrame, k: int = 5, id_col: str = "doc_id",
     )
 
 
-def remove_duplicate_spans(df: DataFrame, k: int = 5,
-                           id_col: str = "doc_id",
-                           text_col: str = "text") -> DataFrame:
+def remove_duplicate_spans(df: DataFrame, k: int = 5) -> DataFrame:
     """The removal half of exact-substring dedup (Lee et al.
     arXiv:2107.06499): drop every token covered by a cross-document
     duplicated span of >= k tokens and reassemble the surviving text.
@@ -625,11 +595,11 @@ def remove_duplicate_spans(df: DataFrame, k: int = 5,
     the per-doc reassembly (array_sort over one doc's tokens, bounded
     by doc length, never corpus-wide)."""
     toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+        F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
                 r"[^a-z0-9]+"),
         lambda t: t != "",
     )
-    d = df.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
+    d = df.select(F.col("doc_id"), toks.alias("toks"))
     positions = F.when(
         F.size("toks") >= k, F.sequence(F.lit(0), F.size("toks") - k)
     ).otherwise(F.array().cast("array<int>"))
@@ -677,9 +647,7 @@ def remove_duplicate_spans(df: DataFrame, k: int = 5,
     )
 
 
-def line_dedup(df: DataFrame, line_tokens: int = 10,
-               id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def line_dedup(df: DataFrame, line_tokens: int = 10) -> DataFrame:
     """Corpus-level exact line dedup — the C4 "three-sentence span"
     rule (Raffel et al. 2020 §2.2: "we discarded all but one of any
     three-sentence span occurring more than once in the data set"),
@@ -701,11 +669,11 @@ def line_dedup(df: DataFrame, line_tokens: int = 10,
     Mirrors the reference's dedup surface at the line grain the way
     dedup_exact does at the document grain."""
     toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+        F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
                 r"[^a-z0-9]+"),
         lambda t: t != "",
     )
-    d = df.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
+    d = df.select(F.col("doc_id"), toks.alias("toks"))
     n_lines = F.ceil(F.size("toks") / F.lit(float(line_tokens)))
     lines = d.select(
         "doc_id",
@@ -756,9 +724,7 @@ def line_dedup(df: DataFrame, line_tokens: int = 10,
 
 
 def containment_pairs(df: DataFrame, n: int = 3, window: int = 10,
-                      threshold: float = 0.5, id_col: str = "doc_id",
-                      text_col: str = "text",
-                      key_col: str = "lang") -> DataFrame:
+                      threshold: float = 0.5) -> DataFrame:
     """Asymmetric n-gram containment within a bounded candidate
     window — the quote/subset detector Jaccard misses: a short doc
     wholly quoted inside a long one has tiny Jaccard (union is the
@@ -773,15 +739,15 @@ def containment_pairs(df: DataFrame, n: int = 3, window: int = 10,
 
     Scale shape is ngram_jaccard_pairs': the join key is the
     high-cardinality id bucket floor(id/window) (side a fans out to
-    two buckets), never the low-cardinality key_col, so the shuffle
+    two buckets), never the low-cardinality lang, so the shuffle
     spreads uniformly; key equality and the id-window bound are
     post-join filters."""
     from .webclean import word_ngrams
 
     t = df.select(
-        F.col(id_col).alias("id"),
-        F.col(key_col).alias("k"),
-        F.array_distinct(word_ngrams(F.col(text_col), n)).alias("grams"),
+        F.col("doc_id").alias("id"),
+        F.col("lang").alias("k"),
+        F.array_distinct(word_ngrams(F.col("text"), n)).alias("grams"),
     ).filter(F.size("grams") > 0)
     bucket = F.floor(F.col("id") / window)
     a = t.select(
@@ -805,9 +771,8 @@ def containment_pairs(df: DataFrame, n: int = 3, window: int = 10,
                       | (F.col("cont_b_in_a") >= threshold))
 
 
-def levenshtein_pairs(df: DataFrame, max_dist: int = 2, prefix: int = 3,
-                      id_col: str = "doc_id",
-                      text_col: str = "title") -> DataFrame:
+def levenshtein_pairs(df: DataFrame, max_dist: int = 2,
+                      prefix: int = 3) -> DataFrame:
     """Edit-distance near-duplicate pairs for SHORT strings (titles,
     product names, author fields) with prefix blocking: candidates
     share the first `prefix` characters of the lowercase-trimmed
@@ -824,8 +789,8 @@ def levenshtein_pairs(df: DataFrame, max_dist: int = 2, prefix: int = 3,
     this on full documents — edit distance is O(len²) per pair; for
     documents use minhash/simhash/containment."""
     t = df.select(
-        F.col(id_col).alias("id"),
-        F.lower(F.trim(F.col(text_col))).alias("s"),
+        F.col("doc_id").alias("id"),
+        F.lower(F.trim(F.col("title"))).alias("s"),
     ).filter(F.length("s") >= prefix)
     t = t.withColumn("block", F.substring("s", 1, prefix))
     a = t.alias("a")
@@ -841,8 +806,7 @@ def levenshtein_pairs(df: DataFrame, max_dist: int = 2, prefix: int = 3,
         .filter(F.col("dist") <= max_dist))
 
 
-def paragraph_dedup(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def paragraph_dedup(df: DataFrame) -> DataFrame:
     """Corpus-level exact PARAGRAPH dedup (the Dolma/FineWeb unit —
     Soldaini et al. 2024 dedupe at document and paragraph grain):
     paragraphs are blank-line-separated blocks; every occurrence of a
@@ -860,10 +824,10 @@ def paragraph_dedup(df: DataFrame, id_col: str = "doc_id",
     corpus — never broadcast), doc-keyed reassembly bounded per doc."""
     paras = F.filter(
         F.transform(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), r"\n{2,}"),
+            F.split(F.coalesce(F.col("text"), F.lit("")), r"\n{2,}"),
             lambda p: F.trim(p)),
         lambda p: p != "")
-    d = df.select(F.col(id_col).alias("doc_id"), paras.alias("paras"))
+    d = df.select(F.col("doc_id"), paras.alias("paras"))
     p = d.select(
         "doc_id",
         F.posexplode("paras").alias("para_idx", "para"),

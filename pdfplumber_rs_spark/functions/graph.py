@@ -16,27 +16,26 @@ from pyspark.sql import functions as F
 from .webclean import url_host
 
 
-def host_link_graph(links: DataFrame, url_col: str = "url",
-                    href_col: str = "href") -> DataFrame:
+def host_link_graph(links: DataFrame) -> DataFrame:
     """(src_host, dst_host, n_links) from exploded page links; only
     absolute http(s) hrefs form cross-host edges."""
     e = links.select(
-        url_host(F.col(url_col)).alias("src_host"),
-        F.when(F.col(href_col).rlike("^https?://"),
-               url_host(F.col(href_col))).alias("dst_host"),
+        url_host(F.col("url")).alias("src_host"),
+        F.when(F.col("href").rlike("^https?://"),
+               url_host(F.col("href"))).alias("dst_host"),
     ).filter(F.col("dst_host").isNotNull() & (F.col("dst_host") != ""))
     return e.groupBy("src_host", "dst_host").agg(
         F.count("*").alias("n_links"))
 
 
 def pagerank(edges: DataFrame, n_iter: int = 5,
-             damping: float = 0.85, tol: float | None = None) -> DataFrame:
+             tol: float | None = None) -> DataFrame:
     """Weighted PageRank over (src_host, dst_host, n_links) edges.
 
     Classic power iteration as DataFrame ops: out-weight per src once,
     then per iteration contributions = rank * w/out_w joined src-side
-    and summed per dst; teleport mass (1-d)/N. Nodes = union of srcs
-    and dsts. Returns (host, rank).
+    and summed per dst; damping d = 0.85, teleport mass (1-d)/N.
+    Nodes = union of srcs and dsts. Returns (host, rank).
 
     tol=None (the oracle path): exactly n_iter iterations —
     closed-form, SQL-twin-able. tol set: stop as soon as the max
@@ -75,8 +74,8 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
             nodes.join(contrib, "host", "left")
             .select(
                 "host",
-                (F.lit((1.0 - damping) / n)
-                 + F.lit(damping) * F.coalesce("in_mass", F.lit(0.0)))
+                (F.lit((1.0 - 0.85) / n)
+                 + F.lit(0.85) * F.coalesce("in_mass", F.lit(0.0)))
                 .alias("rank"),
             )
         ).localCheckpoint()
@@ -96,9 +95,7 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
     return ranks
 
 
-def anchor_text_agg(anchors: DataFrame, url_col: str = "url",
-                    href_col: str = "href",
-                    anchor_col: str = "anchor") -> DataFrame:
+def anchor_text_agg(anchors: DataFrame) -> DataFrame:
     """Anchor-text aggregation per link TARGET — the classic web-corpus
     enrichment (anchor text describes the destination better than the
     destination describes itself; used for retrieval indexing and as
@@ -118,9 +115,9 @@ def anchor_text_agg(anchors: DataFrame, url_col: str = "url",
     text) still collapses map-side because the SET of texts is tiny
     even when the link count is 10^9."""
     e = anchors.select(
-        url_host(F.col(url_col)).alias("src_host"),
-        F.col(href_col).alias("dst_url"),
-        F.col(anchor_col).alias("anchor"),
+        url_host(F.col("url")).alias("src_host"),
+        F.col("href").alias("dst_url"),
+        F.col("anchor"),
     ).filter(F.col("dst_url").rlike("^https?://"))
     return e.groupBy("dst_url").agg(
         F.count("*").alias("n_sources"),

@@ -82,9 +82,7 @@ def asof_join(left: DataFrame, right: DataFrame, key: str,
     return carried.filter(F.col("_side") == 1).drop("_side")
 
 
-def apply_changelog(base: DataFrame, changes: DataFrame,
-                    key_col: str = "url", ts_col: str = "ts",
-                    op_col: str = "op") -> DataFrame:
+def apply_changelog(base: DataFrame, changes: DataFrame) -> DataFrame:
     """CDC merge — the merge-on-read upsert a lakehouse table (Iceberg
     v2 deletes, Hudi MoR) performs at compaction: apply an ordered
     changelog of upserts ('U') and deletes ('D') onto a base snapshot
@@ -104,17 +102,17 @@ def apply_changelog(base: DataFrame, changes: DataFrame,
     from pyspark.sql import functions as F
 
     value_cols = [c for c in changes.columns
-                  if c not in (key_col, ts_col, op_col)]
-    head = changes.groupBy(key_col).agg(
+                  if c not in ("url", "ts", "op")]
+    head = changes.groupBy("url").agg(
         F.max_by(
-            F.struct(F.col(op_col).alias("op"),
+            F.struct(F.col("op"),
                      *[F.col(c).alias(c) for c in value_cols]),
-            F.struct(F.col(ts_col), F.col(op_col))).alias("chg"))
-    joined = base.join(head, key_col, "full_outer")
+            F.struct(F.col("ts"), F.col("op"))).alias("chg"))
+    joined = base.join(head, "url", "full_outer")
     kept = joined.filter(
         F.col("chg").isNull() | (F.col("chg.op") != "D"))
     return kept.select(
-        key_col,
+        "url",
         *[F.when(F.col("chg").isNotNull(), F.col(f"chg.{c}"))
           .otherwise(F.col(c)).alias(c) for c in value_cols
           if c in base.columns] +

@@ -14,9 +14,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def compaction_plan(files: DataFrame, target_bytes: int,
-                    part_col: str = "part", path_col: str = "path",
-                    bytes_col: str = "bytes") -> DataFrame:
+def compaction_plan(files: DataFrame, target_bytes: int) -> DataFrame:
     """Byte-quota compaction groups per partition — which small files
     merge into which rewrite task (the planning half of Iceberg's
     rewrite_data_files / binpack). Files order by (bytes DESC, path)
@@ -53,15 +51,15 @@ def compaction_plan(files: DataFrame, target_bytes: int,
         # 0 would make the `before div 0` expression yield a null grp
         # for every file with no error (ADVICE r5) — fail loudly
         raise ValueError(f"target_bytes must be > 0, got {target_bytes}")
-    w = (Window.partitionBy(part_col)
-         .orderBy(F.col(bytes_col).desc(), F.col(path_col))
+    w = (Window.partitionBy("part")
+         .orderBy(F.col("bytes").desc(), F.col("path"))
          .rowsBetween(Window.unboundedPreceding, 0))
     filled = files.select(
-        F.col(part_col).alias("part"),
-        F.col(path_col).alias("path"),
-        F.col(bytes_col).cast("long").alias("bytes"),
-        (F.sum(F.col(bytes_col).cast("long")).over(w)
-         - F.col(bytes_col)).alias("before"),
+        F.col("part"),
+        F.col("path"),
+        F.col("bytes").cast("long").alias("bytes"),
+        (F.sum(F.col("bytes").cast("long")).over(w)
+         - F.col("bytes")).alias("before"),
     ).withColumn(
         "grp",
         F.expr(f"before div {int(target_bytes)}").cast("long"),

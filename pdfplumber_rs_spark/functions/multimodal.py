@@ -229,11 +229,6 @@ def _decode_error(e: Exception) -> str:
     return f"corrupt: {e}"
 
 
-def _media_columns(df: DataFrame, id_col: str, data_col: str) -> DataFrame:
-    return df.select(F.col(id_col).alias("media_id"),
-                     F.col(data_col).alias("data"))
-
-
 def _feature_rows(media_id: int, data: bytes | None):
     data = data or b""
     row = {"media_id": media_id, "n_bytes": len(data),
@@ -251,14 +246,13 @@ def _feature_rows(media_id: int, data: bytes | None):
     yield row
 
 
-def image_features(df: DataFrame, data_col: str = "data",
-                   id_col: str = "media_id") -> DataFrame:
+def image_features(df: DataFrame) -> DataFrame:
     """Per-row feature extraction over binary media columns; errors
     become a column, not task failures. PNG, baseline JPEG, GIF and
     BMP rows get format + dimensions from codec-free header parsing and
     a REAL pixel decode (pure Python, no codec library) → mean_luma;
     the FAKE test format decodes its own grid."""
-    return map_rows(_media_columns(df, id_col, data_col), _feature_rows,
+    return map_rows(df.select("media_id", "data"), _feature_rows,
                     FEATURE_SCHEMA)
 
 
@@ -287,8 +281,7 @@ def _dhash_rows(media_id: int, data: bytes | None):
     yield row
 
 
-def image_dhash(df: DataFrame, data_col: str = "data",
-                id_col: str = "media_id") -> DataFrame:
+def image_dhash(df: DataFrame) -> DataFrame:
     """Difference-hash (dHash) image fingerprint — the standard
     perceptual key for near-duplicate IMAGE dedup in multimodal
     training corpora: decode to grayscale (real PNG/JPEG/GIF/BMP
@@ -302,11 +295,11 @@ def image_dhash(df: DataFrame, data_col: str = "data",
 
     Per-row map, no shuffle; corrupt bytes degrade to a decode_error
     row. Returns (media_id, format, dhash_hi, dhash_lo, decode_error)."""
-    return map_rows(_media_columns(df, id_col, data_col), _dhash_rows,
+    return map_rows(df.select("media_id", "data"), _dhash_rows,
                     DHASH_SCHEMA)
 
 
-def dhash_dedup(hashes: DataFrame, id_col: str = "media_id") -> DataFrame:
+def dhash_dedup(hashes: DataFrame) -> DataFrame:
     """Near-duplicate IMAGE removal over dHash fingerprints: band the
     64-bit hash into four 16-bit chunks — any pair within Hamming
     distance 3 shares at least one identical band (pigeonhole, the
@@ -321,7 +314,7 @@ def dhash_dedup(hashes: DataFrame, id_col: str = "media_id") -> DataFrame:
     Input: image_dhash output (media_id, dhash_hi, dhash_lo). Returns
     (media_id, keep_id) for images to drop."""
     bands = hashes.select(
-        F.col(id_col).alias("media_id"),
+        F.col("media_id"),
         F.explode(F.array(
             F.struct(F.lit(0).alias("band"),
                      F.shiftright("dhash_hi", 16).alias("key")),
@@ -522,13 +515,12 @@ def parse_av_meta(data: bytes) -> dict | None:
     return None
 
 
-def make_wav(sample_rate: int, channels: int, n_samples: int,
-             bits: int = 16) -> bytes:
-    """Deterministic valid WAV container (silence payload)."""
-    frame = channels * bits // 8
+def make_wav(sample_rate: int, channels: int, n_samples: int) -> bytes:
+    """Deterministic valid 16-bit PCM WAV container (silence payload)."""
+    frame = channels * 2
     payload = b"\x00" * (n_samples * frame)
     fmt = struct.pack("<HHIIHH", 1, channels, sample_rate,
-                      sample_rate * frame, frame, bits)
+                      sample_rate * frame, frame, 16)
     body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
             + b"data" + struct.pack("<I", len(payload)) + payload)
     return b"RIFF" + struct.pack("<I", len(body)) + body
@@ -572,12 +564,11 @@ def _av_rows(media_id: int, data: bytes | None):
     yield row
 
 
-def av_features(df: DataFrame, data_col: str = "data",
-                id_col: str = "media_id") -> DataFrame:
+def av_features(df: DataFrame) -> DataFrame:
     """Per-row audio/video metadata over binary columns (WAV / MP4
     headers; codec-free). Errors become a column, never task
     failures — the poison-doc rule that matters at 10^12 rows."""
-    return map_rows(_media_columns(df, id_col, data_col), _av_rows,
+    return map_rows(df.select("media_id", "data"), _av_rows,
                     AV_SCHEMA)
 
 
@@ -622,8 +613,7 @@ def _resize_rows(media_id: int, data: bytes | None, *, max_side: int):
         yield {"media_id": media_id, "resize_error": str(e)}
 
 
-def resize_images(df: DataFrame, max_side: int,
-                  data_col: str = "data", id_col: str = "media_id") -> DataFrame:
+def resize_images(df: DataFrame, max_side: int) -> DataFrame:
     """Nearest-neighbor resize over binary image columns: PNG, baseline
     JPEG, GIF, and BMP all decode and re-encode in their own REAL
     format (decode_png / functions/jpeg.py / functions/gif.py /
@@ -631,12 +621,11 @@ def resize_images(df: DataFrame, max_side: int,
     Unrecognized or corrupt bytes surface a resize_error row.
     Vectorized per image via numpy index grids — no per-pixel Python
     loop."""
-    return map_rows(_media_columns(df, id_col, data_col), _resize_rows,
+    return map_rows(df.select("media_id", "data"), _resize_rows,
                     RESIZE_SCHEMA, max_side=max_side)
 
 
-def frame_sample_plan(df: DataFrame, every_s: float = 1.0,
-                      id_col: str = "media_id") -> DataFrame:
+def frame_sample_plan(df: DataFrame, every_s: float = 1.0) -> DataFrame:
     """Video frame-sampling plan (Spark-native, no decode): explode a
     timestamp grid per media row from its duration metadata."""
     n_frames = F.greatest(
@@ -644,7 +633,7 @@ def frame_sample_plan(df: DataFrame, every_s: float = 1.0,
     ).cast("int")
     return (
         df.select(
-            F.col(id_col).alias("media_id"),
+            F.col("media_id"),
             F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_idx"),
         )
         .select(

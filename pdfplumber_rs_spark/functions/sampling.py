@@ -19,8 +19,7 @@ from .text import token_count, word_tokens
 
 
 def sliding_chunks(docs: DataFrame, chunk_size: int = 128,
-                   stride: int = 96, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+                   stride: int = 96) -> DataFrame:
     """Per-document overlapping token windows — the context-window
     chunker for fine-tuning / embedding pipelines (HF `return_
     overflowing_tokens` semantics: starts at 0, stride, 2·stride, …
@@ -34,10 +33,10 @@ def sliding_chunks(docs: DataFrame, chunk_size: int = 128,
     a pure scan-side projection at any corpus size. Empty documents
     emit no rows. Returns (doc_id, chunk_id, start, n_tokens,
     chunk_md5) where chunk_md5 hashes the space-joined tokens."""
-    toks = word_tokens(F.col(text_col))
+    toks = word_tokens(F.col("text"))
     n = F.size(toks)
     out = (docs
-           .select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
+           .select(F.col("doc_id"), toks.alias("toks"))
            .filter(F.size("toks") > 0)
            .select(
                "doc_id", "toks",
@@ -54,9 +53,7 @@ def sliding_chunks(docs: DataFrame, chunk_size: int = 128,
     )
 
 
-def pack_sequences(docs: DataFrame, seq_len: int,
-                   id_col: str = "doc_id", text_col: str = "text",
-                   num_partitions: int | None = None) -> DataFrame:
+def pack_sequences(docs: DataFrame, seq_len: int) -> DataFrame:
     """Concat-and-chunk sequence packing — the LM-pretraining batching
     step: conceptually concatenate every document's tokens in id order
     and cut the stream into fixed `seq_len` training sequences. Emits
@@ -76,15 +73,14 @@ def pack_sequences(docs: DataFrame, seq_len: int,
     the OUTPUT size, never a cross join; zero-token docs are filtered
     before the sequence explode (the descending-F.sequence crash
     class)."""
-    cum = shard_by_token_budget(docs, seq_len, id_col, text_col,
-                                num_partitions)
+    cum = shard_by_token_budget(docs, seq_len)
     spans = cum.filter(F.col("n_tokens") > 0).select(
-        F.col(id_col),
+        F.col("doc_id"),
         (F.col("cum_tokens") - F.col("n_tokens")).alias("tok_start"),
         F.col("cum_tokens").alias("tok_end"),
     )
     seqs = spans.select(
-        id_col, "tok_start", "tok_end",
+        "doc_id", "tok_start", "tok_end",
         F.explode(F.sequence(
             F.floor(F.col("tok_start") / seq_len),
             F.floor((F.col("tok_end") - 1) / seq_len),
@@ -94,15 +90,14 @@ def pack_sequences(docs: DataFrame, seq_len: int,
     hi = F.least(F.col("tok_end"), (F.col("seq_id") + 1) * seq_len)
     return seqs.select(
         F.col("seq_id").cast("long").alias("seq_id"),
-        F.col(id_col),
+        F.col("doc_id"),
         (lo - F.col("tok_start")).cast("long").alias("doc_offset"),
         (lo - F.col("seq_id") * seq_len).cast("long").alias("seq_offset"),
         (hi - lo).cast("long").alias("n_tokens"),
     )
 
 
-def stratified_take(df: DataFrame, strata_col: str, quota: int,
-                    id_col: str = "doc_id") -> DataFrame:
+def stratified_take(df: DataFrame, strata_col: str, quota: int) -> DataFrame:
     """Keep at most `quota` rows per stratum, chosen by md5(id) order
     (a uniform, reproducible pseudo-random draw — the shape of
     language/domain mixing with per-stratum caps). One shuffle keyed on
@@ -110,7 +105,7 @@ def stratified_take(df: DataFrame, strata_col: str, quota: int,
     the rank filter. Output adds `sample_rank` (1-based within
     stratum)."""
     w = Window.partitionBy(strata_col).orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        F.md5(F.col("doc_id").cast("string")), F.col("doc_id"))
     return (
         df.withColumn("sample_rank", F.row_number().over(w))
         .filter(F.col("sample_rank") <= quota)
@@ -119,13 +114,12 @@ def stratified_take(df: DataFrame, strata_col: str, quota: int,
 
 def hash_split(df: DataFrame, key_col: str = "doc_id",
                weights: tuple[float, ...] = (0.98, 0.01, 0.01),
-               names: tuple[str, ...] = ("train", "val", "test"),
-               buckets: int = 10000) -> DataFrame:
+               names: tuple[str, ...] = ("train", "val", "test")) -> DataFrame:
     """Deterministic train/val/test assignment by key hash — the
     standard leakage-safe corpus split: every row with the same key
     lands in the same split on any cluster size, any partitioning, any
     rerun (no RNG state, no global sort). The key is hashed to one of
-    `buckets` buckets via the first 8 hex digits of md5 (uniform on
+    10,000 buckets via the first 8 hex digits of md5 (uniform on
     [0, 2^32)), and cumulative weight boundaries carve bucket ranges —
     so holdout membership survives incremental re-crawls: new
     documents never move old ones across splits.
@@ -142,11 +136,11 @@ def hash_split(df: DataFrame, key_col: str = "doc_id",
     bucket = F.pmod(
         F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8),
                16, 10).cast("long"),
-        F.lit(buckets))
+        F.lit(10000))
     edge = 0.0
     expr = None
     for w, name in zip(weights, names):
-        edge += w / total * buckets
+        edge += w / total * 10000
         cond = bucket < F.lit(int(round(edge)))
         expr = (F.when(cond, name) if expr is None
                 else expr.when(cond, name))
@@ -155,8 +149,7 @@ def hash_split(df: DataFrame, key_col: str = "doc_id",
 
 
 def mixture_plan(docs: DataFrame, weights: dict[str, float],
-                 budget_tokens: int, source_col: str = "source",
-                 text_col: str = "text") -> DataFrame:
+                 budget_tokens: int) -> DataFrame:
     """Data-recipe planning (the Pile / LLaMA mixture table): given
     target mixture weights per source and a total token budget,
     compute what each source must contribute and how many epochs
@@ -175,9 +168,9 @@ def mixture_plan(docs: DataFrame, weights: dict[str, float],
     no second pass."""
     total_w = float(sum(weights.values())) or 1.0
     wmap = F.create_map(*[F.lit(x) for kv in weights.items() for x in kv])
-    per = docs.groupBy(F.col(source_col).alias("source")).agg(
+    per = docs.groupBy(F.col("source")).agg(
         F.count("*").alias("n_docs"),
-        F.sum(token_count(F.col(text_col))).alias("n_tokens"),
+        F.sum(token_count(F.col("text"))).alias("n_tokens"),
     )
     w = F.coalesce(wmap[F.col("source")], F.lit(0.0))
     target = F.round(F.lit(float(budget_tokens)) * w / total_w, 0)
@@ -192,8 +185,8 @@ def mixture_plan(docs: DataFrame, weights: dict[str, float],
     )
 
 
-def epoch_shuffle(df: DataFrame, epoch: int = 0, n_shards: int = 8,
-                  id_col: str = "doc_id") -> DataFrame:
+def epoch_shuffle(df: DataFrame, epoch: int = 0,
+                  n_shards: int = 8) -> DataFrame:
     """Deterministic training-order shuffle: every epoch permutes the
     corpus by md5(id:epoch) — reproducible on any cluster size, any
     partitioning, any rerun (no RNG state), and uncorrelated across
@@ -212,19 +205,18 @@ def epoch_shuffle(df: DataFrame, epoch: int = 0, n_shards: int = 8,
     materializing a training order; writers emit one ordered shard
     file per partition. Nothing global: no orderBy over the corpus,
     no driver collect."""
-    key = F.md5(F.concat_ws(":", F.col(id_col).cast("string"),
+    key = F.md5(F.concat_ws(":", F.col("doc_id").cast("string"),
                             F.lit(str(epoch))))
     shard = F.pmod(F.conv(F.substring(key, 1, 8), 16, 10).cast("long"),
                    F.lit(n_shards))
-    w = Window.partitionBy("shard").orderBy("order_key", id_col)
-    return (df.select(F.col(id_col), key.alias("order_key"),
+    w = Window.partitionBy("shard").orderBy("order_key", "doc_id")
+    return (df.select(F.col("doc_id"), key.alias("order_key"),
                       shard.alias("shard"))
             .withColumn("pos", F.row_number().over(w).cast("long")))
 
 
-def temperature_sample(df: DataFrame, strata_col: str,
-                       alpha: float = 0.7, target: int = 1000,
-                       id_col: str = "doc_id") -> DataFrame:
+def temperature_sample(df: DataFrame, strata_col: str, alpha: float = 0.7,
+                       target: int = 1000) -> DataFrame:
     """Temperature-based mixture sampling (the mT5/XLM-R multilingual
     rebalancing rule, Conneau et al. 2020 §3.1): stratum s is drawn
     with probability p_s ∝ n_s^alpha — alpha < 1 UP-samples small
@@ -253,12 +245,12 @@ def temperature_sample(df: DataFrame, strata_col: str,
             ).alias("rate"),
         )
     )
-    u = (F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8),
+    u = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
                 16, 10).cast("double") / F.lit(4294967296.0))
     return (
         df.join(F.broadcast(rates), strata_col)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col(strata_col),
             F.round("rate", 6).alias("rate"),
             (u < F.col("rate")).alias("kept"),
@@ -267,8 +259,6 @@ def temperature_sample(df: DataFrame, strata_col: str,
 
 
 def shard_by_token_budget(docs: DataFrame, budget: int,
-                          id_col: str = "doc_id",
-                          text_col: str = "text",
                           num_partitions: int | None = None) -> DataFrame:
     """Assign documents (in deterministic id order) to contiguous
     shards of ~`budget` tokens: shard = floor(tokens_before / budget).
@@ -286,12 +276,12 @@ def shard_by_token_budget(docs: DataFrame, budget: int,
     spark = docs.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism * 2
     t = docs.select(
-        F.col(id_col), token_count(F.col(text_col)).alias("n_tokens"))
+        F.col("doc_id"), token_count(F.col("text")).alias("n_tokens"))
     part = (
-        t.repartitionByRange(n, id_col)
+        t.repartitionByRange(n, "doc_id")
         .withColumn("_pid", F.spark_partition_id())
     )
-    w_local = (Window.partitionBy("_pid").orderBy(id_col)
+    w_local = (Window.partitionBy("_pid").orderBy("doc_id")
                .rowsBetween(Window.unboundedPreceding, 0))
     local = part.withColumn("_local_cum", F.sum("n_tokens").over(w_local))
     # one row per partition → a single-partition window over ~n rows
@@ -305,7 +295,7 @@ def shard_by_token_budget(docs: DataFrame, budget: int,
         .withColumn("cum_tokens", F.col("_local_cum") + F.col("_offset"))
     )
     return cum.select(
-        id_col,
+        "doc_id",
         F.col("n_tokens").cast("long").alias("n_tokens"),
         F.col("cum_tokens").cast("long").alias("cum_tokens"),
         F.floor((F.col("cum_tokens") - F.col("n_tokens"))
@@ -313,9 +303,8 @@ def shard_by_token_budget(docs: DataFrame, budget: int,
     )
 
 
-def dsir_weights(raw: DataFrame, target: DataFrame, n_buckets: int = 64,
-                 id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def dsir_weights(raw: DataFrame, target: DataFrame,
+                 n_buckets: int = 64) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, arXiv:2302.03169):
     score every raw-corpus document by how target-like it looks under
     hashed unigram bag-of-words language models, the importance-
@@ -341,9 +330,9 @@ def dsir_weights(raw: DataFrame, target: DataFrame, n_buckets: int = 64,
     float sum is over ≤ n_buckets grouped terms per doc, so 6dp
     rounding is far outside reassociation error."""
     def toks(df):
-        t = F.filter(F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
+        t = F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
                      lambda x: x != "")
-        return df.select(F.col(id_col).alias("doc_id"),
+        return df.select(F.col("doc_id"),
                          F.explode(t).alias("tok"))
 
     def bucket(col):

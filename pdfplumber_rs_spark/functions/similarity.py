@@ -36,13 +36,13 @@ def cosine(a: Column, b: Column) -> Column:
     )
 
 
-def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame,
+                k: int = 5) -> DataFrame:
     """Exact top-k neighbors per query (excluding self): broadcast the
     query side, rank by (cosine desc, neighbor id asc) — deterministic
     under ties. Columns: (query_id, neighbor_id, cos_sim, rank)."""
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("cvec"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                      F.col("embedding").alias("cvec"))
     # single-file (one row group) corpora scan as ONE task, serializing
     # the per-pair dot-product fold; spread the corpus first (guide
     # §2.5 "input skew: repartition immediately after the read") —
@@ -52,8 +52,8 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     sc = corpus.sparkSession.sparkContext
     if c.rdd.getNumPartitions() < sc.defaultParallelism:
         c = c.repartition(sc.defaultParallelism, F.col("neighbor_id"))
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qvec"))
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("qvec"))
     joined = c.crossJoin(F.broadcast(q)).filter(
         F.col("neighbor_id") != F.col("query_id")
     )
@@ -106,19 +106,17 @@ def _hyperplane_sign(vec: Column, plane: int, dim: int) -> Column:
     return F.when(s >= 0, F.lit(1)).otherwise(F.lit(0))
 
 
-def lsh_buckets(df: DataFrame, dim: int, n_planes: int = 8,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def lsh_buckets(df: DataFrame, dim: int, n_planes: int = 8) -> DataFrame:
     """(id, bucket): bucket = integer of n_planes sign bits. At scale
     this is the partition key for ANN probing (same-bucket join)."""
     bucket = F.lit(0)
     for p in range(n_planes):
-        bucket = bucket * 2 + _hyperplane_sign(F.col(vec_col), p, dim)
-    return df.select(F.col(id_col).alias("vec_id"), bucket.alias("bucket"))
+        bucket = bucket * 2 + _hyperplane_sign(F.col("embedding"), p, dim)
+    return df.select("vec_id", bucket.alias("bucket"))
 
 
 def embedding_dedup(df: DataFrame, dim: int, threshold: float = 0.999,
-                    n_planes: int = 8, id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
+                    n_planes: int = 8) -> DataFrame:
     """Embedding-cosine near-duplicate removal: one shuffle on the LSH
     bucket, exact cosine ≥ threshold against the bucket REPRESENTATIVE
     only (vectors with cosine ≈ 1 share every hyperplane sign, so true
@@ -136,24 +134,22 @@ def embedding_dedup(df: DataFrame, dim: int, threshold: float = 0.999,
 
     Returns (vec_id, keep_id) for vectors that should be dropped,
     keep_id the bucket representative's id."""
-    members = _bucket_members(df, dim, n_planes, id_col, vec_col)
+    members = _bucket_members(df, dim, n_planes)
     near = members.filter(
         cosine(F.col("vec"), F.col("rep_vec")) >= threshold)
     return near.select(F.col("id").alias("vec_id"),
                        F.col("rep_id").alias("keep_id"))
 
 
-def _bucket_members(df: DataFrame, dim: int, n_planes: int,
-                    id_col: str, vec_col: str) -> DataFrame:
+def _bucket_members(df: DataFrame, dim: int, n_planes: int) -> DataFrame:
     """The candidate set embedding_dedup scores: one row per
     NON-representative bucket member, carrying the bucket
     representative's id and vector. |candidates| = |rows| - |buckets| —
     linear by construction (asserted by the planted mega-cluster test),
     never the O(B²) pair set."""
-    b = lsh_buckets(df, dim, n_planes, id_col, vec_col) \
-        .withColumnRenamed("vec_id", "id")
-    v = df.select(F.col(id_col).alias("id"),
-                  F.col(vec_col).alias("vec")).join(b, "id")
+    b = lsh_buckets(df, dim, n_planes).withColumnRenamed("vec_id", "id")
+    v = df.select(F.col("vec_id").alias("id"),
+                  F.col("embedding").alias("vec")).join(b, "id")
     # representative via window aggregates instead of agg + self-join:
     # the join's two branches were separate physical subtrees, so the
     # O(planes) bucket-signature fold ran twice per vector (round-6,
@@ -170,9 +166,7 @@ def _bucket_members(df: DataFrame, dim: int, n_planes: int,
     )
 
 
-def ivf_assign(df: DataFrame, centroids: DataFrame,
-               id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
+def ivf_assign(df: DataFrame, centroids: DataFrame) -> DataFrame:
     """IVF coarse quantization: (vec_id, cell) = nearest centroid by
     cosine (4dp; ties → lowest cell id). Centroids are broadcast (they
     are tiny by construction), scoring happens map-side, and max_by
@@ -181,7 +175,7 @@ def ivf_assign(df: DataFrame, centroids: DataFrame,
     10^12 rows."""
     c = centroids.select(F.col("cell"), F.col("cvec"))
     scored = (
-        df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"))
+        df.select(F.col("vec_id"), F.col("embedding").alias("vec"))
         .crossJoin(F.broadcast(c))
         .select(
             "vec_id",
@@ -196,8 +190,7 @@ def ivf_assign(df: DataFrame, centroids: DataFrame,
 
 
 def ivf_train_codebook(corpus: DataFrame, n_cells: int = 8,
-                       n_iter: int = 2, id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> DataFrame:
+                       n_iter: int = 2) -> DataFrame:
     """Lloyd (k-means) refinement of the IVF coarse codebook, pure
     DataFrame ops — the production replacement for the deterministic
     first-k seed when embedding mass is skewed (bad seeds → lopsided
@@ -212,14 +205,14 @@ def ivf_train_codebook(corpus: DataFrame, n_cells: int = 8,
     Cells that capture no members keep their previous centroid.
     Deterministic end to end (seeding, tie-breaks, and means are all
     order-independent). Returns (cell, cvec)."""
-    seed = corpus.filter(F.col(id_col) < n_cells).select(
-        F.col(id_col).cast("int").alias("cell"),
-        F.col(vec_col).alias("cvec"))
+    seed = corpus.filter(F.col("vec_id") < n_cells).select(
+        F.col("vec_id").cast("int").alias("cell"),
+        F.col("embedding").alias("cvec"))
     cents = seed
-    v = corpus.select(F.col(id_col).alias("vec_id"),
-                      F.col(vec_col).alias("vec"))
+    v = corpus.select(F.col("vec_id"),
+                      F.col("embedding").alias("vec"))
     for _ in range(n_iter):
-        assigned = ivf_assign(corpus, cents, id_col, vec_col)
+        assigned = ivf_assign(corpus, cents)
         comp = (
             v.join(assigned, "vec_id")
             .select("cell", F.posexplode("vec").alias("pos", "val"))
@@ -240,9 +233,7 @@ def ivf_train_codebook(corpus: DataFrame, n_cells: int = 8,
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, n_cells: int = 8,
-             nprobe: int = 2, k: int = 5, id_col: str = "vec_id",
-             vec_col: str = "embedding",
-             train_iters: int = 0) -> DataFrame:
+             nprobe: int = 2, k: int = 5, train_iters: int = 0) -> DataFrame:
     """IVF-flat approximate top-k (the inverted-list ANN shape, FAISS
     IVF semantics): corpus vectors are binned to their nearest coarse
     centroid once; each query probes only its nprobe closest cells and
@@ -259,20 +250,19 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, n_cells: int = 8,
     (the inverted lists), broadcast query probes — is identical in
     both modes and is the part that must scale."""
     if train_iters > 0:
-        cents = ivf_train_codebook(corpus, n_cells, train_iters,
-                                   id_col, vec_col)
+        cents = ivf_train_codebook(corpus, n_cells, train_iters)
     else:
-        cents = corpus.filter(F.col(id_col) < n_cells).select(
-            F.col(id_col).alias("cell"), F.col(vec_col).alias("cvec"))
+        cents = corpus.filter(F.col("vec_id") < n_cells).select(
+            F.col("vec_id").alias("cell"), F.col("embedding").alias("cvec"))
     # inverted lists: one cell per corpus vector
-    assigned = ivf_assign(corpus, cents, id_col, vec_col)
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("cvec2")) \
+    assigned = ivf_assign(corpus, cents)
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                      F.col("embedding").alias("cvec2")) \
         .join(assigned.withColumnRenamed("vec_id", "neighbor_id"),
               "neighbor_id")
     # probes: nprobe cells per query
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qvec"))
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("qvec"))
     qscored = q.crossJoin(F.broadcast(cents)).select(
         "query_id", "qvec", "cell",
         cosine(F.col("qvec"), F.col("cvec")).alias("cos_c"))
@@ -294,7 +284,6 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, n_cells: int = 8,
 
 
 def _semdedup_assign(corpus: DataFrame, n_cells: int | None,
-                     id_col: str, vec_col: str, train_iters: int,
                      target_cell_size: int) -> tuple[DataFrame, int]:
     """Shared coarse-clustering front end for semdedup and
     semdedup_cell_stats. n_cells=None → auto-size the codebook from
@@ -304,28 +293,21 @@ def _semdedup_assign(corpus: DataFrame, n_cells: int | None,
     if n_cells is None:
         n = corpus.count()
         n_cells = max(2, -(-n // max(1, target_cell_size)))
-    cents = (ivf_train_codebook(corpus, n_cells, train_iters,
-                                id_col, vec_col)
-             if train_iters > 0 else
-             corpus.filter(F.col(id_col) < n_cells).select(
-                 F.col(id_col).cast("int").alias("cell"),
-                 F.col(vec_col).alias("cvec")))
-    return ivf_assign(corpus, cents, id_col, vec_col), n_cells
+    cents = corpus.filter(F.col("vec_id") < n_cells).select(
+        F.col("vec_id").cast("int").alias("cell"),
+        F.col("embedding").alias("cvec"))
+    return ivf_assign(corpus, cents), n_cells
 
 
-def semdedup_cell_stats(corpus: DataFrame, n_cells: int | None = 8,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding",
-                        train_iters: int = 0,
-                        target_cell_size: int = 10_000) -> DataFrame:
+def semdedup_cell_stats(corpus: DataFrame,
+                        n_cells: int | None = 8) -> DataFrame:
     """Per-cell fan-out forecast for semdedup: (cell, n_rows, n_pairs)
     where n_pairs = n_rows·(n_rows−1)/2 is exactly the in-cell
     self-join row count semdedup would materialize. n_cells rows total
     — cheap to run (one assignment pass + one tiny agg) BEFORE
     committing a 10^12-row corpus to the quadratic stage, and the
     basis of semdedup's max_cell_rows guard."""
-    assigned, _ = _semdedup_assign(corpus, n_cells, id_col, vec_col,
-                                   train_iters, target_cell_size)
+    assigned, _ = _semdedup_assign(corpus, n_cells, 10_000)
     return assigned.groupBy("cell").agg(
         F.count("*").alias("n_rows"),
         (F.count("*") * (F.count("*") - 1) / 2).cast("long")
@@ -333,11 +315,7 @@ def semdedup_cell_stats(corpus: DataFrame, n_cells: int | None = 8,
 
 
 def semdedup(corpus: DataFrame, n_cells: int | None = 8,
-             threshold: float = 0.95, id_col: str = "vec_id",
-             vec_col: str = "embedding",
-             train_iters: int = 0,
-             target_cell_size: int = 10_000,
-             max_cell_rows: int | None = None,
+             threshold: float = 0.95, max_cell_rows: int | None = None,
              on_mega_cell: str = "error") -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication by clustering embeddings with k-means and dropping,
@@ -349,22 +327,21 @@ def semdedup(corpus: DataFrame, n_cells: int | None = 8,
     for stable comparison.
 
     Scale shape: clustering reuses the IVF coarse path — broadcast
-    centroids (seed = first n_cells ids when train_iters=0, else
-    Lloyd-refined), map-side max_by assignment, then ONE shuffle on
-    the cell key for the within-cluster self-join. The paper's whole
+    centroids (seed = the first n_cells ids), map-side max_by
+    assignment, then ONE shuffle on the cell key for the
+    within-cluster self-join. The paper's whole
     point is that k grows with the corpus so clusters stay small
     (N/k ≈ 10⁴ at their scale); the in-cluster pair set is O(k·(N/k)²)
     = O(N²/k). Two guards for that quadratic (VERDICT r4 #3):
 
-    - ``n_cells=None`` auto-sizes the codebook to ~target_cell_size
-      vectors per cell (one count() action) — the paper's own knob,
+    - ``n_cells=None`` auto-sizes the codebook to ~10,000 vectors
+      per cell (one count() action) — the paper's own knob,
       turned automatically instead of trusting a fixture constant.
     - ``max_cell_rows`` is a HARD per-cell fan-out guard against
       ASSIGNMENT skew, which auto-sizing cannot fix (a near-dup-heavy
       corpus piles most vectors onto one centroid no matter how many
-      cells exist — Lloyd training spreads them, but is not a bound).
-      When set, per-cell counts (an n_cells-row agg, collected —
-      driver-side rows = n_cells, never corpus-sized) are checked
+      cells exist). When set, per-cell counts (an n_cells-row agg,
+      collected — driver-side rows = n_cells, never corpus-sized) are checked
       BEFORE the self-join: ``on_mega_cell="error"`` raises with the
       offending cells named (fail fast, no quadratic stage launched);
       ``"skip"`` excludes those cells from dedup via a broadcast
@@ -376,9 +353,7 @@ def semdedup(corpus: DataFrame, n_cells: int | None = 8,
         raise ValueError(
             f"on_mega_cell must be 'error' or 'skip', got "
             f"{on_mega_cell!r}")
-    assigned, n_cells = _semdedup_assign(corpus, n_cells, id_col,
-                                         vec_col, train_iters,
-                                         target_cell_size)
+    assigned, n_cells = _semdedup_assign(corpus, n_cells, 10_000)
     if max_cell_rows is not None:
         # the guard's count() action would otherwise recompute the
         # whole centroid-scoring assignment pass a second time when
@@ -395,8 +370,8 @@ def semdedup(corpus: DataFrame, n_cells: int | None = 8,
                 raise ValueError(
                     f"semdedup: {len(mega)} cell(s) exceed max_cell_rows="
                     f"{max_cell_rows} ({detail}); raise n_cells / use "
-                    f"n_cells=None auto-sizing, add train_iters to spread "
-                    f"skewed mass, or pass on_mega_cell='skip'")
+                    f"n_cells=None auto-sizing, or pass "
+                    f"on_mega_cell='skip'")
             import warnings
             warnings.warn(
                 f"semdedup: skipping {len(mega)} mega-cell(s) over "
@@ -408,9 +383,8 @@ def semdedup(corpus: DataFrame, n_cells: int | None = 8,
                                      "left_anti")
     # both sides of the in-cell self-join read the assigned table;
     # persist so the centroid-scoring pass runs once, not twice
-    v = corpus.select(F.col(id_col).alias("vec_id"),
-                      F.col(vec_col).alias("vec")).join(assigned, "vec_id") \
-        .persist()
+    v = corpus.select("vec_id", F.col("embedding").alias("vec")) \
+        .join(assigned, "vec_id").persist()
     left = v.select(F.col("cell"), F.col("vec_id"), F.col("vec"))
     right = v.select(F.col("cell"), F.col("vec_id").alias("j_id"),
                      F.col("vec").alias("j_vec"))
@@ -422,38 +396,35 @@ def semdedup(corpus: DataFrame, n_cells: int | None = 8,
 
 
 def _multi_buckets(df: DataFrame, dim: int, n_planes: int, n_tables: int,
-                   id_col: str, vec_col: str, out_id: str) -> DataFrame:
+                   out_id: str) -> DataFrame:
     """(out_id, table, bucket) memberships over n_tables independent
     hyperplane sets (table t uses plane seeds t*n_planes..)."""
     buckets = []
     for t in range(n_tables):
         b = F.lit(0)
         for p in range(n_planes):
-            b = b * 2 + _hyperplane_sign(F.col(vec_col),
+            b = b * 2 + _hyperplane_sign(F.col("embedding"),
                                          t * n_planes + p, dim)
         buckets.append(F.struct(F.lit(t).alias("table"), b.alias("bucket")))
     return df.select(
-        F.col(id_col).alias(out_id),
+        F.col("vec_id").alias(out_id),
         F.explode(F.array(*buckets)).alias("tb"),
     ).select(out_id, "tb.table", "tb.bucket")
 
 
 def lsh_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
-             n_planes: int = 4, n_tables: int = 1, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
+             n_planes: int = 4, n_tables: int = 1) -> DataFrame:
     """Approximate top-k: candidates share the query's LSH bucket in ANY
     of n_tables independent hash tables (the standard recall lever —
     recall grows with L at L× the candidate cost), then exact cosine
     rank over the deduplicated candidate set. One shuffle on
     (table, bucket); corpus rows fan out n_tables ways."""
-    cb = _multi_buckets(corpus, dim, n_planes, n_tables, id_col, vec_col,
-                        "neighbor_id")
-    qb = _multi_buckets(queries, dim, n_planes, n_tables, id_col, vec_col,
-                        "query_id")
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("cvec")).join(cb, "neighbor_id")
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qvec")).join(qb, "query_id")
+    cb = _multi_buckets(corpus, dim, n_planes, n_tables, "neighbor_id")
+    qb = _multi_buckets(queries, dim, n_planes, n_tables, "query_id")
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"),
+                      F.col("embedding").alias("cvec")).join(cb, "neighbor_id")
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("qvec")).join(qb, "query_id")
     joined = c.join(F.broadcast(q), ["table", "bucket"]).filter(
         F.col("neighbor_id") != F.col("query_id")
     )
@@ -473,9 +444,7 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     )
 
 
-def jl_project(df: DataFrame, dim: int, out_dim: int = 8,
-               id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
+def jl_project(df: DataFrame, dim: int, out_dim: int = 8) -> DataFrame:
     """Johnson-Lindenstrauss sparse sign projection (Achlioptas 2003):
     reduce dim-d embeddings to out_dim components with ±1 random-sign
     rows, scaled 1/√out_dim — the cheap dimensionality cut before ANN
@@ -490,19 +459,17 @@ def jl_project(df: DataFrame, dim: int, out_dim: int = 8,
     comps = [
         F.round(
             F.aggregate(
-                F.zip_with(F.col(vec_col), _plane_weights(j, dim),
+                F.zip_with(F.col("embedding"), _plane_weights(j, dim),
                            lambda x, w: x * w),
                 F.lit(0.0), lambda acc, v: acc + v)
             / float(out_dim) ** 0.5, 6)
         for j in range(out_dim)
     ]
-    return df.select(F.col(id_col).alias("vec_id"),
+    return df.select(F.col("vec_id"),
                      F.array(*comps).alias("proj"))
 
 
-def quantize_embeddings(df: DataFrame, dim: int,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
+def quantize_embeddings(df: DataFrame, dim: int) -> DataFrame:
     """Int8 scalar quantization with GLOBAL per-dimension min/max —
     the 4x storage cut an ANN index takes before sharding to object
     storage: q[d] = round(255 · (x[d] − min_d) / (max_d − min_d)),
@@ -521,7 +488,7 @@ def quantize_embeddings(df: DataFrame, dim: int,
     elements). Explicit casts make the IEEE sequence identical
     everywhere."""
     exploded = df.select(
-        F.posexplode(F.col(vec_col)).alias("pos", "v")
+        F.posexplode(F.col("embedding")).alias("pos", "v")
     ).select("pos", F.col("v").cast("double").alias("val"))
     stats = (exploded.groupBy("pos")
              .agg(F.min("val").alias("mn"), F.max("val").alias("mx")))
@@ -532,9 +499,9 @@ def quantize_embeddings(df: DataFrame, dim: int,
                     lambda s: s["mx"]).alias("maxs"))
     return (df.crossJoin(F.broadcast(packed))
             .select(
-                F.col(id_col).alias("vec_id"),
+                F.col("vec_id"),
                 F.zip_with(
-                    F.col(vec_col),
+                    F.col("embedding"),
                     F.zip_with(F.col("mins"), F.col("maxs"),
                                lambda mn, mx: F.struct(mn.alias("mn"),
                                                        mx.alias("mx"))),

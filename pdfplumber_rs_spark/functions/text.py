@@ -93,8 +93,7 @@ def bpe_token_count(text: Column) -> Column:
     return F.size(F.filter(toks, lambda t: F.trim(t) != ""))
 
 
-def winnow_fingerprints(df, k: int = 8, window: int = 4,
-                        id_col: str = "doc_id", text_col: str = "text"):
+def winnow_fingerprints(df, k: int = 8, window: int = 4):
     """Winnowing document fingerprints (rolling hash): normalize to a
     lowercase alnum string, hash every k-gram (portable md5-prefix),
     take the minimum hash of each full window of `window` consecutive
@@ -103,8 +102,8 @@ def winnow_fingerprints(df, k: int = 8, window: int = 4,
     posexplode over a position sequence + a sliding window MIN.
     Returns (doc_id, fp) distinct rows."""
     d = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]+", "")
+        F.col("doc_id"),
+        F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", "")
         .alias("s"),
     ).filter(F.length("s") >= k + window - 1)
     grams = d.select(
@@ -169,7 +168,7 @@ def quality_score(text: Column) -> Column:
     )
 
 
-def c4_clean(df, id_col: str = "doc_id", text_col: str = "text"):
+def c4_clean(df):
     """C4-style cleaning (Raffel et al. 2020, "Exploring the Limits of
     Transfer Learning…", §2.2 heuristics), the canonical web-corpus
     line+document filter, as pure Column expressions:
@@ -186,8 +185,9 @@ def c4_clean(df, id_col: str = "doc_id", text_col: str = "text"):
     (trimmed), empty string when nothing survives. One narrow
     projection, no shuffle, whole-stage codegen at any scale; the
     regexes live in the Java∩RE2 dialect so the same logic runs as the
-    SQL oracle."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    SQL oracle. The line filter and the cleaned text are bound as
+    columns, so each is evaluated once per row, not once per use."""
+    t = F.coalesce(F.col("text"), F.lit(""))
     lines = F.split(t, "\n")
     kept_lines = F.filter(
         lines,
@@ -196,26 +196,28 @@ def c4_clean(df, id_col: str = "doc_id", text_col: str = "text"):
                            lambda w: w != "")) >= 3)
         & ~F.contains(F.lower(l), F.lit("javascript")),
     )
-    clean = F.array_join(F.transform(kept_lines, F.trim), "\n")
-    n_sentences = F.length(F.regexp_replace(clean, r"[^.!?]", ""))
-    low = F.lower(t)
+    bound = df.select(
+        "doc_id", lines.alias("lines"), kept_lines.alias("kept_lines"),
+        F.lower(t).alias("low"),
+    ).withColumn(
+        "clean", F.array_join(F.transform("kept_lines", F.trim), "\n"))
+    n_sentences = F.length(F.regexp_replace("clean", r"[^.!?]", ""))
     kept = (
         (n_sentences >= 5)
-        & ~F.contains(low, F.lit("lorem ipsum"))
-        & ~F.contains(low, F.lit("{"))
+        & ~F.contains("low", F.lit("lorem ipsum"))
+        & ~F.contains("low", F.lit("{"))
     )
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(lines).cast("long").alias("n_lines"),
-        F.size(kept_lines).cast("long").alias("n_kept_lines"),
+    return bound.select(
+        "doc_id",
+        F.size("lines").cast("long").alias("n_lines"),
+        F.size("kept_lines").cast("long").alias("n_kept_lines"),
         n_sentences.cast("long").alias("n_sentences"),
         kept.alias("kept"),
-        F.md5(clean).alias("clean_md5"),
+        F.md5("clean").alias("clean_md5"),
     )
 
 
-def badwords_filter(df, badwords: tuple[str, ...] | list[str] = (),
-                    id_col: str = "doc_id", text_col: str = "text"):
+def badwords_filter(df, badwords: tuple[str, ...] | list[str] = ()):
     """C4 §2.2's other document gate (Raffel et al. 2020): drop any
     page containing a word from a blocklist (C4 uses the public
     "List of Dirty, Naughty, Obscene..." word list — supply it via
@@ -247,18 +249,17 @@ def badwords_filter(df, badwords: tuple[str, ...] | list[str] = (),
                 f"tokens: {w!r}")
     lit = F.array(*[F.lit(w) for w in bad_entries])
     bad = F.filter(
-        word_tokens(F.coalesce(F.col(text_col), F.lit(""))),
+        word_tokens(F.coalesce(F.col("text"), F.lit(""))),
         lambda t: F.array_contains(lit, t))
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.size(bad).cast("long").alias("n_bad_tokens"),
         F.try_element_at(bad, F.lit(1)).alias("first_bad"),
         (F.size(bad) == 0).alias("kept"),
     )
 
 
-def repetition_features(df, id_col: str = "doc_id",
-                        text_col: str = "text"):
+def repetition_features(df):
     """Gopher/MassiveText-style within-document repetition signals:
     token count, distinct-token fraction, and the occurrence count of
     the most frequent word bigram. Plan: explode tokens/bigrams →
@@ -268,9 +269,9 @@ def repetition_features(df, id_col: str = "doc_id",
     from pyspark.sql import functions as F
 
     toks = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
+            F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
                      lambda t: t != "")
         ).alias("tok"),
     )
@@ -280,8 +281,8 @@ def repetition_features(df, id_col: str = "doc_id",
     )
     # bigrams from the token ARRAY (order-stable, no window needed)
     arr = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.filter(F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
+        F.col("doc_id"),
+        F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
                  lambda t: t != "").alias("l"),
     )
     # Guard: sequence(0, -1) in Spark auto-steps DOWN and yields [0, -1],
@@ -315,7 +316,7 @@ def repetition_features(df, id_col: str = "doc_id",
     )
 
 
-def unigram_logprob(df, id_col: str = "doc_id", text_col: str = "text"):
+def unigram_logprob(df):
     """CCNet-style perplexity proxy: mean negative log-probability of a
     document's tokens under the corpus's own unigram distribution —
     high scores flag rare-token/garbage documents the way a KenLM
@@ -331,9 +332,9 @@ def unigram_logprob(df, id_col: str = "doc_id", text_col: str = "text"):
     from pyspark.sql import functions as F
 
     toks = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
+            F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
                      lambda t: t != "")
         ).alias("tok"),
     )
@@ -349,7 +350,7 @@ def unigram_logprob(df, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
-def bigram_logprob(df, id_col: str = "doc_id", text_col: str = "text"):
+def bigram_logprob(df):
     """Bigram-LM perplexity proxy (the CCNet/KenLM filtering stage one
     order up from unigram_logprob): mean negative log-probability of a
     document's bigrams under the corpus's own add-one-smoothed bigram
@@ -367,8 +368,8 @@ def bigram_logprob(df, id_col: str = "doc_id", text_col: str = "text"):
     from pyspark.sql import functions as F
 
     arr = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.filter(F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
+        F.col("doc_id"),
+        F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
                  lambda t: t != "").alias("l"),
     )
     # sequence(0, -1) steps DOWN — short docs must yield empty arrays
@@ -387,7 +388,7 @@ def bigram_logprob(df, id_col: str = "doc_id", text_col: str = "text"):
     bi_counts = bi.groupBy("w1", "w2").agg(F.count("*").alias("cb"))
     toks = df.select(
         F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
+            F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
                      lambda t: t != "")).alias("tok"))
     uni = toks.groupBy("tok").agg(F.count("*").alias("cu"))
     vsize = uni.agg(F.count("*").cast("double").alias("v"))
@@ -406,7 +407,7 @@ def bigram_logprob(df, id_col: str = "doc_id", text_col: str = "text"):
         F.round(F.avg("nlp"), 6).alias("neg_logprob"),
     )
     return (
-        df.select(F.col(id_col).alias("doc_id"))
+        df.select(F.col("doc_id"))
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",
@@ -424,12 +425,11 @@ def fingerprint(text: Column) -> Column:
     return F.md5(norm)
 
 
-def bm25_topk(df, terms: list[str], topk: int = 10,
-              k1: float = 1.2, b: float = 0.75,
-              id_col: str = "doc_id", text_col: str = "text"):
+def bm25_topk(df, terms: list[str], topk: int = 10):
     """BM25 (Robertson/Lucene variant) document retrieval for a fixed
     query-term set: score = Σ_t idf(t) · tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl))
-    with idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5)) — the standard
+    with k1 = 1.2, b = 0.75 and idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5))
+    — the standard
     relevance ranking a training-data pipeline uses for targeted
     corpus search (e.g. pulling benchmark-adjacent documents for
     contamination review).
@@ -445,8 +445,8 @@ def bm25_topk(df, terms: list[str], topk: int = 10,
     from pyspark.sql import DataFrame  # noqa: F401 (signature docs)
 
     d = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.filter(F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+        F.col("doc_id"),
+        F.filter(F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
                          r"[^a-z0-9]+"),
                  lambda t: t != "").alias("toks"),
     )
@@ -475,9 +475,9 @@ def bm25_topk(df, terms: list[str], topk: int = 10,
         .join(lens.crossJoin(F.broadcast(stats)), "doc_id")
         .select(
             "doc_id",
-            (F.col("idf") * F.col("tf") * (k1 + 1.0)
+            (F.col("idf") * F.col("tf") * 2.2  # k1 + 1, k1 = 1.2
              / (F.col("tf")
-                + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))))
+                + 1.2 * (0.25 + 0.75 * F.col("dl") / F.col("avgdl"))))
             .alias("s"),
         )
         .groupBy("doc_id").agg(F.round(F.sum("s"), 6).alias("score"))
@@ -499,7 +499,7 @@ SCRIPT_PATTERNS = {
 }
 
 
-def script_detect(df, id_col: str = "doc_id", text_col: str = "text"):
+def script_detect(df):
     """Writing-system detection — the script-mix pass that runs beside
     (and sanity-checks) language ID in multilingual pipelines: per-doc
     character counts for seven Unicode script classes plus the
@@ -510,9 +510,9 @@ def script_detect(df, id_col: str = "doc_id", text_col: str = "text"):
     any corpus size. Mixed-script documents (a CJK page quoting a
     Latin URL, Cyrillic spam injected into English text) surface as
     multi-nonzero rows, the usual trigger for a closer quality look."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     counted = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.regexp_count(t, F.lit(pat)).alias(f"n_{name}")
           for name, pat in SCRIPT_PATTERNS.items()],
     )
@@ -524,9 +524,7 @@ def script_detect(df, id_col: str = "doc_id", text_col: str = "text"):
     return counted.withColumn("dominant", dom)
 
 
-def tfidf_pairs(df, threshold: float = 0.5, top_terms: int = 20,
-                max_df_frac: float = 0.5,
-                id_col: str = "doc_id", text_col: str = "text"):
+def tfidf_pairs(df, threshold: float = 0.5, top_terms: int = 20):
     """All-pairs tf-idf cosine similarity above a threshold — the
     sparse-vector complement to minhash/simhash near-dup detection
     (catches rewordings those miss, since weights survive word
@@ -536,7 +534,7 @@ def tfidf_pairs(df, threshold: float = 0.5, top_terms: int = 20,
     share a surviving term.
 
     The three scale valves, each a pure pre-join filter:
-    - stop-term drop: terms with df > max_df_frac·N generate the
+    - stop-term drop: terms with df > N/2 generate the
       quadratic posting-list blowup and carry ~zero idf — dropped.
     - singleton drop: df < 2 terms can never pair — dropped.
     - per-doc top-`top_terms` pruning by weight (ties → term order):
@@ -551,8 +549,8 @@ def tfidf_pairs(df, threshold: float = 0.5, top_terms: int = 20,
     it parallelizes), one term-keyed self-join + pair hash-agg.
     Returns (doc_a, doc_b, sim) with sim rounded to 6dp."""
     postings = (
-        df.select(F.col(id_col).alias("doc_id"),
-                  F.explode(word_tokens(F.coalesce(F.col(text_col),
+        df.select(F.col("doc_id"),
+                  F.explode(word_tokens(F.coalesce(F.col("text"),
                                                    F.lit("")))).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").cast("double").alias("tf"))
@@ -563,7 +561,7 @@ def tfidf_pairs(df, threshold: float = 0.5, top_terms: int = 20,
         .agg(F.count("*").cast("double").alias("df_t"))
         .crossJoin(F.broadcast(n_docs))
         .filter((F.col("df_t") >= 2)
-                & (F.col("df_t") <= max_df_frac * F.col("n_docs")))
+                & (F.col("df_t") <= 0.5 * F.col("n_docs")))
         .select("term",
                 F.log(F.col("n_docs") / F.col("df_t")).alias("idf"))
     )
@@ -597,8 +595,7 @@ def tfidf_pairs(df, threshold: float = 0.5, top_terms: int = 20,
 BPE_SEP = "\x01"
 
 
-def bpe_merges(df, n_merges: int = 5, id_col: str = "doc_id",
-               text_col: str = "text"):
+def bpe_merges(df, n_merges: int = 5):
     """BPE vocabulary induction (Sennrich et al. 2016) as a pure
     DataFrame program — the tokenizer-training first stage: start from
     the word-frequency table with character symbols, then repeat
@@ -622,7 +619,7 @@ def bpe_merges(df, n_merges: int = 5, id_col: str = "doc_id",
     from pyspark.sql import functions as F
 
     words = (
-        df.select(F.explode(word_tokens(F.col(text_col))).alias("w"))
+        df.select(F.explode(word_tokens(F.col("text"))).alias("w"))
         .groupBy("w").agg(F.count("*").alias("cnt"))
     )
     init_syms = F.transform(
@@ -677,7 +674,7 @@ def bpe_merges(df, n_merges: int = 5, id_col: str = "doc_id",
         F.col("n").cast("long").alias("n"))
 
 
-def bpe_encode(df, merges, id_col: str = "doc_id", text_col: str = "text"):
+def bpe_encode(df, merges):
     """Apply learned BPE merges (bpe_merges output) to the corpus —
     the encode half of tokenizer training. The merge list is collected
     into ONE array row (broadcast crossJoin, no driver collect) and
@@ -701,8 +698,8 @@ def bpe_encode(df, merges, id_col: str = "doc_id", text_col: str = "text"):
         ).alias("ms"))
     )
     tokens = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(word_tokens(F.col(text_col))).alias("pos", "tok"),
+        F.col("doc_id"),
+        F.posexplode(word_tokens(F.col("text"))).alias("pos", "tok"),
     )
     dwords = tokens.select("tok").distinct().crossJoin(F.broadcast(marr))
 
@@ -740,21 +737,18 @@ def bpe_encode(df, merges, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
-def ccnet_buckets(scored, lang_col: str = "lang",
-                  score_col: str = "neg_logprob",
-                  id_col: str = "doc_id", n_buckets: int = 3,
-                  num_partitions: int | None = None):
+def ccnet_buckets(scored):
     """CCNet-style per-language perplexity bucketing (Wenzek et al.
     2020 §4.3: each language's documents split into head/middle/tail
     by LM perplexity terciles; head ≈ Wikipedia-like, tail ≈ noise).
-    Input is any (id, lang, score) frame — compose with
+    Input is any (doc_id, lang, neg_logprob) frame — compose with
     bigram_logprob/unigram_logprob for the LM score. Lower score =
     better, rank 1 = best; bucket b of rank r among n docs is
-    floor((r-1)·k/n)+1, which for k=3 is exactly SQL ntile(3)
+    floor((r-1)·3/n)+1, which is exactly SQL ntile(3)
     (remainder docs land in the earlier buckets).
 
-    Returns (id, lang, score, lm_rank, n_lang, bucket) with bucket in
-    {'head','middle','tail'} for k=3, else 'b<i>'.
+    Returns (doc_id, lang, neg_logprob, lm_rank, n_lang, bucket) with
+    bucket in {'head','middle','tail'}.
 
     Scale (10^12 docs): a naive ntile() OVER (PARTITION BY lang) sorts
     each language in ONE task — a 10^11-row English partition is the
@@ -769,46 +763,41 @@ def ccnet_buckets(scored, lang_col: str = "lang",
     from pyspark.sql import Window
 
     spark = scored.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism * 2
+    n = spark.sparkContext.defaultParallelism * 2
     part = (
-        scored.repartitionByRange(n, lang_col, score_col, id_col)
+        scored.repartitionByRange(n, "lang", "neg_logprob", "doc_id")
         .withColumn("_pid", F.spark_partition_id())
     )
-    w_local = Window.partitionBy("_pid", lang_col).orderBy(
-        score_col, id_col)
+    w_local = Window.partitionBy("_pid", "lang").orderBy(
+        "neg_logprob", "doc_id")
     local = part.withColumn("_local_rank", F.row_number().over(w_local))
-    counts = local.groupBy("_pid", lang_col).agg(
+    counts = local.groupBy("_pid", "lang").agg(
         F.count("*").alias("_cnt"))
-    w_off = (Window.partitionBy(lang_col).orderBy("_pid")
+    w_off = (Window.partitionBy("lang").orderBy("_pid")
              .rowsBetween(Window.unboundedPreceding, -1))
     offsets = counts.withColumn(
         "_offset", F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)))
-    totals = counts.groupBy(lang_col).agg(
+    totals = counts.groupBy("lang").agg(
         F.sum("_cnt").alias("n_lang"))
     ranked = (
         local
-        .join(F.broadcast(offsets.select("_pid", lang_col, "_offset")),
-              ["_pid", lang_col])
-        .join(F.broadcast(totals), lang_col)
+        .join(F.broadcast(offsets.select("_pid", "lang", "_offset")),
+              ["_pid", "lang"])
+        .join(F.broadcast(totals), "lang")
         .withColumn("lm_rank", F.col("_local_rank") + F.col("_offset"))
     )
-    b = (F.floor((F.col("lm_rank") - 1) * n_buckets / F.col("n_lang"))
+    b = (F.floor((F.col("lm_rank") - 1) * 3 / F.col("n_lang"))
          + 1).cast("int")
-    if n_buckets == 3:
-        bucket = (F.when(b == 1, "head").when(b == 2, "middle")
-                  .otherwise("tail"))
-    else:
-        bucket = F.concat(F.lit("b"), b.cast("string"))
+    bucket = F.when(b == 1, "head").when(b == 2, "middle").otherwise("tail")
     return ranked.select(
-        F.col(id_col), F.col(lang_col), F.col(score_col),
+        F.col("doc_id"), F.col("lang"), F.col("neg_logprob"),
         F.col("lm_rank").cast("long").alias("lm_rank"),
         F.col("n_lang").cast("long").alias("n_lang"),
         bucket.alias("bucket"),
     )
 
 
-def zipf_fit(df, top_n: int = 100, id_col: str = "doc_id",
-             text_col: str = "text"):
+def zipf_fit(df, top_n: int = 100):
     """Zipf's-law fit over the corpus token frequency distribution:
     the least-squares slope/intercept of ln(freq) on ln(rank) for the
     `top_n` most frequent tokens — the corpus-health diagnostic every
@@ -826,7 +815,7 @@ def zipf_fit(df, top_n: int = 100, id_col: str = "doc_id",
 
     toks = df.select(
         F.explode(
-            F.filter(F.split(F.lower(F.coalesce(F.col(text_col),
+            F.filter(F.split(F.lower(F.coalesce(F.col("text"),
                                                 F.lit(""))),
                              r"[^a-z0-9]+"),
                      lambda t: t != "")).alias("tok"))
@@ -850,7 +839,7 @@ def zipf_fit(df, top_n: int = 100, id_col: str = "doc_id",
 SENTENCE_PATTERN = r"[^.!?]+[.!?]*"
 
 
-def sentence_split(df, id_col: str = "doc_id", text_col: str = "text"):
+def sentence_split(df):
     """Rule-based sentence segmentation — the pass before per-sentence
     dedup, contamination checks, and translation-pair mining: cut text
     at sentence terminators (. ! ?), keeping the terminators with
@@ -865,14 +854,14 @@ def sentence_split(df, id_col: str = "doc_id", text_col: str = "text"):
     sents = F.filter(
         F.transform(
             F.regexp_extract_all(
-                F.coalesce(F.col(text_col), F.lit("")),
+                F.coalesce(F.col("text"), F.lit("")),
                 F.lit(SENTENCE_PATTERN), F.lit(0)),
             # NOT F.trim: SQL trim strips 0x20 only, so a sentence of
             # bare newlines/tabs would survive the blank filter
             lambda s: F.regexp_replace(s, r"^\s+|\s+$", "")),
         lambda s: s != "")
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.posexplode(sents).alias("sent_id", "sentence"),
     ).select(
         "doc_id", "sent_id", "sentence",
@@ -881,8 +870,7 @@ def sentence_split(df, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
-def oov_rate(df, vocab_size: int = 500, id_col: str = "doc_id",
-             text_col: str = "text"):
+def oov_rate(df, vocab_size: int = 500):
     """Tokenizer-coverage audit: build the top-`vocab_size` corpus
     vocabulary (by occurrence count, ties → lexicographically first
     token, so the cut is deterministic) and report, per document, the
@@ -899,8 +887,8 @@ def oov_rate(df, vocab_size: int = 500, id_col: str = "doc_id",
     vocab broadcasts back onto per-(doc, token) counts — the only
     corpus-keyed shuffle is the final doc_id aggregation."""
     toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(word_tokens(F.col(text_col))).alias("tok"),
+        F.col("doc_id"),
+        F.explode(word_tokens(F.col("text"))).alias("tok"),
     )
     doc_tok = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("c"))
     vocab = (doc_tok.groupBy("tok").agg(F.sum("c").alias("cnt"))
@@ -915,8 +903,7 @@ def oov_rate(df, vocab_size: int = 500, id_col: str = "doc_id",
                         F.round(F.col("n_oov") / F.col("n_tokens"), 6)))
 
 
-def kl_drift(a, b, top_n: int = 20, id_col: str = "doc_id",
-             text_col: str = "text"):
+def kl_drift(a, b, top_n: int = 20):
     """Corpus-drift diagnostic: token-level contributions to
     KL(P_a || P_b) between two corpus slices (crawl dumps, time
     windows, before/after a filter change), add-one smoothed over the
@@ -935,7 +922,7 @@ def kl_drift(a, b, top_n: int = 20, id_col: str = "doc_id",
     the union-vocab size ride 1-row broadcasts. The top-n cut is
     orderBy+limit (per-partition heaps)."""
     def counts(df, name):
-        return (df.select(F.explode(word_tokens(F.col(text_col)))
+        return (df.select(F.explode(word_tokens(F.col("text")))
                           .alias("tok"))
                 .groupBy("tok").agg(F.count("*").alias(name)))
 
@@ -959,7 +946,7 @@ def kl_drift(a, b, top_n: int = 20, id_col: str = "doc_id",
             .orderBy(F.desc("contrib"), F.asc("tok")).limit(top_n))
 
 
-def char_entropy(df, id_col: str = "doc_id", text_col: str = "text"):
+def char_entropy(df):
     """Character-distribution Shannon entropy (bits) per document —
     the cheap garbage detector that catches what token filters miss:
     base64 blobs and hex dumps score HIGH (flat distribution over a
@@ -975,8 +962,8 @@ def char_entropy(df, id_col: str = "doc_id", text_col: str = "text"):
     sum over ≤ |alphabet| grouped terms, far outside 6dp
     reassociation error."""
     chars = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+        F.col("doc_id"),
+        F.explode(F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
                           "")).alias("ch"),
     ).filter(F.col("ch") != "")
     counts = chars.groupBy("doc_id", "ch").agg(F.count("*").alias("c"))
@@ -991,18 +978,18 @@ def char_entropy(df, id_col: str = "doc_id", text_col: str = "text"):
                     "entropy"))
 
 
-def compression_ratio(df, id_col: str = "doc_id", text_col: str = "text"):
+def compression_ratio(df):
     """Tokenizer-economics column: UTF-8 bytes per BPE-ish token —
     the compute-cost proxy that decides how much a document really
     costs to train on (CJK and emoji-heavy text carries more bytes
     per token; whitespace-starved markup inflates tokens per byte).
     Returns (doc_id, n_bytes, n_bpe_tokens, bytes_per_token 6dp); a
     pure codegen projection, no shuffle."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     n_bytes = F.octet_length(t)
     n_toks = bpe_token_count(t)
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         n_bytes.cast("long").alias("n_bytes"),
         n_toks.cast("long").alias("n_bpe_tokens"),
         F.round(n_bytes / F.greatest(n_toks, F.lit(1)), 6)
@@ -1010,11 +997,10 @@ def compression_ratio(df, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
-def winnow_pairs(df, k: int = 8, window: int = 4, min_shared: int = 3,
-                 max_df: int = 20, id_col: str = "doc_id",
-                 text_col: str = "text"):
+def winnow_pairs(df, min_shared: int = 3, max_df: int = 20):
     """Partial-overlap pair detection over winnowing fingerprints
-    (Schleimer et al. 2003, the MOSS algorithm's second half): two
+    (Schleimer et al. 2003, the MOSS algorithm's second half) over
+    winnow_fingerprints' default 8-grams and 4-wide windows: two
     documents sharing >= min_shared selected fingerprints overlap in
     actual text spans — the plagiarism/quotation detector that
     complements whole-doc minhash. Returns (id_a, id_b, n_shared),
@@ -1026,7 +1012,7 @@ def winnow_pairs(df, k: int = 8, window: int = 4, min_shared: int = 3,
     (same cure as tfidf_pairs' df band). With the cap, per-fp join
     fan-out is bounded at max_df², and the join key (md5 fingerprint)
     is uniform, so the shuffle spreads at any corpus size."""
-    fps = winnow_fingerprints(df, k, window, id_col, text_col)
+    fps = winnow_fingerprints(df)
     fp_df = fps.groupBy("fp").agg(F.count("*").alias("df"))
     rare = fps.join(fp_df.filter(F.col("df") <= max_df).select("fp"), "fp")
     a = rare.select(F.col("fp"), F.col("doc_id").alias("id_a"))
@@ -1038,8 +1024,7 @@ def winnow_pairs(df, k: int = 8, window: int = 4, min_shared: int = 3,
             .orderBy("id_a", "id_b"))
 
 
-def corpus_datasheet(df, id_col: str = "doc_id", text_col: str = "text",
-                     lang_col: str = "lang"):
+def corpus_datasheet(df):
     """The datasheet row per language slice — the summary table a
     dataset card publishes and a mixing config consumes: doc and
     token counts, token-length spread, and share of corpus tokens.
@@ -1052,8 +1037,8 @@ def corpus_datasheet(df, id_col: str = "doc_id", text_col: str = "text",
     quantile semantics differ across engines; min/max/avg are
     portable and are what mixing weights actually use)."""
     per_doc = df.select(
-        F.col(lang_col).alias("lang"),
-        token_count(F.col(text_col)).alias("n"))
+        F.col("lang"),
+        token_count(F.col("text")).alias("n"))
     agg = per_doc.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum("n").cast("long").alias("n_tokens"),
@@ -1068,10 +1053,7 @@ def corpus_datasheet(df, id_col: str = "doc_id", text_col: str = "text",
                     .alias("token_share")))
 
 
-def bm25_batch(df, queries, topk: int = 5, k1: float = 1.2,
-               b: float = 0.75, id_col: str = "doc_id",
-               text_col: str = "text", qid_col: str = "query_id",
-               qtext_col: str = "query_text"):
+def bm25_batch(df, queries, topk: int = 5):
     """Batch BM25 retrieval — bm25_topk generalized from one ad-hoc
     term set to a QUERY TABLE, the serving shape of corpus search
     (benchmark-contamination review sweeps, targeted data pulls run
@@ -1087,13 +1069,13 @@ def bm25_batch(df, queries, topk: int = 5, k1: float = 1.2,
     (partial heaps), never a global sort. df/idf use the corpus-wide
     document frequency, identical to bm25_topk's definition."""
     q = queries.select(
-        F.col(qid_col).alias("query_id"),
-        F.explode(word_tokens(F.col(qtext_col))).alias("term"),
+        F.col("query_id"),
+        F.explode(word_tokens(F.col("query_text"))).alias("term"),
     ).distinct()
     all_terms = q.select("term").distinct()
     d = df.select(
-        F.col(id_col).alias("doc_id"),
-        word_tokens(F.col(text_col)).alias("toks"))
+        F.col("doc_id"),
+        word_tokens(F.col("text")).alias("toks"))
     lens = d.select("doc_id", F.size("toks").cast("double").alias("dl"))
     stats = lens.agg(F.count("*").cast("double").alias("n_docs"),
                      F.avg("dl").alias("avgdl"))
@@ -1116,9 +1098,9 @@ def bm25_batch(df, queries, topk: int = 5, k1: float = 1.2,
         .join(lens.crossJoin(F.broadcast(stats)), "doc_id")
         .select(
             "query_id", "doc_id",
-            (F.col("idf") * F.col("tf") * (k1 + 1.0)
+            (F.col("idf") * F.col("tf") * 2.2  # k1 + 1, k1 = 1.2
              / (F.col("tf")
-                + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))))
+                + 1.2 * (0.25 + 0.75 * F.col("dl") / F.col("avgdl"))))
             .alias("s"))
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("s"), 6).alias("score")))
@@ -1130,8 +1112,7 @@ def bm25_batch(df, queries, topk: int = 5, k1: float = 1.2,
                     F.col("rank").cast("int").alias("rank")))
 
 
-def host_dup_rate(pages, host_col: str = "host", id_col: str = "doc_id",
-                  text_col: str = "text"):
+def host_dup_rate(pages):
     """Per-host duplication diagnostics: the share of a host's
     documents whose normalized fingerprint appears MORE THAN ONCE in
     the whole corpus (cross-host duplicates count — mirror sites show
@@ -1144,9 +1125,9 @@ def host_dup_rate(pages, host_col: str = "host", id_col: str = "doc_id",
     uniform keys; ONE fp-count agg + a fp-keyed join back (dup set
     scales with the corpus — never broadcast) + ONE host agg."""
     fp = F.md5(F.trim(F.regexp_replace(
-        F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+", " ")))
-    p = pages.select(F.col(host_col).alias("host"),
-                     F.col(id_col).alias("doc_id"), fp.alias("fp"))
+        F.lower(F.coalesce(F.col("text"), F.lit(""))), r"\s+", " ")))
+    p = pages.select(F.col("host"),
+                     F.col("doc_id"), fp.alias("fp"))
     counts = p.groupBy("fp").agg(F.count("*").alias("n_fp"))
     flagged = p.join(counts, "fp").select(
         "host", "doc_id", (F.col("n_fp") > 1).alias("is_dup"))
@@ -1159,7 +1140,7 @@ def host_dup_rate(pages, host_col: str = "host", id_col: str = "doc_id",
                     .alias("dup_rate")))
 
 
-def flesch_kincaid(df, id_col: str = "doc_id", text_col: str = "text"):
+def flesch_kincaid(df):
     """Flesch–Kincaid grade level — the readability feature
     educational-quality classifiers (FineWeb-Edu-style) lean on:
 
@@ -1174,7 +1155,7 @@ def flesch_kincaid(df, id_col: str = "doc_id", text_col: str = "text"):
 
     Pure codegen regexp counting — no shuffle; the same regexes run
     in the SQL oracle."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     words = token_count(t)
     sents = F.greatest(
         F.size(F.regexp_extract_all(t, F.lit(r"[.!?]+"), F.lit(0))),
@@ -1187,15 +1168,14 @@ def flesch_kincaid(df, id_col: str = "doc_id", text_col: str = "text"):
         F.round(0.39 * (words.cast("double") / sents)
                 + 11.8 * (syll.cast("double") / words) - 15.59, 6))
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         words.cast("long").alias("n_words"),
         sents.cast("long").alias("n_sentences"),
         syll.cast("long").alias("n_syllables"),
         grade.alias("fk_grade"))
 
 
-def pmi_collocations(df, min_count: int = 5, top_n: int = 50,
-                     id_col: str = "doc_id", text_col: str = "text"):
+def pmi_collocations(df, min_count: int = 5, top_n: int = 50):
     """PMI collocation mining (Church & Hanks 1990): adjacent word
     pairs whose co-occurrence beats independence,
 
@@ -1216,7 +1196,7 @@ def pmi_collocations(df, min_count: int = 5, top_n: int = 50,
     # lambda re-runs the whole split+filter once per position (the
     # word_ngrams bug class, round 6); a bound column attribute is a
     # cheap reference. Also lets the unigram explode reuse the array.
-    arr = df.select(word_tokens(F.col(text_col)).alias("w"))
+    arr = df.select(word_tokens(F.col("text")).alias("w"))
     wc = F.col("w")
     bi = F.when(
         F.size(wc) >= 2,
@@ -1250,8 +1230,7 @@ def pmi_collocations(df, min_count: int = 5, top_n: int = 50,
             .limit(top_n))
 
 
-def tokenizer_fertility(df, id_col: str = "doc_id",
-                        text_col: str = "text", lang_col: str = "lang"):
+def tokenizer_fertility(df):
     """Tokenizer fertility per language — UTF-8 bytes per BPE-ish
     token aggregated by language slice, the number that tells a
     multilingual mixing config which languages the tokenizer is
@@ -1261,8 +1240,8 @@ def tokenizer_fertility(df, id_col: str = "doc_id",
 
     Exact integer sums per language, ONE division at the end — one
     lang-keyed agg with map-side partials, nothing else."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    return (df.select(F.col(lang_col).alias("lang"),
+    t = F.coalesce(F.col("text"), F.lit(""))
+    return (df.select(F.col("lang"),
                       F.octet_length(t).alias("nb"),
                       bpe_token_count(t).alias("nt"))
             .groupBy("lang")
@@ -1275,7 +1254,7 @@ def tokenizer_fertility(df, id_col: str = "doc_id",
                                              F.lit(1)), 6)))
 
 
-def segment_langs(df, id_col: str = "doc_id", text_col: str = "text"):
+def segment_langs(df):
     """Per-sentence language segmentation (CCNet, Wenzek et al. 2020:
     language id runs on SEGMENTS so mixed-language pages — boilerplate
     in one language, content in another, code-switched forums — can be
@@ -1297,7 +1276,7 @@ def segment_langs(df, id_col: str = "doc_id", text_col: str = "text"):
     doc rollup where dominance is ONE min(struct(-count, lang))) — no
     windows, no joins beyond the final left join back to the doc
     spine for empty documents."""
-    sents = sentence_split(df, id_col, text_col)
+    sents = sentence_split(df)
     scored = sents.select(
         "doc_id", lang_guess(F.col("sentence")).alias("lang"))
     counts = scored.groupBy("doc_id", "lang").agg(
@@ -1308,7 +1287,7 @@ def segment_langs(df, id_col: str = "doc_id", text_col: str = "text"):
         F.min(F.struct((-F.col("c")).alias("nc"),
                        F.col("lang").alias("lang"))).alias("w"),
     )
-    base = df.select(F.col(id_col).alias("doc_id"))
+    base = df.select(F.col("doc_id"))
     return base.join(per, "doc_id", "left").select(
         "doc_id",
         F.coalesce("n_segments", F.lit(0)).cast("long")
@@ -1323,8 +1302,7 @@ def segment_langs(df, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
-def langid_confusion(df, label_col: str = "lang",
-                     id_col: str = "doc_id", text_col: str = "text"):
+def langid_confusion(df):
     """Evaluation of the language-id component against labeled data —
     the confusion matrix + per-label accuracy a pipeline owner watches
     before trusting lang-based routing (mT5-style sampling, per-lang
@@ -1342,8 +1320,8 @@ def langid_confusion(df, label_col: str = "lang",
     (output is |langs|² rows at most) plus a label-keyed total join —
     both tiny. No windows, nothing corpus-sized after the scan."""
     scored = df.select(
-        F.col(label_col).alias("label"),
-        lang_guess(F.col(text_col)).alias("predicted"))
+        F.col("lang").alias("label"),
+        lang_guess(F.col("text")).alias("predicted"))
     cell = scored.groupBy("label", "predicted").agg(
         F.count("*").alias("n_docs"))
     totals = cell.groupBy("label").agg(

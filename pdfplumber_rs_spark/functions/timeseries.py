@@ -14,8 +14,7 @@ from pyspark.sql import functions as F
 
 
 def event_spikes(events: DataFrame, trailing: int = 3,
-                 factor: float = 2.0, ts_col: str = "ts",
-                 type_col: str = "event_type") -> DataFrame:
+                 factor: float = 2.0) -> DataFrame:
     """Burst detection per event type: bucket events into hours, then
     flag any hour whose count reaches `factor` × the trailing
     `trailing`-hour average for that type. The classic ops question —
@@ -39,8 +38,8 @@ def event_spikes(events: DataFrame, trailing: int = 3,
     here rather than zero-filling the calendar."""
     hourly = (
         events.select(
-            F.col(type_col).alias("event_type"),
-            F.date_trunc("hour", F.col(ts_col)).alias("hour"))
+            F.col("event_type"),
+            F.date_trunc("hour", F.col("ts")).alias("hour"))
         .groupBy("event_type", "hour")
         .agg(F.count("*").alias("cnt"))
     )

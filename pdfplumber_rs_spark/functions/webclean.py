@@ -82,8 +82,8 @@ def word_ngrams(text: Column, n: int) -> Column:
     return F.element_at(F.transform(F.array(toks), _grams), 1)
 
 
-def contamination(docs: DataFrame, benchmark: DataFrame, n: int = 5,
-                  id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def contamination(docs: DataFrame, benchmark: DataFrame,
+                  n: int = 5) -> DataFrame:
     """Benchmark-contamination check: for each candidate document, how
     many distinct word n-grams it shares with a benchmark suite.
 
@@ -94,12 +94,12 @@ def contamination(docs: DataFrame, benchmark: DataFrame, n: int = 5,
     is a broadcast hash table."""
     bench_grams = (
         benchmark.select(
-            F.explode(word_ngrams(F.col(text_col), n)).alias("gram"))
+            F.explode(word_ngrams(F.col("text"), n)).alias("gram"))
         .distinct()
     )
     doc_grams = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(word_ngrams(F.col(text_col), n)).alias("gram"),
+        F.col("doc_id"),
+        F.explode(word_ngrams(F.col("text"), n)).alias("gram"),
     ).distinct()
     return (
         doc_grams.join(F.broadcast(bench_grams), "gram")
@@ -108,9 +108,8 @@ def contamination(docs: DataFrame, benchmark: DataFrame, n: int = 5,
     )
 
 
-def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 5,
-                  id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def decontaminate(docs: DataFrame, benchmark: DataFrame,
+                  n: int = 5) -> DataFrame:
     """Span-level benchmark decontamination — the removal half of
     `contamination` (GPT-3 appendix C / PaLM §7: training text that
     overlaps an eval benchmark is scrubbed, not just flagged, so the
@@ -132,11 +131,11 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 5,
     cover explode, distinct, token anti-join, bounded per-doc
     reassembly."""
     toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+        F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
                 r"[^a-z0-9]+"),
         lambda t: t != "",
     )
-    d = docs.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
+    d = docs.select(F.col("doc_id"), toks.alias("toks"))
     positions = F.when(
         F.size("toks") >= n, F.sequence(F.lit(0), F.size("toks") - n)
     ).otherwise(F.array().cast("array<int>"))
@@ -268,16 +267,9 @@ def _robots_rule_rows(host: str, robots_txt: str | None, *, user_agent: str):
                    "rule_len": len(val)}
 
 
-def _robots_columns(df: DataFrame, host_col: str, txt_col: str) -> DataFrame:
-    return df.select(F.col(host_col).alias("host"),
-                     F.col(txt_col).alias("robots_txt"))
-
-
-def parse_robots(df: DataFrame, host_col: str = "host",
-                 txt_col: str = "robots_txt",
-                 user_agent: str = "*") -> DataFrame:
+def parse_robots(df: DataFrame) -> DataFrame:
     """robots.txt → (host, prefix, pattern, allow, rule_len) rules for
-    the groups whose User-agent set contains `user_agent` (RFC 9309
+    the groups whose User-agent set contains `*` (RFC 9309
     grouping: consecutive User-agent lines open a group; the group's
     Allow/Disallow rules follow until the next User-agent line after
     rules). Empty Disallow values are dropped (allow-all, no rule).
@@ -287,9 +279,9 @@ def parse_robots(df: DataFrame, host_col: str = "host",
 
     Per-row line parse (a real line parser, the documented non-Column
     path); output is a small rules table keyed by host."""
-    return map_rows(_robots_columns(df, host_col, txt_col),
+    return map_rows(df.select("host", "robots_txt"),
                     _robots_rule_rows, ROBOTS_RULES_SCHEMA,
-                    user_agent=user_agent)
+                    user_agent="*")
 
 
 CRAWL_DELAY_SCHEMA = StructType([
@@ -311,11 +303,9 @@ def _crawl_delay_rows(host: str, robots_txt: str | None, *, user_agent: str):
         yield {"host": host, "crawl_delay": max(delays)}
 
 
-def parse_crawl_delay(df: DataFrame, host_col: str = "host",
-                      txt_col: str = "robots_txt",
-                      user_agent: str = "*") -> DataFrame:
+def parse_crawl_delay(df: DataFrame) -> DataFrame:
     """Crawl-delay directive per host for the groups whose User-agent
-    set contains `user_agent` (same RFC 9309 grouping as parse_robots,
+    set contains `*` (same RFC 9309 grouping as parse_robots,
     except that a Crawl-delay line also ends a group's User-agent
     lines; Crawl-delay is a de-facto extension most crawlers honor).
     The LARGEST applying delay wins (conservative). Non-numeric values
@@ -323,14 +313,12 @@ def parse_crawl_delay(df: DataFrame, host_col: str = "host",
     directive are absent (callers supply the default).
 
     Per-row line parse; output is host-cardinality tiny."""
-    return map_rows(_robots_columns(df, host_col, txt_col),
+    return map_rows(df.select("host", "robots_txt"),
                     _crawl_delay_rows, CRAWL_DELAY_SCHEMA,
-                    user_agent=user_agent)
+                    user_agent="*")
 
 
-def robots_filter(pages: DataFrame, rules: DataFrame,
-                  host_col: str = "host",
-                  path_col: str = "path") -> DataFrame:
+def robots_filter(pages: DataFrame, rules: DataFrame) -> DataFrame:
     """RFC 9309 crawl-permission filter: per page, the longest
     matching rule wins (rule length in octets, wildcards included —
     the RFC's specificity key); on a length tie Allow beats Disallow;
@@ -348,16 +336,13 @@ def robots_filter(pages: DataFrame, rules: DataFrame,
     (host, path) pair, NOT monotonically_increasing_id — that
     expression is partitioning-dependent and re-evaluates differently
     on each subtree reference.)"""
-    keys = pages.select(host_col, path_col).distinct()
-    j = keys.join(rules, keys[host_col] == rules["host"], "left")
-    matched = j.filter(
-        F.col("pattern").isNotNull()
-        & F.regexp_like(F.col(path_col), F.col("pattern")))
-    wins = matched.groupBy(keys[host_col].alias(host_col),
-                           F.col(path_col)).agg(
+    keys = pages.select("host", "path").distinct()
+    matched = keys.join(rules, "host").filter(
+        F.regexp_like(F.col("path"), F.col("pattern")))
+    wins = matched.groupBy("host", "path").agg(
         F.max(F.struct("rule_len", "allow")).alias("win"))
     return (
-        pages.join(wins, [host_col, path_col], "left")
+        pages.join(wins, ["host", "path"], "left")
         .withColumn("allowed",
                     F.coalesce(F.col("win.allow") == 1, F.lit(True)))
         .drop("win")
@@ -432,10 +417,8 @@ def html_meta(pages: DataFrame, html_col: str = "html") -> DataFrame:
     )
 
 
-def politeness_schedule(pages: DataFrame, delays: DataFrame,
-                        per_slot: int = 2, default_delay: float = 1.0,
-                        host_col: str = "host",
-                        url_col: str = "url") -> DataFrame:
+def politeness_schedule(pages: DataFrame, delays: DataFrame, per_slot: int = 2,
+                        default_delay: float = 1.0) -> DataFrame:
     """Crawl-delay-aware frontier schedule: politeness_slots' per-host
     slot packing, with each host's slots spaced by its robots
     Crawl-delay (parse_crawl_delay output; `default_delay` seconds
@@ -444,11 +427,10 @@ def politeness_schedule(pages: DataFrame, delays: DataFrame,
 
     Scale: the host-keyed window shuffle politeness already pays, plus
     one broadcast join against the host-cardinality delay table."""
-    slotted = politeness_slots(pages, per_slot, host_col, url_col)
-    d = delays.select(F.col("host").alias(host_col),
-                      F.col("crawl_delay"))
+    slotted = politeness_slots(pages, per_slot)
+    d = delays.select("host", "crawl_delay")
     return (
-        slotted.join(F.broadcast(d), host_col, "left")
+        slotted.join(F.broadcast(d), "host", "left")
         .withColumn(
             "fetch_offset_s",
             F.round(F.col("fetch_slot")
@@ -458,9 +440,7 @@ def politeness_schedule(pages: DataFrame, delays: DataFrame,
     )
 
 
-def politeness_slots(pages: DataFrame, per_slot: int = 2,
-                     host_col: str = "host",
-                     url_col: str = "url") -> DataFrame:
+def politeness_slots(pages: DataFrame, per_slot: int = 2) -> DataFrame:
     """Crawl-frontier politeness schedule: fetches for one host must
     spread over time, so each host's urls (deterministic url order)
     are packed `per_slot` per time slot — slot k of host h holds its
@@ -471,7 +451,7 @@ def politeness_slots(pages: DataFrame, per_slot: int = 2,
     is inherent to the SEMANTICS here (one host's schedule is one
     sequence) — at 10^12 urls, cap per-host frontier size upstream
     rather than salting a sequence that must stay serial."""
-    w = Window.partitionBy(host_col).orderBy(url_col)
+    w = Window.partitionBy("host").orderBy("url")
     return pages.withColumn(
         "fetch_slot",
         ((F.row_number().over(w) - 1) / per_slot).cast("int"))
@@ -517,8 +497,7 @@ def canonical_url(url: Column) -> Column:
     )
 
 
-def url_dedup(pages: DataFrame, url_col: str = "url",
-              id_col: str = "doc_id") -> DataFrame:
+def url_dedup(pages: DataFrame) -> DataFrame:
     """Canonical-URL dedup — the crawl-ingest pass that collapses
     scheme/www/port/tracking-param/param-order/trailing-slash variants
     of the same resource before any content fetch or text dedup runs.
@@ -533,8 +512,8 @@ def url_dedup(pages: DataFrame, url_col: str = "url",
     diversity; a pathological single-URL flood is bounded by the agg's
     map-side partial combine)."""
     return (
-        pages.select(F.col(id_col).alias("doc_id"),
-                     canonical_url(F.col(url_col)).alias("canon_url"))
+        pages.select(F.col("doc_id"),
+                     canonical_url(F.col("url")).alias("canon_url"))
         .groupBy("canon_url")
         .agg(F.min("doc_id").alias("doc_id"),
              F.count("*").alias("n_variants"))
@@ -558,8 +537,7 @@ def host_suffixes(host: Column) -> Column:
     ).otherwise(F.array(F.coalesce(host, F.lit(""))))
 
 
-def blocklist_filter(pages: DataFrame, blocklist: DataFrame,
-                     host_col: str = "host") -> DataFrame:
+def blocklist_filter(pages: DataFrame, blocklist: DataFrame) -> DataFrame:
     """Domain-blocklist filter (the UT1/adult-list pass of CC-derived
     corpora, e.g. RefinedWeb §3.1): a page is blocked when its host OR
     ANY parent domain appears in the blocklist — 'x.ads.example.net'
@@ -574,8 +552,8 @@ def blocklist_filter(pages: DataFrame, blocklist: DataFrame,
     host-keyed (blocked-host cardinality << page count — AQE broadcasts
     it when small). Never a regex scan over entries."""
     cand = pages.select(
-        F.col(host_col).alias("_bl_host"),
-        F.explode(host_suffixes(F.col(host_col))).alias("_suffix"),
+        F.col("host").alias("_bl_host"),
+        F.explode(host_suffixes(F.col("host"))).alias("_suffix"),
     ).join(
         F.broadcast(blocklist.select(F.col("entry").alias("_suffix"))),
         "_suffix",
@@ -584,9 +562,9 @@ def blocklist_filter(pages: DataFrame, blocklist: DataFrame,
                        F.col("_suffix").alias("e"))).alias("_m"))
     return (
         pages.join(
-            cand.select(F.col("_bl_host").alias(host_col),
+            cand.select(F.col("_bl_host").alias("host"),
                         F.col("_m.e").alias("blocked_by")),
-            host_col, "left")
+            "host", "left")
         .withColumn("blocked", F.col("blocked_by").isNotNull())
     )
 
@@ -614,8 +592,7 @@ def _normalized_rows(doc_id: int, text: str | None):
            "n_chars_raw": len(raw), "n_chars_norm": len(norm)}
 
 
-def normalize_text(df: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def normalize_text(df: DataFrame) -> DataFrame:
     """ftfy-lite text normalization — the encoding-hygiene pass every
     web-text pipeline runs before tokenization/dedup (mojibake-adjacent
     combining sequences, stray control bytes, whitespace noise):
@@ -633,9 +610,8 @@ def normalize_text(df: DataFrame, id_col: str = "doc_id",
     document), no shuffle, pipelined into the scan. The DuckDB oracle
     re-derives the same transform via nfc_normalize + regexp_replace —
     semantic parity across two independent NFC implementations."""
-    return map_rows(df.select(F.col(id_col).alias("doc_id"),
-                              F.col(text_col).alias("text")),
-                    _normalized_rows, NORMALIZED_SCHEMA)
+    return map_rows(df.select("doc_id", "text"), _normalized_rows,
+                    NORMALIZED_SCHEMA)
 
 
 SITEMAPS_SCHEMA = StructType([
@@ -652,8 +628,7 @@ def _sitemap_rows(host: str, robots_txt: str | None):
         yield {"host": host, "sitemap_url": url, "sm_rank": rank}
 
 
-def parse_sitemaps(df: DataFrame, host_col: str = "host",
-                   txt_col: str = "robots_txt") -> DataFrame:
+def parse_sitemaps(df: DataFrame) -> DataFrame:
     """Sitemap cross-references from robots.txt (sitemaps.org
     protocol; RFC 9309 treats unknown lines as extensions): `Sitemap:`
     lines are NOT group-scoped — they apply to every crawler no matter
@@ -663,7 +638,7 @@ def parse_sitemaps(df: DataFrame, host_col: str = "host",
     order).
 
     Per-row line parse; output is host-cardinality tiny."""
-    return map_rows(_robots_columns(df, host_col, txt_col), _sitemap_rows,
+    return map_rows(df.select("host", "robots_txt"), _sitemap_rows,
                     SITEMAPS_SCHEMA)
 
 
@@ -757,8 +732,7 @@ def meta_robots(pages: DataFrame, html_col: str = "html") -> DataFrame:
     )
 
 
-def crawl_diff(old: DataFrame, new: DataFrame, key_col: str = "url",
-               digest_col: str = "digest") -> DataFrame:
+def crawl_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Incremental crawl diff — the snapshot-compare step that turns
     full recrawls into incremental work: full-outer join two
     (url, digest) snapshots and classify each URL as
@@ -775,10 +749,10 @@ def crawl_diff(old: DataFrame, new: DataFrame, key_col: str = "url",
     carry duplicate snapshots. At 10^12 scale the join co-locates
     for free when both snapshots are bucketed/sorted by url (SURT
     order), which is why surt_key exists."""
-    o = old.select(F.col(key_col).alias("url"),
-                   F.col(digest_col).alias("old_digest"))
-    n = new.select(F.col(key_col).alias("url"),
-                   F.col(digest_col).alias("new_digest"))
+    o = old.select(F.col("url"),
+                   F.col("digest").alias("old_digest"))
+    n = new.select(F.col("url"),
+                   F.col("digest").alias("new_digest"))
     j = o.join(n, "url", "full_outer")
     status = (
         F.when(F.col("old_digest").isNull(), F.lit("added"))
@@ -791,8 +765,7 @@ def crawl_diff(old: DataFrame, new: DataFrame, key_col: str = "url",
             .select("url", "status", "old_digest", "new_digest"))
 
 
-def parse_feeds(feeds: DataFrame, xml_col: str = "xml",
-                host_col: str = "host") -> DataFrame:
+def parse_feeds(feeds: DataFrame) -> DataFrame:
     """RSS 2.0 feed-item extraction — the third discovery channel
     beside sitemaps and anchor links: every <item> yields (host,
     item_rank, title, link), rank = 1-based document order (feeds are
@@ -802,9 +775,9 @@ def parse_feeds(feeds: DataFrame, xml_col: str = "xml",
 
     Codegen regexp_extract_all over item blocks + one posexplode —
     pipelined into the scan, no shuffle, host-cardinality output."""
-    x = F.coalesce(F.col(xml_col).cast("string"), F.lit(""))
+    x = F.coalesce(F.col("xml").cast("string"), F.lit(""))
     items = feeds.select(
-        F.col(host_col).alias("host"),
+        F.col("host"),
         F.posexplode(
             F.regexp_extract_all(x, F.lit(r"(?is)<item[^>]*>(.*?)</item>"),
                                  F.lit(1))).alias("pos", "item"),
@@ -853,8 +826,7 @@ def url_classify(url: Column) -> dict[str, Column]:
     }
 
 
-def bloom_build(df: DataFrame, m_words: int = 64, k: int = 3,
-                key_col: str = "url") -> DataFrame:
+def bloom_build(df: DataFrame, m_words: int = 64, k: int = 3) -> DataFrame:
     """Distributed Bloom filter build over a key column — the
     seen-URL negative cache a recrawl frontier consults before
     touching the (much larger) crawl history: m_words 32-bit words,
@@ -867,7 +839,7 @@ def bloom_build(df: DataFrame, m_words: int = 64, k: int = 3,
     oracle rebuilds the identical bitset."""
     pos = [
         F.pmod(F.conv(F.substring(F.md5(F.concat(F.lit(f"b{i}:"),
-                                                 F.col(key_col))), 1, 8),
+                                                 F.col("url"))), 1, 8),
                       16, 10).cast("long"),
                F.lit(m_words * 32))
         for i in range(k)
@@ -883,9 +855,8 @@ def bloom_build(df: DataFrame, m_words: int = 64, k: int = 3,
             .agg(F.bit_or(F.expr("shiftleft(1L, bit)")).alias("bits")))
 
 
-def bloom_contains(bloom: DataFrame, candidates: DataFrame,
-                   m_words: int = 64, k: int = 3,
-                   key_col: str = "url") -> DataFrame:
+def bloom_contains(bloom: DataFrame, candidates: DataFrame, m_words: int = 64,
+                   k: int = 3) -> DataFrame:
     """Membership probe against a bloom_build filter: a candidate is
     'maybe seen' iff ALL k of its bits are set (false positives
     possible by design, false negatives never). Returns every
@@ -896,13 +867,13 @@ def bloom_contains(bloom: DataFrame, candidates: DataFrame,
     candidate stream is."""
     pos = [
         F.pmod(F.conv(F.substring(F.md5(F.concat(F.lit(f"b{i}:"),
-                                                 F.col(key_col))), 1, 8),
+                                                 F.col("url"))), 1, 8),
                       16, 10).cast("long"),
                F.lit(m_words * 32))
         for i in range(k)
     ]
     probes = candidates.select(
-        F.col(key_col).alias("key"),
+        F.col("url").alias("key"),
         F.explode(F.array(*pos)).alias("p"),
     ).select(
         "key",
@@ -953,9 +924,7 @@ def html_outline(pages: DataFrame, html_col: str = "html") -> DataFrame:
     )
 
 
-def host_template_ratio(pages: DataFrame, host_col: str = "host",
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def host_template_ratio(pages: DataFrame) -> DataFrame:
     """Per-host template detection: how much of a host's corpus is the
     SAME repeated line — the signal that a host serves one template
     with tiny content variation (tag pages, calendar pages, product
@@ -972,18 +941,17 @@ def host_template_ratio(pages: DataFrame, host_col: str = "host",
     ONE max aggregation — no window over the corpus, no pair joins.
     Shuffle keys are (host, line) then host."""
     lines = pages.select(
-        F.col(host_col).alias("host"),
-        F.col(id_col).alias("doc_id"),
+        F.col("host"),
+        F.col("doc_id"),
         F.explode(F.filter(
-            F.transform(F.split(F.coalesce(F.col(text_col), F.lit("")),
+            F.transform(F.split(F.coalesce(F.col("text"), F.lit("")),
                                 "\n"), lambda l: F.trim(l)),
             lambda l: l != "")).alias("line"),
     ).distinct()
     line_docs = lines.groupBy("host", "line").agg(
         F.count("*").alias("n_line_docs"))
-    hosts = pages.select(F.col(host_col).alias("host"),
-                         F.col(id_col).alias("doc_id")) \
-        .distinct().groupBy("host").agg(F.count("*").alias("n_docs"))
+    hosts = pages.select("host", "doc_id").distinct() \
+        .groupBy("host").agg(F.count("*").alias("n_docs"))
     top = line_docs.groupBy("host").agg(
         F.max("n_line_docs").alias("top_line_docs"))
     return (hosts.join(top, "host", "left")
@@ -996,11 +964,8 @@ def host_template_ratio(pages: DataFrame, host_col: str = "host",
 
 
 def host_boilerplate_strip(pages: DataFrame, max_ratio: float = 0.5,
-                           min_docs: int = 2,
-                           line_tokens: int | None = None,
-                           host_col: str = "host",
-                           id_col: str = "doc_id",
-                           text_col: str = "text") -> DataFrame:
+                           min_docs: int = 2, line_tokens: int | None = None,
+                           host_col: str = "host") -> DataFrame:
     """Per-host boilerplate REMOVAL — the strip stage host_template_
     ratio's detection signal feeds (the CCNet/RefinedWeb line-level
     cleanup: navigation bars, cookie banners, footers repeat across a
@@ -1022,7 +987,7 @@ def host_boilerplate_strip(pages: DataFrame, max_ratio: float = 0.5,
     corpus so it is NOT broadcast — occurrences remove it via a
     left_anti hash join on the same uniform key. Reassembly is
     doc-keyed, bounded per doc. No windows, no pair joins."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     if line_tokens is None:
         line_arr = F.filter(
             F.transform(F.split(t, "\n"), lambda l: F.trim(l)),
@@ -1046,7 +1011,7 @@ def host_boilerplate_strip(pages: DataFrame, max_ratio: float = 0.5,
 
         line_arr = F.element_at(F.transform(F.array(toks), _lines), 1)
     base = pages.select(F.col(host_col).alias("host"),
-                        F.col(id_col).alias("doc_id"),
+                        F.col("doc_id"),
                         line_arr.alias("lines"))
     lines = base.select(
         "host", "doc_id",
@@ -1083,8 +1048,7 @@ def host_boilerplate_strip(pages: DataFrame, max_ratio: float = 0.5,
     )
 
 
-def url_trap_score(pages: DataFrame, host_col: str = "host",
-                   url_col: str = "url") -> DataFrame:
+def url_trap_score(pages: DataFrame) -> DataFrame:
     """Crawl-trap scoring per host: traps (session ids, calendars,
     faceted search) manufacture unbounded DISTINCT URLs that collapse
     to few distinct resources once query/fragment junk is stripped.
@@ -1097,9 +1061,9 @@ def url_trap_score(pages: DataFrame, host_col: str = "host",
 
     Two count-distinct aggregations keyed by host (map-side partial
     distinct), no joins beyond the final host merge."""
-    u = pages.select(F.col(host_col).alias("host"),
-                     F.col(url_col).alias("url"),
-                     normalize_url(F.col(url_col)).alias("resource"))
+    u = pages.select(F.col("host"),
+                     F.col("url"),
+                     normalize_url(F.col("url")).alias("resource"))
     per = u.groupBy("host").agg(
         F.countDistinct("url").alias("n_urls"),
         F.countDistinct("resource").alias("n_resources"))
@@ -1110,8 +1074,7 @@ def url_trap_score(pages: DataFrame, host_col: str = "host",
 
 
 def consistent_shard(hosts: DataFrame, n_shards: int = 8,
-                     replicas: int = 16,
-                     host_col: str = "host") -> DataFrame:
+                     replicas: int = 16) -> DataFrame:
     """Consistent-hash ring assignment of hosts to fetcher shards —
     the crawler property plain `hash % n` lacks: growing the fleet
     from n to n+1 shards remaps only ~1/n of hosts, so per-host
@@ -1132,11 +1095,11 @@ def consistent_shard(hosts: DataFrame, n_shards: int = 8,
             F.lit(s).alias("shard"))
         for s, r in points
     ])
-    h = F.conv(F.substring(F.md5(F.col(host_col)), 1, 8), 16, 10) \
+    h = F.conv(F.substring(F.md5(F.col("host")), 1, 8), 16, 10) \
         .cast("long")
     cw = F.filter(ring, lambda p: p["point"] >= h)
     best = F.when(F.size(cw) > 0, F.array_min(cw)) \
         .otherwise(F.array_min(ring))
     return hosts.select(
-        F.col(host_col).alias("host"),
+        F.col("host"),
         best["shard"].cast("int").alias("shard"))

@@ -123,7 +123,7 @@ def _decrypt_block(rk: list[bytes], block: bytes) -> bytes:
     return bytes(a ^ b for a, b in zip(s, rk[0]))
 
 
-def aes_cbc_decrypt(key: bytes, data: bytes, strip_padding: bool = True) -> bytes:
+def aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
     """First 16 bytes of data are the IV (PDF AESV2/AESV3 convention)."""
     if len(data) < 32:
         return b""
@@ -136,7 +136,7 @@ def aes_cbc_decrypt(key: bytes, data: bytes, strip_padding: bool = True) -> byte
         block = body[i : i + 16]
         out.extend(a ^ b for a, b in zip(_decrypt_block(rk, block), prev))
         prev = block
-    if strip_padding and out:
+    if out:
         pad = out[-1]
         if 1 <= pad <= 16:
             del out[-pad:]

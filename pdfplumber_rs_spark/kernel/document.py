@@ -8,7 +8,7 @@ kernel calls per document.
 
 from __future__ import annotations
 
-from ..config import ExtractOptions, TableSettings, TextOptions, WordOptions
+from ..config import ExtractOptions, TableSettings
 from .docparser import PdfDocument
 from .interpreter import Interpreter
 from .page import PageGeometry, build_page
@@ -140,7 +140,6 @@ def open_pdf(data: bytes, options: ExtractOptions | None = None) -> Document:
 
 
 def extract_document(data: bytes, options: ExtractOptions | None = None,
-                     text_options: TextOptions | None = None,
                      table_settings: TableSettings | None = None) -> dict:
     """One-shot extraction of a whole document into plain dicts, for
     scripts and tests (the Spark kernel runs `pipeline._page_rows`).
@@ -163,7 +162,7 @@ def extract_document(data: bytes, options: ExtractOptions | None = None,
             words = page.words
             from .layout import extract_text_from_words
 
-            text = extract_text_from_words(words, text_options)
+            text = extract_text_from_words(words)
             tables = page.find_tables(table_settings)
         except Exception as e:  # noqa: BLE001
             doc.warnings.append(f"page {page.page_number}: {e}")

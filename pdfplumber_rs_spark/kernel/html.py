@@ -64,7 +64,7 @@ def _inside(w: dict, bbox: tuple) -> bool:
     return bbox[0] <= cx <= bbox[2] and bbox[1] <= cy <= bbox[3]
 
 
-def page_to_html(page, y_tolerance: float = 3.0) -> str:
+def page_to_html(page) -> str:
     """Render one page to semantic HTML (block-level string, no <html>
     wrapper — matches the reference's per-page fragment)."""
     words = font_words(page)
@@ -76,7 +76,7 @@ def page_to_html(page, y_tolerance: float = 3.0) -> str:
     flow_words = [
         w for w in words if not any(_inside(w, b) for b in tboxes)
     ]
-    lines = cluster_words_into_lines(flow_words, y_tolerance)
+    lines = cluster_words_into_lines(flow_words, 3.0)
 
     # blocks to emit: (top, kind, payload)
     blocks: list[tuple[float, str, object]] = []

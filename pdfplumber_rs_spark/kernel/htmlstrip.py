@@ -114,8 +114,7 @@ class _Extractor(HTMLParser):
         self._flush()
 
 
-def extract_main_content(html: bytes | str, min_words: int = 5,
-                         max_link_density: float = 0.33) -> dict:
+def extract_main_content(html: bytes | str) -> dict:
     """Strip boilerplate, keep content blocks. Returns
     {text, n_blocks_kept, n_blocks_total} — lenient: any parse failure
     yields empty text, never an exception."""
@@ -130,9 +129,8 @@ def extract_main_content(html: bytes | str, min_words: int = 5,
     kept: list[str] = []
     for text, n_words, link_words, heading in p.blocks:
         density = link_words / n_words if n_words else 1.0
-        if heading and n_words >= 1 and density <= max_link_density:
-            kept.append(text)
-        elif n_words >= min_words and density <= max_link_density:
+        # a heading needs one word, any other block five
+        if density <= 0.33 and n_words >= (1 if heading else 5):
             kept.append(text)
     return {
         "text": "\n".join(kept),

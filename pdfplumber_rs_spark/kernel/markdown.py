@@ -78,7 +78,7 @@ def _heading_level(ratio: float) -> int:
     return 0
 
 
-def page_to_markdown(page, y_tolerance: float = 3.0) -> str:
+def page_to_markdown(page) -> str:
     """Render one page to Markdown (no trailing newline)."""
     words = font_words(page)
     tables = page.find_tables()
@@ -87,7 +87,7 @@ def page_to_markdown(page, y_tolerance: float = 3.0) -> str:
         for t in tables
     ]
     flow_words = [w for w in words if not any(_inside(w, b) for b in tboxes)]
-    lines = cluster_words_into_lines(flow_words, y_tolerance)
+    lines = cluster_words_into_lines(flow_words, 3.0)
 
     line_meta = []
     sizes: list[float] = []

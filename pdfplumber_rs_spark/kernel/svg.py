@@ -20,12 +20,12 @@ def _g(v: float) -> str:
     return f"{round(v, 4):g}"
 
 
-def page_to_svg(page, scale: float = 1.0) -> str:
+def page_to_svg(page) -> str:
     """One page → standalone SVG document string."""
-    w, h = page.width * scale, page.height * scale
+    w, h = _g(page.width), _g(page.height)
     parts = [
-        f'<svg xmlns="http://www.w3.org/2000/svg" width="{_g(w)}" '
-        f'height="{_g(h)}" viewBox="0 0 {_g(page.width)} {_g(page.height)}">'
+        f'<svg xmlns="http://www.w3.org/2000/svg" width="{w}" '
+        f'height="{h}" viewBox="0 0 {w} {h}">'
     ]
     for r in page.rects:
         style = "fill:none;stroke:#000" if r.get("stroke") else "fill:#000"

@@ -603,11 +603,10 @@ def images_table(pages: DataFrame) -> DataFrame:
     return _explode(pages, "images", "url", "page_number")
 
 
-def export_images(pages: DataFrame,
-                  pattern: str = "page{page}-img{index}-{hash}.{ext}") -> DataFrame:
+def export_images(pages: DataFrame) -> DataFrame:
     """D11 image export with deterministic names (images.rs:284-330),
-    fully Spark-native: filename = pattern with {page}/{index}/{ext}/
-    {hash} substituted per image; hash is a 16-hex content prefix
+    fully Spark-native: filename = page{page}-img{index}-{hash}.{ext}
+    per image; hash is a 16-hex content prefix
     (sha256 here — the reference's SipHash is Rust-internal, the
     contract is 'deterministic content-derived name'), so identical
     bytes dedupe to identical filenames. Images without data are
@@ -621,11 +620,9 @@ def export_images(pages: DataFrame,
         F.lit("bin"),
     )
     h = F.substring(F.sha2(F.col("data"), 256), 1, 16)
-    filename = F.lit(pattern)
-    for var, col in (("{page}", F.col("page_number").cast("string")),
-                     ("{index}", F.col("seq").cast("string")),
-                     ("{ext}", ext), ("{hash}", h)):
-        filename = F.replace(filename, F.lit(var), col)
+    filename = F.concat(F.lit("page"), F.col("page_number").cast("string"),
+                        F.lit("-img"), F.col("seq").cast("string"),
+                        F.lit("-"), h, F.lit("."), ext)
     return imgs.select(
         "url", "page_number", "seq",
         filename.alias("filename"),
@@ -721,8 +718,7 @@ def document_meta(df: DataFrame,
                     options=options)
 
 
-def assemble_text_from_words(words: DataFrame,
-                             y_tolerance: float = 3.0) -> DataFrame:
+def assemble_text_from_words(words: DataFrame) -> DataFrame:
     """W2/W6 expressed RELATIONALLY (SURVEY.md §2.6): line ids via
     lag-gap-cumsum sessionization over word tops, ordered concat within
     lines (x0) and across lines (top), pages joined by page_number →
@@ -735,7 +731,7 @@ def assemble_text_from_words(words: DataFrame,
     )
     gap = F.col("top") - F.lag("top").over(w)
     flagged = words.withColumn(
-        "brk", F.when(gap > y_tolerance, 1).otherwise(0)
+        "brk", F.when(gap > 3.0, 1).otherwise(0)
     )
     line_id = F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0))
     lines = (
@@ -780,13 +776,12 @@ def assemble_text_from_words(words: DataFrame,
     )
 
 
-def header_footer_bounds(pages: DataFrame, margin_frac: float = 0.12,
-                         min_pages: int = 2,
-                         min_frac: float = 0.5) -> DataFrame:
+def header_footer_bounds(pages: DataFrame) -> DataFrame:
     """D8 header/footer region detection (page_regions.rs, pdf.rs:805-832)
-    as a genuinely relational plan: per-page margin-strip word text with
-    digits masked → groupBy(url, signature) page counts → a signature
-    repeated on ≥ max(min_pages, min_frac·n_pages) pages is page chrome.
+    as a genuinely relational plan: the word text of each page's top and
+    bottom 12% strips with digits masked → groupBy(url, signature) page
+    counts → a signature repeated on ≥ max(2, n_pages/2) pages is page
+    chrome.
     Returns one row per (url, page_number) with body_top/body_bottom —
     the vertical bounds that exclude detected chrome.
 
@@ -817,16 +812,16 @@ def header_footer_bounds(pages: DataFrame, margin_frac: float = 0.12,
         )
 
     hdr = strip_sig(
-        w.filter(F.col("bottom") <= F.col("height") * margin_frac),
+        w.filter(F.col("bottom") <= F.col("height") * 0.12),
         F.max("bottom"), "hdr_extent", "hdr_sig",
     )
     ftr = strip_sig(
-        w.filter(F.col("top") >= F.col("height") * (1.0 - margin_frac)),
+        w.filter(F.col("top") >= F.col("height") * 0.88),
         F.min("top"), "ftr_extent", "ftr_sig",
     )
     n_pages = pg.groupBy("url").agg(F.count("*").alias("n_pages"))
     threshold = F.greatest(
-        F.lit(min_pages), F.ceil(F.col("n_pages") * min_frac)
+        F.lit(2), F.ceil(F.col("n_pages") * 0.5)
     )
 
     def chrome_sigs(sig_df: DataFrame, sig_name: str) -> DataFrame:
@@ -860,12 +855,10 @@ def header_footer_bounds(pages: DataFrame, margin_frac: float = 0.12,
     )
 
 
-def document_body_text(pages: DataFrame, margin_frac: float = 0.12,
-                       min_pages: int = 2,
-                       min_frac: float = 0.5) -> DataFrame:
+def document_body_text(pages: DataFrame) -> DataFrame:
     """D8 extract_text_body (page.rs:480-483): per-url text with
     detected header/footer chrome removed. Native joins + windows."""
-    bounds = header_footer_bounds(pages, margin_frac, min_pages, min_frac)
+    bounds = header_footer_bounds(pages)
     words = words_table(pages).join(
         bounds.select("url", "page_number", "body_top", "body_bottom"),
         ["url", "page_number"],
@@ -1175,8 +1168,8 @@ SEARCH_SCHEMA = StructType(
 )
 
 
-def _search_rows(url: str, html: bytes, *, pattern: str, regex: bool,
-                 case: bool, options: ExtractOptions | None = None):
+def _search_rows(url: str, html: bytes, *, pattern: str,
+                 options: ExtractOptions | None = None):
     """One row per match; a failure ends the document's rows."""
     from .kernel.docextras import search_chars
     from .kernel.document import Document
@@ -1185,7 +1178,7 @@ def _search_rows(url: str, html: bytes, *, pattern: str, regex: bool,
         doc = Document(html, options)
         for i in range(doc.page_count):
             page = doc.page(i)
-            for m in search_chars(page.char_columns, pattern, regex, case):
+            for m in search_chars(page.char_columns, pattern):
                 yield {
                     "url": url, "page_number": i + 1,
                     "match_text": m["text"],
@@ -1197,13 +1190,12 @@ def _search_rows(url: str, html: bytes, *, pattern: str, regex: bool,
         return
 
 
-def search_pages(df: DataFrame, pattern: str, regex: bool = True,
-                 case: bool = True,
+def search_pages(df: DataFrame, pattern: str,
                  options: ExtractOptions | None = None) -> DataFrame:
     """P6 regex search as a pipeline op: (url, html) → one row per match
     with the union bbox of the matched chars (search.rs:59-145)."""
     return map_rows(df.select("url", "html"), _search_rows, SEARCH_SCHEMA,
-                    pattern=pattern, regex=regex, case=case, options=options)
+                    pattern=pattern, options=options)
 
 
 HTML_MAIN_SCHEMA = StructType(

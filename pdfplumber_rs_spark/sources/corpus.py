@@ -204,15 +204,13 @@ def _corpus_row(doc_id, text, lang):
 
 
 @cached_builder
-def corpus_table(spark, sf_dir: str, limit: int | None = None) -> DataFrame:
+def corpus_table(spark, sf_dir: str) -> DataFrame:
     """documents.parquet → (doc_id, url, warc_ts, html=pdf bytes, text,
     lang). PDF rendering happens on executors via mapInArrow; the
     rendered corpus is parquet-cached per (sf, generator-version) so
     repeated queries read stored PDF bytes — the shape a production
     job has, where the binary column lives in an Iceberg table."""
     docs = _documents(spark, sf_dir, "doc_id", "text", "lang")
-    if limit is not None:
-        docs = docs.limit(limit)
     return _generate(docs, "doc_id", _corpus_row, CORPUS_SCHEMA)
 
 

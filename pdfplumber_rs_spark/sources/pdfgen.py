@@ -327,8 +327,7 @@ def build_pdf(page_contents: list[bytes], fonts: dict[str, str] | None = None,
 # -- content-stream builders ---------------------------------------------------
 
 def text_page_content(lines: list[str], font: str = "F2", size: float = 10.0,
-                      x: float = 72.0, y: float = TOP_Y,
-                      leading: float = LEADING, mcid: bool = False,
+                      x: float = 72.0, y: float = TOP_Y, mcid: bool = False,
                       fill_rgb: tuple | None = None,
                       stroke_rgb: tuple | None = None) -> bytes:
     """`BT /F 10 Tf x y Td (line) Tj 0 -14 Td ... ET` like the bench fixture.
@@ -346,7 +345,7 @@ def text_page_content(lines: list[str], font: str = "F2", size: float = 10.0,
     parts.append(f"BT /{font} {size:g} Tf {x:g} {y:g} Td".encode())
     for i, line in enumerate(lines):
         if i > 0:
-            parts.append(f"0 {-leading:g} Td".encode())
+            parts.append(f"0 {-LEADING:g} Td".encode())
         tj = b"(" + escape_pdf_text(line).encode("latin-1", "replace") + b") Tj"
         if mcid:
             tj = f"/P << /MCID {i} >> BDC\n".encode() + tj + b"\nEMC"
@@ -355,48 +354,41 @@ def text_page_content(lines: list[str], font: str = "F2", size: float = 10.0,
     return b"\n".join(parts)
 
 
-def cjk_text_page_content(lines: list[str], font: str = "FC",
-                          size: float = 10.0, x: float = 72.0,
-                          y: float = TOP_Y,
-                          leading: float = LEADING) -> bytes:
+def cjk_text_page_content(lines: list[str]) -> bytes:
     """Text shown through a 2-byte CMap font: each line is a UTF-16BE
     HEX string (`<4E2D6587> Tj`) — the code bytes ARE UCS-2, matching
     the UniXX-UCS2/UTF16 predefined CMaps."""
-    parts = [f"BT /{font} {size:g} Tf {x:g} {y:g} Td".encode()]
+    parts = [f"BT /FC 10 Tf 72 {TOP_Y:g} Td".encode()]
     for i, line in enumerate(lines):
         if i > 0:
-            parts.append(f"0 {-leading:g} Td".encode())
+            parts.append(f"0 {-LEADING:g} Td".encode())
         parts.append(
             b"<" + line.encode("utf-16-be").hex().encode() + b"> Tj")
     parts.append(b"ET")
     return b"\n".join(parts)
 
 
-def cid_text_page_content(cid_lines: list[list[int]], font: str = "FJ",
-                          size: float = 10.0, x: float = 72.0,
-                          y: float = TOP_Y,
-                          leading: float = LEADING) -> bytes:
+def cid_text_page_content(cid_lines: list[list[int]]) -> bytes:
     """Text shown through Identity-H: each line is a hex string of raw
     2-byte CIDs (`<034B...> Tj`) — unicode must come from the Adobe
     CID->UCS2 ordering tables (cid_font.rs, fonts/cid_tables.py)."""
-    parts = [f"BT /{font} {size:g} Tf {x:g} {y:g} Td".encode()]
+    parts = [f"BT /FJ 10 Tf 72 {TOP_Y:g} Td".encode()]
     for i, cids in enumerate(cid_lines):
         if i > 0:
-            parts.append(f"0 {-leading:g} Td".encode())
+            parts.append(f"0 {-LEADING:g} Td".encode())
         hexstr = "".join(f"{cid:04X}" for cid in cids)
         parts.append(b"<" + hexstr.encode() + b"> Tj")
     parts.append(b"ET")
     return b"\n".join(parts)
 
 
-def inline_image_content(x: float, y: float, w: float, h: float,
-                         src_w: int = 2, src_h: int = 2) -> bytes:
+def inline_image_content(x: float, y: float, w: float, h: float) -> bytes:
     """`q w 0 0 h x y cm BI ... ID <gray bytes> EI Q` inline image
     (tokenizer.rs:681-790); bbox = CTM unit-square transform."""
-    data = bytes((17 * (i + 1)) % 256 for i in range(src_w * src_h))
+    data = bytes((17 * (i + 1)) % 256 for i in range(4))  # 2x2 gray
     return (
         f"q {w:g} 0 0 {h:g} {x:g} {y:g} cm\n"
-        f"BI /W {src_w} /H {src_h} /CS /G /BPC 8 /F /AHx ID\n".encode()
+        "BI /W 2 /H 2 /CS /G /BPC 8 /F /AHx ID\n".encode()
         + data.hex().encode() + b">\nEI Q"
     )
 
@@ -426,16 +418,15 @@ def lattice_table_content(rows: int, cols: int, x0: float = 72.0,
     return b"\n".join(parts)
 
 
-def stream_table_content(rows: int, cols: int, x0: float = 72.0,
-                         top_y: float = TOP_Y, col_pitch: float = 100.0,
+def stream_table_content(rows: int, cols: int, col_pitch: float = 100.0,
                          row_pitch: float = 16.0,
                          label: str = "Data-{r}-{c}") -> bytes:
     """Text-only aligned grid (stream-strategy fixture)."""
     parts = []
     for r in range(rows):
         for c in range(cols):
-            tx = x0 + c * col_pitch
-            ty = top_y - r * row_pitch
+            tx = 72.0 + c * col_pitch
+            ty = TOP_Y - r * row_pitch
             txt = escape_pdf_text(label.format(r=r, c=c))
             parts.append(f"BT /F2 9 Tf {tx:g} {ty:g} Td ({txt}) Tj ET".encode())
     return b"\n".join(parts)
@@ -456,9 +447,9 @@ def complex_page_content() -> bytes:
 
 # -- document-level fixtures -----------------------------------------------------
 
-def pdf_from_text(text: str, lines_per_page: int = 48, font: str = "F2",
-                  size: float = 10.0, annots: str | None = None,
-                  mcid: bool = False, page1_extra: bytes | None = None,
+def pdf_from_text(text: str, lines_per_page: int = 48,
+                  annots: str | None = None, mcid: bool = False,
+                  page1_extra: bytes | None = None,
                   info: dict[str, str] | None = None,
                   bookmarks_per_page: str | None = None,
                   form_fields: list[dict] | None = None) -> bytes:
@@ -468,8 +459,7 @@ def pdf_from_text(text: str, lines_per_page: int = 48, font: str = "F2",
     `bookmarks_per_page` is a title template with {p} (1-based)."""
     lines = sanitize_for_pdf(text).split("\n")
     pages = [
-        text_page_content(lines[i : i + lines_per_page], font=font, size=size,
-                          mcid=mcid)
+        text_page_content(lines[i : i + lines_per_page], mcid=mcid)
         for i in range(0, max(len(lines), 1), lines_per_page)
     ]
     if page1_extra:

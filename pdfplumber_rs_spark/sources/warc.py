@@ -148,30 +148,24 @@ def _warc_file_rows(path: str, content: bytes, *, want_types: tuple):
 
 
 def read_warc(spark: SparkSession, path: str,
-              n_partitions: int | None = None,
               want_types: tuple[str, ...] = ("response",)) -> DataFrame:
     """WARC files → corpus rows. binaryFile scan (one row per file,
     content pruned to what the parse consumes) → per-file parse through
-    `pipeline.map_rows`. Pass n_partitions to spread many small files
-    (or leave None: one task per file, the CC grain)."""
+    `pipeline.map_rows`, one task per file (the CC grain)."""
     files = spark.read.format("binaryFile") \
         .load(path).select("path", "content")
-    if n_partitions:
-        files = files.repartition(n_partitions)
     return map_rows(files, _warc_file_rows, WARC_SCHEMA,
                     want_types=want_types)
 
 
-def read_wet(spark: SparkSession, path: str,
-             n_partitions: int | None = None) -> DataFrame:
+def read_wet(spark: SparkSession, path: str) -> DataFrame:
     """WET files (Common Crawl's extracted-text sibling of WARC:
     `conversion` records, text/plain payload) → (url, warc_ts, text)
     corpus rows. Same file-grain parallelism as read_warc; the UTF-8
     decode happens JVM-side via a cast on the parsed payload."""
     import pyspark.sql.functions as F
 
-    rows = read_warc(spark, path, n_partitions=n_partitions,
-                     want_types=("conversion",))
+    rows = read_warc(spark, path, want_types=("conversion",))
     return rows.select(
         "url", "warc_ts",
         F.col("html").cast("string").alias("text"),
@@ -216,9 +210,7 @@ def build_warc(records: list[tuple[str, datetime, bytes]],
     return bytes(out)
 
 
-def write_warc(df: DataFrame, out_dir: str,
-               gzip_per_record: bool = True,
-               warc_type: str = "response",
+def write_warc(df: DataFrame, out_dir: str, warc_type: str = "response",
                with_http: bool = True,
                plain_content_type: str = "application/octet-stream",
                ext_base: str = "warc") -> DataFrame:
@@ -281,12 +273,11 @@ def write_warc(df: DataFrame, out_dir: str,
                 yield pd.DataFrame(
                     [], columns=[f.name for f in manifest_schema])
             return
-        data = build_warc(recs, gzip_per_record=gzip_per_record,
+        data = build_warc(recs, gzip_per_record=True,
                           warc_type=warc_type, with_http=with_http,
                           plain_content_type=plain_content_type)
         digest = hashlib.sha1(data).hexdigest()[:12]
-        ext = f"{ext_base}.gz" if gzip_per_record else ext_base
-        name = f"part-{pid:05d}-{digest}.{ext}"
+        name = f"part-{pid:05d}-{digest}.{ext_base}.gz"
         os.makedirs(out_dir, exist_ok=True)
         path = os.path.join(out_dir, name)
         tmp = path + ".tmp"
@@ -303,8 +294,7 @@ def write_warc(df: DataFrame, out_dir: str,
         write, manifest_schema)
 
 
-def write_wet(df: DataFrame, out_dir: str,
-              gzip_per_record: bool = True) -> DataFrame:
+def write_wet(df: DataFrame, out_dir: str) -> DataFrame:
     """Distributed WET sink: (url, warc_ts, text) rows → Common-Crawl
     WET files (`conversion` records, text/plain, no HTTP envelope),
     one file per partition with the same atomic-publish + manifest
@@ -316,7 +306,6 @@ def write_wet(df: DataFrame, out_dir: str,
         "url", "warc_ts",
         F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8")
         .alias("html"))
-    m = write_warc(wet, out_dir, gzip_per_record=gzip_per_record,
-                   warc_type="conversion", with_http=False,
+    m = write_warc(wet, out_dir, warc_type="conversion", with_http=False,
                    plain_content_type="text/plain", ext_base="wet")
     return m.withColumnRenamed("warc_file", "wet_file")

@@ -91,9 +91,7 @@ def test_embedding_dedup_mega_cluster_linear(spark):
     base = [1.0, 0.5, -0.25, 0.125] + [0.01 * d for d in range(4)]
     rows = [(i, [x * (1.0 + i * 1e-9) for x in base]) for i in range(n)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    members = similarity._bucket_members(df, dim=8, n_planes=4,
-                                         id_col="vec_id",
-                                         vec_col="embedding")
+    members = similarity._bucket_members(df, dim=8, n_planes=4)
     assert members.count() == n - 1  # linear, not n*(n-1)/2
     out = similarity.embedding_dedup(df, dim=8, threshold=0.999,
                                      n_planes=4).collect()
@@ -1311,7 +1309,9 @@ def test_pack_sequences_invariants(spark):
 def test_c4_clean_rules(spark):
     """Every C4 rule individually: terminal-punct line filter, 3-word
     minimum, javascript line drop, lorem-ipsum / brace doc gates, and
-    the 5-sentence document threshold."""
+    the 5-sentence document threshold. The line filter is evaluated
+    once per row: the optimized plan holds two `filter(` lambdas, one
+    over the lines and one over the words inside each line."""
     good5 = ("One good sentence here. Another good sentence there. "
              "A third sentence now. A fourth sentence too. "
              "And a fifth one.")
@@ -1324,7 +1324,10 @@ def test_c4_clean_rules(spark):
          (5, None)],
         "doc_id long, text string",
     )
-    rows = {r.doc_id: r for r in text.c4_clean(df).collect()}
+    cleaned = text.c4_clean(df)
+    plan = cleaned._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("filter(") == 2
+    rows = {r.doc_id: r for r in cleaned.collect()}
     r1 = rows[1]
     assert r1.kept  # 5 sentences survive in one kept line
     assert r1.n_lines == 4 and r1.n_kept_lines == 1

@@ -515,3 +515,116 @@ def test_row_kernel_is_the_one_arrow_boundary():
     assert len(conversions) == 2
     assert inside(conversions, span("pdfplumber_rs_spark/pipeline.py",
                                     "row_kernel"))
+
+
+# Defaulted parameters that no call in the repository sets, kept on purpose.
+KEPT_KNOBS = {
+    **{f"pdfplumber_rs_spark.pipeline:{fn}(options)":
+       "carries the document password; credentials stay configurable"
+       for fn in ("document_meta", "render_html", "render_svg",
+                  "search_pages", "signatures_table", "structure_table",
+                  "table_debug_table", "validation_table")},
+    "pdfplumber_rs_spark.pipeline:extract_pages(spill_dir)":
+        "a storage path, which depends on the deployment",
+}
+
+
+def test_every_public_default_has_a_caller():
+    """No knob without a caller: every defaulted parameter of a public
+    module-level package function is set by some call in a tracked .py
+    file, or is in KEPT_KNOBS. Calls resolve by function name; a
+    positional argument sets the parameter at its index; a call with
+    *args or **kw sets every parameter; a function referenced as a
+    value (a dispatch table entry, a test parameter) may be called with
+    any positional arguments. An argument that only passes on an unset
+    parameter of the enclosing function sets nothing, so the scan runs
+    to a fixed point."""
+    import ast
+
+    from tests.test_session import ROOT, _tracked_py
+
+    trees = {f: ast.parse((ROOT / f).read_text()) for f in _tracked_py()}
+
+    def defaulted(fn):
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        out = {p.arg: i for i, p in enumerate(pos)
+               if i >= len(pos) - len(a.defaults)}
+        out.update({p.arg: None for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                    if d is not None})
+        return out
+
+    targets = {}  # name -> [(knob prefix, def node)]
+    for f, tree in trees.items():
+        if f.startswith("pdfplumber_rs_spark/"):
+            module = f[:-3].replace("/", ".")
+            for fn in tree.body:
+                if (isinstance(fn, ast.FunctionDef)
+                        and not fn.name.startswith("_") and defaulted(fn)):
+                    targets.setdefault(fn.name, []).append(
+                        (f"{module}:{fn.name}", fn))
+    knob_of = {id(fn): prefix for v in targets.values() for prefix, fn in v}
+
+    calls, refs = [], set()  # (call, enclosing defs), referenced names
+
+    def visit(node, scope, imported):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.Lambda)):
+            scope = scope + (node,)
+        if isinstance(node, ast.Call):
+            calls.append((node, scope))
+            func = node.func  # the callee itself is not a value reference
+            children = [*node.args, *node.keywords,
+                        *([func.value] if isinstance(func, ast.Attribute)
+                          else [] if isinstance(func, ast.Name) else [func])]
+        else:
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                refs.add(node.id)
+            if (isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id in imported):
+                refs.add(node.attr)
+            children = ast.iter_child_nodes(node)
+        for child in children:
+            visit(child, scope, imported)
+
+    for tree in trees.values():
+        visit(tree, (), {a.asname or a.name.split(".")[0]
+                         for n in ast.walk(tree)
+                         if isinstance(n, (ast.Import, ast.ImportFrom))
+                         for a in n.names})
+
+    def passes_on_unset(value, scope, unset):
+        if not isinstance(value, ast.Name):
+            return False
+        for fn in reversed(scope):
+            a = fn.args
+            if value.id in {p.arg for p in a.posonlyargs + a.args
+                            + a.kwonlyargs}:
+                return f"{knob_of.get(id(fn))}({value.id})" in unset
+        return False
+
+    knobs = {f"{prefix}({p})" for v in targets.values()
+             for prefix, fn in v for p in defaulted(fn)}
+    assert set(KEPT_KNOBS) <= knobs
+    unset, last = set(), None
+    while unset != last:
+        last, set_ = unset, set()
+        for name in refs & set(targets):
+            set_ |= {f"{prefix}({p})" for prefix, fn in targets[name]
+                     for p, i in defaulted(fn).items() if i is not None}
+        for call, scope in calls:
+            func = call.func
+            name = getattr(func, "id", None) or getattr(func, "attr", None)
+            star = (any(isinstance(a, ast.Starred) for a in call.args)
+                    or any(k.arg is None for k in call.keywords))
+            given = {k.arg: k.value for k in call.keywords}
+            for prefix, fn in targets.get(name, ()):
+                for p, i in defaulted(fn).items():
+                    value = given.get(p, call.args[i] if i is not None
+                                      and i < len(call.args) else None)
+                    if star or (value is not None and not passes_on_unset(
+                            value, scope, last)):
+                        set_.add(f"{prefix}({p})")
+        unset = knobs - set_
+    assert sorted(unset - set(KEPT_KNOBS)) == []

@@ -253,11 +253,10 @@ def test_semdedup_auto_n_cells_tracks_corpus_size(spark):
         [(i, [float(i % 11), float(i % 7), 1.0]) for i in range(240)],
         "vec_id long, embedding array<float>")
     # target 50/cell on a 240-row corpus → ceil = 5 cells
-    _, k = _semdedup_assign(df, None, "vec_id", "embedding", 0, 50)
+    _, k = _semdedup_assign(df, None, 50)
     assert k == 5
     # floor of 2 even for a tiny corpus
-    _, k = _semdedup_assign(df.limit(3), None, "vec_id", "embedding",
-                            0, 10_000)
+    _, k = _semdedup_assign(df.limit(3), None, 10_000)
     assert k == 2
 
 
