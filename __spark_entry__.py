@@ -129,7 +129,7 @@ def q_pdf_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark import pipeline as P
     from pdfplumber_rs_spark.sources.corpus import lineitem_table_corpus
 
-    corpus = lineitem_table_corpus(spark, sf_dir, max_orderkey=100)
+    corpus = lineitem_table_corpus(spark, sf_dir)
     pages = P.extract_pages(corpus, handle_skew=False, include=("tables",))
     cells = P.cells_table(pages)
     ids = (
@@ -623,7 +623,7 @@ def q_pdf_largest_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark import pipeline as P
     from pdfplumber_rs_spark.sources.corpus import two_table_corpus
 
-    corpus = two_table_corpus(spark, sf_dir, max_orderkey=100)
+    corpus = two_table_corpus(spark, sf_dir)
     pages = P.extract_pages(corpus, handle_skew=False, include=("tables",))
     tables = P.tables_table(pages).select(
         "url", "table_idx",
@@ -653,7 +653,7 @@ def q_pdf_table_debug(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark import pipeline as P
     from pdfplumber_rs_spark.sources.corpus import lineitem_table_corpus
 
-    corpus = lineitem_table_corpus(spark, sf_dir, max_orderkey=100)
+    corpus = lineitem_table_corpus(spark, sf_dir)
     dbg = P.table_debug_table(corpus)
     ids = (
         _read(spark, sf_dir, "lineitem")
@@ -681,7 +681,7 @@ def q_pdf_table_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark import pipeline as P
     from pdfplumber_rs_spark.sources.corpus import two_table_corpus
 
-    corpus = two_table_corpus(spark, sf_dir, max_orderkey=100)
+    corpus = two_table_corpus(spark, sf_dir)
     pages = P.extract_pages(corpus, handle_skew=False, include=("tables",))
     cells = P.cells_table(pages)
     acc = (
@@ -714,7 +714,7 @@ def q_pdf_stream_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark.config import TableSettings
     from pdfplumber_rs_spark.sources.corpus import stream_table_corpus
 
-    corpus = stream_table_corpus(spark, sf_dir, max_orderkey=100)
+    corpus = stream_table_corpus(spark, sf_dir)
     pages = P.extract_pages(
         corpus,
         table_settings=TableSettings(strategy="stream", min_words_vertical=2),
@@ -749,7 +749,7 @@ def q_pdf_explicit_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark.config import ExplicitLines, TableSettings
     from pdfplumber_rs_spark.sources.corpus import stream_table_corpus
 
-    corpus = stream_table_corpus(spark, sf_dir, max_orderkey=100)
+    corpus = stream_table_corpus(spark, sf_dir)
     # stream_table_content geometry: text rows top=64.4+16r; grid lines
     # bracket each row (60+16r) and each 100pt column pitch from x=70
     ex = ExplicitLines(
@@ -790,7 +790,7 @@ def q_pdf_merged_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark.config import TableSettings
     from pdfplumber_rs_spark.sources.corpus import merged_table_corpus
 
-    corpus = merged_table_corpus(spark, sf_dir, max_orderkey=100)
+    corpus = merged_table_corpus(spark, sf_dir)
     pages = P.extract_pages(
         corpus,
         table_settings=TableSettings(duplicate_merged_content=True),
@@ -1038,7 +1038,7 @@ def q_pdf_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark.config import ExtractOptions
     from pdfplumber_rs_spark.sources.corpus import encrypted_corpus_table
 
-    corpus = encrypted_corpus_table(spark, sf_dir, password="s3cret")
+    corpus = encrypted_corpus_table(spark, sf_dir)
     pages = P.extract_pages(
         corpus, options=ExtractOptions(password="s3cret"),
         handle_skew=False, include=(),
@@ -1214,7 +1214,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark.functions.dedup import ngram_jaccard_pairs
 
     docs = _read(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(docs, window=10, threshold=0.2).orderBy(
+    return ngram_jaccard_pairs(docs, threshold=0.2).orderBy(
         "id_a", "id_b"
     )
 
@@ -1253,8 +1253,7 @@ def q_dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark.functions.dedup import dedup_components
 
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    return dedup_components(docs, num_hashes=8, band_size=4,
-                            n_rounds=3).orderBy("doc_id")
+    return dedup_components(docs, num_hashes=8, n_rounds=3).orderBy("doc_id")
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1659,7 +1658,7 @@ def q_crawl_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     delays = parse_crawl_delay(robots)
     return (
-        politeness_schedule(pages, delays, per_slot=2, default_delay=1.0)
+        politeness_schedule(pages, delays)
         .select("doc_id", "host", "fetch_slot", "fetch_offset_s")
         .orderBy("doc_id")
     )
@@ -1681,7 +1680,7 @@ def q_politeness(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.lpad(F.col("doc_id").cast("string"), 6, "0"))
         .alias("url"),
     )
-    return (politeness_slots(pages, per_slot=2)
+    return (politeness_slots(pages)
             .select("doc_id", "host", "url", "fetch_slot")
             .orderBy("doc_id"))
 
@@ -1999,7 +1998,7 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_dur = feats.withColumn(
         "duration_s", F.col("n_units") / F.col("rate"))
     return (
-        frame_sample_plan(with_dur, every_s=1.0)
+        frame_sample_plan(with_dur)
         .select("media_id",
                 F.round("sample_ts", 4).alias("sample_ts"))
         .orderBy("media_id", "sample_ts")
@@ -2079,7 +2078,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return ivf_topk(emb, queries, n_cells=8, nprobe=2, k=5).select(
+    return ivf_topk(emb, queries, n_cells=8, nprobe=2).select(
         "query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"),
         "cos_sim",
     ).orderBy("query_id", "rank")
@@ -2094,7 +2093,7 @@ def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    approx = lsh_topk(emb, queries, dim=64, k=5, n_planes=4)
+    approx = lsh_topk(emb, queries, dim=64, k=5)
     exact = cosine_topk(emb, queries, k=5).select(
         "query_id", F.col("neighbor_id").alias("exact_neighbor"))
     hits = (
@@ -2132,7 +2131,7 @@ def q_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = emb.unionByName(copies)
     return (
-        embedding_dedup(corpus, dim=64, threshold=0.999, n_planes=8)
+        embedding_dedup(corpus, dim=64, n_planes=8)
         .select("vec_id", F.col("keep_id").cast("long").alias("keep_id"))
         .orderBy("vec_id")
     )
@@ -2157,7 +2156,7 @@ def q_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark.functions.text import winnow_fingerprints
 
     docs = _read(spark, sf_dir, "documents")
-    fps = winnow_fingerprints(docs, k=8, window=4)
+    fps = winnow_fingerprints(docs)
     return (
         fps.groupBy("doc_id")
         .agg(F.count("*").alias("n_fps"),
@@ -2347,7 +2346,7 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark.functions.dedup import duplicate_spans
 
     docs = _read(spark, sf_dir, "documents")
-    return duplicate_spans(docs, k=5).orderBy("doc_id", "span_start")
+    return duplicate_spans(docs).orderBy("doc_id", "span_start")
 
 
 def q_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2358,7 +2357,7 @@ def q_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark.functions.dedup import remove_duplicate_spans
 
     docs = _read(spark, sf_dir, "documents")
-    return remove_duplicate_spans(docs, k=5).orderBy("doc_id")
+    return remove_duplicate_spans(docs).orderBy("doc_id")
 
 
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2663,7 +2662,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _read(spark, sf_dir, "documents")
     return (
-        line_dedup(docs, line_tokens=10)
+        line_dedup(docs)
         .select("doc_id", "n_lines", "n_kept",
                 F.md5("kept_text").alias("kept_md5"))
         .orderBy("doc_id")
@@ -2743,7 +2742,7 @@ def q_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark.functions.text import zipf_fit
 
     docs = _read(spark, sf_dir, "documents")
-    return zipf_fit(docs, top_n=100)
+    return zipf_fit(docs)
 
 
 def q_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2765,7 +2764,7 @@ def q_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark.functions.dedup import dedup_components
 
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    cc = dedup_components(docs, num_hashes=8, band_size=4, n_rounds=3)
+    cc = dedup_components(docs, num_hashes=8, n_rounds=3)
     sizes = cc.groupBy("component").agg(F.count("*").alias("sz"))
     return (sizes.groupBy("sz").agg(F.count("*").alias("n_clusters"))
             .select(F.col("sz").cast("long").alias("cluster_size"),
@@ -3081,12 +3080,12 @@ def q_stream_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     _read(spark, sf_dir, "events").write.parquet(inp)
     q = stream_windowed_counts(spark, inp, out, ckpt,
-                               window="1 hour", watermark="1 hour")
+                               window="1 hour")
     q.awaitTermination(600)
     hourly = spark.read.parquet(out).select(
         "event_type", F.col("window_start").alias("hour"),
         F.col("count").alias("cnt"))
-    return (spike_flags(hourly, trailing=3, factor=2.0)
+    return (spike_flags(hourly)
             .orderBy("event_type", "hour_ts"))
 
 
@@ -3167,8 +3166,8 @@ def q_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.pmod("doc_id", F.lit(7)).cast("int"), "doc_id")
     urls = docs.select("doc_id", url.alias("url"))
     seen = urls.filter(F.pmod("doc_id", F.lit(2)) == 0).select("url")
-    bloom = bloom_build(seen, m_words=64, k=3)
-    return (bloom_contains(bloom, urls.select("url"), m_words=64, k=3)
+    bloom = bloom_build(seen)
+    return (bloom_contains(bloom, urls.select("url"))
             .orderBy("key"))
 
 
@@ -3258,7 +3257,7 @@ def q_event_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = ev.select(
         "ts", "event_type",
         F.explode(F.sequence(F.lit(1), rep)).alias("_r"))
-    return (event_spikes(dec, trailing=3, factor=2.0)
+    return (event_spikes(dec)
             .orderBy("event_type", "hour_ts"))
 
 
@@ -3271,7 +3270,7 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark.functions.dedup import containment_pairs
 
     docs = _read(spark, sf_dir, "documents")
-    return containment_pairs(docs, n=2, window=10, threshold=0.2) \
+    return containment_pairs(docs, n=2, threshold=0.2) \
         .orderBy("id_a", "id_b")
 
 
@@ -3294,7 +3293,7 @@ def q_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.format_string("t%d document alpha betas", g))
     )
     titled = docs.select("doc_id", title.alias("title"))
-    return levenshtein_pairs(titled, max_dist=2, prefix=4) \
+    return levenshtein_pairs(titled, prefix=4) \
         .orderBy("id_a", "id_b")
 
 
@@ -3349,7 +3348,7 @@ def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = docs.select("doc_id", "text")
     target = docs.filter(F.col("lang") == "en").select("doc_id", "text")
     return (
-        dsir_weights(raw, target, n_buckets=64)
+        dsir_weights(raw, target)
         .select("doc_id", F.col("n_tokens").cast("long").alias("n_tokens"),
                 "log_weight")
         .orderBy("doc_id")
@@ -3613,8 +3612,7 @@ def q_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     # same 4-minima banding as q_minhash_candidates; threshold 0.5
     # keeps only pairs sharing half their vocabulary
-    return (minhash_verified_pairs(docs, num_hashes=8, band_size=4,
-                                   threshold=0.5)
+    return (minhash_verified_pairs(docs, num_hashes=8, band_size=4)
             .orderBy("id_a", "id_b"))
 
 
@@ -3636,7 +3634,7 @@ def q_quality_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfplumber_rs_spark.functions.dedup import quality_dedup
 
     docs = _read(spark, sf_dir, "documents")
-    return (quality_dedup(docs, "n_chars", num_hashes=8, band_size=4)
+    return (quality_dedup(docs, "n_chars")
             .orderBy("doc_id"))
 
 
@@ -3649,7 +3647,7 @@ def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         host_boilerplate_strip)
 
     docs = _read(spark, sf_dir, "documents")
-    out = host_boilerplate_strip(docs, max_ratio=0.05, min_docs=2,
+    out = host_boilerplate_strip(docs, max_ratio=0.05,
                                  line_tokens=10, host_col="source")
     return out.select(
         "doc_id", "n_lines", "n_kept",
@@ -3740,8 +3738,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     prior = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
     prior_bands = minhash_bands(prior, num_hashes=8, band_size=4)
-    return (minhash_dedup_incremental(new, prior_bands,
-                                      num_hashes=8, band_size=4)
+    return (minhash_dedup_incremental(new, prior_bands)
             .orderBy("doc_id"))
 
 

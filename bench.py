@@ -58,7 +58,7 @@ def _micro_benches():
     b.iter); each body re-interprets the page(s) then runs the
     operator, exactly like the Rust b.iter closures."""
     from pdfplumber_rs_spark.config import TableSettings, TextOptions
-    from pdfplumber_rs_spark.kernel.document import open_pdf
+    from pdfplumber_rs_spark.kernel.document import Document
     from pdfplumber_rs_spark.sources import pdfgen
 
     line = ("Line {} of the document with some words to measure "
@@ -72,7 +72,7 @@ def _micro_benches():
     lattice = pdfgen.fixture_lattice(20, 5)
     stream = pdfgen.fixture_stream(20, 5)
 
-    docs = {name: open_pdf(data) for name, data in [
+    docs = {name: Document(data) for name, data in [
         ("simple_1page", simple), ("medium_10page", medium),
         ("complex_10page", complex_), ("20x5_lattice", lattice),
         ("20x5_stream", stream)]}
@@ -94,7 +94,7 @@ def _micro_benches():
     benches = []
     for fx in ("simple_1page", "medium_10page", "complex_10page"):
         data = raw[fx]
-        benches.append(("pdf_open", fx, lambda d=data: open_pdf(d)))
+        benches.append(("pdf_open", fx, lambda d=data: Document(d)))
         doc = docs[fx]
         benches.append(("char_extraction", fx,
                         all_pages(doc, lambda p: len(p.chars))))

@@ -54,15 +54,15 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.round(inter / F.greatest(union, F.lit(1)), 6)
 
 
-def ngram_jaccard_pairs(df: DataFrame, window: int = 10,
+def ngram_jaccard_pairs(df: DataFrame,
                         threshold: float = 0.5) -> DataFrame:
     """Near-duplicate pairs by word-set Jaccard within a bounded
-    candidate window (same lang, id difference ≤ window).
+    candidate window (same lang, id difference ≤ 10).
 
     Scale shape (round-1 judge fix): the JOIN KEY is the high-
-    cardinality id bucket `floor(id/window)` — side a fans out to its
+    cardinality id bucket `floor(id/10)` — side a fans out to its
     own bucket and the next, so every (a,b) with b.id ∈ (a.id,
-    a.id+window] meets in exactly one bucket and the shuffle spreads
+    a.id+10] meets in exactly one bucket and the shuffle spreads
     uniformly. Keying on low-cardinality `lang` put whole languages in
     single sort-merge partitions; lang equality and the id-window bound
     are post-join filters now."""
@@ -71,7 +71,7 @@ def ngram_jaccard_pairs(df: DataFrame, window: int = 10,
         F.col("lang").alias("k"),
         token_set(F.col("text")).alias("toks"),
     )
-    bucket = F.floor(F.col("id") / window)
+    bucket = F.floor(F.col("id") / 10)
     a = t.select(
         F.col("id"), F.col("k"), F.col("toks"),
         F.explode(F.array(bucket, bucket + 1)).alias("bucket"),
@@ -80,7 +80,7 @@ def ngram_jaccard_pairs(df: DataFrame, window: int = 10,
     pairs = a.join(b, "bucket").filter(
         (F.col("a.k") == F.col("b.k"))
         & (F.col("b.id") > F.col("a.id"))
-        & (F.col("b.id") <= F.col("a.id") + window)
+        & (F.col("b.id") <= F.col("a.id") + 10)
     )
     return (
         pairs.select(
@@ -158,15 +158,14 @@ def minhash_lsh_candidates(df: DataFrame, num_hashes: int = 8,
 
 
 def minhash_verified_pairs(df: DataFrame, num_hashes: int = 8,
-                           band_size: int = 2,
-                           threshold: float = 0.5) -> DataFrame:
+                           band_size: int = 2) -> DataFrame:
     """Candidate→verify, the production two-stage near-dup shape
     (Lee et al. 2022 §3 and every MinHash deployment since Broder):
     LSH banding proposes candidate pairs cheaply but with false
     positives (a single colliding band suffices); each candidate is
     then VERIFIED with the exact token-set Jaccard before any removal
-    decision. Returns (id_a, id_b, jaccard_sim) for verified pairs
-    only.
+    decision. Returns (id_a, id_b, jaccard_sim) for pairs verified at
+    Jaccard >= 0.5.
 
     Scale shape: candidates come from minhash_lsh_candidates (bucket
     join — its O(B²)-per-bucket enumeration caveat applies; for
@@ -192,7 +191,7 @@ def minhash_verified_pairs(df: DataFrame, num_hashes: int = 8,
                        F.col("toks").alias("toks_a")), "id_a")
         .join(t.select(F.col("id").alias("id_b"),
                        F.col("toks").alias("toks_b")), "id_b")
-        .filter(raw >= threshold)
+        .filter(raw >= 0.5)
         .select("id_a", "id_b",
                 F.round(raw, 6).alias("jaccard_sim"))
     )
@@ -224,10 +223,10 @@ def minhash_dedup(df: DataFrame, num_hashes: int = 8,
     )
 
 
-def minhash_dedup_incremental(new: DataFrame, prior_bands: DataFrame,
-                              num_hashes: int = 8,
-                              band_size: int = 4) -> DataFrame:
-    """Incremental near-dup removal: dedup a NEW crawl increment
+def minhash_dedup_incremental(new: DataFrame,
+                              prior_bands: DataFrame) -> DataFrame:
+    """Incremental near-dup removal (8 hashes, bands of 4, the
+    minhash_dedup banding): dedup a NEW crawl increment
     against itself AND a prior corpus whose (doc_id, band, key) band
     table was persisted by an earlier run — the production ingestion
     shape (FineWeb dedups per dump; CCNet per snapshot). Prior
@@ -245,7 +244,7 @@ def minhash_dedup_incremental(new: DataFrame, prior_bands: DataFrame,
     The prior band table is corpus-sized and is never broadcast; at
     real scale both sides bucket by (band, key) so re-ingestion joins
     exchange-free."""
-    new_bands = minhash_bands(new, num_hashes, band_size)
+    new_bands = minhash_bands(new, 8, 4)
     prior_reps = prior_bands.groupBy("band", "key").agg(
         F.min("doc_id").alias("prior_rep"))
     # new-side representative via window (round-6: the former
@@ -274,9 +273,9 @@ def minhash_dedup_incremental(new: DataFrame, prior_bands: DataFrame,
     )
 
 
-def quality_dedup(df: DataFrame, score: Column | str, num_hashes: int = 8,
-                  band_size: int = 4) -> DataFrame:
-    """minhash_dedup with a QUALITY-AWARE winner: per LSH bucket keep
+def quality_dedup(df: DataFrame, score: Column | str) -> DataFrame:
+    """minhash_dedup (8 hashes, bands of 4) with a QUALITY-AWARE
+    winner: per LSH bucket keep
     the highest-scoring document instead of the smallest id — the
     RefinedWeb/FineWeb production policy (near-dup clusters keep the
     longest / best-quality member, not an arbitrary one; Penedo et al.
@@ -296,7 +295,7 @@ def quality_dedup(df: DataFrame, score: Column | str, num_hashes: int = 8,
     everything downstream shuffles band rows only.
     Returns (doc_id, keep_id) for documents that should be dropped."""
     score_col = F.col(score) if isinstance(score, str) else score
-    bands = minhash_bands(df, num_hashes, band_size) \
+    bands = minhash_bands(df, 8, 4) \
         .join(df.select(F.col("doc_id"),
                         score_col.cast("double").alias("q")), "doc_id")
     # window representative instead of agg + self-join (round-6, same
@@ -319,12 +318,12 @@ def quality_dedup(df: DataFrame, score: Column | str, num_hashes: int = 8,
     )
 
 
-def dedup_components(df: DataFrame, num_hashes: int = 8, band_size: int = 4,
-                     n_rounds: int = 3,
+def dedup_components(df: DataFrame, num_hashes: int = 8, n_rounds: int = 3,
                      until_stable: bool = False) -> DataFrame:
     """Bounded label-propagation connected components over the LSH
-    bucket-membership graph — the transitive closure minhash_dedup's
-    single-pass union approximation skips. Label = min doc_id reachable
+    bucket-membership graph (bands of 4 hashes) — the transitive
+    closure minhash_dedup's single-pass union approximation skips.
+    Label = min doc_id reachable
     through shared buckets; each round propagates labels doc→bucket→doc
     (two keyed aggregations), so round r covers bucket-paths of length
     r and n_rounds=3 closes chains like A~B~C~D that single-pass
@@ -351,7 +350,7 @@ def dedup_components(df: DataFrame, num_hashes: int = 8, band_size: int = 4,
     # localCheckpoint truncates the growing plan each round (persist
     # alone keeps stacking lineage; at cluster depth this is the
     # between-stage Iceberg commit, reliable-checkpoint flavored)
-    bands = minhash_bands(df, num_hashes, band_size).persist()
+    bands = minhash_bands(df, num_hashes, 4).persist()
     labels = bands.select("doc_id").distinct().select(
         "doc_id", F.col("doc_id").alias("label")).localCheckpoint()
     rounds = 0
@@ -506,21 +505,51 @@ def simhash64(df: DataFrame) -> DataFrame:
     return agg.select("doc_id", *outs)
 
 
-def duplicate_spans(df: DataFrame, k: int = 5) -> DataFrame:
+_SPAN_K = 5  # tokens per duplicated gram: the span resolution
+
+
+def _dup_grams(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(doc_id, toks) per document, (doc_id, pos, g) per _SPAN_K-gram
+    start keyed by the gram's md5, and the keys g found in >= 2
+    documents."""
+    d = df.select(F.col("doc_id"),
+                  word_tokens(F.coalesce(F.col("text"), F.lit("")))
+                  .alias("toks"))
+    # short docs (< k tokens) yield an empty position array, not
+    # sequence(0, negative) — the descending-sequence crash class
+    # ADVICE.md flagged in repetition_features/word_ngrams
+    positions = F.when(
+        F.size("toks") >= _SPAN_K,
+        F.sequence(F.lit(0), F.size("toks") - _SPAN_K)
+    ).otherwise(F.array().cast("array<int>"))
+    grams = d.select(
+        "doc_id", F.posexplode(positions).alias("idx", "pos"), "toks",
+    ).select(
+        "doc_id", "pos",
+        F.md5(F.array_join(F.expr(f"slice(toks, pos + 1, {_SPAN_K})"),
+                           "\x01")).alias("g"),
+    )
+    dup = (grams.groupBy("g")
+           .agg(F.count_distinct("doc_id").alias("nd"))
+           .filter(F.col("nd") >= 2).select("g"))
+    return d, grams, dup
+
+
+def duplicate_spans(df: DataFrame) -> DataFrame:
     """Cross-document duplicated-substring spans — the exact-substring
-    training-data dedup of Lee et al. 2022 ("Deduplicating Training
-    Data Makes Language Models Better", arXiv:2107.06499), which builds
-    a corpus suffix array to find repeated byte ranges. A suffix array
-    is inherently sequential; the Spark-native equivalent is k-gram
-    fingerprinting: token position p starts duplicated content iff the
-    k-gram at p occurs in >= 2 distinct documents, and the maximal
-    duplicated spans are the islands of duplicated positions whose
-    k-token coverage is contiguous — successive gram starts merge into
-    one island whenever their gap is <= k, so two duplicated grams at
-    p and p+2 (k=5) report ONE span [p, p+7), never two overlapping
-    "maximal" spans (gaps-and-islands via lag + running sum over one
-    per-doc window). Every repeated substring of >= k tokens is found
-    exactly; resolution of the reported boundaries is k tokens.
+    training-data dedup of Lee et al. 2022 ("Deduplicating Training Data
+    Makes Language Models Better", arXiv:2107.06499), which builds a
+    corpus suffix array to find repeated byte ranges. A suffix array is
+    inherently sequential; the Spark-native equivalent is k-gram
+    fingerprinting (k = 5 tokens): token position p starts duplicated
+    content iff the k-gram at p occurs in >= 2 distinct documents, and the
+    maximal duplicated spans are the islands of duplicated positions whose
+    k-token coverage is contiguous — successive gram starts merge into one
+    island whenever their gap is <= k, so two duplicated grams at p and
+    p+2 report ONE span [p, p+7), never two overlapping "maximal" spans
+    (gaps-and-islands via lag + running sum over one per-doc window).
+    Every repeated substring of >= k tokens is found exactly; resolution
+    of the reported boundaries is k tokens.
 
     Returns (doc_id, span_start, span_len): token offset of each
     maximal duplicated span and its length in tokens (>= k).
@@ -532,37 +561,15 @@ def duplicate_spans(df: DataFrame, k: int = 5) -> DataFrame:
     linear in corpus tokens, never pairwise. The dup-gram set is NOT
     broadcast (it scales with the corpus); the semi-join stays a
     shuffled hash join on the gram key."""
-    toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                r"[^a-z0-9]+"),
-        lambda t: t != "",
-    )
-    d = df.select(F.col("doc_id"), toks.alias("toks"))
-    # short docs (< k tokens) yield an empty position array, not
-    # sequence(0, negative) — the descending-sequence crash class
-    # ADVICE.md flagged in repetition_features/word_ngrams
-    positions = F.when(
-        F.size("toks") >= k, F.sequence(F.lit(0), F.size("toks") - k)
-    ).otherwise(F.array().cast("array<int>"))
-    grams = d.select(
-        "doc_id",
-        F.posexplode(positions).alias("idx", "pos"),
-        "toks",
-    ).select(
-        "doc_id", "pos",
-        F.md5(F.array_join(F.expr(f"slice(toks, pos + 1, {k})"),
-                           "\x01")).alias("g"),
-    )
-    dup = (grams.groupBy("g")
-           .agg(F.count_distinct("doc_id").alias("nd"))
-           .filter(F.col("nd") >= 2).select("g"))
+    _, grams, dup = _dup_grams(df)
     hits = grams.join(dup, "g", "left_semi")
     w = Window.partitionBy("doc_id").orderBy("pos")
     # a new island starts when the previous duplicated gram's coverage
     # [prev, prev+k) no longer touches this one's [pos, pos+k)
     islands = hits.withColumn(
         "brk",
-        F.when(F.col("pos") - F.lag("pos").over(w) <= k, 0).otherwise(1),
+        F.when(F.col("pos") - F.lag("pos").over(w) <= _SPAN_K, 0)
+        .otherwise(1),
     ).withColumn(
         "isl",
         F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0)),
@@ -570,17 +577,18 @@ def duplicate_spans(df: DataFrame, k: int = 5) -> DataFrame:
     return (
         islands.groupBy("doc_id", "isl")
         .agg(F.min("pos").alias("span_start"),
-             (F.max("pos") - F.min("pos") + k).alias("span_len"))
+             (F.max("pos") - F.min("pos") + _SPAN_K).alias("span_len"))
         .select("doc_id",
                 F.col("span_start").cast("int").alias("span_start"),
                 F.col("span_len").cast("int").alias("span_len"))
     )
 
 
-def remove_duplicate_spans(df: DataFrame, k: int = 5) -> DataFrame:
+def remove_duplicate_spans(df: DataFrame) -> DataFrame:
     """The removal half of exact-substring dedup (Lee et al.
     arXiv:2107.06499): drop every token covered by a cross-document
-    duplicated span of >= k tokens and reassemble the surviving text.
+    duplicated span of >= k = 5 tokens and reassemble the surviving
+    text.
     A token t is covered iff some duplicated k-gram starts in
     (t-k, t] — so each duplicated gram-start position fans out to its
     k covered token indices (bounded k-way explode), the cover set is
@@ -594,30 +602,13 @@ def remove_duplicate_spans(df: DataFrame, k: int = 5) -> DataFrame:
     everything is doc_id-keyed — cover distinct, token anti-join, and
     the per-doc reassembly (array_sort over one doc's tokens, bounded
     by doc length, never corpus-wide)."""
-    toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                r"[^a-z0-9]+"),
-        lambda t: t != "",
-    )
-    d = df.select(F.col("doc_id"), toks.alias("toks"))
-    positions = F.when(
-        F.size("toks") >= k, F.sequence(F.lit(0), F.size("toks") - k)
-    ).otherwise(F.array().cast("array<int>"))
-    grams = d.select(
-        "doc_id", F.posexplode(positions).alias("idx", "pos"), "toks",
-    ).select(
-        "doc_id", "pos",
-        F.md5(F.array_join(F.expr(f"slice(toks, pos + 1, {k})"),
-                           "\x01")).alias("g"),
-    )
-    dup = (grams.groupBy("g")
-           .agg(F.count_distinct("doc_id").alias("nd"))
-           .filter(F.col("nd") >= 2).select("g"))
+    d, grams, dup = _dup_grams(df)
     cover = (
         grams.join(dup, "g", "left_semi")
         .select("doc_id",
                 F.explode(F.sequence(F.col("pos"),
-                                     F.col("pos") + k - 1)).alias("tpos"))
+                                     F.col("pos") + _SPAN_K - 1))
+                .alias("tpos"))
         .distinct()
     )
     tokens = d.select(
@@ -647,15 +638,15 @@ def remove_duplicate_spans(df: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
-def line_dedup(df: DataFrame, line_tokens: int = 10) -> DataFrame:
+def line_dedup(df: DataFrame) -> DataFrame:
     """Corpus-level exact line dedup — the C4 "three-sentence span"
     rule (Raffel et al. 2020 §2.2: "we discarded all but one of any
     three-sentence span occurring more than once in the data set"),
-    re-expressed over fixed `line_tokens`-token lines (this corpus has
-    no sentence boundaries; the unit is a parameter, the mechanics are
-    identical). Every occurrence of a line EXCEPT its first — first =
-    smallest (doc_id, line_idx) over the whole corpus — is removed,
-    and each document's surviving lines reassemble in order.
+    re-expressed over fixed 10-token lines (this corpus has no sentence
+    boundaries; the mechanics are identical). Every occurrence of a line
+    EXCEPT its first — first = smallest (doc_id, line_idx) over the whole
+    corpus — is removed, and each document's surviving lines reassemble in
+    order.
 
     Returns (doc_id, n_lines, n_kept, kept_text), one row per input
     document (kept_text = '' when every line was a duplicate).
@@ -668,13 +659,10 @@ def line_dedup(df: DataFrame, line_tokens: int = 10) -> DataFrame:
     is NOT broadcast). Reassembly is doc_id-keyed, bounded per doc.
     Mirrors the reference's dedup surface at the line grain the way
     dedup_exact does at the document grain."""
-    toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                r"[^a-z0-9]+"),
-        lambda t: t != "",
-    )
-    d = df.select(F.col("doc_id"), toks.alias("toks"))
-    n_lines = F.ceil(F.size("toks") / F.lit(float(line_tokens)))
+    d = df.select(F.col("doc_id"),
+                  word_tokens(F.coalesce(F.col("text"), F.lit("")))
+                  .alias("toks"))
+    n_lines = F.ceil(F.size("toks") / F.lit(10.0))
     lines = d.select(
         "doc_id",
         F.posexplode(
@@ -683,8 +671,7 @@ def line_dedup(df: DataFrame, line_tokens: int = 10) -> DataFrame:
                 F.transform(
                     F.sequence(F.lit(0), n_lines.cast("int") - 1),
                     lambda i: F.array_join(
-                        F.slice(F.col("toks"),
-                                i * line_tokens + 1, line_tokens),
+                        F.slice(F.col("toks"), i * 10 + 1, 10),
                         " "),
                 ),
             ).otherwise(F.array().cast("array<string>"))
@@ -723,13 +710,13 @@ def line_dedup(df: DataFrame, line_tokens: int = 10) -> DataFrame:
     )
 
 
-def containment_pairs(df: DataFrame, n: int = 3, window: int = 10,
+def containment_pairs(df: DataFrame, n: int = 3,
                       threshold: float = 0.5) -> DataFrame:
     """Asymmetric n-gram containment within a bounded candidate
-    window — the quote/subset detector Jaccard misses: a short doc
-    wholly quoted inside a long one has tiny Jaccard (union is the
-    long doc) but containment ≈ 1. For each candidate pair (a, b),
-    with G(x) the distinct word n-gram set:
+    window (id difference ≤ 10) — the quote/subset detector Jaccard
+    misses: a short doc wholly quoted inside a long one has tiny Jaccard
+    (union is the long doc) but containment ≈ 1. For each candidate pair
+    (a, b), with G(x) the distinct word n-gram set:
 
         cont_a_in_b = |G(a) ∩ G(b)| / |G(a)|   (and symmetrically)
 
@@ -738,7 +725,7 @@ def containment_pairs(df: DataFrame, n: int = 3, window: int = 10,
     docs with no n-gram (fewer than n tokens) never pair.
 
     Scale shape is ngram_jaccard_pairs': the join key is the
-    high-cardinality id bucket floor(id/window) (side a fans out to
+    high-cardinality id bucket floor(id/10) (side a fans out to
     two buckets), never the low-cardinality lang, so the shuffle
     spreads uniformly; key equality and the id-window bound are
     post-join filters."""
@@ -749,7 +736,7 @@ def containment_pairs(df: DataFrame, n: int = 3, window: int = 10,
         F.col("lang").alias("k"),
         F.array_distinct(word_ngrams(F.col("text"), n)).alias("grams"),
     ).filter(F.size("grams") > 0)
-    bucket = F.floor(F.col("id") / window)
+    bucket = F.floor(F.col("id") / 10)
     a = t.select(
         "id", "k", "grams",
         F.explode(F.array(bucket, bucket + 1)).alias("bucket"),
@@ -758,7 +745,7 @@ def containment_pairs(df: DataFrame, n: int = 3, window: int = 10,
     pairs = a.join(b, "bucket").filter(
         (F.col("a.k") == F.col("b.k"))
         & (F.col("b.id") > F.col("a.id"))
-        & (F.col("b.id") <= F.col("a.id") + window)
+        & (F.col("b.id") <= F.col("a.id") + 10)
     )
     inter = F.size(F.array_intersect(F.col("a.grams"), F.col("b.grams")))
     out = pairs.select(
@@ -771,18 +758,17 @@ def containment_pairs(df: DataFrame, n: int = 3, window: int = 10,
                       | (F.col("cont_b_in_a") >= threshold))
 
 
-def levenshtein_pairs(df: DataFrame, max_dist: int = 2,
-                      prefix: int = 3) -> DataFrame:
+def levenshtein_pairs(df: DataFrame, prefix: int = 3) -> DataFrame:
     """Edit-distance near-duplicate pairs for SHORT strings (titles,
     product names, author fields) with prefix blocking: candidates
     share the first `prefix` characters of the lowercase-trimmed
-    string, and a pair is emitted when levenshtein ≤ max_dist.
+    string, and a pair is emitted when levenshtein ≤ 2.
     Returns (id_a, id_b, dist), id_a < id_b.
 
     Blocking is the standard recall trade: a typo inside the first
     `prefix` characters escapes the block (callers needing full
     recall union several blocking passes — e.g. prefix + suffix).
-    The cheap |len(a)-len(b)| ≤ max_dist guard runs BEFORE the DP so
+    The cheap |len(a)-len(b)| ≤ 2 guard runs BEFORE the DP so
     the quadratic-per-pair cost only lands on length-compatible
     candidates; the block key is a string prefix (high cardinality on
     real title corpora), so the self-join shuffle spreads. Never run
@@ -798,12 +784,12 @@ def levenshtein_pairs(df: DataFrame, max_dist: int = 2,
                  F.col("block")).alias("b")
     pairs = a.join(b, "block").filter(
         (F.col("id_b") > F.col("id"))
-        & (F.abs(F.length("s") - F.length("s_b")) <= max_dist)
+        & (F.abs(F.length("s") - F.length("s_b")) <= 2)
     )
     return (pairs.select(
         F.col("id").alias("id_a"), "id_b",
         F.levenshtein(F.col("s"), F.col("s_b")).alias("dist"))
-        .filter(F.col("dist") <= max_dist))
+        .filter(F.col("dist") <= 2))
 
 
 def paragraph_dedup(df: DataFrame) -> DataFrame:

@@ -98,12 +98,12 @@ def parse_image_dimensions(data: bytes) -> tuple[str, int, int] | None:
     return None
 
 
-def make_fake_image(media_id: int, width: int = 8, height: int = 8) -> bytes:
-    """Deterministic fake 'image': FAKEIMG1 + w + h + seeded byte grid."""
+def make_fake_image(media_id: int) -> bytes:
+    """Deterministic fake 8x8 'image': FAKEIMG1 + w + h + seeded byte
+    grid."""
     seed = hashlib.sha1(str(media_id).encode()).digest()
-    n = width * height
-    body = (seed * (n // len(seed) + 1))[:n]
-    return FAKE_MAGIC + struct.pack("<II", width, height) + body
+    body = (seed * (64 // len(seed) + 1))[:64]
+    return FAKE_MAGIC + struct.pack("<II", 8, 8) + body
 
 
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # color_type -> samples/pixel
@@ -625,11 +625,12 @@ def resize_images(df: DataFrame, max_side: int) -> DataFrame:
                     RESIZE_SCHEMA, max_side=max_side)
 
 
-def frame_sample_plan(df: DataFrame, every_s: float = 1.0) -> DataFrame:
+def frame_sample_plan(df: DataFrame) -> DataFrame:
     """Video frame-sampling plan (Spark-native, no decode): explode a
-    timestamp grid per media row from its duration metadata."""
+    one-frame-per-second timestamp grid per media row from its duration
+    metadata."""
     n_frames = F.greatest(
-        F.ceil(F.col("duration_s") / F.lit(float(every_s))), F.lit(1)
+        F.ceil(F.col("duration_s") / F.lit(1.0)), F.lit(1)
     ).cast("int")
     return (
         df.select(
@@ -638,7 +639,7 @@ def frame_sample_plan(df: DataFrame, every_s: float = 1.0) -> DataFrame:
         )
         .select(
             "media_id",
-            (F.col("frame_idx") * F.lit(float(every_s))).alias("sample_ts"),
+            (F.col("frame_idx") * F.lit(1.0)).alias("sample_ts"),
         )
     )
 

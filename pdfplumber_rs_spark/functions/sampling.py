@@ -303,15 +303,14 @@ def shard_by_token_budget(docs: DataFrame, budget: int,
     )
 
 
-def dsir_weights(raw: DataFrame, target: DataFrame,
-                 n_buckets: int = 64) -> DataFrame:
+def dsir_weights(raw: DataFrame, target: DataFrame) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, arXiv:2302.03169):
     score every raw-corpus document by how target-like it looks under
     hashed unigram bag-of-words language models, the importance-
     resampling signal that selects pretraining data matching a
     high-quality target (Wikipedia/books) distribution.
 
-    Features are hashed token buckets (md5 → bucket, SQL-portable);
+    Features are 64 hashed token buckets (md5 → bucket, SQL-portable);
     both corpora get add-one-smoothed bucket distributions p_target /
     p_raw, and a document's weight is
 
@@ -329,11 +328,11 @@ def dsir_weights(raw: DataFrame, target: DataFrame,
     corpus-sized shuffle key is doc_id with map-side partials. The
     float sum is over ≤ n_buckets grouped terms per doc, so 6dp
     rounding is far outside reassociation error."""
+    n_buckets = 64
+
     def toks(df):
-        t = F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
-                     lambda x: x != "")
         return df.select(F.col("doc_id"),
-                         F.explode(t).alias("tok"))
+                         F.explode(word_tokens(F.col("text"))).alias("tok"))
 
     def bucket(col):
         return F.pmod(

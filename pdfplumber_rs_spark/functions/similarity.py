@@ -115,10 +115,9 @@ def lsh_buckets(df: DataFrame, dim: int, n_planes: int = 8) -> DataFrame:
     return df.select("vec_id", bucket.alias("bucket"))
 
 
-def embedding_dedup(df: DataFrame, dim: int, threshold: float = 0.999,
-                    n_planes: int = 8) -> DataFrame:
+def embedding_dedup(df: DataFrame, dim: int, n_planes: int = 8) -> DataFrame:
     """Embedding-cosine near-duplicate removal: one shuffle on the LSH
-    bucket, exact cosine ≥ threshold against the bucket REPRESENTATIVE
+    bucket, exact cosine ≥ 0.999 against the bucket REPRESENTATIVE
     only (vectors with cosine ≈ 1 share every hyperplane sign, so true
     near-dups always land in the same bucket; never an all-pairs join).
 
@@ -136,7 +135,7 @@ def embedding_dedup(df: DataFrame, dim: int, threshold: float = 0.999,
     keep_id the bucket representative's id."""
     members = _bucket_members(df, dim, n_planes)
     near = members.filter(
-        cosine(F.col("vec"), F.col("rep_vec")) >= threshold)
+        cosine(F.col("vec"), F.col("rep_vec")) >= 0.999)
     return near.select(F.col("id").alias("vec_id"),
                        F.col("rep_id").alias("keep_id"))
 
@@ -233,8 +232,8 @@ def ivf_train_codebook(corpus: DataFrame, n_cells: int = 8,
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, n_cells: int = 8,
-             nprobe: int = 2, k: int = 5, train_iters: int = 0) -> DataFrame:
-    """IVF-flat approximate top-k (the inverted-list ANN shape, FAISS
+             nprobe: int = 2, train_iters: int = 0) -> DataFrame:
+    """IVF-flat approximate top-5 (the inverted-list ANN shape, FAISS
     IVF semantics): corpus vectors are binned to their nearest coarse
     centroid once; each query probes only its nprobe closest cells and
     ranks candidates by exact cosine. Returns (query_id, neighbor_id,
@@ -280,7 +279,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, n_cells: int = 8,
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc())
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+            .filter(F.col("rank") <= 5))
 
 
 def _semdedup_assign(corpus: DataFrame, n_cells: int | None,
@@ -299,15 +298,14 @@ def _semdedup_assign(corpus: DataFrame, n_cells: int | None,
     return ivf_assign(corpus, cents), n_cells
 
 
-def semdedup_cell_stats(corpus: DataFrame,
-                        n_cells: int | None = 8) -> DataFrame:
-    """Per-cell fan-out forecast for semdedup: (cell, n_rows, n_pairs)
-    where n_pairs = n_rows·(n_rows−1)/2 is exactly the in-cell
-    self-join row count semdedup would materialize. n_cells rows total
-    — cheap to run (one assignment pass + one tiny agg) BEFORE
-    committing a 10^12-row corpus to the quadratic stage, and the
+def semdedup_cell_stats(corpus: DataFrame) -> DataFrame:
+    """Per-cell fan-out forecast for semdedup's default 8-cell codebook:
+    (cell, n_rows, n_pairs) where n_pairs = n_rows·(n_rows−1)/2 is
+    exactly the in-cell self-join row count semdedup would
+    materialize. At most 8 rows total — cheap to run (one assignment
+    pass + one tiny agg) BEFORE committing a 10^12-row corpus to the quadratic stage, and the
     basis of semdedup's max_cell_rows guard."""
-    assigned, _ = _semdedup_assign(corpus, n_cells, 10_000)
+    assigned, _ = _semdedup_assign(corpus, 8, 10_000)
     return assigned.groupBy("cell").agg(
         F.count("*").alias("n_rows"),
         (F.count("*") * (F.count("*") - 1) / 2).cast("long")
@@ -395,16 +393,15 @@ def semdedup(corpus: DataFrame, n_cells: int | None = 8,
             .orderBy("vec_id"))
 
 
-def _multi_buckets(df: DataFrame, dim: int, n_planes: int, n_tables: int,
+def _multi_buckets(df: DataFrame, dim: int, n_tables: int,
                    out_id: str) -> DataFrame:
     """(out_id, table, bucket) memberships over n_tables independent
-    hyperplane sets (table t uses plane seeds t*n_planes..)."""
+    sets of 4 hyperplanes (table t uses plane seeds 4t..4t+3)."""
     buckets = []
     for t in range(n_tables):
         b = F.lit(0)
-        for p in range(n_planes):
-            b = b * 2 + _hyperplane_sign(F.col("embedding"),
-                                         t * n_planes + p, dim)
+        for p in range(4):
+            b = b * 2 + _hyperplane_sign(F.col("embedding"), t * 4 + p, dim)
         buckets.append(F.struct(F.lit(t).alias("table"), b.alias("bucket")))
     return df.select(
         F.col("vec_id").alias(out_id),
@@ -413,14 +410,14 @@ def _multi_buckets(df: DataFrame, dim: int, n_planes: int, n_tables: int,
 
 
 def lsh_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
-             n_planes: int = 4, n_tables: int = 1) -> DataFrame:
-    """Approximate top-k: candidates share the query's LSH bucket in ANY
-    of n_tables independent hash tables (the standard recall lever —
-    recall grows with L at L× the candidate cost), then exact cosine
-    rank over the deduplicated candidate set. One shuffle on
+             n_tables: int = 1) -> DataFrame:
+    """Approximate top-k: candidates share the query's 4-plane LSH
+    bucket in ANY of n_tables independent hash tables (the standard
+    recall lever — recall grows with L at L× the candidate cost), then
+    exact cosine rank over the deduplicated candidate set. One shuffle on
     (table, bucket); corpus rows fan out n_tables ways."""
-    cb = _multi_buckets(corpus, dim, n_planes, n_tables, "neighbor_id")
-    qb = _multi_buckets(queries, dim, n_planes, n_tables, "query_id")
+    cb = _multi_buckets(corpus, dim, n_tables, "neighbor_id")
+    qb = _multi_buckets(queries, dim, n_tables, "query_id")
     c = corpus.select(F.col("vec_id").alias("neighbor_id"),
                       F.col("embedding").alias("cvec")).join(cb, "neighbor_id")
     q = queries.select(F.col("vec_id").alias("query_id"),

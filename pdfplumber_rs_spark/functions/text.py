@@ -93,11 +93,11 @@ def bpe_token_count(text: Column) -> Column:
     return F.size(F.filter(toks, lambda t: F.trim(t) != ""))
 
 
-def winnow_fingerprints(df, k: int = 8, window: int = 4):
+def winnow_fingerprints(df):
     """Winnowing document fingerprints (rolling hash): normalize to a
-    lowercase alnum string, hash every k-gram (portable md5-prefix),
-    take the minimum hash of each full window of `window` consecutive
-    k-grams, dedupe — the classic local fingerprint set whose overlap
+    lowercase alnum string, hash every 8-gram (portable md5-prefix),
+    take the minimum hash of each full window of 4 consecutive
+    8-grams, dedupe — the classic local fingerprint set whose overlap
     detects partial plagiarism/near-dup content. Fully Spark-native:
     posexplode over a position sequence + a sliding window MIN.
     Returns (doc_id, fp) distinct rows."""
@@ -105,25 +105,24 @@ def winnow_fingerprints(df, k: int = 8, window: int = 4):
         F.col("doc_id"),
         F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", "")
         .alias("s"),
-    ).filter(F.length("s") >= k + window - 1)
+    ).filter(F.length("s") >= 11)  # one full window: 4 8-grams
     grams = d.select(
         "doc_id",
         F.length("s").alias("slen"),
-        F.posexplode(F.sequence(F.lit(1), F.length("s") - k + 1))
+        F.posexplode(F.sequence(F.lit(1), F.length("s") - 7))  # 8-gram starts
         .alias("idx", "pos"),
         "s",
     ).select(
         "doc_id", "pos",
-        (F.col("slen") - k + 1).alias("n_grams"),
-        F.conv(F.substring(F.md5(F.expr(f"substring(s, pos, {k})")), 1, 8),
+        (F.col("slen") - 7).alias("n_grams"),
+        F.conv(F.substring(F.md5(F.expr("substring(s, pos, 8)")), 1, 8),
                16, 10).cast("long").alias("h"),
     )
     from pyspark.sql import Window as W
 
-    w = (W.partitionBy("doc_id").orderBy("pos")
-         .rowsBetween(0, window - 1))
+    w = W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, 3)
     fps = grams.withColumn("fp", F.min("h").over(w)).filter(
-        F.col("pos") <= F.col("n_grams") - window + 1  # full windows only
+        F.col("pos") <= F.col("n_grams") - 3  # full windows only
     )
     return fps.select("doc_id", "fp").distinct()
 
@@ -271,8 +270,7 @@ def repetition_features(df):
     toks = df.select(
         F.col("doc_id"),
         F.explode(
-            F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
-                     lambda t: t != "")
+            word_tokens(F.col("text"))
         ).alias("tok"),
     )
     uni = toks.groupBy("doc_id").agg(
@@ -282,8 +280,7 @@ def repetition_features(df):
     # bigrams from the token ARRAY (order-stable, no window needed)
     arr = df.select(
         F.col("doc_id"),
-        F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
-                 lambda t: t != "").alias("l"),
+        word_tokens(F.col("text")).alias("l"),
     )
     # Guard: sequence(0, -1) in Spark auto-steps DOWN and yields [0, -1],
     # so a <2-token doc would throw ArrayIndexOutOfBounds in element_at.
@@ -334,8 +331,7 @@ def unigram_logprob(df):
     toks = df.select(
         F.col("doc_id"),
         F.explode(
-            F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
-                     lambda t: t != "")
+            word_tokens(F.col("text"))
         ).alias("tok"),
     )
     vocab = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
@@ -369,8 +365,7 @@ def bigram_logprob(df):
 
     arr = df.select(
         F.col("doc_id"),
-        F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
-                 lambda t: t != "").alias("l"),
+        word_tokens(F.col("text")).alias("l"),
     )
     # sequence(0, -1) steps DOWN — short docs must yield empty arrays
     idx = F.when(
@@ -387,9 +382,7 @@ def bigram_logprob(df):
     ).select("doc_id", "g.w1", "g.w2")
     bi_counts = bi.groupBy("w1", "w2").agg(F.count("*").alias("cb"))
     toks = df.select(
-        F.explode(
-            F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
-                     lambda t: t != "")).alias("tok"))
+        F.explode(word_tokens(F.col("text"))).alias("tok"))
     uni = toks.groupBy("tok").agg(F.count("*").alias("cu"))
     vsize = uni.agg(F.count("*").cast("double").alias("v"))
     scored = (
@@ -446,9 +439,7 @@ def bm25_topk(df, terms: list[str], topk: int = 10):
 
     d = df.select(
         F.col("doc_id"),
-        F.filter(F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                         r"[^a-z0-9]+"),
-                 lambda t: t != "").alias("toks"),
+        word_tokens(F.coalesce(F.col("text"), F.lit(""))).alias("toks"),
     )
     lens = d.select("doc_id", F.size("toks").cast("double").alias("dl"))
     stats = lens.agg(
@@ -797,10 +788,10 @@ def ccnet_buckets(scored):
     )
 
 
-def zipf_fit(df, top_n: int = 100):
+def zipf_fit(df):
     """Zipf's-law fit over the corpus token frequency distribution:
     the least-squares slope/intercept of ln(freq) on ln(rank) for the
-    `top_n` most frequent tokens — the corpus-health diagnostic every
+    100 most frequent tokens — the corpus-health diagnostic every
     web-text audit runs (natural language ~ slope -1; template/spam
     corpora flatten, boilerplate-heavy ones steepen). Uses the ANSI
     regr_slope / regr_intercept aggregates (JVM-side, one pass).
@@ -810,17 +801,13 @@ def zipf_fit(df, top_n: int = 100):
     Scale (10^12 docs): token counting is one uniform gram-key shuffle
     with map-side partials; the global top-N is TakeOrderedAndProject
     (per-partition heaps, no global sort); the rank window then runs
-    over `top_n` rows — bounded, single cheap task by construction."""
+    over 100 rows — bounded, single cheap task by construction."""
     from pyspark.sql import Window
 
-    toks = df.select(
-        F.explode(
-            F.filter(F.split(F.lower(F.coalesce(F.col("text"),
-                                                F.lit(""))),
-                             r"[^a-z0-9]+"),
-                     lambda t: t != "")).alias("tok"))
+    toks = df.select(F.explode(
+        word_tokens(F.coalesce(F.col("text"), F.lit("")))).alias("tok"))
     counts = toks.groupBy("tok").agg(F.count("*").alias("freq"))
-    top = counts.orderBy(F.desc("freq"), "tok").limit(top_n)
+    top = counts.orderBy(F.desc("freq"), "tok").limit(100)
     w = Window.orderBy(F.desc("freq"), "tok")
     ranked = top.withColumn("r", F.row_number().over(w))
     return ranked.agg(

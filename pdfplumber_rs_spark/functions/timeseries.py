@@ -13,18 +13,17 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def event_spikes(events: DataFrame, trailing: int = 3,
-                 factor: float = 2.0) -> DataFrame:
+def event_spikes(events: DataFrame) -> DataFrame:
     """Burst detection per event type: bucket events into hours, then
-    flag any hour whose count reaches `factor` × the trailing
-    `trailing`-hour average for that type. The classic ops question —
+    flag any hour whose count reaches 2 × the trailing 3-hour average
+    for that type. The classic ops question —
     "did error volume spike?" — expressed as one aggregation plus one
     bounded window:
 
       (event_type, hour_ts, cnt, trail_avg, spike)
 
     hour_ts is epoch seconds (timezone-proof oracle contract);
-    trail_avg is the average count over the `trailing` PRECEDING
+    trail_avg is the average count over the 3 PRECEDING
     buckets (null for the first bucket of a type — those rows are
     never spikes); the average of integer counts is exact in doubles,
     so no stddev/fp-accumulation portability hazards.
@@ -34,7 +33,7 @@ def event_spikes(events: DataFrame, trailing: int = 3,
     construction (types × hours) — so the per-type ordered window
     runs over the compacted frame, not the event stream. Missing
     hours are absent rows (crawl gaps), so the trailing frame is the
-    last `trailing` OBSERVED buckets, a deliberate choice documented
+    last 3 OBSERVED buckets, a deliberate choice documented
     here rather than zero-filling the calendar."""
     hourly = (
         events.select(
@@ -43,18 +42,17 @@ def event_spikes(events: DataFrame, trailing: int = 3,
         .groupBy("event_type", "hour")
         .agg(F.count("*").alias("cnt"))
     )
-    return spike_flags(hourly, trailing, factor)
+    return spike_flags(hourly)
 
 
-def spike_flags(hourly: DataFrame, trailing: int = 3,
-                factor: float = 2.0) -> DataFrame:
+def spike_flags(hourly: DataFrame) -> DataFrame:
     """The flagging half of event_spikes over an already-bucketed
     (event_type, hour, cnt) frame — shared by the batch path and the
     streaming path (where the hourly counts come out of a watermarked
     Structured Streaming window aggregation and this enrichment runs
     over the compacted sink, per micro-batch or at read time)."""
     w = (Window.partitionBy("event_type").orderBy("hour")
-         .rowsBetween(-trailing, -1))
+         .rowsBetween(-3, -1))
     return hourly.select(
         "event_type",
         F.unix_timestamp("hour").alias("hour_ts"),
@@ -62,6 +60,6 @@ def spike_flags(hourly: DataFrame, trailing: int = 3,
         F.round(F.avg("cnt").over(w), 6).alias("trail_avg"),
     ).withColumn(
         "spike",
-        F.coalesce(F.col("cnt") >= F.col("trail_avg") * factor,
+        F.coalesce(F.col("cnt") >= F.col("trail_avg") * 2.0,
                    F.lit(False)),
     )

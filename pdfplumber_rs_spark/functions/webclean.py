@@ -25,6 +25,7 @@ from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
 from ..pipeline import map_rows
+from .text import word_tokens
 
 # Shared Java/RE2 patterns (also inlined in the DuckDB oracle SQL)
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -61,7 +62,7 @@ def word_ngrams(text: Column, n: int) -> Column:
     sequence(0, size-n) auto-steps DOWN when size-n < 0 (producing
     [0, -1]) and F.slice then throws INVALID_PARAMETER_VALUE.START, so
     the index sequence must be guarded, not clamped."""
-    toks = F.filter(F.split(F.lower(text), r"[^a-z0-9]+"), lambda x: x != "")
+    toks = word_tokens(text)
 
     # bind the token array to a lambda VARIABLE before indexing it:
     # higher-order functions are interpreted, so a raw `toks`
@@ -130,11 +131,7 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     is corpus-sized). Everything after is doc_id-keyed: k-bounded
     cover explode, distinct, token anti-join, bounded per-doc
     reassembly."""
-    toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                r"[^a-z0-9]+"),
-        lambda t: t != "",
-    )
+    toks = word_tokens(F.coalesce(F.col("text"), F.lit("")))
     d = docs.select(F.col("doc_id"), toks.alias("toks"))
     positions = F.when(
         F.size("toks") >= n, F.sequence(F.lit(0), F.size("toks") - n)
@@ -384,7 +381,7 @@ def _meta_attr(h: Column, key_attr: str, key: str,
     return F.when(fwd != "", fwd).otherwise(rev)
 
 
-def html_meta(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def html_meta(pages: DataFrame) -> DataFrame:
     """Page-metadata extraction — the head-parsing pass beside
     boilerplate stripping: <title>, meta description, og:title,
     canonical link, html-lang, and declared charset, each NULL when
@@ -395,13 +392,13 @@ def html_meta(pages: DataFrame, html_col: str = "html") -> DataFrame:
     codegen projection pipelined into the scan: no shuffle, no Python,
     at any corpus size. Values come back HTML-escaped exactly as
     written in the markup (unescaping is normalize_text's job)."""
-    h = F.coalesce(F.col(html_col).cast("string"), F.lit(""))
+    h = F.coalesce(F.col("html").cast("string"), F.lit(""))
 
     def opt(c: Column) -> Column:
         return F.nullif(c, F.lit(""))
 
     return pages.select(
-        *[c for c in pages.columns if c != html_col],
+        *[c for c in pages.columns if c != "html"],
         opt(F.regexp_extract(h, r"(?is)<title[^>]*>(.*?)</title>", 1))
         .alias("title"),
         opt(_meta_attr(h, "name", "description", "content"))
@@ -417,34 +414,33 @@ def html_meta(pages: DataFrame, html_col: str = "html") -> DataFrame:
     )
 
 
-def politeness_schedule(pages: DataFrame, delays: DataFrame, per_slot: int = 2,
-                        default_delay: float = 1.0) -> DataFrame:
+def politeness_schedule(pages: DataFrame, delays: DataFrame) -> DataFrame:
     """Crawl-delay-aware frontier schedule: politeness_slots' per-host
     slot packing, with each host's slots spaced by its robots
-    Crawl-delay (parse_crawl_delay output; `default_delay` seconds
-    where absent). Adds fetch_slot and fetch_offset_s = slot × delay —
-    the dispatch timestamp offset a frontier worker sleeps to.
+    Crawl-delay (parse_crawl_delay output; 1 second where absent).
+    Adds fetch_slot and fetch_offset_s = slot × delay — the dispatch
+    timestamp offset a frontier worker sleeps to.
 
     Scale: the host-keyed window shuffle politeness already pays, plus
     one broadcast join against the host-cardinality delay table."""
-    slotted = politeness_slots(pages, per_slot)
+    slotted = politeness_slots(pages)
     d = delays.select("host", "crawl_delay")
     return (
         slotted.join(F.broadcast(d), "host", "left")
         .withColumn(
             "fetch_offset_s",
             F.round(F.col("fetch_slot")
-                    * F.coalesce("crawl_delay", F.lit(default_delay)), 6),
+                    * F.coalesce("crawl_delay", F.lit(1.0)), 6),
         )
         .drop("crawl_delay")
     )
 
 
-def politeness_slots(pages: DataFrame, per_slot: int = 2) -> DataFrame:
+def politeness_slots(pages: DataFrame) -> DataFrame:
     """Crawl-frontier politeness schedule: fetches for one host must
     spread over time, so each host's urls (deterministic url order)
-    are packed `per_slot` per time slot — slot k of host h holds its
-    urls ranked [k*per_slot, (k+1)*per_slot). Adds `fetch_slot`.
+    are packed two per time slot — slot k of host h holds its urls
+    ranked [2k, 2k+2). Adds `fetch_slot`.
 
     Scale: one host-keyed window shuffle; the per-host sort is the
     frontier's own ordering requirement, not overhead. Mega-host skew
@@ -454,7 +450,7 @@ def politeness_slots(pages: DataFrame, per_slot: int = 2) -> DataFrame:
     w = Window.partitionBy("host").orderBy("url")
     return pages.withColumn(
         "fetch_slot",
-        ((F.row_number().over(w) - 1) / per_slot).cast("int"))
+        ((F.row_number().over(w) - 1) / 2).cast("int"))
 
 
 # Query parameters that never affect page identity: analytics /
@@ -669,7 +665,7 @@ def surt_key(url: Column) -> Column:
     return F.concat(rev, F.lit(")"), path)
 
 
-def html_tables(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def html_tables(pages: DataFrame) -> DataFrame:
     """HTML table extraction — the tabular half of main-content
     extraction (the web-page mirror of the PDF lattice/stream table
     surface): every <table> in the page becomes (doc_id, table_id,
@@ -683,8 +679,8 @@ def html_tables(pages: DataFrame, html_col: str = "html") -> DataFrame:
     inter-tag whitespace, and mixed th/td rows; built for the
     well-formed-markup common case (a malformed page yields fewer
     rows, never an error)."""
-    h = F.coalesce(F.col(html_col).cast("string"), F.lit(""))
-    keep = [c for c in pages.columns if c != html_col]
+    h = F.coalesce(F.col("html").cast("string"), F.lit(""))
+    keep = [c for c in pages.columns if c != "html"]
     tables = pages.select(
         *keep,
         F.posexplode(
@@ -710,7 +706,7 @@ def html_tables(pages: DataFrame, html_col: str = "html") -> DataFrame:
     )
 
 
-def meta_robots(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def meta_robots(pages: DataFrame) -> DataFrame:
     """Meta-robots directives — the in-page half of crawl compliance
     (robots.txt being the out-of-band half): parse
     <meta name="robots" content="..."> and emit `noindex` / `nofollow`
@@ -721,12 +717,12 @@ def meta_robots(pages: DataFrame, html_col: str = "html") -> DataFrame:
     Pure codegen regexp work pipelined into the scan — the filter
     belongs BEFORE expensive extraction so noindex pages never reach
     the text pipeline."""
-    h = F.coalesce(F.col(html_col).cast("string"), F.lit(""))
+    h = F.coalesce(F.col("html").cast("string"), F.lit(""))
     content = F.lower(_meta_attr(h, "name", "robots", "content"))
     directive = lambda d: F.regexp_like(  # noqa: E731
         content, F.lit(rf"(^|,)\s*{d}\s*(,|$)"))
     return pages.select(
-        *[c for c in pages.columns if c != html_col],
+        *[c for c in pages.columns if c != "html"],
         directive("noindex").alias("noindex"),
         directive("nofollow").alias("nofollow"),
     )
@@ -826,26 +822,31 @@ def url_classify(url: Column) -> dict[str, Column]:
     }
 
 
-def bloom_build(df: DataFrame, m_words: int = 64, k: int = 3) -> DataFrame:
-    """Distributed Bloom filter build over a key column — the
-    seen-URL negative cache a recrawl frontier consults before
-    touching the (much larger) crawl history: m_words 32-bit words,
-    k md5-derived bit positions per key. Returns (word_idx, bits) —
-    only words with set bits appear (missing word = 0).
-
-    Scale shape: keys explode into k (word, bit) pairs; ONE word-keyed
-    bit_or aggregation (map-side partials) collapses any corpus to at
-    most m_words rows. md5 keeps positions SQL-portable, so the SQL
-    oracle rebuilds the identical bitset."""
-    pos = [
+def _bloom_positions() -> Column:
+    """The 3 md5-derived bit positions of the `url` key in a 64-word
+    (2,048-bit) filter."""
+    return F.array(*[
         F.pmod(F.conv(F.substring(F.md5(F.concat(F.lit(f"b{i}:"),
                                                  F.col("url"))), 1, 8),
                       16, 10).cast("long"),
-               F.lit(m_words * 32))
-        for i in range(k)
-    ]
+               F.lit(64 * 32))
+        for i in range(3)
+    ])
+
+
+def bloom_build(df: DataFrame) -> DataFrame:
+    """Distributed Bloom filter build over a key column — the
+    seen-URL negative cache a recrawl frontier consults before
+    touching the (much larger) crawl history: 64 32-bit words,
+    3 md5-derived bit positions per key. Returns (word_idx, bits) —
+    only words with set bits appear (missing word = 0).
+
+    Scale shape: keys explode into 3 (word, bit) pairs; ONE word-keyed
+    bit_or aggregation (map-side partials) collapses any corpus to at
+    most 64 rows. md5 keeps positions SQL-portable, so the SQL
+    oracle rebuilds the identical bitset."""
     exploded = df.select(
-        F.explode(F.array(*pos)).alias("p")
+        F.explode(_bloom_positions()).alias("p")
     ).select(
         (F.col("p") / 32).cast("int").alias("word_idx"),
         F.pmod(F.col("p"), F.lit(32)).cast("int").alias("bit"),
@@ -855,26 +856,18 @@ def bloom_build(df: DataFrame, m_words: int = 64, k: int = 3) -> DataFrame:
             .agg(F.bit_or(F.expr("shiftleft(1L, bit)")).alias("bits")))
 
 
-def bloom_contains(bloom: DataFrame, candidates: DataFrame, m_words: int = 64,
-                   k: int = 3) -> DataFrame:
+def bloom_contains(bloom: DataFrame, candidates: DataFrame) -> DataFrame:
     """Membership probe against a bloom_build filter: a candidate is
-    'maybe seen' iff ALL k of its bits are set (false positives
+    'maybe seen' iff ALL 3 of its bits are set (false positives
     possible by design, false negatives never). Returns every
     candidate row's key plus `maybe_seen`.
 
-    The filter is at most m_words rows — broadcast — so probing is a
+    The filter is at most 64 rows — broadcast — so probing is a
     map-side join + per-key count aggregation however large the
     candidate stream is."""
-    pos = [
-        F.pmod(F.conv(F.substring(F.md5(F.concat(F.lit(f"b{i}:"),
-                                                 F.col("url"))), 1, 8),
-                      16, 10).cast("long"),
-               F.lit(m_words * 32))
-        for i in range(k)
-    ]
     probes = candidates.select(
         F.col("url").alias("key"),
-        F.explode(F.array(*pos)).alias("p"),
+        F.explode(_bloom_positions()).alias("p"),
     ).select(
         "key",
         (F.col("p") / 32).cast("int").alias("word_idx"),
@@ -888,10 +881,10 @@ def bloom_contains(bloom: DataFrame, candidates: DataFrame, m_words: int = 64,
             1).otherwise(0).alias("ok"),
     )
     return (hit.groupBy("key")
-            .agg((F.sum("ok") == k).alias("maybe_seen")))
+            .agg((F.sum("ok") == 3).alias("maybe_seen")))
 
 
-def html_outline(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def html_outline(pages: DataFrame) -> DataFrame:
     """Heading outline extraction — the web mirror of PDF bookmarks:
     every <h1>-<h6> in document order becomes (doc_id, rank, level,
     heading), rank 1-based over the whole page, level the numeric
@@ -903,8 +896,8 @@ def html_outline(pages: DataFrame, html_col: str = "html") -> DataFrame:
     One codegen regexp_extract_all + posexplode; the level is re-read
     from the matched tag itself, so mixed heading levels keep document
     order (a single pattern pass, not six)."""
-    h = F.coalesce(F.col(html_col).cast("string"), F.lit(""))
-    keep = [c for c in pages.columns if c != html_col]
+    h = F.coalesce(F.col("html").cast("string"), F.lit(""))
+    keep = [c for c in pages.columns if c != "html"]
     hits = pages.select(
         *keep,
         F.posexplode(
@@ -964,13 +957,13 @@ def host_template_ratio(pages: DataFrame) -> DataFrame:
 
 
 def host_boilerplate_strip(pages: DataFrame, max_ratio: float = 0.5,
-                           min_docs: int = 2, line_tokens: int | None = None,
+                           line_tokens: int | None = None,
                            host_col: str = "host") -> DataFrame:
     """Per-host boilerplate REMOVAL — the strip stage host_template_
     ratio's detection signal feeds (the CCNet/RefinedWeb line-level
     cleanup: navigation bars, cookie banners, footers repeat across a
     host's pages; content does not). A line is boilerplate for a host
-    iff it appears in ≥ min_docs distinct documents AND in ≥ max_ratio
+    iff it appears in ≥ 2 distinct documents AND in ≥ max_ratio
     of the host's documents; every occurrence is removed and each
     document's surviving lines reassemble in order.
 
@@ -993,8 +986,7 @@ def host_boilerplate_strip(pages: DataFrame, max_ratio: float = 0.5,
             F.transform(F.split(t, "\n"), lambda l: F.trim(l)),
             lambda l: l != "")
     else:
-        toks = F.filter(F.split(F.lower(t), r"[^a-z0-9]+"),
-                        lambda x: x != "")
+        toks = word_tokens(t)
 
         # bind-as-lambda-variable so the split runs once per row, not
         # once per emitted line (word_ngrams bug class, round 6)
@@ -1023,7 +1015,7 @@ def host_boilerplate_strip(pages: DataFrame, max_ratio: float = 0.5,
     hosts = (base.select("host", "doc_id").distinct()
              .groupBy("host").agg(F.count("*").alias("n_docs")))
     boiler = (line_docs.join(hosts, "host")
-              .filter((F.col("n_line_docs") >= min_docs)
+              .filter((F.col("n_line_docs") >= 2)
                       & (F.col("n_line_docs")
                          >= F.col("n_docs") * max_ratio))
               .select("host", "g"))

@@ -205,21 +205,20 @@ def _aes_cbc_encrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:
 
 
 def compute_standard_values(user_pw: bytes, owner_pw: bytes, p: int,
-                            doc_id: bytes, key_len: int = 16,
-                            r: int = 3) -> tuple[bytes, bytes, bytes]:
+                            doc_id: bytes) -> tuple[bytes, bytes, bytes]:
     """PDF 32000-1 §7.6.3 algorithms 3.2-3.5 for the standard handler
-    (R=2/3, RC4): returns (O, U, file_key). Shared by the fixture
-    ENCRYPTOR (sources/pdfgen.encrypt_pdf) and password validation."""
+    at R=3 with a 128-bit RC4 key: returns (O, U, file_key). Only the
+    fixture ENCRYPTOR (sources/pdfgen.encrypt_pdf) calls it; Decryptor
+    derives and validates the key on its own, so the encrypted-fixture
+    tests check one derivation against the other."""
     # Algorithm 3.3: /O
     h = hashlib.md5((owner_pw + _PAD)[:32]).digest()
-    if r >= 3:
-        for _ in range(50):
-            h = hashlib.md5(h).digest()
-    okey = h[:key_len]
+    for _ in range(50):
+        h = hashlib.md5(h).digest()
+    okey = h[:16]
     o = rc4(okey, (user_pw + _PAD)[:32])
-    if r >= 3:
-        for i in range(1, 20):
-            o = rc4(bytes(b ^ i for b in okey), o)
+    for i in range(1, 20):
+        o = rc4(bytes(b ^ i for b in okey), o)
     # Algorithm 3.2: file key
     m = hashlib.md5()
     m.update((user_pw + _PAD)[:32])
@@ -227,19 +226,14 @@ def compute_standard_values(user_pw: bytes, owner_pw: bytes, p: int,
     m.update(struct.pack("<i", p))
     m.update(doc_id)
     key = m.digest()
-    if r >= 3:
-        for _ in range(50):
-            key = hashlib.md5(key[:key_len]).digest()
-    key = key[:key_len]
-    # Algorithm 3.4/3.5: /U
-    if r == 2:
-        u = rc4(key, _PAD)
-    else:
-        u = rc4(key, hashlib.md5(_PAD + doc_id).digest())
-        for i in range(1, 20):
-            u = rc4(bytes(b ^ i for b in key), u)
-        u = u + b"\x00" * 16
-    return o, u, key
+    for _ in range(50):
+        key = hashlib.md5(key[:16]).digest()
+    key = key[:16]
+    # Algorithm 3.5: /U
+    u = rc4(key, hashlib.md5(_PAD + doc_id).digest())
+    for i in range(1, 20):
+        u = rc4(bytes(b ^ i for b in key), u)
+    return o, u + b"\x00" * 16, key
 
 
 class Decryptor:

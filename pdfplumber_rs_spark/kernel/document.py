@@ -135,10 +135,6 @@ class Document:
         return validate(self.doc)
 
 
-def open_pdf(data: bytes, options: ExtractOptions | None = None) -> Document:
-    return Document(data, options)
-
-
 def extract_document(data: bytes, options: ExtractOptions | None = None,
                      table_settings: TableSettings | None = None) -> dict:
     """One-shot extraction of a whole document into plain dicts, for

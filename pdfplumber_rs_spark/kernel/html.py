@@ -40,17 +40,21 @@ def font_words(page) -> list[dict]:
     return words
 
 
+def _modal(values: list):
+    """The smallest of the most common values; None when there are
+    none."""
+    counts = Counter(values)
+    if not counts:
+        return None
+    top_n = max(counts.values())
+    return min(v for v, n in counts.items() if n == top_n)
+
+
 def _dominant(fonts: list[tuple]) -> tuple[str, float]:
     """(fontname, size) shared by the most chars; ties -> lexicographic
     fontname, then smaller size."""
-    if not fonts:
-        return "", 0.0
-    counts = Counter((f or "", round(float(s), 4)) for f, s in fonts)
-    best = max(counts.items(), key=lambda kv: (kv[1], kv[0][0]), default=None)
-    # deterministic tie-break: highest count, then lexicographic key
-    top_n = best[1]
-    cands = sorted(k for k, n in counts.items() if n == top_n)
-    return cands[0]
+    return _modal([(f or "", round(float(s), 4)) for f, s in fonts]) \
+        or ("", 0.0)
 
 
 def _line_text(line: dict) -> str:
@@ -64,9 +68,10 @@ def _inside(w: dict, bbox: tuple) -> bool:
     return bbox[0] <= cx <= bbox[2] and bbox[1] <= cy <= bbox[3]
 
 
-def page_to_html(page) -> str:
-    """Render one page to semantic HTML (block-level string, no <html>
-    wrapper — matches the reference's per-page fragment)."""
+def _flow_lines(page) -> tuple[list[tuple[dict, str, float]], list[dict]]:
+    """(lines, tables): the page's text flow — its default-option words
+    outside every table, clustered into lines (3pt), each line with its
+    dominant (fontname, size) — and its find_tables tables."""
     words = font_words(page)
     tables = page.find_tables()
     tboxes = [
@@ -76,21 +81,20 @@ def page_to_html(page) -> str:
     flow_words = [
         w for w in words if not any(_inside(w, b) for b in tboxes)
     ]
-    lines = cluster_words_into_lines(flow_words, 3.0)
+    lines = [
+        (ln, *_dominant([f for w in ln["words"] for f in w["fonts"]]))
+        for ln in cluster_words_into_lines(flow_words, 3.0)
+    ]
+    return lines, tables
 
+
+def page_to_html(page) -> str:
+    """Render one page to semantic HTML (block-level string, no <html>
+    wrapper — matches the reference's per-page fragment)."""
+    line_meta, tables = _flow_lines(page)
     # blocks to emit: (top, kind, payload)
     blocks: list[tuple[float, str, object]] = []
-    sizes: list[float] = []
-    line_meta = []
-    for ln in lines:
-        fontname, size = _dominant([f for w in ln["words"] for f in w["fonts"]])
-        sizes.append(size)
-        line_meta.append((ln, fontname, size))
-    body_size = 0.0
-    if sizes:
-        counts = Counter(sizes)
-        top_n = max(counts.values())
-        body_size = min(s for s, n in counts.items() if n == top_n)
+    body_size = _modal([size for _ln, _font, size in line_meta]) or 0.0
     for ln, fontname, size in line_meta:
         text = _escape(_line_text(ln))
         if not text.strip():

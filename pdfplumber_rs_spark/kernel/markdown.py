@@ -31,11 +31,9 @@ from __future__ import annotations
 
 import hashlib
 import json
-from collections import Counter
 
 from ..config import ExtractOptions
-from .html import _dominant, _inside, _line_text, font_words
-from .layout import cluster_words_into_lines
+from .html import _flow_lines, _line_text, _modal
 
 FILTER_EXT = {
     "DCTDecode": "jpg", "JPXDecode": "jp2", "CCITTFaxDecode": "tiff",
@@ -80,39 +78,18 @@ def _heading_level(ratio: float) -> int:
 
 def page_to_markdown(page) -> str:
     """Render one page to Markdown (no trailing newline)."""
-    words = font_words(page)
-    tables = page.find_tables()
-    tboxes = [
-        (t["bbox"]["x0"], t["bbox"]["top"], t["bbox"]["x1"], t["bbox"]["bottom"])
-        for t in tables
-    ]
-    flow_words = [w for w in words if not any(_inside(w, b) for b in tboxes)]
-    lines = cluster_words_into_lines(flow_words, 3.0)
-
+    lines, tables = _flow_lines(page)
     line_meta = []
-    sizes: list[float] = []
-    for ln in lines:
-        fontname, size = _dominant([f for w in ln["words"] for f in w["fonts"]])
+    for ln, _font, size in lines:
         text = _line_text(ln)
-        if not text.strip():
-            continue
-        sizes.append(size)
-        line_meta.append((ln["top"], size, text))
-    body_size = 0.0
-    if sizes:
-        counts = Counter(sizes)
-        top_n = max(counts.values())
-        body_size = min(s for s, n in counts.items() if n == top_n)
+        if text.strip():
+            line_meta.append((ln["top"], size, text))
+    body_size = _modal([size for _t, size, _x in line_meta]) or 0.0
 
     # modal line pitch (top-to-top delta) decides paragraph breaks
     tops = [t for t, _s, _x in line_meta]
-    deltas = [round(b - a, 2) for a, b in zip(tops, tops[1:]) if b > a]
-    if deltas:
-        dcounts = Counter(deltas)
-        top_n = max(dcounts.values())
-        pitch = min(d for d, n in dcounts.items() if n == top_n)
-    else:
-        pitch = 0.0
+    pitch = _modal([round(b - a, 2) for a, b in zip(tops, tops[1:])
+                    if b > a]) or 0.0
 
     # blocks: (top, kind, payload) where kind in h1..h3 / p / li / table
     blocks: list[tuple[float, str, str]] = []
@@ -209,8 +186,8 @@ def markdown_json(data: bytes,
     """(markdown, metadata-json) for one PDF byte blob — the kernel
     entry the Arrow batch UDF calls. Metadata keys are sorted so the
     JSON is byte-stable for hashing oracles."""
-    from .document import open_pdf
+    from .document import Document
 
-    doc = open_pdf(data, options)
+    doc = Document(data, options)
     md, meta = document_to_markdown(doc)
     return md, json.dumps(meta, sort_keys=True, separators=(",", ":"))

@@ -197,9 +197,10 @@ class Page:
 
     def extract_tables(self, settings: TableSettings | None = None) -> list[list[list[str | None]]]:
         """Rows-of-cell-text form, matching golden JSON shape
-        (scripts/generate_golden.py:84-104)."""
+        (scripts/generate_golden.py:84-104); a slot covered by a merged
+        cell is None, as in pdfplumber."""
         return [
-            [[c["text"] for c in row] for row in t["rows"]]
+            [[c and c["text"] for c in row] for row in t["rows"]]
             for t in self.find_tables(settings)
         ]
 
@@ -281,7 +282,7 @@ def build_page(page_number: int, geom: PageGeometry, raw_page_height: float,
     needs_rotation = geom.rotation != 0
 
     chars = chars_from_events(char_events, raw_page_height, geom)
-    apply_bidi_directions(chars, 3.0)  # direction only
+    apply_bidi_directions(chars)  # direction only
     if options.unicode_norm is not None:
         normalize_chars(chars, options.unicode_norm)  # text only
     if options.dedupe is not None:

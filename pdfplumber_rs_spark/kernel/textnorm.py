@@ -217,10 +217,10 @@ def is_arabic_diacritic_text(text: str) -> bool:
     return bool(text) and all(is_arabic_diacritic(c) for c in text)
 
 
-def apply_bidi_directions(cols: CharColumns,
-                          y_tolerance: float = 3.0) -> CharColumns:
+def apply_bidi_directions(cols: CharColumns) -> CharColumns:
     """Mark strong-RTL glyphs (and Arabic diacritics on a line with
-    them) rtl, in place; vertical and non-upright glyphs are left."""
+    them) rtl, in place; vertical and non-upright glyphs are left.
+    Glyphs whose vertical centers lie within 3pt share a line."""
     text = cols.text
     if not text or _RTL_RE.search("".join(text)) is None:
         return cols
@@ -233,7 +233,7 @@ def apply_bidi_directions(cols: CharColumns,
     cur_center = centers[order[0]]
     for idx in order[1:]:
         center = centers[idx]
-        if abs(center - cur_center) <= y_tolerance:
+        if abs(center - cur_center) <= 3.0:
             cur.append(idx)
         else:
             groups.append(cur)

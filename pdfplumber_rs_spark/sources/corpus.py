@@ -148,18 +148,13 @@ def cached_corpus(spark, sf_dir: str, name: str, build) -> DataFrame:
 
 def cached_builder(fn):
     """Decorator: parquet-cache a deterministic corpus builder
-    `fn(spark, sf_dir, **kw)` per (builder name, sf, kwargs, generator
-    version). Kwargs become part of the cache name, so parameterized
-    corpora (max_orderkey=...) cache independently."""
+    `fn(spark, sf_dir)` per (builder name, sf, generator version)."""
 
     @functools.wraps(fn)
-    def wrapper(spark, sf_dir: str, **kw) -> DataFrame:
-        tag = fn.__name__
-        if kw:
-            tag += "-" + "-".join(f"{k}={kw[k]}" for k in sorted(kw))
-        return cached_corpus(spark, sf_dir, tag, lambda: fn(spark, sf_dir, **kw))
+    def wrapper(spark, sf_dir: str) -> DataFrame:
+        return cached_corpus(spark, sf_dir, fn.__name__,
+                             lambda: fn(spark, sf_dir))
 
-    wrapper.__wrapped__ = fn
     return wrapper
 
 
@@ -269,8 +264,7 @@ def _stream_table_row(l_orderkey, rows):
     order (T8 stream-strategy surface): header + data rows at fixed
     column pitch, no vector graphics at all."""
     cells = [["line", "qty", "flag"]] + [list(r) for r in rows]
-    content = stream_table_content(len(cells), 3, col_pitch=100.0,
-                                   row_pitch=16.0, label="__CELL__")
+    content = stream_table_content(len(cells), 3, label="__CELL__")
     yield {
         "l_orderkey": int(l_orderkey),
         "url": f"https://streamtables.example/{l_orderkey:08d}.pdf",
@@ -279,8 +273,8 @@ def _stream_table_row(l_orderkey, rows):
 
 
 @cached_builder
-def stream_table_corpus(spark, sf_dir: str, max_orderkey: int = 100) -> DataFrame:
-    return _generate(_lineitem_rows(spark, sf_dir, max_orderkey),
+def stream_table_corpus(spark, sf_dir: str) -> DataFrame:
+    return _generate(_lineitem_rows(spark, sf_dir),
                      "l_orderkey", _stream_table_row, TABLE_CORPUS_SCHEMA)
 
 
@@ -321,8 +315,8 @@ def _merged_table_row(l_orderkey, rows):
 
 
 @cached_builder
-def merged_table_corpus(spark, sf_dir: str, max_orderkey: int = 100) -> DataFrame:
-    return _generate(_lineitem_rows(spark, sf_dir, max_orderkey),
+def merged_table_corpus(spark, sf_dir: str) -> DataFrame:
+    return _generate(_lineitem_rows(spark, sf_dir),
                      "l_orderkey", _merged_table_row, TABLE_CORPUS_SCHEMA)
 
 
@@ -355,10 +349,11 @@ def sig_corpus_table(spark, sf_dir: str) -> DataFrame:
                      "doc_id", _sig_row)
 
 
-def _lineitem_rows(spark, sf_dir: str, max_orderkey: int):
+def _lineitem_rows(spark, sf_dir: str):
+    """(l_orderkey, rows) for the first 100 orders."""
     li = (
         spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .filter(F.col("l_orderkey") <= max_orderkey)
+        .filter(F.col("l_orderkey") <= 100)
         .select(
             "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag",
             F.array(
@@ -388,16 +383,16 @@ def _lineitem_rows(spark, sf_dir: str, max_orderkey: int):
 
 
 @cached_builder
-def two_table_corpus(spark, sf_dir: str, max_orderkey: int = 100) -> DataFrame:
-    return _generate(_lineitem_rows(spark, sf_dir, max_orderkey),
+def two_table_corpus(spark, sf_dir: str) -> DataFrame:
+    return _generate(_lineitem_rows(spark, sf_dir),
                      "l_orderkey", _two_table_row, TABLE_CORPUS_SCHEMA)
 
 
 @cached_builder
-def lineitem_table_corpus(spark, sf_dir: str, max_orderkey: int = 100) -> DataFrame:
+def lineitem_table_corpus(spark, sf_dir: str) -> DataFrame:
     """One lattice-table PDF per order (header + lineitems sorted by
     linenumber; cells: linenumber, int(quantity), returnflag)."""
-    return _generate(_lineitem_rows(spark, sf_dir, max_orderkey),
+    return _generate(_lineitem_rows(spark, sf_dir),
                      "l_orderkey", _table_row, TABLE_CORPUS_SCHEMA)
 
 
@@ -664,13 +659,13 @@ def corrupted_corpus_table(spark, sf_dir: str) -> DataFrame:
 
 
 @cached_builder
-def encrypted_corpus_table(spark, sf_dir: str,
-                           password: str = "s3cret") -> DataFrame:
+def encrypted_corpus_table(spark, sf_dir: str) -> DataFrame:
     """corpus_table re-emitted with RC4-128 standard-handler encryption
-    (S3 surface): user password `password`, distinct owner password."""
+    (S3 surface): fixture user password "s3cret", owner password
+    "owner-s3cret"."""
 
     def lock(**row):
-        row["html"] = encrypt_pdf(row["html"], password, "owner-" + password)
+        row["html"] = encrypt_pdf(row["html"], "s3cret", "owner-s3cret")
         yield row
 
     return map_rows(corpus_table(spark, sf_dir), lock, CORPUS_SCHEMA)

@@ -418,15 +418,15 @@ def lattice_table_content(rows: int, cols: int, x0: float = 72.0,
     return b"\n".join(parts)
 
 
-def stream_table_content(rows: int, cols: int, col_pitch: float = 100.0,
-                         row_pitch: float = 16.0,
+def stream_table_content(rows: int, cols: int,
                          label: str = "Data-{r}-{c}") -> bytes:
-    """Text-only aligned grid (stream-strategy fixture)."""
+    """Text-only aligned grid (stream-strategy fixture): columns 100pt
+    apart, rows 16pt apart."""
     parts = []
     for r in range(rows):
         for c in range(cols):
-            tx = 72.0 + c * col_pitch
-            ty = TOP_Y - r * row_pitch
+            tx = 72.0 + c * 100.0
+            ty = TOP_Y - r * 16.0
             txt = escape_pdf_text(label.format(r=r, c=c))
             parts.append(f"BT /F2 9 Tf {tx:g} {ty:g} Td ({txt}) Tj ET".encode())
     return b"\n".join(parts)
@@ -671,7 +671,7 @@ def encrypt_pdf(pdf: bytes, user_pw: str, owner_pw: str | None = None) -> bytes:
     o, u, key = compute_standard_values(
         user_pw.encode("latin-1"),
         (owner_pw or user_pw).encode("latin-1"),
-        p, doc_id, key_len=16, r=3,
+        p, doc_id,
     )
 
     def obj_key(num: int, gen: int) -> bytes:

@@ -76,7 +76,7 @@ def test_lsh_buckets_deterministic_and_groups_similar(spark):
          similarity.lsh_buckets(df, dim=8, n_planes=4).collect()}
     assert b[0] == b[2] == b[4] and b[1] == b[3] == b[5]
     out = similarity.lsh_topk(df, df.filter(F.col("vec_id") < 2), dim=8,
-                              k=2, n_planes=4)
+                              k=2)
     got = {(r.query_id, r.neighbor_id) for r in out.collect()}
     assert (0, 2) in got and (1, 3) in got
 
@@ -93,8 +93,7 @@ def test_embedding_dedup_mega_cluster_linear(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     members = similarity._bucket_members(df, dim=8, n_planes=4)
     assert members.count() == n - 1  # linear, not n*(n-1)/2
-    out = similarity.embedding_dedup(df, dim=8, threshold=0.999,
-                                     n_planes=4).collect()
+    out = similarity.embedding_dedup(df, dim=8, n_planes=4).collect()
     assert len(out) == n - 1
     assert all(r.keep_id == 0 for r in out)
     assert sorted(r.vec_id for r in out) == list(range(1, n))
@@ -160,7 +159,7 @@ def test_text_functions(spark):
 
 
 def test_multimodal_features_and_resize(spark):
-    rows = [(i, multimodal.make_fake_image(i, 8, 8)) for i in range(4)]
+    rows = [(i, multimodal.make_fake_image(i)) for i in range(4)]
     rows.append((99, b"\x89PNG fake header"))
     df = spark.createDataFrame(rows, "media_id long, data binary")
     feats = {r.media_id: r for r in multimodal.image_features(df).collect()}
@@ -178,7 +177,7 @@ def test_multimodal_features_and_resize(spark):
 def test_frame_sample_plan(spark):
     df = spark.createDataFrame([(1, 2.5), (2, 0.0)],
                                "media_id long, duration_s double")
-    out = multimodal.frame_sample_plan(df, every_s=1.0)
+    out = multimodal.frame_sample_plan(df)
     got = sorted((r.media_id, r.sample_ts) for r in out.collect())
     assert got == [(1, 0.0), (1, 1.0), (1, 2.0), (2, 0.0)]
 
@@ -197,7 +196,7 @@ def test_lsh_topk_multi_table_recall(spark):
 
     def recall(n_tables):
         approx = {(r.query_id, r.neighbor_id)
-                  for r in lsh_topk(emb, q, dim=64, k=5, n_planes=4,
+                  for r in lsh_topk(emb, q, dim=64, k=5,
                                     n_tables=n_tables).collect()}
         return len(approx & exact) / len(exact)
 
@@ -527,7 +526,7 @@ def test_duplicate_spans_exact_substring(spark):
         "doc_id long, text string",
     )
     spans = {(r.doc_id, r.span_start, r.span_len)
-             for r in duplicate_spans(df, k=5).collect()}
+             for r in duplicate_spans(df).collect()}
     # doc 1: shared block starts at token 4, doc 2: at token 0 — both
     # maximal at exactly 7 tokens (k-gram islands recover full length)
     assert (1, 4, 7) in spans
@@ -549,7 +548,7 @@ def test_duplicate_spans_merge_overlapping_islands(spark):
     df = spark.createDataFrame(
         [(1, d1), (2, d2), (3, d3)], "doc_id long, text string")
     spans = sorted((r.doc_id, r.span_start, r.span_len)
-                   for r in duplicate_spans(df, k=5).collect())
+                   for r in duplicate_spans(df).collect())
     assert spans == [(1, 0, 8), (2, 0, 6), (3, 2, 6)]
 
 
@@ -565,7 +564,7 @@ def test_duplicate_spans_distant_islands_stay_separate(spark):
         [(1, f"{blk_a} {gap} {blk_b}"), (2, f"{blk_a} zz1 zz2 {blk_b}")],
         "doc_id long, text string")
     spans = sorted((r.span_start, r.span_len)
-                   for r in duplicate_spans(df, k=5).collect()
+                   for r in duplicate_spans(df).collect()
                    if r.doc_id == 1)
     assert spans == [(0, 5), (13, 5)]
 
@@ -576,7 +575,7 @@ def test_duplicate_spans_three_way(spark):
     base = " ".join(f"w{i}" for i in range(20))
     df = spark.createDataFrame(
         [(i, base) for i in range(3)], "doc_id long, text string")
-    spans = duplicate_spans(df, k=5).collect()
+    spans = duplicate_spans(df).collect()
     # identical docs: one maximal span each covering every token
     assert sorted((r.doc_id, r.span_start, r.span_len) for r in spans) == [
         (0, 0, 20), (1, 0, 20), (2, 0, 20)]
@@ -594,7 +593,7 @@ def test_remove_duplicate_spans(spark):
          (3, "tiny doc")],
         "doc_id long, text string",
     )
-    rows = {r.doc_id: r for r in remove_duplicate_spans(df, k=5).collect()}
+    rows = {r.doc_id: r for r in remove_duplicate_spans(df).collect()}
     r1 = rows[1]
     assert (r1.n_tokens, r1.n_kept, r1.n_removed) == (13, 6, 7)
     assert r1.clean_md5 == hashlib.md5(
@@ -1132,8 +1131,7 @@ def test_dedup_components_closes_planted_chain(spark):
         chain.append((step, " ".join(kept)))
     df = spark.createDataFrame(chain, "doc_id long, text string")
     comp = {r.doc_id: r.component
-            for r in dedup_components(df, num_hashes=16, band_size=4,
-                                      n_rounds=3).collect()}
+            for r in dedup_components(df, num_hashes=16, n_rounds=3).collect()}
     assert len(set(comp.values())) == 1, comp
 
 
@@ -1370,7 +1368,7 @@ def test_ivf_trained_codebook_beats_skewed_seed(spark):
 
     def recall(train_iters):
         approx = {(r.query_id, r.neighbor_id)
-                  for r in ivf_topk(df, q, n_cells=4, nprobe=1, k=5,
+                  for r in ivf_topk(df, q, n_cells=4, nprobe=1,
                                     train_iters=train_iters).collect()}
         return len(approx & exact) / len(exact)
 
@@ -1397,12 +1395,12 @@ def test_dedup_components_until_stable_closes_long_chain(spark):
         chain.append((step, " ".join(kept)))
     df = spark.createDataFrame(chain, "doc_id long, text string")
     comp = {r.doc_id: r.component
-            for r in dedup_components(df, num_hashes=16, band_size=4,
+            for r in dedup_components(df, num_hashes=16,
                                       until_stable=True).collect()}
     assert len(set(comp.values())) == 1, comp
     # fixed-round and until_stable agree wherever fixed already closed
     fixed = {r.doc_id: r.component
-             for r in dedup_components(df, num_hashes=16, band_size=4,
+             for r in dedup_components(df, num_hashes=16,
                                        n_rounds=20).collect()}
     assert comp == fixed
 
@@ -1440,8 +1438,8 @@ def test_ivf_topk_recall_improves_with_nprobe(spark):
 
     def recall(nprobe):
         approx = {(r.query_id, r.neighbor_id)
-                  for r in ivf_topk(emb, q, n_cells=8, nprobe=nprobe,
-                                    k=5).collect()}
+                  for r in ivf_topk(emb, q, n_cells=8,
+                                    nprobe=nprobe).collect()}
         return len(approx & exact) / len(exact)
 
     r1, r2, r8 = recall(1), recall(2), recall(8)

@@ -14,7 +14,7 @@ from pdfplumber_rs_spark.config import (
     WordOptions,
 )
 from pdfplumber_rs_spark.kernel.chars import CharColumns
-from pdfplumber_rs_spark.kernel.document import extract_document, open_pdf
+from pdfplumber_rs_spark.kernel.document import Document, extract_document
 from pdfplumber_rs_spark.kernel.objects import Lexer, Name, Ref
 from pdfplumber_rs_spark.kernel.tables import (
     cells_to_tables,
@@ -262,7 +262,7 @@ def test_stream_strategy_detects_borderless():
     page_chars = res["pages"][0]["chars"]
     words = res["pages"][0]["words"]
     assert page_chars and words
-    doc = open_pdf(pdfgen.fixture_stream(6, 3))
+    doc = Document(pdfgen.fixture_stream(6, 3))
     page = doc.page(0)
     tables = page.find_tables(TableSettings(strategy="stream"))
     assert tables, "stream strategy must find the aligned grid"
@@ -276,7 +276,7 @@ def test_stream_strategy_detects_borderless():
 def test_table_debug_counts_the_tables_find_tables_finds(strategy):
     pdf = (pdfgen.fixture_stream(5, 3) if strategy in ("stream", "explicit")
            else pdfgen.fixture_lattice(3, 3))
-    page = open_pdf(pdf).page(0)
+    page = Document(pdf).page(0)
     settings = TableSettings(strategy=strategy, explicit_lines=ExplicitLines(
         horizontal_lines=[70, 86, 102, 118, 134, 150],
         vertical_lines=[70, 170, 270, 370]))
@@ -295,7 +295,7 @@ def test_table_debug_extracts_words_only_for_stream(monkeypatch, strategy):
     settings = TableSettings(strategy=strategy)
     want = []
     for i in range(3):
-        page = open_pdf(pdf).page(i)
+        page = Document(pdf).page(i)
         want.append(table_debug(page.edges(), page.extract_words(), settings))
     calls = []
     extract = Page.extract_words
@@ -335,7 +335,7 @@ def test_page_extras_walk_annots_once(monkeypatch):
     walk = docextras.page_annotations
     monkeypatch.setattr(docextras, "page_annotations",
                         lambda *a: walks.append(1) or walk(*a))
-    page = open_pdf(pdf).page(0)
+    page = Document(pdf).page(0)
     assert [a["raw_subtype"] for a in page.annotations] == ["Link", "Text"]
     assert page.hyperlinks == [{"x0": 72.0, "top": 72.0, "x1": 200.0,
                                 "bottom": 92.0, "uri": "https://example.com/"}]
@@ -355,7 +355,7 @@ def test_dedupe_chars_default_tolerance():
 
 
 def test_crop_and_within_bbox():
-    doc = open_pdf(pdfgen.fixture_text(10))
+    doc = Document(pdfgen.fixture_text(10))
     page = doc.page(0)
     n_all = len(page.chars)
     cropped = page.crop((0, 0, 612, 80))  # first line only (top≈64)
@@ -674,6 +674,17 @@ def test_duplicate_merged_content():
         for r in res["pages"][0]["tables"][0]["rows"]
     ]
     assert rows == [["HDR", "HDR", "HDR"], ["A", "B", "C"]]
+
+
+def test_extract_tables_gives_none_for_merged_slots():
+    """Page.extract_tables keeps pdfplumber's shape: cell text per slot,
+    None where a merged cell covers it."""
+    merged = Document(_merged_header_pdf()).page(0)
+    assert merged.extract_tables() == [[["HDR", None, None],
+                                         ["A", "B", "C"]]]
+    grid = Document(pdfgen.fixture_lattice(3, 3)).page(0)
+    assert grid.extract_tables() == [[[f"R{r}C{c}" for c in range(3)]
+                                      for r in range(3)]]
 
 
 def test_cid_vertical_metrics_w2_dw2_vmtx():

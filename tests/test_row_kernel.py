@@ -517,6 +517,27 @@ def test_row_kernel_is_the_one_arrow_boundary():
                                     "row_kernel"))
 
 
+def test_word_tokens_is_the_one_tokenizer():
+    """functions/ splits text into word tokens in one place,
+    text.word_tokens; every other op calls it."""
+    import ast
+
+    from tests.test_session import ROOT, _tracked_py
+
+    splits = []
+    for f in _tracked_py():
+        if f.startswith("pdfplumber_rs_spark/functions/"):
+            for top in ast.parse((ROOT / f).read_text()).body:
+                splits += [
+                    (f, getattr(top, "name", "<module>"))
+                    for n in ast.walk(top) if isinstance(n, ast.Call)
+                    and getattr(n.func, "attr", None) == "split"
+                    and any(isinstance(a, ast.Constant)
+                            and a.value == "[^a-z0-9]+" for a in n.args)]
+    assert splits == [("pdfplumber_rs_spark/functions/text.py",
+                       "word_tokens")]
+
+
 # Defaulted parameters that no call in the repository sets, kept on purpose.
 KEPT_KNOBS = {
     **{f"pdfplumber_rs_spark.pipeline:{fn}(options)":
@@ -526,6 +547,8 @@ KEPT_KNOBS = {
                   "table_debug_table", "validation_table")},
     "pdfplumber_rs_spark.pipeline:extract_pages(spill_dir)":
         "a storage path, which depends on the deployment",
+    "pdfplumber_rs_spark.jobs:run_extract_job(handle_skew)":
+        "the benchmark's crawl workload passes it",
 }
 
 
@@ -534,12 +557,15 @@ def test_every_public_default_has_a_caller():
     module-level package function is set by some call in a tracked .py
     file, or is in KEPT_KNOBS. Calls resolve by function name; a
     positional argument sets the parameter at its index; a call with
-    *args or **kw sets every parameter; a function referenced as a
-    value (a dispatch table entry, a test parameter) may be called with
-    any positional arguments. An argument that only passes on an unset
-    parameter of the enclosing function sets nothing, so the scan runs
-    to a fixed point."""
+    *args or **kw sets every parameter. An argument sets nothing if it
+    is a literal equal to the default (same type and value, so True is
+    not 1), or if it only passes on an unset parameter of the enclosing
+    function, so the scan runs to a fixed point. A function referenced
+    as a value (a dispatch table entry, a test parameter) is set at the
+    indexes and keywords that some call in the same file reaches through
+    a callee that names no function: a variable, a subscript, a call."""
     import ast
+    import builtins
 
     from tests.test_session import ROOT, _tracked_py
 
@@ -548,11 +574,24 @@ def test_every_public_default_has_a_caller():
     def defaulted(fn):
         a = fn.args
         pos = a.posonlyargs + a.args
-        out = {p.arg: i for i, p in enumerate(pos)
-               if i >= len(pos) - len(a.defaults)}
-        out.update({p.arg: None for p, d in zip(a.kwonlyargs, a.kw_defaults)
+        out = {p.arg: (i, d) for i, (p, d) in enumerate(
+            zip(pos[len(pos) - len(a.defaults):], a.defaults),
+            len(pos) - len(a.defaults))}
+        out.update({p.arg: (None, d) for p, d in zip(a.kwonlyargs,
+                                                     a.kw_defaults)
                     if d is not None})
         return out
+
+    def literal(node):
+        try:
+            value = ast.literal_eval(node)
+        except (ValueError, TypeError):
+            return ()
+        return (type(value), value)
+
+    def starred(call):
+        return (any(isinstance(a, ast.Starred) for a in call.args)
+                or any(k.arg is None for k in call.keywords))
 
     targets = {}  # name -> [(knob prefix, def node)]
     for f, tree in trees.items():
@@ -564,35 +603,47 @@ def test_every_public_default_has_a_caller():
                     targets.setdefault(fn.name, []).append(
                         (f"{module}:{fn.name}", fn))
     knob_of = {id(fn): prefix for v in targets.values() for prefix, fn in v}
+    named = set(dir(builtins)) | {
+        n.name for tree in trees.values() for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef,
+                          ast.ClassDef))}
 
-    calls, refs = [], set()  # (call, enclosing defs), referenced names
+    calls = []  # (call, enclosing defs)
+    refs = {}  # file -> names referenced as values
+    reached = {}  # file -> indexes and keywords reached by value calls
 
-    def visit(node, scope, imported):
+    def visit(node, scope, imported, f):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
                              ast.Lambda)):
             scope = scope + (node,)
         if isinstance(node, ast.Call):
             calls.append((node, scope))
             func = node.func  # the callee itself is not a value reference
+            if not isinstance(func, ast.Attribute) and not (
+                    isinstance(func, ast.Name)
+                    and (func.id in named or func.id in imported)):
+                reached.setdefault(f, set()).update(
+                    ["*"] if starred(node) else
+                    [*range(len(node.args)), *(k.arg for k in node.keywords)])
             children = [*node.args, *node.keywords,
                         *([func.value] if isinstance(func, ast.Attribute)
                           else [] if isinstance(func, ast.Name) else [func])]
         else:
             if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
-                refs.add(node.id)
+                refs.setdefault(f, set()).add(node.id)
             if (isinstance(node, ast.Attribute)
                     and isinstance(node.value, ast.Name)
                     and node.value.id in imported):
-                refs.add(node.attr)
+                refs.setdefault(f, set()).add(node.attr)
             children = ast.iter_child_nodes(node)
         for child in children:
-            visit(child, scope, imported)
+            visit(child, scope, imported, f)
 
-    for tree in trees.values():
+    for f, tree in trees.items():
         visit(tree, (), {a.asname or a.name.split(".")[0]
                          for n in ast.walk(tree)
                          if isinstance(n, (ast.Import, ast.ImportFrom))
-                         for a in n.names})
+                         for a in n.names}, f)
 
     def passes_on_unset(value, scope, unset):
         if not isinstance(value, ast.Name):
@@ -604,27 +655,35 @@ def test_every_public_default_has_a_caller():
                 return f"{knob_of.get(id(fn))}({value.id})" in unset
         return False
 
+    def sets(value, default, scope, unset):
+        if value is None:
+            return False
+        given = literal(value)
+        return not (given and given == literal(default)) and \
+            not passes_on_unset(value, scope, unset)
+
     knobs = {f"{prefix}({p})" for v in targets.values()
              for prefix, fn in v for p in defaulted(fn)}
     assert set(KEPT_KNOBS) <= knobs
     unset, last = set(), None
     while unset != last:
         last, set_ = unset, set()
-        for name in refs & set(targets):
-            set_ |= {f"{prefix}({p})" for prefix, fn in targets[name]
-                     for p, i in defaulted(fn).items() if i is not None}
+        for f, names in refs.items():
+            hit = reached.get(f, set())
+            for name in names & set(targets):
+                set_ |= {f"{prefix}({p})" for prefix, fn in targets[name]
+                         for p, (i, _) in defaulted(fn).items()
+                         if "*" in hit or i in hit or p in hit}
         for call, scope in calls:
             func = call.func
             name = getattr(func, "id", None) or getattr(func, "attr", None)
-            star = (any(isinstance(a, ast.Starred) for a in call.args)
-                    or any(k.arg is None for k in call.keywords))
+            star = starred(call)
             given = {k.arg: k.value for k in call.keywords}
             for prefix, fn in targets.get(name, ()):
-                for p, i in defaulted(fn).items():
+                for p, (i, default) in defaulted(fn).items():
                     value = given.get(p, call.args[i] if i is not None
                                       and i < len(call.args) else None)
-                    if star or (value is not None and not passes_on_unset(
-                            value, scope, last)):
+                    if star or sets(value, default, scope, last):
                         set_.add(f"{prefix}({p})")
         unset = knobs - set_
     assert sorted(unset - set(KEPT_KNOBS)) == []

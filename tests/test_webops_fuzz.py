@@ -118,13 +118,12 @@ def test_round5_string_ops_total_on_adversarial_inputs(spark):
     for r in bw:
         assert r.kept == (r.n_bad_tokens == 0)
 
-    bp = host_boilerplate_strip(df, max_ratio=0.5, min_docs=2).collect()
+    bp = host_boilerplate_strip(df, max_ratio=0.5).collect()
     assert len(bp) == n
     for r in bp:
         assert 0 <= r.n_kept <= r.n_lines
 
-    bp_tok = host_boilerplate_strip(df, max_ratio=0.5, min_docs=2,
-                                    line_tokens=5).collect()
+    bp_tok = host_boilerplate_strip(df, max_ratio=0.5, line_tokens=5).collect()
     assert len(bp_tok) == n
 
     bench = df.limit(5)

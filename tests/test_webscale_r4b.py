@@ -77,7 +77,7 @@ def test_line_dedup_removes_later_occurrences(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["doc_id"]: r.asDict() for r in
-           line_dedup(df, line_tokens=10).collect()}
+           line_dedup(df).collect()}
     assert got[1]["n_lines"] == 2 and got[1]["n_kept"] == 2
     assert got[2]["n_lines"] == 1 and got[2]["n_kept"] == 0
     assert got[2]["kept_text"] == ""
@@ -91,7 +91,7 @@ def test_line_dedup_empty_and_order(spark):
             (3, " ".join(f"w{i}" for i in range(25)))]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["doc_id"]: r.asDict() for r in
-           line_dedup(df, line_tokens=10).collect()}
+           line_dedup(df).collect()}
     assert got[1]["n_lines"] == 0 and got[1]["kept_text"] == ""
     assert got[2]["n_lines"] == 0
     # 25 tokens -> lines of 10/10/5, reassembled in original order
@@ -107,7 +107,7 @@ def test_line_dedup_first_occurrence_is_corpus_global(spark):
     df = spark.createDataFrame(
         [(5, line), (9, line), (2, line)], "doc_id long, text string")
     got = {r["doc_id"]: r["n_kept"] for r in
-           line_dedup(df, line_tokens=10).collect()}
+           line_dedup(df).collect()}
     assert got == {2: 1, 5: 0, 9: 0}
 
 
@@ -349,7 +349,7 @@ def test_zipf_fit_matches_numpy(spark):
         words += [f"t{k}"] * (2 ** (8 - k))
     df = spark.createDataFrame(
         [(1, " ".join(words))], "doc_id long, text string")
-    (row,) = zipf_fit(df, top_n=100).collect()
+    (row,) = zipf_fit(df).collect()
     assert row["n_top"] == 8
     xs = [math.log(r) for r in range(1, 9)]
     ys = [math.log(2 ** (8 - k)) for k in range(8)]

@@ -208,7 +208,7 @@ def test_semdedup_cell_stats_exposes_planted_mega_cell(spark):
 
     df = _skewed_corpus(spark, n=500, mega_frac=0.8)
     stats = {r.cell: r for r in
-             semdedup_cell_stats(df, n_cells=8).collect()}
+             semdedup_cell_stats(df).collect()}
     top = max(stats.values(), key=lambda r: r.n_rows)
     # the planted pile-up is visible: one cell holds ≥80% of the corpus
     # and its forecast pair count is quadratic in that pile
@@ -240,7 +240,7 @@ def test_semdedup_mega_cell_skip_bounds_pair_fanout(spark):
     # no remaining cell can exceed 100·99/2 pairs
     from pdfplumber_rs_spark.functions.similarity import (
         semdedup_cell_stats)
-    stats = semdedup_cell_stats(df, n_cells=8).collect()
+    stats = semdedup_cell_stats(df).collect()
     small = [r for r in stats if r.n_rows <= 100]
     assert all(r.n_pairs <= 100 * 99 // 2 for r in small)
 

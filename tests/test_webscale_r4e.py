@@ -23,7 +23,7 @@ def test_event_spikes_flags_burst_hours(spark):
     df = spark.createDataFrame(
         rows, "event_id long, ts timestamp, event_type string")
     out = {(r.event_type, r.hour_ts): r
-           for r in event_spikes(df, trailing=3, factor=2.0).collect()}
+           for r in event_spikes(df).collect()}
     h0 = int(datetime(2024, 1, 1, 0).timestamp())
     h1 = int(datetime(2024, 1, 1, 1).timestamp())
     h2 = int(datetime(2024, 1, 1, 2).timestamp())
@@ -66,7 +66,7 @@ def test_containment_respects_window_and_key(spark):
     df = spark.createDataFrame(
         [(1, same, "en"), (2, same, "de"), (50, same, "en")],
         "doc_id long, text string, lang string")
-    rows = containment_pairs(df, n=3, window=10, threshold=0.5).collect()
+    rows = containment_pairs(df, n=3, threshold=0.5).collect()
     assert rows == []  # cross-lang blocked; id gap 49 > window
 
 
@@ -85,7 +85,7 @@ def test_levenshtein_pairs_blocked_prefix(spark):
          (5, "The Completely Other Title")],
         "doc_id long, title string")
     rows = {(r.id_a, r.id_b): r.dist
-            for r in levenshtein_pairs(df, max_dist=2).collect()}
+            for r in levenshtein_pairs(df).collect()}
     assert rows[(1, 2)] == 1 and rows[(1, 3)] == 1
     assert rows[(2, 3)] == 2  # gatsbby → gatsbys
     assert all(a != 4 and b != 4 for a, b in rows)
@@ -97,7 +97,7 @@ def test_levenshtein_pairs_length_guard(spark):
 
     df = spark.createDataFrame(
         [(1, "abc"), (2, "abcdefghij")], "doc_id long, title string")
-    assert levenshtein_pairs(df, max_dist=2).collect() == []
+    assert levenshtein_pairs(df).collect() == []
 
 
 # ---------------------------------------------------------------------------

@@ -82,9 +82,9 @@ def test_bloom_no_false_negatives(spark):
 
     seen = spark.createDataFrame(
         [(f"https://h.com/{i}",) for i in range(50)], "url string")
-    bloom = bloom_build(seen, m_words=64, k=3)
+    bloom = bloom_build(seen)
     out = {r.key: r.maybe_seen
-           for r in bloom_contains(bloom, seen, m_words=64, k=3).collect()}
+           for r in bloom_contains(bloom, seen).collect()}
     assert all(out.values()) and len(out) == 50
 
 
@@ -96,9 +96,9 @@ def test_bloom_mostly_rejects_unseen(spark):
         [(f"https://h.com/{i}",) for i in range(50)], "url string")
     unseen = spark.createDataFrame(
         [(f"https://other.org/{i}",) for i in range(200)], "url string")
-    bloom = bloom_build(seen, m_words=64, k=3)
+    bloom = bloom_build(seen)
     out = [r.maybe_seen for r in
-           bloom_contains(bloom, unseen, m_words=64, k=3).collect()]
+           bloom_contains(bloom, unseen).collect()]
     # 50 keys in 2048 bits, k=3 → FP rate ~ (1-e^-150/2048)^3 ≈ 0.04%...
     # loosely: the vast majority must be rejected
     assert sum(out) < 20

@@ -57,8 +57,7 @@ def test_minhash_verified_pairs_filters_false_positives(spark):
         df, num_hashes=2, band_size=1).collect()}
     verified = {(r.id_a, r.id_b): r.jaccard_sim
                 for r in minhash_verified_pairs(
-                    df, num_hashes=2, band_size=1,
-                    threshold=0.5).collect()}
+                    df, num_hashes=2, band_size=1).collect()}
     assert (1, 2) in verified
     # exact Jaccard of docs 1/2 over DISTINCT token sets: each set has
     # 8 tokens ('the' dedups), |∩|=7, |∪|=9 -> 0.777778
@@ -167,7 +166,7 @@ def test_host_boilerplate_strip_newline_mode(spark):
     ]
     df = spark.createDataFrame(rows, "host string, doc_id long, text string")
     out = {r.doc_id: r for r in
-           host_boilerplate_strip(df, max_ratio=0.5, min_docs=2).collect()}
+           host_boilerplate_strip(df, max_ratio=0.5).collect()}
     # 'shared footer' is in 3/3 of a.com docs -> stripped there only
     assert out[1].kept_text == "unique one"
     assert out[2].kept_text == "unique two"
@@ -187,11 +186,11 @@ def test_host_boilerplate_strip_ratio_gate(spark):
             for i in range(5)]
     df = spark.createDataFrame(rows, "host string, doc_id long, text string")
     out = {r.doc_id: r for r in
-           host_boilerplate_strip(df, max_ratio=0.5, min_docs=2).collect()}
+           host_boilerplate_strip(df, max_ratio=0.5).collect()}
     assert all(r.n_kept == 1 for r in out.values())
     # at ratio 0.3 the 40% line IS boilerplate
     out2 = {r.doc_id: r for r in
-            host_boilerplate_strip(df, max_ratio=0.3, min_docs=2).collect()}
+            host_boilerplate_strip(df, max_ratio=0.3).collect()}
     assert out2[0].kept_text == "" and out2[1].kept_text == ""
     assert out2[4].kept_text == "body 4"
 
@@ -205,8 +204,7 @@ def test_host_boilerplate_strip_token_lines(spark):
             ("h", 2, "nav home about other body text")]
     df = spark.createDataFrame(rows, "host string, doc_id long, text string")
     out = {r.doc_id: r for r in
-           host_boilerplate_strip(df, max_ratio=0.5, min_docs=2,
-                                  line_tokens=3).collect()}
+           host_boilerplate_strip(df, max_ratio=0.5, line_tokens=3).collect()}
     assert out[1].kept_text == "unique words here"
     assert out[2].kept_text == "other body text"
     assert out[1].n_lines == 2 and out[1].n_kept == 1
@@ -444,7 +442,7 @@ def test_incremental_dedup_prior_always_wins(spark):
     pb = minhash_bands(prior, num_hashes=8, band_size=4)
     dropped = {r.doc_id: r.keep_id
                for r in minhash_dedup_incremental(
-                   new, pb, num_hashes=8, band_size=4).collect()}
+                   new, pb).collect()}
     assert dropped[3] == 50       # prior wins despite larger id
     assert dropped[9] == 7        # within-increment min-id rule
     assert 7 not in dropped and 11 not in dropped
@@ -464,7 +462,7 @@ def test_incremental_dedup_empty_prior_matches_batch(spark):
     empty_prior = minhash_bands(
         docs.filter("doc_id < 0"), num_hashes=8, band_size=4)
     inc = {(r.doc_id, r.keep_id) for r in minhash_dedup_incremental(
-        docs, empty_prior, num_hashes=8, band_size=4).collect()}
+        docs, empty_prior).collect()}
     batch = {(r.doc_id, r.keep_id)
              for r in minhash_dedup(docs).collect()}
     assert inc == batch  # with no prior corpus it IS minhash_dedup
