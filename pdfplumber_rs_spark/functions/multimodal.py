@@ -163,7 +163,7 @@ def decode_png(data: bytes) -> tuple[int, int, bytes]:
     expect = h * (1 + w * ch)
     if len(raw) < expect:
         raise ValueError(f"truncated IDAT ({len(raw)} < {expect})")
-    px = _apply_png_predictor(raw[:expect], ch, 8, w)
+    px = _apply_png_predictor(raw[:expect], ch, 8, w, h * w * ch)
     arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w, ch)
     if ctype == 0:
         luma = arr[:, :, 0]

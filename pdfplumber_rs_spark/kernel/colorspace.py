@@ -85,7 +85,7 @@ def resolve_colorspace(doc, obj, depth: int = 0) -> ColorSpace | None:
         lk = doc.resolve(obj[3])
         if isinstance(lk, Stream):
             try:
-                lookup = decode_stream(lk.dict, lk.raw, doc.resolve)
+                lookup = decode_stream(doc, lk)
             except Exception:  # noqa: BLE001
                 lookup = b""
         elif isinstance(lk, bytes):

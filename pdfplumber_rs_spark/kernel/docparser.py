@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import re
 
-from .filters import decode_stream
+from .filters import decode_content, decode_stream
 from .objects import Kw, Lexer, LexError, Name, Ref, Stream
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
@@ -184,9 +184,9 @@ class PdfDocument:
             for k, v in d.items():
                 if k not in ("Length", "Filter", "DecodeParms", "W", "Index", "Type"):
                     self.trailer.setdefault(k, v)
-        content = decode_stream(d, stm.raw, self._resolve_for_stream)
+        content = decode_stream(self, stm)
         w = [int(x) for x in d.get("W", [1, 2, 1])]
-        size = int(self._resolve_for_stream(d.get("Size", 0)) or 0)
+        size = int(self.resolve(d.get("Size", 0)) or 0)
         index = d.get("Index") or [0, size]
         rowlen = sum(w)
         pos = 0
@@ -337,7 +337,7 @@ class PdfDocument:
         stm = self.get_object(stm_num)
         if not isinstance(stm, Stream):
             return None
-        content = decode_stream(stm.dict, stm.raw, self.resolve)
+        content = decode_stream(self, stm)
         n = int(self.resolve(stm.dict.get("N", 0)) or 0)
         first = int(self.resolve(stm.dict.get("First", 0)) or 0)
         lexer = Lexer(content, 0, first)
@@ -365,11 +365,6 @@ class PdfDocument:
             obj = self.get_object(obj.num)
             depth += 1
         return obj
-
-    def _resolve_for_stream(self, obj):
-        # xref streams may not reference objstm objects (no recursion risk
-        # in practice); plain resolve works.
-        return self.resolve(obj)
 
     # -- page tree ---------------------------------------------------------
 
@@ -425,17 +420,13 @@ class PdfDocument:
         return out
 
     def page_content(self, page: dict) -> bytes:
-        """Concatenated decoded content streams of a page (joined by \\n)."""
+        """Concatenated decoded content streams of a page (joined by \\n),
+        under the content budget (filters.decode_content)."""
         contents = self.resolve(page.get("Contents"))
-        parts: list[bytes] = []
-        if isinstance(contents, Stream):
-            parts.append(decode_stream(contents.dict, contents.raw, self.resolve))
-        elif isinstance(contents, list):
-            for c in contents:
-                c = self.resolve(c)
-                if isinstance(c, Stream):
-                    parts.append(decode_stream(c.dict, c.raw, self.resolve))
-        return b"\n".join(parts)
+        if not isinstance(contents, list):
+            contents = [contents]
+        return decode_content(self, [c for c in map(self.resolve, contents)
+                                     if isinstance(c, Stream)])
 
     def metadata(self) -> dict:
         info = self.resolve(self.trailer.get("Info"))

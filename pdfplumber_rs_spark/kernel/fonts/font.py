@@ -191,7 +191,7 @@ def load_font(doc, font_obj) -> LoadedFont:
     tu = doc.resolve(fd.get("ToUnicode"))
     if isinstance(tu, Stream):
         try:
-            font.cmap = parse_tounicode(decode_stream(tu.dict, tu.raw, doc.resolve))
+            font.cmap = parse_tounicode(decode_stream(doc, tu))
         except Exception:  # lenient
             font.cmap = None
         if font.cmap is not None and not font.cmap.single and not font.cmap.ranges:
@@ -391,7 +391,7 @@ def _fontfile_bytes(doc, fd: dict, key: str) -> bytes | None:
     if not isinstance(ff, Stream):
         return None
     try:
-        return decode_stream(ff.dict, ff.raw, doc.resolve)
+        return decode_stream(doc, ff)
     except Exception:  # noqa: BLE001 — lenient
         return None
 
@@ -473,7 +473,7 @@ def _cid_to_gid_map(doc, df: dict):
     m = doc.resolve(df.get("CIDToGIDMap"))
     if isinstance(m, Stream):
         try:
-            data = decode_stream(m.dict, m.raw, doc.resolve)
+            data = decode_stream(doc, m)
         except Exception:  # noqa: BLE001
             return lambda cid: cid
         def lookup(cid: int) -> int:

@@ -15,7 +15,7 @@ interpreter.rs:106-590, text_state.rs, text_renderer.rs:50-172):
 
 from __future__ import annotations
 
-from .filters import decode_stream
+from .filters import decode_content
 from .objects import Name, Ref, Stream
 from .fonts.font import LoadedFont, load_font
 from .tokenizer import Operator, tokenize
@@ -650,5 +650,5 @@ class Interpreter:
             if isinstance(matrix, list) and len(matrix) == 6:
                 inner.ctm = mat_mul(tuple(float(v) for v in matrix), gs.ctm)
             res = self.doc.resolve(obj.dict.get("Resources")) or {}
-            content = decode_stream(obj.dict, obj.raw, self.doc.resolve)
+            content = decode_content(self.doc, [obj])
             self._run(content, res, inner, depth + 1)

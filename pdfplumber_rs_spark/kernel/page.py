@@ -323,13 +323,13 @@ def build_page(page_number: int, geom: PageGeometry, raw_page_height: float,
         if ev.inline and getattr(ev, "data", None):
             # S9 image content (pdf.rs:397-405): decode the inline
             # payload through the named filter chain
-            from .filters import _DECODERS
+            from .filters import _DECODERS, NO_CAP
 
             data = ev.data
             f = _DECODERS.get(ev.filter)
             if f is not None:
                 try:
-                    data = f(data)
+                    data = f(data, NO_CAP, warnings)
                 except Exception:  # noqa: BLE001 — keep raw on failure
                     pass
         if ev.inline:

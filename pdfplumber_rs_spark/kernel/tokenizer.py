@@ -8,7 +8,7 @@ is (dict, raw_bytes) (tokenizer.rs:681-790).
 
 from __future__ import annotations
 
-from .objects import Kw, Lexer, LexError, Name
+from .objects import Kw, Lexer, LexError, Name, find_eol
 
 # Inline-image abbreviated key expansion (tokenizer.rs:721-756)
 _II_KEY_ABBREV = {
@@ -136,7 +136,7 @@ _TOK = re.compile(
     | (?P<dopen><<) | (?P<dclose>>>)
     | (?P<hex><[^<>]*>)
     | (?P<brace>[{}])
-    | (?P<comment>%[^\r\n]*)
+    | (?P<comment>%)
     """,
     re.X | re.S,
 )
@@ -201,8 +201,11 @@ def _scan_tokenize(content: bytes,
         else:
             g = mo.lastindex
             npos = mo.end()
-            if g == _G_WS or g == _G_COMMENT:
+            if g == _G_WS:
                 pos = npos
+                continue
+            if g == _G_COMMENT:  # to the EOL byte, as %[^\r\n]* would
+                pos = find_eol(content, npos, end)
                 continue
             if g == _G_NUM:
                 v = mo.group()

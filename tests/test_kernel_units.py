@@ -4,6 +4,9 @@ clustering tolerances, table pipeline stages, filters, budgets."""
 
 from __future__ import annotations
 
+import zlib
+from types import SimpleNamespace
+
 import pytest
 
 from pdfplumber_rs_spark.config import (
@@ -15,7 +18,10 @@ from pdfplumber_rs_spark.config import (
 )
 from pdfplumber_rs_spark.kernel.chars import CharColumns
 from pdfplumber_rs_spark.kernel.document import Document, extract_document
-from pdfplumber_rs_spark.kernel.objects import Lexer, Name, Ref
+from pdfplumber_rs_spark.kernel import filters
+from pdfplumber_rs_spark.kernel.filters import (FLATE_PARTIAL_WARNING, NO_CAP,
+                                                decode_content)
+from pdfplumber_rs_spark.kernel.objects import Lexer, Name, Ref, Stream
 from pdfplumber_rs_spark.kernel.tables import (
     cells_to_tables,
     edges_to_intersections,
@@ -373,6 +379,192 @@ def test_garbage_inputs_never_raise():
                 b"%PDF-1.7\n" + b"\x00" * 500):
         res = extract_document(bad)
         assert res["n_pages"] == 0 or res["error"] is None
+
+
+# -- content decode budget, and warnings where bytes are lost ---------------------
+
+_LINES = [f"line {i} of the page" for i in range(30)]
+
+
+def _with_content(stream: bytes, filt: bytes) -> bytes:
+    """A one-page pdfgen document whose content stream (object 4) is
+    `stream` under /Filter `filt`, with the xref rebuilt."""
+    import re
+
+    pdf = pdfgen.build_pdf([b""])
+    objs = {int(n): body for n, body in
+            re.findall(rb"(\d+) 0 obj\n(.*?)\nendobj\n", pdf, re.S)}
+    objs[4] = (b"<< /Length %d /Filter %s >>\nstream\n" % (len(stream), filt)
+               + stream + b"\nendstream")
+    out = bytearray(pdf[:pdf.index(b"1 0 obj\n")])
+    offsets = []
+    for n in sorted(objs):
+        offsets.append(len(out))
+        out += b"%d 0 obj\n" % n + objs[n] + b"\nendobj\n"
+    xref = len(out)
+    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
+    out += b"".join(b"%010d 00000 n \n" % o for o in offsets)
+    trailer = pdf[pdf.rindex(b"trailer\n"):pdf.rindex(b"startxref\n")]
+    return bytes(out + trailer + b"startxref\n%d\n%%%%EOF\n" % xref)
+
+
+def _stream(data: bytes, *names: str, parms: dict | None = None) -> Stream:
+    d = {"Filter": [Name(f) for f in names]}
+    if parms:
+        d["DecodeParms"] = parms
+    return Stream(d, data)
+
+
+def _decode(*streams: Stream) -> tuple[bytes, list[str]]:
+    """decode_content over `streams`, for a document with no references."""
+    doc = SimpleNamespace(resolve=lambda o: o, warnings=[])
+    return decode_content(doc, list(streams)), doc.warnings
+
+
+def _budget_warnings(warnings):
+    return [w for w in warnings if w.startswith("content budget:")]
+
+
+def _bomb_content(n_bytes: int) -> bytes:
+    return pdfgen.text_page_content(_LINES) + b"\n%" + b"B" * n_bytes + b"\n"
+
+
+@pytest.fixture
+def small_budget(monkeypatch):
+    monkeypatch.setattr(filters, "MAX_CONTENT_BYTES", 1 << 20)
+    return 1 << 20
+
+
+def test_bomb_page_keeps_its_text_and_warns_once(small_budget):
+    pdf = _with_content(zlib.compress(_bomb_content(6 * small_budget)),
+                        b"/FlateDecode")
+    doc = Document(pdf)
+    text = doc.page(0).extract_text()
+    plain = Document(pdfgen.build_pdf([pdfgen.text_page_content(_LINES)]))
+    assert text == plain.page(0).extract_text()
+    assert "line 29 of the page" in text
+    assert doc.warnings == [
+        f"content budget: decoded content cut at {small_budget} bytes"]
+
+
+def test_bomb_page_peak_memory_stays_near_the_budget(small_budget):
+    import tracemalloc
+
+    pdf = _with_content(zlib.compress(_bomb_content(8 * small_budget)),
+                        b"/FlateDecode")
+    tracemalloc.start()
+    try:
+        Document(pdf).page(0).extract_text()
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 3 * small_budget, peak
+
+
+def test_nested_flate_stops_at_the_budget(small_budget):
+    big = b"0 0 m\n" * (small_budget // 2)  # 3 budgets
+    data, warnings = _decode(_stream(zlib.compress(zlib.compress(big, 9), 9),
+                                     "FlateDecode", "FlateDecode"))
+    assert data == big[:small_budget]
+    assert len(_budget_warnings(warnings)) == 1 and len(warnings) == 1
+
+
+def _lzw_runs(n_codes: int) -> tuple[bytes, int]:
+    """An LZW stream whose k-th code repeats "A" k + 1 times: the codes
+    65, 258, 259, ... each name the entry the decoder is about to add.
+    Returns the stream and its decoded length."""
+    acc = bits = 0
+    out = bytearray()
+    table_len, code_len = 258, 9
+    for i, code in enumerate([65] + list(range(258, 258 + n_codes))):
+        acc = (acc << code_len) | code
+        bits += code_len
+        while bits >= 8:
+            bits -= 8
+            out.append((acc >> bits) & 0xFF)
+        table_len += i > 0
+        if table_len + 1 >= (1 << code_len) and code_len < 12:
+            code_len += 1
+    if bits:
+        out.append((acc << (8 - bits)) & 0xFF)
+    return bytes(out), sum(range(1, n_codes + 2))
+
+
+def test_expanding_filters_stop_at_the_budget(small_budget):
+    # RunLength: each 2-byte pair (length byte 129, value) makes 128 bytes
+    rl = b"\x81A" * (small_budget // 32)  # 4 budgets
+    assert len(filters.run_length_decode(rl, NO_CAP)) == 4 * small_budget
+    assert filters.run_length_decode(rl, 1000) == b"A" * 1000
+    data, warnings = _decode(_stream(rl, "RunLengthDecode"))
+    assert data == b"A" * small_budget and len(_budget_warnings(warnings)) == 1
+
+    lzw, n = _lzw_runs(3000)
+    assert n > 4 * small_budget
+    assert filters.lzw_decode(lzw, NO_CAP) == b"A" * n
+    assert filters.lzw_decode(lzw, 1000) == b"A" * 1000
+    data, warnings = _decode(_stream(lzw, "LZWDecode"))
+    assert data == b"A" * small_budget and len(_budget_warnings(warnings)) == 1
+
+    # PNG predictor: a row wider than the cap is clipped, not allocated
+    assert filters._apply_png_predictor(b"\x02abc", 1, 8, 1 << 40, 1000) \
+        == b"abc" + bytes(997)
+    # the cut is seen before the predictor shrinks the rows
+    rows = (b"\x00" + b"p" * 99) * (small_budget // 25)  # 4 budgets
+    data, warnings = _decode(_stream(
+        zlib.compress(rows), "FlateDecode",
+        parms={"Predictor": 12, "Columns": 99}))
+    # the row the cut shortened is zero-padded, as a short last row
+    # always was; NUL is whitespace to the tokenizer
+    kept = data.rstrip(b"\x00")
+    assert set(kept) == {ord("p")} and len(data) - len(kept) < 99
+    assert len(_budget_warnings(warnings)) == 1
+
+
+def test_content_parts_share_one_budget(small_budget):
+    half = b"x" * (small_budget // 2)
+    part = _stream(zlib.compress(half), "FlateDecode")
+    data, warnings = _decode(part, part, part)
+    assert data == b"\n".join([half, half, b""])  # third cut to b""
+    assert len(_budget_warnings(warnings)) == 1
+    assert _decode(part, part) == (half + b"\n" + half, [])
+
+
+def test_unfiltered_content_is_kept_whole(small_budget):
+    # a part with no filter is the file's own bytes: not cut, not counted
+    raw = Stream({}, b"x" * (2 * small_budget))
+    half = b"y" * (small_budget // 2)
+    part = _stream(zlib.compress(half), "FlateDecode")
+    assert _decode(raw, part, part) == (b"\n".join([raw.raw, half, half]), [])
+
+
+def test_flate_cut_in_half_keeps_a_prefix_and_warns():
+    content = pdfgen.text_page_content(_LINES)
+    z = zlib.compress(content)
+    warnings: list[str] = []
+    assert filters.flate_decode(z, NO_CAP, warnings) == content
+    assert warnings == []
+    half = filters.flate_decode(z[:len(z) // 2], NO_CAP, warnings)
+    assert content.startswith(half) and len(half) < len(content)
+    assert warnings == [FLATE_PARTIAL_WARNING]
+    # and through a document: the row carries the warning
+    res = extract_document(_with_content(z[:len(z) // 2], b"/FlateDecode"))
+    assert res["error"] is None and FLATE_PARTIAL_WARNING in res["warnings"]
+
+
+def test_stream_cut_before_endstream_keeps_lines():
+    pdf = pdfgen.build_pdf([pdfgen.text_page_content(_LINES)])
+    lo = pdf.index(b"stream\n") + len(b"stream\n")
+    cut = lo + (pdf.index(b"endstream") - lo) // 2
+    # the lines whose Tj lies wholly before the cut
+    k = max(i for i in range(len(_LINES) + 1)
+            if len(pdfgen.text_page_content(_LINES[:i])) - len(b"\nET")
+            <= cut - lo)
+    assert 0 < k < len(_LINES)
+    res = extract_document(pdf[:cut])
+    assert res["error"] is None
+    assert res["text"].split("\n")[:k] == _LINES[:k]
+    whole = extract_document(pdf)
+    assert whole["warnings"] == [] and whole["text"].split("\n") == _LINES
 
 
 def test_multipage_doctop():

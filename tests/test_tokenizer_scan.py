@@ -91,6 +91,13 @@ TRICKY = [
     b"BI /BPC 8 ID \x00\x01\x02 EI q",
     b"\x12 77 Tj", b"\xff\xfe garbage \x00 Tj",
     b"5/Name cs", b"1.5.2.7 w", b"()Tj",
+    # comments end at the first \r or \n, or run to the end
+    b"1 Tj %cr\r2 Tj", b"1 Tj %crlf\r\n2 Tj", b"1 Tj %lf\n2 Tj",
+    b"%a\r%b\n%c\r\n%d", b"1 2 %to the end", b"%", b"q %\nQ",
+    b"(100% of it) Tj", b"[(50%) 3 (%)] TJ", b"<</A (%x)>> BDC",
+    b"1 Tj %" + b"c" * (3 << 20) + b"\r\n2 Tj",
+    # a multi-MiB comment on the Lexer path (a #-escaped name forces it)
+    b"/A#20B cs %" + b"c" * (3 << 20) + b"\r(after) Tj",
 ]
 
 
@@ -110,6 +117,16 @@ def _assert_equiv(content: bytes) -> bool:
 def test_tricky_cases_equivalent():
     for c in TRICKY:
         _assert_equiv(c)
+
+
+def test_long_comment_on_the_lexer_path():
+    content = TRICKY[-1]
+    assert _scan_tokenize(content, []) is None
+    warnings: list = []
+    ops = T.tokenize(content, warnings)
+    assert _norm(ops) == _norm([Operator("cs", [Name("A B")]),
+                                Operator("Tj", [b"after"])])
+    assert warnings == []
 
 
 def test_fuzz_equivalent():
